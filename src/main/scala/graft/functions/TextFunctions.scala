@@ -53,23 +53,4 @@ object TextFunctions {
   /** Count of tokens present in a stopword set. */
   def stopwordCount(text: Column, stopwords: Seq[String]): Column =
     size(filter(tokens(text), t => t.isin(stopwords.map(x => x: Any): _*)))
-
-  /** 64-bit SimHash over whitespace tokens: per bit, sum +1/-1 votes of
-    * each token's xxhash64 bit, take the sign. */
-  def simhash64(text: Column): Column = {
-    val hashes = transform(tokens(text), t => xxhash64(t))
-    val bits = (0 until 64).map { i =>
-      val vote = aggregate(hashes, lit(0L),
-        (acc, h) => acc + when(h.bitwiseAND(lit(1L << i)) =!= 0, 1L).otherwise(-1L))
-      when(vote >= 0, lit(if (i == 63) Long.MinValue else 1L << i)).otherwise(lit(0L))
-    }
-    bits.reduce((a: Column, b: Column) => a.bitwiseOR(b))
-  }
-
-  /** MinHash signature: `numPerm` minima of seeded xxhash64 over the
-    * distinct shingle set. Returns array<long> of length numPerm. */
-  def minhashSignature(shingleCol: Column, numPerm: Int): Column =
-    array((0 until numPerm).map { p =>
-      array_min(transform(shingleCol, sh => xxhash64(lit(p), sh)))
-    }: _*)
 }

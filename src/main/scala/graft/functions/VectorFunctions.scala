@@ -48,8 +48,6 @@ object VectorFunctions {
 
   def fastSquaredL2(a: Column, b: Column): Column = call_function("vec_sq_l2", a, b)
 
-  def fastL2(a: Column, b: Column): Column = sqrt(fastSquaredL2(a, b))
-
   def fastNorm(a: Column): Column = sqrt(fastDot(a, a))
 
   /** Cosine from a precomputed-norm pair: dot/(na*nb) — identical

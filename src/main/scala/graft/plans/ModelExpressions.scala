@@ -1,9 +1,9 @@
 package graft.plans
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, Nondeterministic, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
-import org.apache.spark.sql.catalyst.util.GenericArrayData
+import org.apache.spark.sql.catalyst.util.{DateTimeUtils, GenericArrayData}
 import org.apache.spark.sql.types._
 
 /** Single-pass native form of the PORTABLE stub face model
@@ -63,11 +63,37 @@ case class StubFacesMd5(child: Expression, dim: Int)
     copy(child = newChild)
 }
 
+/** Wall-clock timestamp taken per row AFTER its child is evaluated; the
+  * child's value is discarded. The predict stage passes `annotations`,
+  * so each frame is stamped once it has been matched — where
+  * `current_timestamp()` is fixed once per query, i.e. once per
+  * streaming micro-batch, before any row runs. Nondeterministic, so the
+  * optimizer neither folds nor duplicates it. */
+case class StampAfter(child: Expression)
+    extends UnaryExpression with Nondeterministic with CodegenFallback {
+  override def prettyName: String = "stamp_after"
+  override def dataType: DataType = TimestampType
+  override def nullable: Boolean = false
+
+  override protected def initializeInternal(partitionIndex: Int): Unit = ()
+
+  override protected def evalInternal(input: InternalRow): Any = {
+    child.eval(input)
+    DateTimeUtils.instantToMicros(java.time.Instant.now())
+  }
+
+  override protected def withNewChildInternal(newChild: Expression): Expression =
+    copy(child = newChild)
+}
+
 object ModelExpressions {
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
+  def register(spark: org.apache.spark.sql.SparkSession): Unit = {
     spark.sessionState.functionRegistry.createOrReplaceTempFunction(
       "stub_faces_md5",
       exprs => StubFacesMd5(exprs(0),
         exprs(1).eval().asInstanceOf[Number].intValue()),
       "built-in")
+    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
+      "stamp_after", exprs => StampAfter(exprs(0)), "built-in")
+  }
 }

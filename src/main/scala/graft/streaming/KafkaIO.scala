@@ -46,15 +46,6 @@ object KafkaIO {
     FrameMessages.fromWire(raw.select(col("value").cast("string").as("value")))
   }
 
-  /** Subscribe to every per-camera prediction topic at once (S5). */
-  def readPredictions(spark: SparkSession, bootstrap: String, prefix: String): DataFrame =
-    spark.readStream
-      .format("kafka")
-      .option("kafka.bootstrap.servers", bootstrap)
-      .option("subscribePattern", s"${prefix}_.*")
-      .option("startingOffsets", "latest")
-      .load()
-
   /** The wire projection the routed sink applies — the K1+K2 column
     * contract (`key`/`value` cast to string plus the per-row `topic`),
     * factored out so the broker sink and the file-backed emulation

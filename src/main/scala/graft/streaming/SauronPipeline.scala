@@ -1,10 +1,13 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, GraftSqlBridge, SparkSession}
+import org.apache.spark.sql.catalyst.CatalystTypeConverters
+import org.apache.spark.sql.catalyst.expressions.{Literal, SortArray}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.ArrayType
 
 import graft.functions.VectorFunctions._
-import graft.plans.VectorExpressions
+import graft.plans.{ModelExpressions, VectorExpressions}
 
 /** The eye_of_sauron topology as one declarative Spark program
   * (SURVEY.md §3: StreamVideo → ConsumeFrames(detect+embed) →
@@ -14,8 +17,9 @@ import graft.plans.VectorExpressions
   * (driver oracle) and streaming (readStream → writeStream): the
   * reference's two Kafka-separated processes become narrow stages that
   * Spark pipelines without a shuffle, and the query-face set — the
-  * reference's broadcast topic (/root/reference/src/prediction_producer.py:222-228)
-  * — becomes a stream-static broadcast join.
+  * reference's broadcast topic (its src/prediction_producer.py:222-228)
+  * — is collected once, when the plan is built, into one literal column:
+  * a streaming micro-batch runs a single job with no exchange.
   *
   * The face model is STUBBED deterministically (no dlib/OpenCV in a JVM
   * sandbox): detection count, boxes and encodings are derived from
@@ -128,24 +132,40 @@ object SauronPipeline {
   }
 
   /** Stage 2 — PredictFrames: match every detected face against the
-    * broadcast target set (L2 <= tolerance, first match = lowest target
-    * id, else "Unknown"), stamp per-frame prediction + latency.
+    * target set (L2 <= tolerance, first match = lowest target id, else
+    * "Unknown"), stamp per-frame prediction + latency.
     *
     * Shuffle-free by design: the target set is tiny (it is the
-    * reference's per-query broadcast topic), so it is folded into ONE
-    * array literal row and broadcast-cross-joined; per-face matching is
-    * then a pure array expression — no explode/regroup, no stateful
-    * aggregation, streaming-append-safe, and the stage pipelines with
-    * detect inside a single narrow task at any scale.
+    * reference's per-query broadcast topic), so [[targetSet]] collects it
+    * on the driver while the plan is built and folds it into ONE array
+    * literal; per-face matching is then a pure array expression — no
+    * join, no exchange, no explode/regroup, no stateful aggregation,
+    * streaming-append-safe, and the stage pipelines with detect inside a
+    * single narrow task at any scale. The set is read once: a streaming
+    * query matches against the set read when its plan was built (see
+    * [[RefreshableTargets]] for a set that changes).
     *
     * @param targets small DataFrame (t_id, t_name, t_enc: array<double>)
     *                — the query-face broadcast set
     */
-  def predictStage(detected: DataFrame, targets: DataFrame, tolerance: Double): DataFrame = {
+  def predictStage(detected: DataFrame, targets: DataFrame, tolerance: Double): DataFrame =
+    predictWith(detected, targetSet(targets), tolerance)
+
+  /** The target set as one `array<struct<t_id, t_name, t_enc>>` literal,
+    * sorted once on the driver by Catalyst's own `sort_array` (t_id
+    * first, so the lowest id wins ties). A plain select-collect: a local
+    * relation collects without a Spark job, and a Catalyst literal needs
+    * no reflection. */
+  private[streaming] def targetSet(targets: DataFrame): Column = {
+    val set = targets.select(col("t_id"), col("t_name"), col("t_enc"))
+    val dt = ArrayType(set.schema, containsNull = false)
+    val unsorted = Literal(CatalystTypeConverters.createToCatalystConverter(dt)(set.collect()), dt)
+    GraftSqlBridge.column(Literal(SortArray(unsorted, Literal(true)).eval(), dt))
+  }
+
+  private def predictWith(detected: DataFrame, tSet: Column, tolerance: Double): DataFrame = {
     VectorExpressions.register(detected.sparkSession)
-    val targetArr = broadcast(
-      targets.agg(sort_array(collect_list(
-        struct(col("t_id"), col("t_name"), col("t_enc")))).as("t_set")))
+    ModelExpressions.register(detected.sparkSession)
     // fastSquaredL2 (native expr) instead of the HOF fold: HOFs are
     // CodegenFallback, so everything inside this lambda runs interpreted
     // — the native expression's eval is one tight double loop per
@@ -153,24 +173,26 @@ object SauronPipeline {
     // compare keeps sqrt out of the per-pair hot path.
     val firstMatch: Column => Column = enc => try_element_at(
       transform(
-        filter(col("t_set"),
+        filter(tSet,
           t => fastSquaredL2(enc, t.getField("t_enc")) <= tolerance * tolerance),
         t => t.getField("t_name")),
       lit(1))
-    detected.crossJoin(targetArr)
+    detected
       // annotations = zip(box_i, name_i) (J3); first match wins because
-      // t_set is sorted by t_id and filter preserves order (J2)
+      // the set is sorted by t_id and filter preserves order (J2)
       .withColumn("annotations", transform(col("faces"), f => struct(
         f.getField("box").as("box"),
         coalesce(firstMatch(f.getField("enc")), lit("Unknown")).as("name"))))
       // prediction = first face's name (A1: face_names[0]); null if no faces
       .withColumn("prediction", try_element_at(col("annotations"), lit(1)).getField("name"))
-      .withColumn("predict_time", current_timestamp())
+      // stamped per row once its annotations are computed, as the
+      // reference stamps each frame after predicting it
+      .withColumn("predict_time", call_function("stamp_after", col("annotations")))
       // A2 latency in fractional seconds — deliberately NOT the
       // reference's int()-truncated form (SURVEY.md §7.4)
       .withColumn("latency_s",
         (unix_micros(col("predict_time")) - unix_micros(col("ts"))).cast("double") / 1e6)
-      .drop("t_set", "faces")
+      .drop("faces")
   }
 
   /** Full topology: frames → detect (pluggable model) → match/predict →
@@ -179,21 +201,26 @@ object SauronPipeline {
   def process(frames: DataFrame, targets: DataFrame, tolerance: Double,
       topicPrefix: String = "predicted_object_raw_frame_topic",
       model: FaceModel = defaultModel): DataFrame =
-    predictStage(detectStage(frames, model), targets, tolerance)
+    processWith(frames, targetSet(targets), tolerance, topicPrefix, model)
+
+  /** [[process]] with an already collected [[targetSet]]. */
+  private[streaming] def processWith(frames: DataFrame, tSet: Column, tolerance: Double,
+      topicPrefix: String, model: FaceModel): DataFrame =
+    predictWith(detectStage(frames, model), tSet, tolerance)
       .withColumn("topic", FrameMessages.routedTopic(topicPrefix, col("camera")))
       .withColumn("key", FrameMessages.frameKey(col("camera"), col("frame_num")))
 }
 
-/** J4 — refreshable broadcast target set. The reference re-publishes
-  * query faces at any time and predictors pick the new set up on their
-  * next poll (/root/reference/web/views.py:166-169 →
-  * prediction_producer.py:222-228). Spark's stream-static join pins the
-  * static side at query start, so the refreshable form runs the predict
-  * stage per micro-batch under `foreachBatch`, reloading the target set
-  * at most once per `refreshMs` (rate-limited — a hot loop of catalog
-  * reads would throttle the stream at scale; between reloads every
-  * batch reuses the cached set, which predictStage folds into one
-  * broadcast row).
+/** J4 — refreshable target set. The reference re-publishes query faces
+  * at any time and predictors pick the new set up on their next poll
+  * (its web/views.py:166-169 → src/prediction_producer.py:222-228).
+  * [[SauronPipeline.process]] reads the set once, when its plan is
+  * built, so the refreshable form runs the predict stage per
+  * micro-batch under `foreachBatch` and re-collects the set at most once
+  * per `refreshMs` (rate-limited — a hot loop of catalog reads would
+  * throttle the stream at scale). The collected literal pins the set:
+  * every batch until the next reload matches against it, whatever
+  * happens to the loader's source in between.
   *
   * @param loadTargets re-reads the current target set (t_id, t_name,
   *                    t_enc) — e.g. a parquet/Delta path or catalog
@@ -218,29 +245,15 @@ object RefreshableTargets {
     // the target set regardless of wall-clock — intentional (restart
     // must not serve a set pinned before the crash), at worst one
     // early reload.
-    var cached: DataFrame = null
+    var tSet: Column = null
     var loadedAt = Long.MinValue
     frames.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
       val now = System.currentTimeMillis()
-      if (cached == null || now - loadedAt >= refreshMs) {
-        // MATERIALIZE the reload (persist + eager count), don't just hold
-        // the lazy plan — otherwise every micro-batch inside the refresh
-        // window re-executes the target-set scan and picks up
-        // mid-interval table updates, defeating both the rate limit and
-        // the pinned-set semantics. The previous set is unpersisted only
-        // after the replacement is pinned.
-        val previous = cached
-        cached = loadTargets(batch.sparkSession)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        cached.count() // eager: pin NOW, while the loader's source is live
-        if (previous != null) previous.unpersist(false)
+      if (tSet == null || now - loadedAt >= refreshMs) {
+        tSet = SauronPipeline.targetSet(loadTargets(batch.sparkSession))
         loadedAt = now
       }
-      val out = SauronPipeline
-        .predictStage(SauronPipeline.detectStage(batch, model), cached, tolerance)
-        .withColumn("topic", FrameMessages.routedTopic(topicPrefix, col("camera")))
-        .withColumn("key", FrameMessages.frameKey(col("camera"), col("frame_num")))
-      sink(out, batchId)
+      sink(SauronPipeline.processWith(batch, tSet, tolerance, topicPrefix, model), batchId)
     }
   }
 }

@@ -1,13 +1,17 @@
 package org.apache.spark.sql
 
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 
-/** Bridge into the `private[sql]` DataFrame constructor, so the
-  * library's custom logical operators (graft.plans.AsOfJoin) can be
-  * surfaced as DataFrames — the standard extension-library pattern for
-  * plugging a custom LogicalPlan into a session. Nothing else from the
-  * private surface is touched. */
+/** Bridge into the `private[sql]` DataFrame and Column constructors, so
+  * the library's custom logical operators (graft.plans.AsOfJoin) can be
+  * surfaced as DataFrames and a ready-made Catalyst expression (the
+  * pipeline's target-set literal) as a Column — the standard
+  * extension-library pattern for plugging a custom LogicalPlan into a
+  * session. Nothing else from the private surface is touched. */
 object GraftSqlBridge {
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
+
+  def column(e: Expression): Column = classic.ExpressionUtils.column(e)
 }

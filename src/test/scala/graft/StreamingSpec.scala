@@ -104,6 +104,106 @@ class StreamingSpec extends SparkSuite {
     assert(got.filter(col("topic") === "predicted_object_raw_frame_topic_1").count() == 1)
   }
 
+  test("pipeline streaming: one Spark job per micro-batch and no exchange in the plan") {
+    implicit val sqlCtx = spark.sqlContext
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import org.apache.spark.sql.execution.exchange.Exchange
+    import org.apache.spark.sql.execution.streaming.runtime.{MicroBatchExecution,
+      StreamExecution, StreamingQueryWrapper}
+    val input = MemoryStream[(Int, Long, Timestamp, Array[Byte], String, Seq[Int])]
+    val frames = input.toDF().toDF("camera", "frame_num", "ts", "frame", "dtype", "shape")
+    val targets = Seq((1L, "person_1", Seq.fill(64)(0.0)), (0L, "person_0", Seq.fill(64)(0.5)))
+      .toDF("t_id", "t_name", "t_enc")
+    val out = SauronPipeline.process(frames, targets, tolerance = 0.5)
+    val q = out.writeStream.format("memory").queryName("pipe_jobs_out")
+      .outputMode("append").start()
+    val jobsByBatch = scala.collection.mutable.Map.empty[Long, Int]
+    @volatile var markerSeen = false
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        val p = e.properties
+        if (p.getProperty(StreamExecution.QUERY_ID_KEY) == q.id.toString) {
+          val b = p.getProperty(MicroBatchExecution.BATCH_ID_KEY).toLong
+          jobsByBatch.synchronized(jobsByBatch(b) = jobsByBatch.getOrElse(b, 0) + 1)
+        }
+        if (p.getProperty("spark.jobGroup.id") == "pipe_jobs_marker") markerSeen = true
+      }
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      for (b <- 0 until 3) {
+        input.addData((0 until 6).map(c =>
+          (c, b.toLong, new Timestamp(1700000000000L + b * 100L), s"f$c-$b".getBytes, "|u1", Seq(1))))
+        q.processAllAvailable()
+      }
+      val plan = q.asInstanceOf[StreamingQueryWrapper].streamingQuery.lastExecution.executedPlan
+      q.stop()
+      // the helper also looks inside adaptive plans and their query stages
+      val aqe = new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
+      assert(aqe.find(plan)(_.isInstanceOf[Exchange]).isEmpty, s"exchange in the plan:\n$plan")
+      // listener events arrive in order: once a later marker job is seen,
+      // every micro-batch job before it has been counted
+      spark.sparkContext.setJobGroup("pipe_jobs_marker", "marker")
+      try spark.range(1).count() finally spark.sparkContext.clearJobGroup()
+      var tries = 0
+      while (!markerSeen && tries < 100) { Thread.sleep(100); tries += 1 }
+      assert(markerSeen)
+      val counts = jobsByBatch.synchronized(jobsByBatch.toMap)
+      assert(counts.size == 3 && counts.values.forall(_ == 1), s"jobs per batch: $counts")
+    } finally spark.sparkContext.removeSparkListener(listener)
+    assert(spark.table("pipe_jobs_out").count() == 18)
+  }
+
+  test("target set: lowest t_id wins a tie, an empty set predicts Unknown") {
+    val originModel: SauronPipeline.FaceModel = _ => array(struct(
+      array(lit(0), lit(0), lit(0), lit(0)).as("box"),
+      array(Seq.fill(64)(lit(0.0)): _*).as("enc")))
+    def predictions(targets: Seq[(Long, String, Seq[Double])]) =
+      SauronPipeline.process(mkFrames(4, 2), targets.toDF("t_id", "t_name", "t_enc"),
+        tolerance = 0.5, model = originModel)
+        .select("prediction").collect().map(_.getString(0)).toSet
+    val origin = Seq.fill(64)(0.0)
+    // given out of id order: 7 and 3 both match, 1 does not
+    assert(predictions(Seq((7L, "a", origin), (3L, "b", origin), (1L, "c", Seq.fill(64)(2.0))))
+      == Set("b"))
+    assert(predictions(Seq.empty) == Set("Unknown"))
+  }
+
+  test("predict_time is stamped per row after matching, not once per micro-batch") {
+    implicit val sqlCtx = spark.sqlContext
+    import org.apache.spark.sql.catalyst.expressions.CurrentTimestamp
+    import org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper
+    import graft.plans.StampAfter
+    val input = MemoryStream[(Int, Long, Timestamp, Array[Byte], String, Seq[Int])]
+    val frames = input.toDF().toDF("camera", "frame_num", "ts", "frame", "dtype", "shape")
+    val targets = Seq((0L, "person_0", Seq.fill(64)(0.0))).toDF("t_id", "t_name", "t_enc")
+    // a model that takes 200 ms per frame: each frame's latency must
+    // include it, which a stamp fixed when the batch starts leaves out
+    val slow = udf { (_: Array[Byte]) => Thread.sleep(200); true }
+    val slowModel: SauronPipeline.FaceModel = f => when(slow(f), array(struct(
+      array(lit(0), lit(0), lit(0), lit(0)).as("box"),
+      array(Seq.fill(64)(lit(0.0)): _*).as("enc"))))
+    val out = SauronPipeline.process(frames, targets, tolerance = 0.5, model = slowModel)
+    assert(!out.queryExecution.analyzed.flatMap(_.expressions)
+      .exists(_.exists(_.isInstanceOf[CurrentTimestamp])))
+    val q = out.writeStream.format("memory").queryName("stamp_out")
+      .outputMode("append").start()
+    val now = new Timestamp(System.currentTimeMillis())
+    input.addData((0, 0L, now, "a".getBytes, "|u1", Seq(1)), (1, 0L, now, "b".getBytes, "|u1", Seq(1)))
+    q.processAllAvailable()
+    val plan = q.asInstanceOf[StreamingQueryWrapper].streamingQuery.lastExecution.executedPlan
+    q.stop()
+    val aqe = new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
+    assert(aqe.flatMap(plan)(_.expressions).exists(_.exists(_.isInstanceOf[StampAfter])),
+      s"no per-row stamp in:\n$plan")
+    val got = spark.table("stamp_out").select("prediction", "ts", "predict_time", "latency_s").collect()
+    assert(got.length == 2 && got.forall(_.getString(0) == "person_0"))
+    got.foreach { r =>
+      assert(!r.getTimestamp(2).before(r.getTimestamp(1)), s"predict_time before ts: $r")
+      assert(r.getDouble(3) >= 0.2, s"latency leaves out the row's own matching: $r")
+    }
+  }
+
   test("pluggable model slot: a swapped model changes the pipeline's predictions (P8)") {
     implicit val sqlCtx = spark.sqlContext
     val input = MemoryStream[(Int, Long, Timestamp, Array[Byte], String, Seq[Int])]
@@ -474,6 +574,34 @@ class StreamingSpec extends SparkSuite {
       val batches = listener.snapshot.filter(_.queryName == "metrics_out")
       assert(batches.nonEmpty, "listener must observe at least one batch")
       assert(batches.map(_.numInputRows).sum == 3)
+    } finally spark.streams.removeListener(listener)
+  }
+
+  test("MetricsListener keeps the duration breakdown and the reorder buffer's state") {
+    implicit val sqlCtx = spark.sqlContext
+    val listener = new graft.streaming.MetricsListener
+    spark.streams.addListener(listener)
+    try {
+      val input = MemoryStream[FrameEvent]
+      // a threshold no camera reaches: every frame stays buffered in state
+      val q = ReorderBuffer.reorder(input.toDS(), emitThreshold = 100, maxBuffer = 1000)
+        .writeStream.format("memory").queryName("reorder_metrics_out")
+        .outputMode("append").start()
+      input.addData(FrameEvent(0, 1, 1000, "c0f1"), FrameEvent(0, 0, 1000, "c0f0"),
+        FrameEvent(1, 0, 1000, "c1f0"))
+      q.processAllAvailable()
+      q.stop()
+      var tries = 0
+      def batches = listener.snapshot.filter(b => b.queryName == "reorder_metrics_out" &&
+        b.numInputRows > 0)
+      while (batches.isEmpty && tries < 50) { Thread.sleep(100); tries += 1 }
+      assert(batches.size == 1, s"one data batch expected: ${listener.snapshot}")
+      val m = batches.head
+      for (k <- Seq("addBatch", "queryPlanning", "walCommit", "commitOffsets", "triggerExecution"))
+        assert(m.durationMs.get(k).exists(_ >= 0), s"durationMs lacks $k: ${m.durationMs}")
+      assert(m.durationMs("triggerExecution") >= m.durationMs("addBatch"))
+      assert(m.stateRowsTotal == 2, s"one state row per camera: $m")
+      assert(m.stateMemoryBytes > 0, s"state memory not captured: $m")
     } finally spark.streams.removeListener(listener)
   }
 
