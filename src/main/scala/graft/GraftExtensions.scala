@@ -7,7 +7,7 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 import graft.plans.{AdcScore, BloomPositions, BloomShingleHits, ChunkWords,
   DotProduct, JaroWinkler, LshBuckets, MinhashMd5, NearestCell, NfcNormalize,
   RpProject, ShingleHashes, ShingleStrings, SimhashMd5, SimplifySqrtThreshold,
-  SquaredL2, StubFacesMd5, WindowMd5s}
+  SquaredL2, StubFacesMd5, StubFacesXx, WindowMd5s}
 
 /** Library entry point for SQL users: registers the native expressions
   * so `spark.sql("SELECT vec_dot(a, b) ...")` works in any session
@@ -16,7 +16,8 @@ import graft.plans.{AdcScore, BloomPositions, BloomShingleHits, ChunkWords,
   * `.withExtensions(new GraftExtensions)`.
   *
   * (DataFrame callers don't need this — the operators in
-  * graft.operators register the functions on first use.)
+  * graft.operators register the functions on first use, and the camera
+  * pipeline builds its expressions as Columns without the registry.)
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
@@ -121,6 +122,11 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       FunctionIdentifier("stub_faces_md5"),
       info("stub_faces_md5", "stub_faces_md5(frame, dim) - md5-derived stub face detections"),
       (exprs: Seq[Expression]) => StubFacesMd5(exprs(0),
+        exprs(1).eval().asInstanceOf[Number].intValue())))
+    e.injectFunction((
+      FunctionIdentifier("stub_faces_xx"),
+      info("stub_faces_xx", "stub_faces_xx(frame, dim) - xxhash64-derived stub face detections (the default model)"),
+      (exprs: Seq[Expression]) => StubFacesXx(exprs(0),
         exprs(1).eval().asInstanceOf[Number].intValue())))
   }
 }

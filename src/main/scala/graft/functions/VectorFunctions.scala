@@ -1,7 +1,9 @@
 package graft.functions
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, GraftSqlBridge}
 import org.apache.spark.sql.functions._
+
+import graft.plans.{DotProduct, SquaredL2}
 
 /** Vector math over `array<float|double>` columns as pure Catalyst
   * higher-order-function expressions — codegen'd, no UDF serde, and
@@ -41,12 +43,15 @@ object VectorFunctions {
   // ---- codegen'd fast path (graft.plans.VectorExpressions) -----------
   // Same fold order and arithmetic as the HOF versions above, but as
   // native expressions inside whole-stage codegen — use these in join
-  // hot paths. Requires VectorExpressions.register(spark) once per
-  // session (queries in this repo call ensureRegistered).
+  // hot paths. Built as Columns directly, so they need no function
+  // registry entry (the sqrt-threshold rewrite still comes from
+  // VectorExpressions.register or GraftExtensions).
 
-  def fastDot(a: Column, b: Column): Column = call_function("vec_dot", a, b)
+  def fastDot(a: Column, b: Column): Column =
+    GraftSqlBridge.column(DotProduct(GraftSqlBridge.expression(a), GraftSqlBridge.expression(b)))
 
-  def fastSquaredL2(a: Column, b: Column): Column = call_function("vec_sq_l2", a, b)
+  def fastSquaredL2(a: Column, b: Column): Column =
+    GraftSqlBridge.column(SquaredL2(GraftSqlBridge.expression(a), GraftSqlBridge.expression(b)))
 
   def fastNorm(a: Column): Column = sqrt(fastDot(a, a))
 

@@ -1,7 +1,8 @@
 package graft.plans
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, Nondeterministic, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, Nondeterministic, UnaryExpression,
+  UnsafeArrayData, XXH64, XxHash64Function}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.{DateTimeUtils, GenericArrayData}
 import org.apache.spark.sql.types._
@@ -63,6 +64,68 @@ case class StubFacesMd5(child: Expression, dim: Int)
     copy(child = newChild)
 }
 
+/** Single-pass native form of the DEFAULT stub face model
+  * ([[graft.streaming.SauronPipeline.stubDetect]]). Its declarative
+  * twin ([[graft.streaming.SauronPipeline.stubDetectColumns]]) calls
+  * Catalyst's multi-argument `xxhash64(frame, i, c)`, which folds left
+  * from seed 42, once per face count, box coordinate and encoding
+  * element: 1 + n·(4 + dim) hashes of the whole frame through
+  * interpreted HOF lambdas. Every one of those values is a small int
+  * hash seeded by the same `xxhash64(frame)`, so this kernel hashes the
+  * frame bytes once, each face's long index once on top of that, and
+  * derives the 4 box values and the `dim` encoding values from the
+  * face hash. Bit-identical to the Column form, its schema included
+  * (pinned by StreamingSpec).
+  */
+case class StubFacesXx(child: Expression, dim: Int)
+    extends UnaryExpression with CodegenFallback {
+  // sequence(0, dim - 1) runs DESCENDING below dim = 1, which the
+  // Column form would turn into phantom encoding elements
+  require(dim >= 1, s"stub_faces_xx: dim must be >= 1, got $dim")
+
+  override def prettyName: String = "stub_faces_xx"
+  // the Column form's type and nullability, flags included: `transform`
+  // of a struct never holds a null face; `pmod`, the `cast` and the
+  // division stay nullable
+  override def dataType: DataType = ArrayType(StructType(Seq(
+    StructField("box", ArrayType(IntegerType, containsNull = true), nullable = false),
+    StructField("enc", ArrayType(DoubleType, containsNull = true), nullable = false))),
+    containsNull = false)
+  override def nullable: Boolean = true
+
+  // a null frame hashes as the bare seed (xxhash64 skips nulls), which
+  // gives 0 faces: `[]`, never null — so no null propagation here
+  override def eval(input: InternalRow): Any = {
+    val faces = StubFacesXx.faces(child.eval(input).asInstanceOf[Array[Byte]], dim)
+    new GenericArrayData(faces.map { case (box, enc) =>
+      InternalRow(UnsafeArrayData.fromPrimitiveArray(box), UnsafeArrayData.fromPrimitiveArray(enc))
+    })
+  }
+
+  override protected def withNewChildInternal(newChild: Expression): Expression =
+    copy(child = newChild)
+}
+
+object StubFacesXx {
+  private val Seed = 42L
+
+  private def pmod(a: Long, n: Long): Long = { val r = a % n; if (r < 0) r + n else r }
+
+  /** Each face of one frame as (box, encoding): `pmod(xxhash64(frame), 3)`
+    * faces; face i (a long from 1) hashes as `h_i = XXH64(i, xxhash64(frame))`,
+    * its box coordinate c as `pmod(XXH64(c, h_i), 400)` and its encoding
+    * element d as `XXH64(d, h_i) / Long.MaxValue`, c and d hashed as ints.
+    * A null frame has no faces. */
+  def faces(frame: Array[Byte], dim: Int): Array[(Array[Int], Array[Double])] = {
+    val hFrame = if (frame == null) Seed else XxHash64Function.hash(frame, BinaryType, Seed)
+    Array.tabulate(pmod(hFrame, 3L).toInt) { k =>
+      val hFace = XXH64.hashLong(k + 1L, hFrame)
+      (Array.tabulate(4)(c => pmod(XXH64.hashInt(c, hFace), 400L).toInt),
+        Array.tabulate(dim)(d => XXH64.hashInt(d, hFace).toDouble / Long.MaxValue.toDouble))
+    }
+  }
+}
+
 /** Wall-clock timestamp taken per row AFTER its child is evaluated; the
   * child's value is discarded. The predict stage passes `annotations`,
   * so each frame is stamped once it has been matched — where
@@ -84,16 +147,4 @@ case class StampAfter(child: Expression)
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
-}
-
-object ModelExpressions {
-  def register(spark: org.apache.spark.sql.SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "stub_faces_md5",
-      exprs => StubFacesMd5(exprs(0),
-        exprs(1).eval().asInstanceOf[Number].intValue()),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "stamp_after", exprs => StampAfter(exprs(0)), "built-in")
-  }
 }

@@ -6,8 +6,8 @@ import org.apache.spark.sql.catalyst.expressions.{Literal, SortArray}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.ArrayType
 
-import graft.functions.VectorFunctions._
-import graft.plans.{ModelExpressions, VectorExpressions}
+import graft.functions.VectorFunctions.fastSquaredL2
+import graft.plans.{StampAfter, StubFacesMd5, StubFacesXx}
 
 /** The eye_of_sauron topology as one declarative Spark program
   * (SURVEY.md §3: StreamVideo → ConsumeFrames(detect+embed) →
@@ -26,6 +26,13 @@ import graft.plans.{ModelExpressions, VectorExpressions}
   * xxhash64 of the frame bytes. The model slot is the pluggable point,
   * exactly as the reference documents ("Replace Face recognition model
   * with desired Image processing model" — /root/reference/README.md:38).
+  *
+  * The default model's native [[graft.plans.StubFacesXx]] kernel hashes
+  * each frame once per row. Every native expression here (model,
+  * matcher distance, latency stamp) is wrapped as a Column directly, so
+  * building a plan — once per query, or once per micro-batch under
+  * [[RefreshableTargets]] — never writes to the session's function
+  * registry.
   */
 object SauronPipeline {
 
@@ -33,8 +40,19 @@ object SauronPipeline {
     * (/root/reference/src/prediction_producer.py:128-161): 0-2 faces per
     * frame, each with a deterministic box and `dim`-d encoding derived
     * from the frame bytes. Returns array<struct<box:array<int>,
-    * enc:array<double>>>. */
-  def stubDetect(frame: Column, dim: Int): Column = {
+    * enc:array<double>>>. Evaluates through the native
+    * [[graft.plans.StubFacesXx]] kernel, which hashes the frame once per
+    * row; [[stubDetectColumns]] is the same model written with built-in
+    * functions and stays as the spec's bit-exactness oracle. */
+  def stubDetect(frame: Column, dim: Int): Column =
+    GraftSqlBridge.column(StubFacesXx(GraftSqlBridge.expression(frame), dim))
+
+  /** Declarative Column form of [[stubDetect]]: `xxhash64(frame, i, c)`
+    * per face count, box coordinate and encoding element, i.e. the whole
+    * frame hashed 1 + n·(4 + dim) times through interpreted lambdas —
+    * retained so a spec can pin the native kernel bit-exact, schema
+    * included, against the independent built-in-function construction. */
+  private[graft] def stubDetectColumns(frame: Column, dim: Int): Column = {
     val nFaces = pmod(xxhash64(frame), lit(3)) // 0..2 faces
     val faces = transform(sequence(lit(1), nFaces), i => struct(
       array(Seq(0, 1, 2, 3).map(c => pmod(xxhash64(frame, i, lit(c)), lit(400)).cast("int")): _*).as("box"),
@@ -57,10 +75,11 @@ object SauronPipeline {
     * [[graft.plans.StubFacesMd5]] expression — the declarative
     * transform/sequence twin ([[stubDetectPortableColumns]], kept as
     * the spec's bit-exactness oracle) pays ~1+n·(4+dim) interpreted
-    * md5 lambda evals per frame. xxhash64 [[stubDetect]] stays the
-    * default model (cheaper still). */
+    * md5 lambda evals per frame. The xxhash64 [[stubDetect]] stays the
+    * default model: its kernel hashes the frame once, where this one
+    * still takes 1 + n·(4 + dim) md5 digests per frame. */
   def stubDetectPortable(frame: Column, dim: Int): Column =
-    call_function("stub_faces_md5", frame, lit(dim))
+    GraftSqlBridge.column(StubFacesMd5(GraftSqlBridge.expression(frame), dim))
 
   /** Declarative Column form of [[stubDetectPortable]] — retained so a
     * spec can pin the native expression bit-exact against the
@@ -89,15 +108,14 @@ object SauronPipeline {
     * re-predicts with it. */
   type FaceModel = Column => Column
 
-  /** Default model: the deterministic stub at 64 dims. */
+  /** Default model: the deterministic xxhash64 stub at 64 dims, one
+    * native [[graft.plans.StubFacesXx]] evaluation per frame. */
   val defaultModel: FaceModel = stubDetect(_, 64)
 
   /** Stage 1 — ConsumeFrames: detect + embed with a pluggable model.
     * Adds `faces`. */
-  def detectStage(frames: DataFrame, model: FaceModel): DataFrame = {
-    graft.plans.ModelExpressions.register(frames.sparkSession)
+  def detectStage(frames: DataFrame, model: FaceModel): DataFrame =
     frames.withColumn("faces", model(col("frame")))
-  }
 
   /** [[detectStage]] with the stub model at `dim` dims. */
   def detectStage(frames: DataFrame, dim: Int = 64): DataFrame =
@@ -164,8 +182,6 @@ object SauronPipeline {
   }
 
   private def predictWith(detected: DataFrame, tSet: Column, tolerance: Double): DataFrame = {
-    VectorExpressions.register(detected.sparkSession)
-    ModelExpressions.register(detected.sparkSession)
     // fastSquaredL2 (native expr) instead of the HOF fold: HOFs are
     // CodegenFallback, so everything inside this lambda runs interpreted
     // — the native expression's eval is one tight double loop per
@@ -187,7 +203,8 @@ object SauronPipeline {
       .withColumn("prediction", try_element_at(col("annotations"), lit(1)).getField("name"))
       // stamped per row once its annotations are computed, as the
       // reference stamps each frame after predicting it
-      .withColumn("predict_time", call_function("stamp_after", col("annotations")))
+      .withColumn("predict_time",
+        GraftSqlBridge.column(StampAfter(GraftSqlBridge.expression(col("annotations")))))
       // A2 latency in fractional seconds — deliberately NOT the
       // reference's int()-truncated form (SURVEY.md §7.4)
       .withColumn("latency_s",
@@ -259,37 +276,16 @@ object RefreshableTargets {
 }
 
 /** STUB per-partition model handle backing
-  * [[SauronPipeline.detectStageBatched]]: a bit-exact JVM replica of the
-  * [[SauronPipeline.stubDetect]] column expression (same xxhash64
-  * chaining Catalyst uses for multi-arg xxhash64), standing in for the
-  * expensive native model a real deployment initializes once per
-  * partition. */
+  * [[SauronPipeline.detectStageBatched]]: evaluates the same per-frame
+  * function as the [[graft.plans.StubFacesXx]] kernel behind
+  * [[SauronPipeline.stubDetect]] (one implementation, so the two
+  * stage-1 forms cannot drift apart), standing in for the expensive
+  * native model a real deployment initializes once per partition. */
 private[streaming] final class StubFaceModelHandle(dim: Int) extends Serializable {
   import org.apache.spark.sql.Row
-  import org.apache.spark.sql.catalyst.expressions.XxHash64Function
-  import org.apache.spark.sql.types.{BinaryType, IntegerType, LongType}
-
-  /** Catalyst xxhash64(args...) folds left over the children with the
-    * previous hash as seed, starting at 42. */
-  private def h(bytes: Array[Byte]): Long =
-    XxHash64Function.hash(bytes, BinaryType, 42L)
-  private def h(bytes: Array[Byte], i: Long, c: Int): Long =
-    XxHash64Function.hash(c, IntegerType,
-      XxHash64Function.hash(i, LongType, h(bytes)))
-
-  private def pmod(a: Long, n: Long): Long = ((a % n) + n) % n
 
   def detectBatch(frames: Seq[Array[Byte]]): Seq[Seq[Row]] =
-    frames.map { bytes =>
-      val nFaces = pmod(h(bytes), 3L)
-      (1L to nFaces).map { i =>
-        val box = (0 until 4).map(c => pmod(h(bytes, i, c), 400L).toInt)
-        val enc = (0 until dim).map { d =>
-          XxHash64Function.hash(d, IntegerType,
-            XxHash64Function.hash(i, LongType, h(bytes)))
-            .toDouble / Long.MaxValue.toDouble
-        }
-        Row(box, enc)
-      }
-    }
+    frames.map(bytes => StubFacesXx.faces(bytes, dim).toSeq.map { case (box, enc) =>
+      Row(box.toSeq, enc.toSeq)
+    })
 }

@@ -256,6 +256,69 @@ class StreamingSpec extends SparkSuite {
         .collect().map(_.toString).sorted.toSeq)
   }
 
+  test("native xxhash stub kernel is bit-identical to the Column form, schema included") {
+    val rng = new scala.util.Random(7)
+    val bytes: Seq[Array[Byte]] = Seq(null, Array.emptyByteArray, Array.emptyByteArray) ++
+      (1 to 300).map(_ => Array.fill(rng.nextInt(96) + 1)(rng.nextInt(256).toByte)) ++
+      (1 to 4).map(_ => Array.fill(32 * 1024)(rng.nextInt(256).toByte))
+    val frames = bytes.zipWithIndex.map { case (b, i) => (i, b) }.toDF("id", "frame")
+    for (dim <- Seq(1, 16, 64)) {
+      val native = frames.select(col("id"), SauronPipeline.stubDetect(col("frame"), dim).as("faces"))
+      val columns = frames.select(col("id"),
+        SauronPipeline.stubDetectColumns(col("frame"), dim).as("faces"))
+      // StructField equality covers dataType (containsNull included) and nullable
+      assert(native.schema == columns.schema, s"dim $dim")
+      def canon(df: org.apache.spark.sql.DataFrame) =
+        df.select(col("id"), size(col("faces")), to_json(col("faces"))).collect()
+          .map(r => (r.getInt(0), r.getInt(1), r.getString(2))).sortBy(_._1).toSeq
+      val got = canon(native)
+      assert(got == canon(columns), s"dim $dim")
+      // a null frame gives [], not null; the corpus has faceless frames
+      // and two-face frames, whose encodings are `dim` long
+      assert(got.head == ((0, 0, "[]")))
+      assert(got.count(_._2 == 0) > 1 && got.count(_._2 == 2) > 0)
+      val enc = native.filter(size(col("faces")) > 0)
+        .select(size(col("faces").getItem(0).getField("enc"))).distinct().collect()
+      assert(enc.map(_.getInt(0)).toSeq == Seq(dim))
+    }
+  }
+
+  test("the camera pipeline never writes to the session's function registry") {
+    import graft.streaming.RefreshableTargets
+    // a new session holds only the built-in functions, so any name the
+    // pipeline registered would show up in its listing; the stream runs
+    // each batch on a clone of it, whose registry the sink lists
+    val s2 = spark.newSession()
+    implicit val sqlCtx = s2.sqlContext
+    def listing(s: org.apache.spark.sql.SparkSession) =
+      s.sessionState.functionRegistry.listFunction().map(_.unquotedString).sorted
+    val before = listing(s2)
+    val cols = Seq("camera", "frame_num", "ts", "frame", "dtype", "shape")
+    def rows(b: Int) = (0 until 6).map(c =>
+      (c, b.toLong, new Timestamp(1700000000000L + b * 100L), s"f$c-$b".getBytes, "|u1", Seq(1)))
+    val targets = s2.createDataset(Seq((0L, "person_0", Seq.fill(64)(0.0))))
+      .toDF("t_id", "t_name", "t_enc")
+    assert(SauronPipeline.process(s2.createDataset(rows(0)).toDF(cols: _*), targets, 0.5)
+      .collect().length == 6)
+    val input = MemoryStream[(Int, Long, Timestamp, Array[Byte], String, Seq[Int])]
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[Seq[String]]()
+    val q = RefreshableTargets.writer(input.toDF().toDF(cols: _*),
+      loadTargets = _ => targets, tolerance = 0.5, refreshMs = 0L,
+      sink = (df, _) => { df.collect(); seen.add(listing(df.sparkSession)) }).start()
+    for (b <- 1 to 2) {
+      input.addData(rows(b))
+      q.processAllAvailable()
+    }
+    q.stop()
+    def unchanged(l: Seq[String]): Unit = {
+      val (added, dropped) = (l.diff(before), before.diff(l))
+      assert(added.isEmpty && dropped.isEmpty)
+    }
+    assert(seen.size == 2)
+    seen.forEach(l => unchanged(l))
+    unchanged(listing(s2))
+  }
+
   test("refreshable targets: a target set updated mid-stream matches later frames (J4)") {
     implicit val sqlCtx = spark.sqlContext
     import graft.streaming.RefreshableTargets
