@@ -435,13 +435,7 @@ object Dedup {
     val e = edges.select(col(a).cast("long").as("src"), col(b).cast("long").as("dst"))
     val undBase = e.union(e.select(col("dst").as("src"), col("src").as("dst")))
       .distinct()
-    // counted/collected UNPINNED (the driver path reads the relation
-    // once); the distributed min-label loop, which joins the edges
-    // every pass, pins SERIALIZED ON DISK — a deserialized
-    // localCheckpoint of a 100×-scale symmetrized edge set is the
-    // one-JVM OOM class the forced-distributed graph captures measured
-    if (undBase.count() <= smallGraphEdges) {
-      val und = undBase
+    Route.bySize(undBase, smallGraphEdges) { und =>
       val parent = scala.collection.mutable.HashMap.empty[Long, Long]
       def find(x: Long): Long = {
         var r = x
@@ -457,39 +451,37 @@ object Dedup {
         // minimum id of its component, so find() IS the comp label
         if (rs < rd) parent(rd) = rs else if (rd < rs) parent(rs) = rd
       }
-      return parent.keys.toSeq.map(v => (v, find(v))).toDF("v", "comp")
-    }
-    val und = undBase.persist(org.apache.spark.storage.StorageLevel.DISK_ONLY)
-    var labels = und.select(col("src").as("v")).distinct()
-      .select(col("v"), col("v").as("comp")).localCheckpoint()
-    // convergence rides the label pass itself: a long accumulator counts
-    // labels lowered by the neighbor minimum DURING the eager
-    // localCheckpoint materialization — ONE action per pass where the
-    // previous shape ran a second label-sum aggregate per pass. Task
-    // retries can only over-count, and only zero-vs-nonzero is read, so
-    // the at-most-once caveat of accumulators in transformations is
-    // harmless here.
-    var changed = true
-    var iter = 0
-    while (changed && iter < maxIter) {
-      val acc = spark.sparkContext.longAccumulator(s"cc_changed_$iter")
-      val nbrMin = und.join(labels, und("src") === labels("v"))
-        .groupBy(und("dst").as("v")).agg(min(col("comp")).as("nbr"))
-      val next = labels.join(nbrMin, Seq("v"), "left")
-        .select(col("v"), col("comp"), coalesce(col("nbr"), col("comp")).as("nbr"))
-        .as[(Long, Long, Long)]
-        .mapPartitions { it =>
-          it.map { case (v, comp, nbr) =>
-            if (nbr < comp) { acc.add(1); (v, nbr) } else (v, comp)
+      parent.keys.toSeq.map(v => (v, find(v))).toDF("v", "comp")
+    } { und =>
+      var labels = und.select(col("src").as("v")).distinct()
+        .select(col("v"), col("v").as("comp")).localCheckpoint()
+      // convergence rides the label pass itself: a long accumulator counts
+      // labels lowered by the neighbor minimum DURING the eager
+      // localCheckpoint materialization — ONE action per pass. Task
+      // retries can only over-count, and only zero-vs-nonzero is read, so
+      // the at-most-once caveat of accumulators is harmless here.
+      var changed = true
+      var iter = 0
+      while (changed && iter < maxIter) {
+        val acc = spark.sparkContext.longAccumulator(s"cc_changed_$iter")
+        val nbrMin = und.join(labels, und("src") === labels("v"))
+          .groupBy(und("dst").as("v")).agg(min(col("comp")).as("nbr"))
+        val next = labels.join(nbrMin, Seq("v"), "left")
+          .select(col("v"), col("comp"), coalesce(col("nbr"), col("comp")).as("nbr"))
+          .as[(Long, Long, Long)]
+          .mapPartitions { it =>
+            it.map { case (v, comp, nbr) =>
+              if (nbr < comp) { acc.add(1); (v, nbr) } else (v, comp)
+            }
           }
-        }
-        .toDF("v", "comp").localCheckpoint()
-      labels = next
-      changed = acc.value > 0
-      iter += 1
+          .toDF("v", "comp").localCheckpoint()
+        labels = next
+        changed = acc.value > 0
+        iter += 1
+      }
+      require(!changed, s"connectedComponents did not converge within $maxIter passes")
+      labels
     }
-    require(!changed, s"connectedComponents did not converge within $maxIter passes")
-    labels
   }
 
   /** Cluster assignment for a whole corpus: every doc gets a component

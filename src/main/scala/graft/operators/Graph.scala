@@ -187,10 +187,9 @@ object Graph {
     * counts the intersection with a codegen'd `array_intersect` — the
     * shuffled volume stays O(m·√m) worst-case but O(m·avg-outdeg)
     * typical, in m rows rather than Σ C(d,2) rows. The edge list is
-    * localCheckpointed once (O(edges) executor-local storage) because
-    * it feeds degree/orientation/count branches — without it the
-    * upstream edge derivation (often itself a self-join) re-executes
-    * per branch.
+    * pinned once (Route.bySize) because it feeds degree/orientation/
+    * count branches — without it the upstream edge derivation (often
+    * itself a self-join) re-executes per branch.
     *
     * Triangle/wedge counts are orientation-invariant, so the output is
     * deterministic and a plain id-ordered oracle agrees exactly.
@@ -209,45 +208,41 @@ object Graph {
     // adjacency-intersection count replaces the degree/orientation/
     // adjacency join cascade (ParityBoundarySpec pins equality; the
     // one rounded output, global_cc, replicates Spark round semantics
-    // with BigDecimal HALF_UP). Counted and collected UNPINNED; the
-    // distributed path pins SERIALIZED ON DISK instead of the
-    // deserialized localCheckpoint that made the 100×-scale edge set
-    // this operator's one-JVM memory ceiling (the q212/q199 OOM class).
-    if (eBase.count() <= driverEdgeLimit)
-      return triangleStatsDriver(eBase, roundTo)
-    val e = eBase.persist(org.apache.spark.storage.StorageLevel.DISK_ONLY)
-    val deg = e.select(col("a").as("v"))
-      .union(e.select(col("b").as("v")))
-      .groupBy(col("v")).agg(count(lit(1)).as("d"))
-    // orient by (degree, id): u -> v iff (d_u, u) < (d_v, v)
-    val withDeg = e
-      .join(deg.withColumnRenamed("v", "a").withColumnRenamed("d", "da"), "a")
-      .join(deg.withColumnRenamed("v", "b").withColumnRenamed("d", "db"), "b")
-    val oriented = withDeg.select(
-      when(col("da") < col("db") ||
-           (col("da") === col("db") && col("a") < col("b")),
-        struct(col("a").as("u"), col("b").as("h")))
-        .otherwise(struct(col("b").as("u"), col("a").as("h")))
-        .as("o"))
-      .select(col("o.u").as("u"), col("o.h").as("h"))
-    // per-node out-neighbor arrays, O(sqrt m) each by orientation
-    val adj = oriented.groupBy(col("u"))
-      .agg(collect_list(col("h")).as("nbrs"))
-    val triangles = oriented
-      .join(adj, "u")
-      .withColumnRenamed("nbrs", "nu")
-      .join(adj.toDF("u2", "nv"), col("h") === col("u2"))
-      .select(size(array_intersect(col("nu"), col("nv"))).as("t"))
-      .agg(coalesce(sum(col("t")), lit(0L)).as("n_triangles"))
-    val nWedges = deg
-      .agg(sum(expr("(d * (d - 1)) div 2")).as("n_wedges"))
-    val nNodes = deg.agg(count(lit(1)).as("n_nodes"))
-    val nEdges = e.agg(count(lit(1)).as("n_edges"))
-    nNodes.crossJoin(nEdges).crossJoin(nWedges).crossJoin(triangles)
-      .select(col("n_nodes"), col("n_edges"), col("n_wedges"),
-        col("n_triangles"),
-        round(lit(3.0) * col("n_triangles") / col("n_wedges"), roundTo)
-          .as("global_cc"))
+    // with BigDecimal HALF_UP).
+    Route.bySize(eBase, driverEdgeLimit)(triangleStatsDriver(_, roundTo)) { e =>
+      val deg = e.select(col("a").as("v"))
+        .union(e.select(col("b").as("v")))
+        .groupBy(col("v")).agg(count(lit(1)).as("d"))
+      // orient by (degree, id): u -> v iff (d_u, u) < (d_v, v)
+      val withDeg = e
+        .join(deg.withColumnRenamed("v", "a").withColumnRenamed("d", "da"), "a")
+        .join(deg.withColumnRenamed("v", "b").withColumnRenamed("d", "db"), "b")
+      val oriented = withDeg.select(
+        when(col("da") < col("db") ||
+             (col("da") === col("db") && col("a") < col("b")),
+          struct(col("a").as("u"), col("b").as("h")))
+          .otherwise(struct(col("b").as("u"), col("a").as("h")))
+          .as("o"))
+        .select(col("o.u").as("u"), col("o.h").as("h"))
+      // per-node out-neighbor arrays, O(sqrt m) each by orientation
+      val adj = oriented.groupBy(col("u"))
+        .agg(collect_list(col("h")).as("nbrs"))
+      val triangles = oriented
+        .join(adj, "u")
+        .withColumnRenamed("nbrs", "nu")
+        .join(adj.toDF("u2", "nv"), col("h") === col("u2"))
+        .select(size(array_intersect(col("nu"), col("nv"))).as("t"))
+        .agg(coalesce(sum(col("t")), lit(0L)).as("n_triangles"))
+      val nWedges = deg
+        .agg(sum(expr("(d * (d - 1)) div 2")).as("n_wedges"))
+      val nNodes = deg.agg(count(lit(1)).as("n_nodes"))
+      val nEdges = e.agg(count(lit(1)).as("n_edges"))
+      nNodes.crossJoin(nEdges).crossJoin(nWedges).crossJoin(triangles)
+        .select(col("n_nodes"), col("n_edges"), col("n_wedges"),
+          col("n_triangles"),
+          round(lit(3.0) * col("n_triangles") / col("n_wedges"), roundTo)
+            .as("global_cc"))
+    }
   }
 
   /** HITS hubs & authorities (Kleinberg 1999) over a DIRECTED edge
@@ -291,66 +286,46 @@ object Graph {
       sum(round(c, 14).cast(DecimalType(28, 14))).cast("double")
     val eBase = edges.select(col(src).as("s"), col(dst).as("t"))
       .distinct()
-    val nEdges = eBase.count()
-    if (nEdges <= driverEdgeLimit &&
-        eBase.schema("s").dataType == eBase.schema("t").dataType)
-      // the driver path reads the relation exactly once (the collect) —
-      // no pin needed; the count above was its own streaming pass
-      return hitsDriver(eBase, iters, roundTo)
-    // distributed path reads e twice per iteration: pin SERIALIZED ON
-    // DISK, not localCheckpoint — the deserialized checkpoint of a
-    // 100×-scale edge set (~100M rows) starved execution memory and
-    // OOM'd the forced-distributed capture (UNABLE_TO_ACQUIRE_MEMORY);
-    // DISK_ONLY keeps the heap for the per-pass aggregates
-    val e = eBase.persist(org.apache.spark.storage.StorageLevel.DISK_ONLY)
-    val srcN = e.select(col("s")).distinct().count()
-    val dstN = e.select(col("t")).distinct().count()
-    // Score relations are one row per node — tiny next to the edge
-    // relation. Below this node-count guard, hint them broadcast so
-    // each half-step is a shuffle-FREE broadcast join over the
-    // checkpointed edges + a map-side-combined aggregate (the only
-    // shuffle per half-step is node-sized partial sums). Above it
-    // (billion-node graphs), fall back to the plain shuffle join —
-    // same values either way, strategy only.
-    val BroadcastNodeLimit = 1L << 21
-    def hint(scores: DataFrame, n: Long): DataFrame =
-      if (n <= BroadcastNodeLimit) broadcast(scores) else scores
-    var hubs = e.select(col("s")).distinct()
-      .select(col("s"), round(lit(1.0 / srcN.toDouble), 12).as("h"))
-    var auths: DataFrame = null
-    for (_ <- 1 to iters) {
-      // checkpoint the RAW aggregates, not the normalized scores: each
-      // raw relation feeds BOTH its normalizer scalar and the score
-      // projection — uncheckpointed, the edge⋈score join re-executes
-      // per arm (measured 2x the per-iteration cost). The normalizer
-      // is COLLECTED to a scalar literal rather than crossJoin'd back
-      // in: the collect is a millisecond job over the node-sized
-      // checkpoint, and baking the literal makes every downstream read
-      // a pure projection — no per-materialization broadcast-exchange
-      // round-trips (r9 measured ~14 job turnarounds for 3 iterations;
-      // this plan does 2 checkpoints + 2 scalar reads per iteration).
-      // Same double value either way, so scores are bit-identical.
-      val aRaw = e.join(hint(hubs, srcN), "s")
-        .groupBy(col("t")).agg(decSum(col("h")).as("a_raw"))
-        .localCheckpoint()
-      val az = aRaw.agg(decSum(col("a_raw"))).head.getDouble(0)
-      auths = aRaw
-        .select(col("t"), round(col("a_raw") / lit(az), 12).as("a"))
-      val hRaw = e.join(hint(auths, dstN), "t")
-        .groupBy(col("s")).agg(decSum(col("a")).as("h_raw"))
-        .localCheckpoint()
-      val hz = hRaw.agg(decSum(col("h_raw"))).head.getDouble(0)
-      hubs = hRaw
-        .select(col("s"), round(col("h_raw") / lit(hz), 12).as("h"))
+    // the driver path needs one id type for its score map
+    val sameIdType = eBase.schema("s").dataType == eBase.schema("t").dataType
+    Route.bySize(eBase, if (sameIdType) driverEdgeLimit else -1L)(
+        hitsDriver(_, iters, roundTo)) { e =>
+      val srcN = e.select(col("s")).distinct().count()
+      val dstN = e.select(col("t")).distinct().count()
+      var hubs = e.select(col("s")).distinct()
+        .select(col("s"), round(lit(1.0 / srcN.toDouble), 12).as("h"))
+      var auths: DataFrame = null
+      for (_ <- 1 to iters) {
+        // checkpoint the RAW aggregates, not the normalized scores: each
+        // raw relation feeds BOTH its normalizer scalar and the score
+        // projection — uncheckpointed, the edge⋈score join re-executes
+        // per arm (measured 2x the per-iteration cost). The normalizer
+        // is COLLECTED to a scalar literal (a millisecond job over the
+        // node-sized checkpoint), so every downstream read is a pure
+        // projection with no broadcast-exchange round-trip; the double
+        // value is the same, so scores are bit-identical.
+        val aRaw = e.join(broadcastBelow(srcN)(hubs), "s")
+          .groupBy(col("t")).agg(decSum(col("h")).as("a_raw"))
+          .localCheckpoint()
+        val az = aRaw.agg(decSum(col("a_raw"))).head.getDouble(0)
+        auths = aRaw
+          .select(col("t"), round(col("a_raw") / lit(az), 12).as("a"))
+        val hRaw = e.join(broadcastBelow(dstN)(auths), "t")
+          .groupBy(col("s")).agg(decSum(col("a")).as("h_raw"))
+          .localCheckpoint()
+        val hz = hRaw.agg(decSum(col("h_raw"))).head.getDouble(0)
+        hubs = hRaw
+          .select(col("s"), round(col("h_raw") / lit(hz), 12).as("h"))
+      }
+      hubs.select(lit("hub").as("role"), col("s").as("id"),
+          round(col("h"), roundTo).as("score"))
+        .unionByName(auths.select(lit("authority").as("role"),
+          col("t").as("id"), round(col("a"), roundTo).as("score")))
     }
-    hubs.select(lit("hub").as("role"), col("s").as("id"),
-        round(col("h"), roundTo).as("score"))
-      .unionByName(auths.select(lit("authority").as("role"),
-        col("t").as("id"), round(col("a"), roundTo).as("score")))
   }
 
   /** Driver fast path for [[hits]]: one collect of the (already
-    * distinct, checkpointed) edge relation, then the full power
+    * distinct, pinned) edge relation, then the full power
     * iteration in memory. Replicates the distributed decimal grid
     * exactly — Spark's `round(x, s)` on a double is
     * `BigDecimal.valueOf(x).setScale(s, HALF_UP).toDouble`, and the
@@ -618,49 +593,44 @@ object Graph {
     // no grid to replicate — so below the guard one collect + an
     // in-memory peel replaces per-round degree shuffles + checkpoints
     // (ParityBoundarySpec pins equality). Above it, the distributed
-    // shell-removal loop runs. Counted and collected UNPINNED: the
-    // driver path reads the relation once, and the distributed path
-    // pins SERIALIZED ON DISK — the deserialized localCheckpoint of a
-    // 100×-scale edge set starved the degree aggregate's execution
-    // memory (AGGREGATE_OUT_OF_MEMORY in the forced-distributed
-    // capture).
-    if (eBase.count() <= driverEdgeLimit) return kCoreDriver(eBase, k, rounds)
-    var e: DataFrame =
-      eBase.persist(org.apache.spark.storage.StorageLevel.DISK_ONLY)
-    // early exit at the fixpoint is RESULT-identical to running all
-    // `rounds` (post-fixpoint peels are no-ops — the oracle runs them
-    // all and agrees). Each round removes the PEELED SHELL (nodes that
-    // just dropped below k) rather than re-filtering against the big
-    // survivor set: the shell is small after the first rounds, so a
-    // broadcast anti-join keeps the edge relation un-shuffled — one
-    // keyed shuffle (the degree aggregate) per round. A pathological
-    // shell (> 4M nodes in one round) falls back to shuffle semi-joins
-    // on the survivors; results are identical either way.
-    var round = 0
-    var fixed = false
-    while (round < rounds && !fixed) {
-      round += 1
-      val deg = e.select(col("a").as("v")).union(e.select(col("b").as("v")))
-        .groupBy(col("v")).agg(count(lit(1)).as("d"))
-        .localCheckpoint() // feeds the shell and (rarely) the fallback
-      val bad = deg.filter(col("d") < k).select(col("v"))
-      val nBad = bad.count()
-      if (nBad == 0L) fixed = true
-      else {
-        e = (if (nBad <= 4000000L)
-          e.join(broadcast(bad.withColumnRenamed("v", "a")),
-              Seq("a"), "left_anti")
-            .join(broadcast(bad.withColumnRenamed("v", "b")),
-              Seq("b"), "left_anti")
+    // shell-removal loop runs.
+    Route.bySize(eBase, driverEdgeLimit)(kCoreDriver(_, k, rounds)) { pinned =>
+      var e = pinned
+      // early exit at the fixpoint is RESULT-identical to running all
+      // `rounds` (post-fixpoint peels are no-ops — the oracle runs them
+      // all and agrees). Each round removes the PEELED SHELL (nodes that
+      // just dropped below k) rather than re-filtering against the big
+      // survivor set: the shell is small after the first rounds, so a
+      // broadcast anti-join keeps the edge relation un-shuffled — one
+      // keyed shuffle (the degree aggregate) per round. A pathological
+      // shell (> 4M nodes in one round) falls back to shuffle semi-joins
+      // on the survivors; results are identical either way.
+      var round = 0
+      var fixed = false
+      while (round < rounds && !fixed) {
+        round += 1
+        val deg = e.select(col("a").as("v")).union(e.select(col("b").as("v")))
+          .groupBy(col("v")).agg(count(lit(1)).as("d"))
+          .localCheckpoint() // feeds the shell and (rarely) the fallback
+        val bad = deg.filter(col("d") < k).select(col("v"))
+        val nBad = bad.count()
+        if (nBad == 0L) fixed = true
         else {
-          val good = deg.filter(col("d") >= k).select(col("v"))
-          e.join(good.withColumnRenamed("v", "a"), Seq("a"), "left_semi")
-            .join(good.withColumnRenamed("v", "b"), Seq("b"), "left_semi")
-        }).localCheckpoint()
+          e = (if (nBad <= 4000000L)
+            e.join(broadcast(bad.withColumnRenamed("v", "a")),
+                Seq("a"), "left_anti")
+              .join(broadcast(bad.withColumnRenamed("v", "b")),
+                Seq("b"), "left_anti")
+          else {
+            val good = deg.filter(col("d") >= k).select(col("v"))
+            e.join(good.withColumnRenamed("v", "a"), Seq("a"), "left_semi")
+              .join(good.withColumnRenamed("v", "b"), Seq("b"), "left_semi")
+          }).localCheckpoint()
+        }
       }
+      e.select(col("a").as("v")).union(e.select(col("b").as("v")))
+        .groupBy(col("v")).agg(count(lit(1)).as("core_deg"))
     }
-    e.select(col("a").as("v")).union(e.select(col("b").as("v")))
-      .groupBy(col("v")).agg(count(lit(1)).as("core_deg"))
   }
 
   /** Driver fast path for [[kCore]] — same integer peel, in memory. */
@@ -1027,48 +997,42 @@ object Graph {
     // order — no arithmetic grid to replicate at all), so below the
     // guard one collect + an in-memory BFS replaces maxHops rounds of
     // join/anti-join/checkpoint. ParityBoundarySpec pins equality.
-    // Counted/collected UNPINNED; the distributed loop (which reads e
-    // every round) pins SERIALIZED ON DISK — the deserialized
-    // localCheckpoint of a 100×-scale symmetrized edge set is the
-    // one-JVM OOM class the forced-distributed captures measured.
-    if (eBase.count() <= driverEdgeLimit) {
-      val roots = sources.select(col(sourceCol).as("v")).distinct()
-      return bfsDriver(eBase, roots, maxHops, perRoot = false)
-        .select(col("v"), col("hops"))
-    }
-    val e = eBase.persist(org.apache.spark.storage.StorageLevel.DISK_ONLY)
-    var dist = sources.select(col(sourceCol).as("v")).distinct()
-      .withColumn("hops", lit(0))
-      .localCheckpoint()
-    // frontier and visited-set sizes are tracked from the counts the
-    // loop already pays (the isEmpty test becomes a count), so both
-    // node-sized relations broadcast below the limit and the
-    // CHECKPOINTED edge relation is never re-shuffled per round —
-    // strategy only, hop values identical
-    var distN = dist.count()
-    var frontier = dist.select(col("v"))
-    var frontierN = distN
-    var h = 0
-    var done = false
-    while (h < maxHops && !done) {
-      h += 1
-      val nxt = broadcastBelow(frontierN)(frontier)
-        .join(e, frontier("v") === e("s"))
-        .select(col("t").as("v")).distinct()
-        .join(broadcastBelow(distN)(dist.select(col("v"))), Seq("v"),
-          "left_anti")
-        .withColumn("hops", lit(h))
+    Route.bySize(eBase, driverEdgeLimit)(bfsDriver(_,
+        sources.select(col(sourceCol).as("v")).distinct(), maxHops,
+        perRoot = false)) { e =>
+      var dist = sources.select(col(sourceCol).as("v")).distinct()
+        .withColumn("hops", lit(0))
         .localCheckpoint()
-      val nxtN = nxt.count()
-      if (nxtN == 0L) done = true
-      else {
-        dist = dist.unionByName(nxt).localCheckpoint()
-        distN += nxtN
-        frontier = nxt.select(col("v"))
-        frontierN = nxtN
+      // frontier and visited-set sizes are tracked from the counts the
+      // loop already pays (the isEmpty test becomes a count), so both
+      // node-sized relations broadcast below the limit and the
+      // PINNED edge relation is never re-shuffled per round —
+      // strategy only, hop values identical
+      var distN = dist.count()
+      var frontier = dist.select(col("v"))
+      var frontierN = distN
+      var h = 0
+      var done = false
+      while (h < maxHops && !done) {
+        h += 1
+        val nxt = broadcastBelow(frontierN)(frontier)
+          .join(e, frontier("v") === e("s"))
+          .select(col("t").as("v")).distinct()
+          .join(broadcastBelow(distN)(dist.select(col("v"))), Seq("v"),
+            "left_anti")
+          .withColumn("hops", lit(h))
+          .localCheckpoint()
+        val nxtN = nxt.count()
+        if (nxtN == 0L) done = true
+        else {
+          dist = dist.unionByName(nxt).localCheckpoint()
+          distN += nxtN
+          frontier = nxt.select(col("v"))
+          frontierN = nxtN
+        }
       }
+      dist
     }
-    dist
   }
 
   /** Per-root BFS distances for a SMALL root set — [[bfsHops]] keyed
@@ -1091,42 +1055,41 @@ object Graph {
       .unionAll(edges.select(col(dst).as("s"), col(src).as("t")))
       .filter(col("s") =!= col("t")).distinct()
     // driver fast path — see [[bfsHops]]; one BFS per root over the
-    // same collected adjacency. Same unpinned-count / DISK_ONLY-pin
-    // split as [[bfsHops]].
-    if (eBase.count() <= driverEdgeLimit)
-      return bfsDriver(eBase, roots.select(col(rootCol).as("v")).distinct(),
-        maxHops, perRoot = true)
-    val e = eBase.persist(org.apache.spark.storage.StorageLevel.DISK_ONLY)
-    var dist = roots.select(col(rootCol).as("root")).distinct()
-      .select(col("root"), col("root").as("v"))
-      .withColumn("hops", lit(0))
-      .localCheckpoint()
-    // same broadcast-below-limit discipline as [[bfsHops]]: (root, v)
-    // state stays panel×nodes-sized, the edge relation never re-shuffles
-    var distN = dist.count()
-    var frontier = dist.select(col("root"), col("v"))
-    var frontierN = distN
-    var h = 0
-    var done = false
-    while (h < maxHops && !done) {
-      h += 1
-      val nxt = broadcastBelow(frontierN)(frontier)
-        .join(e, frontier("v") === e("s"))
-        .select(col("root"), col("t").as("v")).distinct()
-        .join(broadcastBelow(distN)(dist.select(col("root"), col("v"))),
-          Seq("root", "v"), "left_anti")
-        .withColumn("hops", lit(h))
+    // same collected adjacency.
+    Route.bySize(eBase, driverEdgeLimit)(bfsDriver(_,
+        roots.select(col(rootCol).as("v")).distinct(), maxHops,
+        perRoot = true)) { e =>
+      var dist = roots.select(col(rootCol).as("root")).distinct()
+        .select(col("root"), col("root").as("v"))
+        .withColumn("hops", lit(0))
         .localCheckpoint()
-      val nxtN = nxt.count()
-      if (nxtN == 0L) done = true
-      else {
-        dist = dist.unionByName(nxt).localCheckpoint()
-        distN += nxtN
-        frontier = nxt.select(col("root"), col("v"))
-        frontierN = nxtN
+      // same broadcast-below-limit discipline as [[bfsHops]]: (root, v)
+      // state stays panel×nodes-sized, the edge relation never re-shuffles
+      var distN = dist.count()
+      var frontier = dist.select(col("root"), col("v"))
+      var frontierN = distN
+      var h = 0
+      var done = false
+      while (h < maxHops && !done) {
+        h += 1
+        val nxt = broadcastBelow(frontierN)(frontier)
+          .join(e, frontier("v") === e("s"))
+          .select(col("root"), col("t").as("v")).distinct()
+          .join(broadcastBelow(distN)(dist.select(col("root"), col("v"))),
+            Seq("root", "v"), "left_anti")
+          .withColumn("hops", lit(h))
+          .localCheckpoint()
+        val nxtN = nxt.count()
+        if (nxtN == 0L) done = true
+        else {
+          dist = dist.unionByName(nxt).localCheckpoint()
+          distN += nxtN
+          frontier = nxt.select(col("root"), col("v"))
+          frontierN = nxtN
+        }
       }
+      dist
     }
-    dist
   }
 
   /** Driver BFS for [[bfsHops]]/[[bfsHopsPerRoot]]: one collect of the

@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
+import org.apache.spark.sql.types.{DecimalType, LongType}
 
 /** Skew-mitigation operators (SURVEY.md §4 / task brief: "salting for
   * skew, AQE for runtime re-plan").
@@ -63,71 +63,70 @@ object Skew {
       .drop("_salt", "_dsalt")
   }
 
-  /** Two-phase GLOBAL ranking — the distributed form of an
+  /** GLOBAL ranking without a window — the distributed form of an
     * unpartitioned `row_number()/ntile()/sum() over (order by …)`
-    * window, which WindowExec otherwise executes by moving the whole
-    * relation to ONE partition (the "No Partition Defined" warning —
-    * a serialization point that grows with the corpus). Standard
-    * range-partitioned rank: range-shuffle on the total order, local
-    * row_number/running sums per partition, then per-partition counts
-    * and totals (a numShufflePartitions-row spine) turn into exclusive
-    * prefix offsets that are broadcast-joined back. Because `order`
-    * must be a UNIQUE total order (callers append a tiebreak id — the
-    * same requirement the single-partition window already had for
-    * determinism), global rank = partition offset + local rank is
-    * EXACTLY row_number over the unpartitioned window; running
-    * DECIMAL/long sums split the same way (exact addition is
-    * associative). Output: the input columns plus `_rank` (1-based),
-    * `_n` (total rows), and for each (name, expr) in `prefixSums` a
-    * running inclusive sum `name` and its grand total `_tot_name`. */
+    * window, which WindowExec runs by moving the whole relation to ONE
+    * partition (a serialization point that grows with the corpus).
+    * One pinned pass: range-partition on the total order, sort within
+    * partitions, localCheckpoint; the job that materializes the pin
+    * also counts each partition. A row's rank is its partition's
+    * offset (a literal indexed by `spark_partition_id()`) plus its
+    * index within its sorted pinned partition — EXACTLY row_number
+    * over the unpartitioned window, because `order` must be a UNIQUE
+    * total order (callers append a tiebreak id, as the window needed
+    * for determinism). Output: the input columns plus `_rank`
+    * (1-based) and `_n` (total rows). For each (name, expr) in
+    * `prefixSums` (DECIMAL or integral), a running inclusive sum
+    * `name` and its grand total `_tot_name`, both of `sum`'s result
+    * type: a `_pid`-partitioned running window plus the partition's
+    * offset from the collected per-partition totals (exact addition is
+    * associative). `_n` and `_tot_name` are literals. */
   def rangedRank(df: DataFrame, order: Seq[Column],
       prefixSums: Seq[(String, Column)] = Nil): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val spark = df.sparkSession
-    val p = spark.sessionState.conf.numShufflePartitions
-    // localCheckpoint is CORRECTNESS here, not the usual dual-arm cost
-    // trade: spark_partition_id() is nondeterministic and the range
-    // boundaries are sampled, so the rank arm and the offsets arm must
-    // read ONE pinned pid assignment — re-evaluating the exchange per
-    // arm can sample different boundaries and skew every rank by the
-    // boundary delta (observed ±4 on q184 before the pin).
-    val parted = df.repartitionByRange(p, order: _*)
-      .withColumn("_pid", spark_partition_id())
-      .localCheckpoint()
-    val wLocal = Window.partitionBy(col("_pid")).orderBy(order: _*)
-    val wRun = wLocal.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val local = prefixSums.foldLeft(
-      parted.withColumn("_lrk", row_number().over(wLocal).cast("long"))) {
-      case (d, (nm, c)) => d.withColumn(s"_l_$nm", sum(c).over(wRun))
-    }
-    // per-partition totals: a P-row spine — the bounded relation the
-    // offset windows below are allowed to single-partition over
-    val tot = parted.groupBy(col("_pid")).agg(
-      count(lit(1)).as("_cnt"),
-      prefixSums.map { case (nm, c) => sum(c).as(s"_t_$nm") }: _*)
-    val wPrev = Window.orderBy(col("_pid"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val wAll = Window.partitionBy()
-    val offs = prefixSums.foldLeft(
-      tot.withColumn("_off", coalesce(sum(col("_cnt")).over(wPrev), lit(0L)))
-        .withColumn("_n", sum(col("_cnt")).over(wAll))) {
-      case (d, (nm, _)) =>
-        d.withColumn(s"_o_$nm", sum(col(s"_t_$nm")).over(wPrev))
-          .withColumn(s"_tot_$nm", sum(col(s"_t_$nm")).over(wAll))
-    }.select(col("_pid") +: col("_off") +: col("_n") +:
-      prefixSums.flatMap { case (nm, _) =>
-        Seq(col(s"_o_$nm"), col(s"_tot_$nm")) }: _*)
-    val joined = local.join(broadcast(offs), Seq("_pid"))
-      .withColumn("_rank", col("_off") + col("_lrk"))
-    prefixSums.foldLeft(joined) { case (d, (nm, _)) =>
-      // null-safe split of sum's skip-nulls semantics: the running sum
-      // is null only while NO non-null value has been seen yet
-      d.withColumn(nm,
-        when(col(s"_o_$nm").isNull, col(s"_l_$nm"))
-          .when(col(s"_l_$nm").isNull, col(s"_o_$nm"))
-          .otherwise(col(s"_o_$nm") + col(s"_l_$nm")))
-        .drop(s"_o_$nm", s"_l_$nm")
-    }.drop("_pid", "_off", "_lrk")
+    val p = df.sparkSession.sessionState.conf.numShufflePartitions
+    // the pin is CORRECTNESS: the range bounds are sampled, so the
+    // counts and every rank must read ONE partitioning. Tiny inputs
+    // may yield fewer than p partitions; an empty one counts 0.
+    val (pinned, counts) = org.apache.spark.sql.GraftSqlBridge
+      .localCheckpointCounted(df.repartitionByRange(p, order: _*)
+        .sortWithinPartitions(order: _*))
+    val offs = counts.scanLeft(0L)(_ + _)
+    val pid = spark_partition_id()
+    // monotonically_increasing_id() is (pid << 33) + the row's index in
+    // its partition; this projection sits directly over the pin (no
+    // exchange between), so that index is its place in the sorted pin
+    val shift = typedLit(offs.toSeq.zipWithIndex.map { case (o, i) =>
+      o + 1L - (i.toLong << 33) })
+    val ranked = pinned
+      .withColumn("_rank", monotonically_increasing_id() + shift(pid))
+      .withColumn("_n", lit(offs.last))
+    if (prefixSums.isEmpty) return ranked
+    val tots = pinned.groupBy(pid)
+      .agg(sum(prefixSums.head._2), prefixSums.tail.map(ps => sum(ps._2)): _*)
+    val byPid = tots.collect().map(r => r.getInt(0) -> r).toMap
+    val wRun = Window.partitionBy(col("_pid")).orderBy(order: _*)
+      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    prefixSums.zipWithIndex.foldLeft(ranked.withColumn("_pid", pid)) {
+      case (d, ((nm, c), j)) =>
+        val dt = tots.schema(j + 1).dataType
+        require(dt.isInstanceOf[DecimalType] || dt == LongType,
+          s"rangedRank: prefix sum $nm must be DECIMAL or integral")
+        // sum's skip-nulls semantics: null until a non-null is seen
+        val cum = counts.indices.map(i => byPid.get(i).map(_.get(j + 1)).orNull)
+          .scanLeft(null: Any) {
+            case (null, v) => v
+            case (a, null) => a
+            case (a: java.math.BigDecimal, v: java.math.BigDecimal) => a.add(v)
+            case (a: Long, v: Long) => a + v
+          }
+        val off = array(cum.map(v => lit(v).cast(dt)): _*)(col("_pid"))
+        val run = col(s"_l_$nm")
+        d.withColumn(s"_l_$nm", sum(c).over(wRun))
+          .withColumn(nm, coalesce((off + run).cast(dt), off, run))
+          .withColumn(s"_tot_$nm", lit(cum.last).cast(dt))
+          .drop(s"_l_$nm")
+    }.drop("_pid")
   }
 
   /** `ntile(k)` reconstructed from a [[rangedRank]] global rank and

@@ -2714,12 +2714,12 @@ object EventQueries {
             sum(round(col("value"), 2).cast(DecimalType(27, 6)))
               .cast("double").as("monetary"))
         // quintile scores; recency INVERTS (smaller = better = 5).
-        // Each ntile runs as a two-phase ranged rank (Skew.rangedRank)
-        // instead of an unpartitioned window — the user spine GROWS
-        // with the corpus, and the single-partition WindowExec was the
-        // tier's at-scale serialization point. Chained passes: each
-        // range-shuffles the previous output on its own total order;
-        // ntile arithmetic is value-identical (unique tiebreak id).
+        // Each ntile runs as a ranged rank (Skew.rangedRank) instead of
+        // an unpartitioned window — the user spine GROWS with the
+        // corpus, and the single-partition WindowExec was the tier's
+        // at-scale serialization point. Chained passes, each one pin of
+        // the previous output sorted on its own total order; ntile
+        // arithmetic is value-identical (unique tiebreak id).
         val S = graft.operators.Skew
         def quintile(df: org.apache.spark.sql.DataFrame, name: String,
             order: Seq[Column]): org.apache.spark.sql.DataFrame =
@@ -2778,9 +2778,10 @@ object EventQueries {
         "purchase aggregates in one pass (reference date is a " +
         "broadcast scalar), three ntile windows over TOTAL orders " +
         "(metric, user_id — identical bucket boundaries on both " +
-        "engines), integer scores, deterministic CASE labels. The " +
-        "single-partition score windows run over |users| rows — the " +
-        "q174 caveat and its histogram alternative apply identically."),
+        "engines), integer scores, deterministic CASE labels. Each " +
+        "ntile is a ranged rank: one range-partitioned, sorted pin of " +
+        "|users| rows whose per-partition counts turn into rank " +
+        "offsets — no single-partition window over the user spine."),
 
     // ---- q185: new-vs-returning daily split --------------------------------
     "q185_new_returning" -> Q(

@@ -1525,9 +1525,9 @@ object RelationalQueries {
         val spend = Tables.orders(s, d)
           .groupBy(col("o_custkey"))
           .agg(moneySum(col("o_totalprice")).as("spend"))
-        // ntile over the customer spine via the two-phase ranged rank
-        // (Skew.rangedRank): the unpartitioned ntile window previously
-        // single-partitioned a relation that GROWS with the corpus —
+        // ntile over the customer spine via the ranged rank
+        // (Skew.rangedRank), not an unpartitioned window that would
+        // single-partition a relation that GROWS with the corpus —
         // rank + NTile arithmetic is value-identical (unique total
         // order: spend desc, custkey)
         val ranked = graft.operators.Skew.rangedRank(spend,
@@ -1585,11 +1585,11 @@ object RelationalQueries {
         "ntile(10) over a TOTAL order (spend desc, key — identical " +
         "bucket boundaries on both engines), then per-decile revenue, " +
         "share, and cumulative share from decimal window sums over the " +
-        "10-row decile relation. The single-partition ntile window " +
-        "runs over |customers| rows — at 100 TB swap it for the q141 " +
-        "range-bucket form (percent_rank via SUM over a value " +
-        "histogram) if customers outgrow one partition; the report " +
-        "windows stay 10 rows regardless.")
+        "10-row decile relation. The ntile is a ranged rank over " +
+        "|customers| rows (a range-partitioned, sorted pin whose " +
+        "per-partition counts give rank offsets), not a " +
+        "single-partition window; the report windows stay 10 rows " +
+        "regardless.")
     ,
 
     // ---- q182: rollup hierarchy with ratio-to-parent -----------------------
@@ -1741,11 +1741,9 @@ object RelationalQueries {
           .groupBy(col("l_partkey"))
           .agg(sum((col("l_extendedprice") * (lit(1.0) - col("l_discount")))
             .cast(DecimalType(27, 6))).as("rev_dec"))
-        // two-phase ranged rank (Skew.rangedRank): rank, the exact
-        // DECIMAL prefix sum, and the grand total all come from the
-        // range-partitioned pass + the P-row offset spine — the
-        // previous unpartitioned window single-partitioned the part
-        // relation, which grows with the corpus
+        // ranged rank (Skew.rangedRank): rank, the exact DECIMAL prefix
+        // sum and the grand total, without an unpartitioned window
+        // over the part relation, which grows with the corpus
         graft.operators.Skew.rangedRank(rev,
             Seq(col("rev_dec").desc, col("l_partkey")),
             prefixSums = Seq("cum_dec" -> col("rev_dec")))

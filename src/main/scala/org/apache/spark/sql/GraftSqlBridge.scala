@@ -2,6 +2,7 @@ package org.apache.spark.sql
 
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.execution.{LogicalRDD, SQLExecution}
 
 /** Bridge into the `private[sql]` DataFrame and Column constructors, so
   * the library's custom logical operators (graft.plans.AsOfJoin) can be
@@ -10,7 +11,7 @@ import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
   * expressions) as a Column, and a Column as the expression it wraps —
   * the standard extension-library pattern for plugging a custom
   * LogicalPlan or Expression into a session without the function
-  * registry. Nothing else from the private surface is touched. */
+  * registry. [[localCheckpointCounted]] is the one other private use. */
 object GraftSqlBridge {
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
@@ -18,4 +19,24 @@ object GraftSqlBridge {
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)
 
   def expression(c: Column): Expression = classic.ExpressionUtils.expression(c)
+
+  /** `df.localCheckpoint()` (the same RDD checkpoint, storage level
+    * and `LogicalRDD`) whose materializing job also counts each pinned
+    * partition: the pin plus its row counts, in partition order, from
+    * ONE job. */
+  def localCheckpointCounted(df: DataFrame): (DataFrame, Array[Long]) = {
+    val ds = df.asInstanceOf[classic.Dataset[Row]]
+    SQLExecution.withNewExecutionId(ds.queryExecution, Some("localCheckpoint")) {
+      val rdd = ds.queryExecution.executedPlan.execute().map(_.copy())
+      rdd.localCheckpoint()
+      // every partition is stored by this job, so the checkpoint that
+      // runJob takes when it ends runs no job of its own
+      val counts = ds.sparkSession.sparkContext.runJob(rdd, (rows: Iterator[_]) => {
+        var c = 0L
+        while (rows.hasNext) { rows.next(); c += 1 }
+        c
+      })
+      (ofRows(ds.sparkSession, LogicalRDD.fromDataset(rdd, ds, isStreaming = false)), counts)
+    }
+  }
 }

@@ -639,13 +639,34 @@ class PlanSpec extends SparkSuite {
   }
 
   test("q265 Pareto prefix window runs over the aggregated part relation") {
-    val p = plan("q265_pareto_abc")
-    // the corpus aggregation must be partial (map-side) before the
-    // single exchange; the window then sees only the part relation
-    assert(p.contains("HashAggregate"))
-    assert(p.contains("partial_sum") || p.contains("Partial"),
-      "corpus aggregate must have a map-side phase\n" + p.take(2000))
-    assert(p.contains("Window"))
+    // Skew.rangedRank pins the aggregated part relation while the query
+    // is built, so the corpus aggregation runs in that pin's own
+    // execution and the query's plan starts at the pinned scan: read
+    // the pin's plan from the executions the build ran
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.util.QueryExecutionListener
+    import org.scalatest.concurrent.Eventually._
+    import org.scalatest.time.SpanSugar._
+    val pins = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        if (f == "localCheckpoint") pins.add(qe.explainString(
+          org.apache.spark.sql.execution.ExplainMode.fromString("formatted")))
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      val p = plan("q265_pareto_abc")
+      // the corpus aggregation must be partial (map-side) before the
+      // single exchange; the window then sees only the part relation
+      eventually(timeout(30.seconds)) {
+        val pin = pins.toArray.map(_.toString).find(_.contains("rev_dec"))
+        assert(pin.exists(_.contains("HashAggregate")))
+        assert(pin.exists(x => x.contains("partial_sum") || x.contains("Partial")),
+          "corpus aggregate must have a map-side phase\n" + pin.map(_.take(2000)))
+      }
+      assert(p.contains("Window"))
+    } finally spark.listenerManager.unregister(listener)
   }
 
   test("q273 NB scoring broadcasts the label panel and the count grid") {

@@ -45,4 +45,79 @@ class RangedRankSpec extends AnyFunSuite {
       }
     }
   }
+
+  private def relation(n: Long) = spark.range(n).select(col("id").as("u"),
+    pmod(xxhash64(col("id")), lit(40)).as("freq"),
+    // every fifth value null: the running sum stays null until the
+    // first non-null value, as sum() over the window does
+    when(col("id") % 5 =!= 0,
+      (pmod(xxhash64(col("id"), lit(7)), lit(1000)).cast("double") / 100)
+        .cast(org.apache.spark.sql.types.DecimalType(27, 6))).as("v"))
+
+  test("rangedRank matches the unpartitioned window under AQE on/off, " +
+      "1-16 shuffle partitions and 0-1501 rows") {
+    val keys = Seq("spark.sql.adaptive.enabled", "spark.sql.shuffle.partitions")
+    val saved = keys.map(k => k -> spark.conf.getOption(k))
+    try {
+      for (aqe <- Seq(true, false); parts <- Seq(1, 3, 8, 16);
+           n <- Seq(0L, 2L, 7L, 1501L)) {
+        spark.conf.set(keys(0), aqe.toString)
+        spark.conf.set(keys(1), parts.toString)
+        val what = s"aqe=$aqe partitions=$parts n=$n"
+        val df = relation(n)
+        val order = if (parts % 2 == 1) Seq(col("freq"), col("u"))
+          else Seq(col("freq").desc, col("u"))
+        val ranked = graft.operators.Skew.rangedRank(df, order,
+          prefixSums = Seq("cs" -> col("v")))
+        val w = Window.orderBy(order: _*)
+        val truth = df
+          .withColumn("_rank", row_number().over(w).cast("long"))
+          .withColumn("cs", sum(col("v")).over(
+            w.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
+          .withColumn("_tot_cs", sum(col("v")).over(Window.partitionBy()))
+          .withColumn("_n", count(lit(1)).over(Window.partitionBy()))
+          .withColumn("nt5", ntile(5).over(w))
+          .withColumn("nt7", ntile(7).over(w))
+        for (c <- Seq("cs", "_tot_cs"))
+          assert(ranked.schema(c).dataType === truth.schema(c).dataType,
+            s"$what: $c type")
+        val got = ranked
+          .withColumn("nt5", graft.operators.Skew.ntileFromRank(
+            col("_rank"), col("_n"), 5))
+          .withColumn("nt7", graft.operators.Skew.ntileFromRank(
+            col("_rank"), col("_n"), 7))
+        val cols = Seq("u", "_rank", "cs", "_tot_cs", "_n", "nt5", "nt7")
+          .map(col)
+        def rows(d: org.apache.spark.sql.DataFrame) =
+          d.select(cols: _*).collect().map(_.toSeq).sortBy(_.head.asInstanceOf[Long])
+            .toSeq
+        val g = rows(got)
+        assert(g.length === n, what)
+        assert(g === rows(truth), what)
+      }
+    } finally saved.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
+  test("rank-only rangedRank is stable across collects and plans no " +
+      "broadcast and no window") {
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.BroadcastExchangeLike
+    import org.apache.spark.sql.execution.window.WindowExec
+    val ranked = graft.operators.Skew.rangedRank(relation(1501),
+      Seq(col("freq").desc, col("u")))
+    def ranks = ranked.select(col("u"), col("_rank")).collect()
+      .map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
+    val first = ranks
+    assert(first.map(_._2).sorted === (1L to 1501L))
+    assert(ranks === first)
+    val plan = ranked.queryExecution.executedPlan
+    val found = new AdaptiveSparkPlanHelper {}.find(plan) {
+      case _: BroadcastExchangeLike | _: WindowExec => true
+      case _ => false
+    }
+    assert(found.isEmpty, s"broadcast or window in the plan:\n$plan")
+  }
 }
