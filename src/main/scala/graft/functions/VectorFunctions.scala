@@ -1,9 +1,11 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, GraftSqlBridge}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.GraftSqlBridge.{column => wrap, expression => unwrap}
 import org.apache.spark.sql.functions._
 
-import graft.plans.{DotProduct, SquaredL2}
+import graft.plans.{AdcScore, DotProduct, DotProductI8, LshBuckets, MotifCorr,
+  NearestCell, NearestCells, RpProject, SquaredL2}
 
 /** Vector math over `array<float|double>` columns as pure Catalyst
   * higher-order-function expressions — codegen'd, no UDF serde, and
@@ -44,14 +46,12 @@ object VectorFunctions {
   // Same fold order and arithmetic as the HOF versions above, but as
   // native expressions inside whole-stage codegen — use these in join
   // hot paths. Built as Columns directly, so they need no function
-  // registry entry (the sqrt-threshold rewrite still comes from
-  // VectorExpressions.register or GraftExtensions).
+  // registry entry. A threshold on a distance compares the SQUARED
+  // distance with the squared tolerance (no sqrt per pair).
 
-  def fastDot(a: Column, b: Column): Column =
-    GraftSqlBridge.column(DotProduct(GraftSqlBridge.expression(a), GraftSqlBridge.expression(b)))
+  def fastDot(a: Column, b: Column): Column = wrap(DotProduct(unwrap(a), unwrap(b)))
 
-  def fastSquaredL2(a: Column, b: Column): Column =
-    GraftSqlBridge.column(SquaredL2(GraftSqlBridge.expression(a), GraftSqlBridge.expression(b)))
+  def fastSquaredL2(a: Column, b: Column): Column = wrap(SquaredL2(unwrap(a), unwrap(b)))
 
   def fastNorm(a: Column): Column = sqrt(fastDot(a, a))
 
@@ -59,6 +59,35 @@ object VectorFunctions {
     * arithmetic to [[cosine]] when na/nb are [[fastNorm]] columns. */
   def cosineWithNorms(a: Column, b: Column, na: Column, nb: Column): Column =
     fastDot(a, b) / (na * nb)
+
+  /** Exact long dot product of two int8-code arrays ([[DotProductI8]]). */
+  def dotI8(a: Column, b: Column): Column = wrap(DotProductI8(unwrap(a), unwrap(b)))
+
+  // ---- model-carrying projections ------------------------------------
+  // The model (seed, widths, centroid matrix, pattern) is a plain value
+  // that ships inside the expression, so each is a pure projection.
+
+  def lshBuckets(v: Column, nBits: Int, nTables: Int, seed: Long): Column =
+    wrap(LshBuckets(unwrap(v), nBits, nTables, seed))
+
+  def rpProject(v: Column, dOut: Int, seed: Long): Column =
+    wrap(RpProject(unwrap(v), dOut, seed))
+
+  /** Index of the nearest centroid row, ties to the lower index. */
+  def nearestCell(v: Column, centroids: Array[Array[Double]]): Column =
+    wrap(NearestCell(unwrap(v), centroids))
+
+  /** Indices of the `nProbe` nearest centroid rows, nearest first. */
+  def nearestCells(v: Column, centroids: Array[Array[Double]], nProbe: Int): Column =
+    wrap(NearestCells(unwrap(v), centroids, nProbe))
+
+  /** PQ asymmetric distance of `codes` against a flattened m×k table. */
+  def adcScore(codes: Column, dtab: Column, k: Int): Column =
+    wrap(AdcScore(unwrap(codes), unwrap(dtab), k))
+
+  /** struct<v, corr> of a window against a z-normalized pattern. */
+  def motifCorr(window: Column, zPattern: Array[Double]): Column =
+    wrap(MotifCorr(unwrap(window), zPattern))
 
   // ---- int8 quantization ---------------------------------------------
   // Max-abs symmetric quantization: q_i = round(x_i / (||v||_inf / 127)).

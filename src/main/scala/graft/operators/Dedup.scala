@@ -5,7 +5,6 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.TextFunctions._
-import graft.plans.TextExpressions
 
 /** Deduplication operators for a large-scale training-data pipeline:
   * exact (hash group-by), MinHash+LSH banding, SimHash hamming pairs,
@@ -40,7 +39,6 @@ object Dedup {
     * identical pair counts barring a 2^-64 collision. */
   def jaccardPairs(docs: DataFrame, id: String, text: String, block: String,
       n: Int, threshold: Double): DataFrame = {
-    TextExpressions.register(docs.sparkSession)
     // single-pass native shingle hashing (see ShingleHashes scaladoc for
     // why the declarative transform/sequence form is quadratic).
     // localCheckpoint (eager): the plan is a diamond (both self-join
@@ -52,7 +50,7 @@ object Dedup {
     // two orders smaller than the raw text; tradeoff: lineage is cut,
     // so an executor loss re-runs the query instead of recomputing.
     val hashed = docs.select(col(id).as("doc"), col(block).as("blk"),
-      call_function("shingle_hashes", col(text), lit(n)).as("shs"))
+      shingleHashes(col(text), n).as("shs"))
       .localCheckpoint()
     val sizes = hashed.select(col("doc"), size(col("shs")).as("n_sh"))
     val sh = hashed.select(col("doc"), col("blk"), explode(col("shs")).as("shingle"))
@@ -82,9 +80,8 @@ object Dedup {
     * are shingle-identical). */
   def containmentPairs(docs: DataFrame, id: String, text: String,
       block: String, n: Int, threshold: Double): DataFrame = {
-    TextExpressions.register(docs.sparkSession)
     val hashed = docs.select(col(id).as("doc"), col(block).as("blk"),
-      call_function("shingle_hashes", col(text), lit(n)).as("shs"))
+      shingleHashes(col(text), n).as("shs"))
       .localCheckpoint()
     val sizes = hashed.select(col("doc"), size(col("shs")).as("n_sh"))
     val sh = hashed.select(col("doc"), col("blk"), explode(col("shs")).as("shingle"))
@@ -132,11 +129,10 @@ object Dedup {
       n: Int, threshold: Double): DataFrame = {
     require(threshold > 0 && threshold <= 1,
       "prefixJaccardPairs: threshold must be in (0, 1]")
-    TextExpressions.register(docs.sparkSession)
     // localCheckpoint: the signature relation feeds three arms (df,
     // prefix, verify) — same diamond rationale as jaccardPairs
     val hashed = docs.select(col(id).as("doc"),
-        call_function("shingle_hashes", col(text), lit(n)).as("shs"))
+        shingleHashes(col(text), n).as("shs"))
       .localCheckpoint()
     val sh = hashed.select(col("doc"), explode(col("shs")).as("shingle"))
     val df = sh.groupBy(col("shingle")).agg(count(lit(1)).as("freq"))
@@ -206,13 +202,12 @@ object Dedup {
     * Output: (src_a, src_b, n_shared, n_a, n_b, jaccard) for every
     * source pair sharing at least one shingle; src_a < src_b. */
   def sourceOverlap(docs: DataFrame, by: String, text: String, n: Int): DataFrame = {
-    TextExpressions.register(docs.sparkSession)
     // distinct + collect_set fuse into ONE shuffle on sh (collect_set
     // dedups internally); the result is one row per distinct shingle —
     // the smallest relation in the plan — and it feeds both arms, so
     // materialize THAT, not the (src, sh) pair stream
     val srcSets = docs.select(col(by).as("src"),
-        explode(call_function("shingle_hashes", col(text), lit(n))).as("sh"))
+        explode(shingleHashes(col(text), n)).as("sh"))
       .groupBy(col("sh"))
       .agg(sort_array(collect_set(col("src"))).as("srcs"))
       .localCheckpoint()
@@ -258,9 +253,8 @@ object Dedup {
       shingleN: Int, numPerm: Int, bands: Int): DataFrame = {
     require(numPerm % bands == 0, "numPerm must divide into bands")
     val rows = numPerm / bands
-    TextExpressions.register(docs.sparkSession)
     val sig = docs.select(col(id).as("doc"),
-      call_function("minhash_md5", col(text), lit(shingleN), lit(numPerm)).as("ms"))
+      minhashMd5(col(text), shingleN, numPerm).as("ms"))
       .filter(col("ms").isNotNull)
     val banded = sig.select(col("doc"), explode(array((0 until bands).map { b =>
       struct(lit(b).as("band"),
@@ -354,9 +348,8 @@ object Dedup {
     * neither. */
   private def simhashSignatures(docs: DataFrame, id: String, text: String,
       block: String): DataFrame = {
-    TextExpressions.register(docs.sparkSession)
     docs.select(col(id).as("doc"), col(block).as("blk"),
-      call_function("simhash_md5", col(text)).as("sig"))
+      simhashMd5(col(text)).as("sig"))
   }
 
   /** SimHash near-dup pairs within a blocking column: 64-bit signatures,
@@ -507,9 +500,8 @@ object Dedup {
     * element and dominated q100/q101's runtime. */
   private def windowHashes(docs: DataFrame, id: String, text: String,
       n: Int): DataFrame = {
-    TextExpressions.register(docs.sparkSession)
     docs.select(col(id).as("doc"),
-      posexplode(call_function("window_md5s", col(text), lit(n)))
+      posexplode(windowMd5s(col(text), n))
         .as(Seq("pos", "h")))
   }
 

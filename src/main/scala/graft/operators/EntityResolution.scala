@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.functions.TextFunctions.{deletionVariants, md5U52}
+
 /** Fuzzy entity resolution — the record-linkage half of dedup: where
   * [[Dedup]] finds near-identical *documents*, this finds near-identical
   * *entity strings* (names, addresses, product titles) under edit
@@ -62,10 +64,9 @@ object EntityResolution {
     // deletionNeighborhoodPos — EntityGraphSpec pins it): the
     // declarative transform evaluates an interpreted when/concat/substr
     // tree per character per row
-    graft.plans.TextExpressions.register(df.sparkSession)
     val keyed = df.select(
         col(idCol).as("_id"), col(nameCol).as("_name"),
-        explode(call_function("deletion_variants", col(nameCol))).as("_kp"))
+        explode(deletionVariants(col(nameCol))).as("_kp"))
       .select(col("_id"), col("_name"),
         col("_kp.v").as("_blk"), col("_kp.p").as("_pos"))
       // both self-join sides read this relation; materialize the
@@ -145,7 +146,6 @@ object EntityResolution {
       minScore: Option[Double] = None): DataFrame = {
     require(fields.nonEmpty, "linkageScores: at least one field")
     require(blockBudget > 0, "linkageScores: blockBudget must be positive")
-    graft.plans.TextExpressions.register(records.sparkSession)
     val attrs = fields.map(_.attr).distinct
     val base0 = records.select(
       (col(id).as("_id") +: block.as("_blk") +: subKey.as("_sk") +:
@@ -162,7 +162,7 @@ object EntityResolution {
             ceil(col("_csz").cast("double") / lit(blockBudget.toDouble))
               .cast("long"))
           .withColumn("_sub",
-            call_function("md5_u52", col("_sk").cast("string"), lit(8), lit(25))
+            md5U52(col("_sk").cast("string"), 8, 25)
               .cast("long") % col("_nsub"))
           .drop("_sk", "_csz", "_nsub")
       }

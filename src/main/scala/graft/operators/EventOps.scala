@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.functions.VectorFunctions.motifCorr
+
 /** Per-user funnel progress carried across micro-batches: the longest
   * in-order prefix reached, its start time, and the completion time of
   * the deepest step. */
@@ -541,7 +543,6 @@ object EventOps {
     require(pVar > 0, "motifTopK: constant pattern has no shape")
     val pSd = math.sqrt(pVar)
     val zq = pattern.map(x => (x - pMean) / pSd)
-    graft.plans.VectorExpressions.register(events.sparkSession)
     val w = Window.partitionBy(col(key))
       .orderBy(col(orderCol), col(idCol))
       .rowsBetween(Window.currentRow, L - 1)
@@ -554,7 +555,7 @@ object EventOps {
     // arithmetic (see MotifCorr), so rows and hashes are unchanged;
     // rounding stays the built-in round()
     val scored = windows
-      .withColumn("mc", call_function("motif_corr", col("win"), typedlit(zq)))
+      .withColumn("mc", motifCorr(col("win"), zq.toArray))
       .filter(col("mc.v") > 0)
       .withColumn("corr", round(col("mc.corr"), roundTo))
     val rankW = Window.partitionBy(col(key))

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
+import graft.functions.TextFunctions.md5U52
+
 /** Iterative graph analytics over edge relations — the centrality
   * companion of [[Dedup.connectedComponents]]: where CC answers "which
   * docs are copies of each other", PageRank answers "which nodes sit at
@@ -531,10 +533,9 @@ object Graph {
     val deg = e.select(col("a").as("v")).union(e.select(col("b").as("v")))
       .groupBy(col("v")).agg(count(lit(1)).as("d"))
       .localCheckpoint() // node-sized; feeds counts + both stamp joins
-    graft.plans.TextExpressions.register(edges.sparkSession)
     val sampled = e.filter(
-      call_function("md5_u52", concat(col("a").cast("string"), lit("_"),
-        col("b").cast("string")), lit(2), lit(31))
+      md5U52(concat(col("a").cast("string"), lit("_"),
+        col("b").cast("string")), 2, 31)
         < lit((256 / sampleDenom).toLong))
     val stamped = sampled
       .join(deg.select(col("v").as("a"), col("d").as("da")), "a")
@@ -815,10 +816,9 @@ object Graph {
       .select(least(col(src), col(dst)).as("a"),
               greatest(col(src), col(dst)).as("b"))
       .filter(col("a") =!= col("b"))
-    graft.plans.TextExpressions.register(edges.sparkSession)
     val sampled = e.filter(
-      call_function("md5_u52", concat(col("a").cast("string"), lit("_"),
-        col("b").cast("string")), lit(2), lit(31))
+      md5U52(concat(col("a").cast("string"), lit("_"),
+        col("b").cast("string")), 2, 31)
         < lit((256 / sampleDenom).toLong))
     val denomCubed = sampleDenom.toLong * sampleDenom * sampleDenom
     triangleStats(sampled, "a", "b")
@@ -936,9 +936,8 @@ object Graph {
     // commutes with dedup).
     val e = edges.select(col(left).as("l"), col(right).as("r"))
     val ldeg = e.groupBy(col("l")).agg(count_distinct(col("r")).as("ldeg"))
-    graft.plans.TextExpressions.register(edges.sparkSession)
     val kept = e.filter(
-      call_function("md5_u52", col("r").cast("string"), lit(2), lit(31))
+      md5U52(col("r").cast("string"), 2, 31)
         < lit((256 / sampleDenom).toLong))
     val baskets = kept.groupBy(col("r"))
       .agg(sort_array(collect_set(col("l"))).as("ls"))

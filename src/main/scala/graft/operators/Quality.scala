@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.functions.TextFunctions.md5U52
+
 /** Declarative data-quality auditing — the Deequ/great-expectations
   * shape (Schelter et al., VLDB 2018): a rule set compiles into ONE
   * conditional-aggregate pass over the relation, producing a
@@ -632,8 +634,7 @@ object Quality {
     // inverted Poisson(1) CDF on the 52-bit md5 uniform; weights 0..6
     // (P(>6) < 1e-4 — the tail truncation shifts nothing at 2^-52
     // resolution both engines share)
-    graft.plans.TextExpressions.register(df.sparkSession)
-    val u = call_function("md5_u52", concat(col("_id").cast("string"),
+    val u = md5U52(concat(col("_id").cast("string"),
       lit(":"), col("rep").cast("string"), lit(":"), lit(seed.toString)))
       .cast("double") / lit(4503599627370496.0)
     val w = when(u < 0.36787944117144233, 0L)

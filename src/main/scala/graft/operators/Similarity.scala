@@ -5,7 +5,6 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
 import graft.functions.VectorFunctions._
-import graft.plans.VectorExpressions
 
 /** Similarity-search operators over an embedding column — the Spark-first
   * re-expression of the reference's broadcast face-matching stage
@@ -22,13 +21,10 @@ import graft.plans.VectorExpressions
   * their scale paths are [[ivfTopK]] and [[lshNearDup]], which replace
   * the cross/theta join with an equi-join on cell/bucket keys. Vector
   * math runs through the codegen'd native expressions
-  * ([[graft.plans.VectorExpressions]]), with norms precomputed per side
+  * (graft/plans/VectorExpressions.scala), with norms precomputed per side
   * before the join so each candidate pair costs exactly one dot product.
   */
 object Similarity {
-
-  private def ensureRegistered(df: DataFrame): Unit =
-    VectorExpressions.register(df.sparkSession)
 
   /** Threshold match against a broadcast target set; first match (lowest
     * target id) wins. EVERY probe comes back: unmatched probes carry a
@@ -38,17 +34,21 @@ object Similarity {
     * the probe id — no second join to recover unmatched probes, so the
     * big side is shuffled exactly once (for the groupBy) at any scale.
     *
-    * @param probes   (idCol, vecCol) big side — never broadcast
-    * @param targets  (idCol, vecCol, labelCol) small side — broadcast
+    * The predicate compares the squared distance with the squared
+    * tolerance, so no sqrt runs per pair.
+    *
+    * @param probes    (idCol, vecCol) big side — never broadcast
+    * @param targets   (idCol, vecCol, labelCol) small side — broadcast
+    * @param tolerance L2 match radius; must be >= 0
     */
   def thresholdMatch(
       probes: DataFrame, pId: String, pVec: String,
       targets: DataFrame, tId: String, tVec: String, tLabel: String,
       tolerance: Double): DataFrame = {
-    ensureRegistered(probes)
+    require(tolerance >= 0, s"thresholdMatch: tolerance must be >= 0, got $tolerance")
     val joined = probes.join(
       broadcast(targets),
-      sqrt(fastSquaredL2(col(pVec), col(tVec))) <= tolerance,
+      fastSquaredL2(col(pVec), col(tVec)) <= tolerance * tolerance,
       "left")
     joined.groupBy(col(pId))
       .agg(min_by(col(tLabel), col(tId)).as("match_label"),
@@ -86,7 +86,6 @@ object Similarity {
       probes: DataFrame, pId: String, pVec: String,
       targets: DataFrame, tId: String, tVec: String,
       k: Int, roundTo: Int = 6, exactLimit: Long = DefaultExactLimit): DataFrame = {
-    ensureRegistered(probes)
     val n = targets.count()
     require(n <= exactLimit,
       s"topK: $n targets exceed the exact-baseline cap $exactLimit — " +
@@ -110,7 +109,6 @@ object Similarity {
   def nearDupPairs(
       vecs: DataFrame, id: String, vec: String, threshold: Double,
       roundTo: Int = 6, exactLimit: Long = DefaultExactLimit): DataFrame = {
-    ensureRegistered(vecs)
     val n = vecs.count()
     require(n <= exactLimit,
       s"nearDupPairs: $n rows exceed the exact-baseline cap $exactLimit — " +
@@ -199,17 +197,14 @@ object Similarity {
       vecs: DataFrame, id: String, vec: String,
       threshold: Double, nBits: Int = 8, nTables: Int = 4,
       seed: Int = 1000, maxBucket: Long = 256, refineBits: Int = 8): DataFrame = {
-    ensureRegistered(vecs)
     require(maxBucket > 0 && refineBits > 0, "maxBucket and refineBits must be positive")
     val withKeys = vecs
       .withColumn("nrm", fastNorm(col(vec)))
-      .withColumn("bks", call_function("lsh_buckets",
-        col(vec), lit(nBits), lit(nTables), lit(seed)))
+      .withColumn("bks", lshBuckets(col(vec), nBits, nTables, seed))
       // one refinement key PER TABLE, used only inside hot buckets —
       // table t refines by sub-key t, keeping refinement trials
       // independent across tables (see scaladoc)
-      .withColumn("subs", call_function("lsh_buckets",
-        col(vec), lit(refineBits), lit(nTables), lit(seed + 7919)))
+      .withColumn("subs", lshBuckets(col(vec), refineBits, nTables, seed + 7919))
     // candidate generation carries ONLY (id, bucket keys) — vectors
     // rejoin later, so the bucket join/dedup shuffles a few longs per
     // pair instead of two full embeddings. localCheckpoint: the keyed
@@ -251,7 +246,7 @@ object Similarity {
     val band = cand.join(aq, "a_id").join(bq, "b_id")
       .withColumn("cos_q",
         col("a_scl") * col("b_scl") *
-          call_function("vec_dot_i8", col("a_q8"), col("b_q8")).cast("double") /
+          dotI8(col("a_q8"), col("b_q8")).cast("double") /
           (col("a_nrm") * col("b_nrm")))
       .filter(col("cos_q") >= lit(threshold) - margin)
       .select(col("a_id"), col("b_id"))
@@ -284,7 +279,6 @@ object Similarity {
       targets: DataFrame, tId: String, tVec: String,
       centroids: DataFrame, cellCol: String, centroidVec: String,
       k: Int, nProbe: Int, roundTo: Int = 6): DataFrame = {
-    ensureRegistered(probes)
     // assign each target to its single nearest cell as a PURE
     // PROJECTION: the quantizer is k×d doubles — tiny by contract — so
     // it ships inside the nearest_cell expression (the kMeans
@@ -304,7 +298,7 @@ object Similarity {
       centroids.select(col(cellCol), col(centroidVec)))
     val assigned = targets.withColumn("t_nrm", fastNorm(col(tVec)))
       .withColumn(cellCol,
-        element_at(cellIds, call_function("nearest_cell", col(tVec), matrix) + 1))
+        element_at(cellIds, nearestCell(col(tVec), matrix) + 1))
       .select(col(tId), col(tVec), col("t_nrm"), col(cellCol))
     // each probe fans out to its nProbe nearest cells — ALSO a pure
     // projection (nearest_cells emits the nProbe best matrix indices in
@@ -317,7 +311,7 @@ object Similarity {
     val probeCells = probes.withColumn("p_nrm", fastNorm(col(pVec)))
       .select(col(pId), col(pVec), col("p_nrm"),
         explode(transform(
-          call_function("nearest_cells", col(pVec), matrix, lit(nProbe)),
+          nearestCells(col(pVec), matrix, nProbe),
           i => element_at(cellIds, i + 1))).as(cellCol))
     // exact cosine inside the probed cells only
     val sim = round(
@@ -330,24 +324,26 @@ object Similarity {
     joined.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
   }
 
-  /** Collect a 2-column (cell, centroid_vec) quantizer into typed
-    * literals for nearest_cell assignment: cell ids keep their source
-    * type (int/long/string all worked under the min_by join form this
-    * replaced), and the matrix is ordered by ascending cell id so the
-    * expression's first-minimum tie-break remains "lower cell id". */
-  private def quantizerLiterals(model: DataFrame): (Column, Column) = {
+  /** Collect a 2-column (cell, centroid_vec) quantizer into a typed
+    * cell-id literal and the centroid matrix for nearest_cell
+    * assignment: cell ids keep their source type (int/long/string all
+    * worked under the min_by join form this replaced), and the matrix
+    * is ordered by ascending cell id so the expression's first-minimum
+    * tie-break remains "lower cell id". */
+  private def quantizerLiterals(model: DataFrame): (Column, Array[Array[Double]]) = {
     val rows = model.collect()
     require(rows.nonEmpty, "empty centroid set")
+    def mat(vs: Array[Seq[Double]]) = vs.map(_.toArray)
     rows.head.get(0) match {
       case _: java.lang.Integer =>
         val s = rows.map(r => (r.getInt(0), r.getSeq[Double](1))).sortBy(_._1)
-        (typedlit(s.map(_._1).toSeq), typedlit(s.map(_._2).toSeq))
+        (typedlit(s.map(_._1).toSeq), mat(s.map(_._2)))
       case _: java.lang.Long =>
         val s = rows.map(r => (r.getLong(0), r.getSeq[Double](1))).sortBy(_._1)
-        (typedlit(s.map(_._1).toSeq), typedlit(s.map(_._2).toSeq))
+        (typedlit(s.map(_._1).toSeq), mat(s.map(_._2)))
       case _: String =>
         val s = rows.map(r => (r.getString(0), r.getSeq[Double](1))).sortBy(_._1)
-        (typedlit(s.map(_._1).toSeq), typedlit(s.map(_._2).toSeq))
+        (typedlit(s.map(_._1).toSeq), mat(s.map(_._2)))
       case other => throw new IllegalArgumentException(
         s"unsupported cell id type ${other.getClass.getName} — use int, long or string cells")
     }
@@ -445,7 +441,6 @@ object Similarity {
       k: Int, exactLimit: Long = DefaultExactLimit,
       pairBudget: Long = 1L << 26,
       roundTo: Int = 6): DataFrame = {
-    ensureRegistered(x)
     val nx = x.count(); val ny = y.count()
     // the mutual shape has no small "target" side — BOTH sides are
     // corpora — so the per-side cap alone under-routes: two 400k sides
@@ -536,7 +531,6 @@ object Similarity {
       dPrefix: Int, mCand: Int, k: Int, roundTo: Int = 6,
       exactLimit: Long = DefaultExactLimit): DataFrame = {
     require(mCand >= k, "truncatedTopK: mCand must be >= k")
-    ensureRegistered(probes)
     val n = targets.count()
     require(n <= exactLimit,
       s"truncatedTopK: $n targets exceed the exact-baseline cap $exactLimit")
@@ -585,7 +579,6 @@ object Similarity {
       d: Int, mCand: Int, k: Int, roundTo: Int = 6,
       exactLimit: Long = DefaultExactLimit): DataFrame = {
     require(mCand >= k, "hammingTopK: mCand must be >= k")
-    ensureRegistered(probes)
     val n = targets.count()
     require(n <= exactLimit,
       s"hammingTopK: $n targets exceed the exact-baseline cap $exactLimit")
@@ -634,9 +627,8 @@ object Similarity {
     * way the sketches are. */
   def randomProject(vecs: DataFrame, id: String, vec: String,
       dOut: Int, seed: Long): DataFrame = {
-    ensureRegistered(vecs)
     vecs.select(col(id),
-        call_function("rp_project", col(vec), lit(dOut), lit(seed)).as("proj"),
+        rpProject(col(vec), dOut, seed).as("proj"),
         col(vec))
       .select(col(id), col("proj"),
         round(fastDot(col("proj"), col("proj")) / fastDot(col(vec), col(vec)), 4)
@@ -742,7 +734,6 @@ object Similarity {
       driverRowLimit: Long = 1L << 16): DataFrame = {
     require(k > 0 && iters >= 0, "k must be positive, iters non-negative")
     import org.apache.spark.sql.types.DecimalType
-    ensureRegistered(vecs)
     val spark = vecs.sparkSession
     import spark.implicits._
     // re-spread the training input before persisting IF it arrives
@@ -821,9 +812,8 @@ object Similarity {
       } else src
     // cells stay 0..k-1 throughout, so the matrix row index IS the cell
     def assigned: DataFrame = {
-      val matrix = typedlit(centroids.sortBy(_._1).map(_._2))
-      data.select(col("vid"), col("v"),
-        call_function("nearest_cell", col("v"), matrix).as("cell"))
+      val matrix = centroids.sortBy(_._1).map(_._2.toArray).toArray
+      data.select(col("vid"), col("v"), nearestCell(col("v"), matrix).as("cell"))
     }
     val Grid = 1e9
     for (_ <- 1 to iters) {
@@ -887,7 +877,6 @@ object Similarity {
       d: Int, iters: Int, roundTo: Int = 6): DataFrame = {
     require(d > 0 && iters >= 1, "pcaPowerProject: d > 0, iters >= 1")
     import org.apache.spark.sql.types.DecimalType
-    ensureRegistered(vecs)
     val data = vecs.select(col(id).as("vid"), col(vec).as("v"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val Grid = 1e9
@@ -988,7 +977,6 @@ object Similarity {
       threshold: Double, k: Int = 0, iters: Int = 2,
       targetCellSize: Long = 256, guardCellSize: Long = 1024,
       guardBits: Int = 6, guardTables: Int = 8, guardSeed: Int = 4000): DataFrame = {
-    ensureRegistered(vecs)
     require(targetCellSize > 0 && guardCellSize > 0,
       "semDedup: cell budgets must be positive")
     // guardTables = 0 would silently exempt hot cells from dedup
@@ -1004,10 +992,8 @@ object Similarity {
         semDedupAutoK(n, targetCellSize).toInt
       }
     val model = kMeans(vecs, id, vec, cells, iters)
-    val matrix = typedlit(
-      model.orderBy(col("cell")).collect().map(_.getSeq[Double](2)).toSeq)
-    val assigned = vecs.select(col(id), col(vec),
-      call_function("nearest_cell", col(vec), matrix).as("cell"))
+    val matrix = model.orderBy(col("cell")).collect().map(_.getSeq[Double](2).toArray)
+    val assigned = vecs.select(col(id), col(vec), nearestCell(col(vec), matrix).as("cell"))
     val dropped = semDedupDropped(assigned, id, vec, threshold,
       guardCellSize, guardBits, guardTables, guardSeed)
     assigned.join(dropped, col(id) === col("b_id"), "left")
@@ -1062,7 +1048,6 @@ object Similarity {
     val (cellIds, matrix) = quantizerLiterals(model)
     (batch: DataFrame, batchId: Long) => if (!batch.isEmpty) {
       val spark = batch.sparkSession
-      ensureRegistered(batch)
       import spark.implicits._
       val lastBatch: Long =
         if (spark.catalog.tableExists(stateTable))
@@ -1070,7 +1055,7 @@ object Similarity {
         else -1L
       if (batchId > lastBatch) {
         val assigned = batch.select(col(id), col(vec),
-            element_at(cellIds, call_function("nearest_cell", col(vec), matrix) + 1).as("cell"),
+            element_at(cellIds, nearestCell(col(vec), matrix) + 1).as("cell"),
             fastNorm(col(vec)).as("nrm"))
           .localCheckpoint() // feeds both joins, the survivors and the index append
         // batch_id < batchId: partition-pruned to earlier batches, so a
@@ -1130,11 +1115,10 @@ object Similarity {
       indexBuckets: Int = 32): (DataFrame, Long) => Unit = {
     val (cellIds, matrix) = quantizerLiterals(model)
     (batch: DataFrame, batchId: Long) => if (!batch.isEmpty) {
-      ensureRegistered(batch)
       Sketches.writeDeltaTo(
         batch.select(col(id),
           element_at(cellIds,
-            call_function("nearest_cell", col(vec), matrix) + 1).as("cell"),
+            nearestCell(col(vec), matrix) + 1).as("cell"),
           col(vec), fastNorm(col(vec)).as("nrm")),
         batchId, indexTable, stateTable, Some((indexBuckets, "cell")))
     }
@@ -1154,14 +1138,13 @@ object Similarity {
   def ivfSearchIndexed(probes: DataFrame, pId: String, pVec: String,
       indexTable: String, model: DataFrame, tId: String, tVec: String,
       k: Int, nProbe: Int, roundTo: Int = 6): DataFrame = {
-    ensureRegistered(probes)
     val spark = probes.sparkSession
     val (cellIds, matrix) = quantizerLiterals(model)
     val indexed = spark.table(indexTable)
     val probeCells = probes.withColumn("p_nrm", fastNorm(col(pVec)))
       .select(col(pId), col(pVec), col("p_nrm"),
         explode(transform(
-          call_function("nearest_cells", col(pVec), matrix, lit(nProbe)),
+          nearestCells(col(pVec), matrix, nProbe),
           i => element_at(cellIds, i + 1))).as("cell"))
     val sim = round(
       cosineWithNorms(col(pVec), col(tVec), col("p_nrm"), col("nrm")),
@@ -1195,14 +1178,12 @@ object Similarity {
     val (mats, sub) = pqMats(books)
     val m = mats.length
     (batch: DataFrame, batchId: Long) => if (!batch.isEmpty) {
-      ensureRegistered(batch)
       Sketches.writeDeltaTo(
         batch.select(col(id),
           element_at(cellIds,
-            call_function("nearest_cell", col(vec), matrix) + 1).as("cell"),
+            nearestCell(col(vec), matrix) + 1).as("cell"),
           array((0 until m).map(sp =>
-            call_function("nearest_cell",
-              slice(col(vec), sp * sub + 1, sub), typedlit(mats(sp)))): _*)
+            nearestCell(slice(col(vec), sp * sub + 1, sub), mats(sp).map(_.toArray).toArray)): _*)
             .as("codes")),
         batchId, indexTable, stateTable, Some((indexBuckets, "cell")))
     }
@@ -1221,7 +1202,6 @@ object Similarity {
   def ivfPqSearchIndexed(probes: DataFrame, pId: String, pVec: String,
       indexTable: String, model: DataFrame, books: DataFrame,
       tId: String, k: Int, nProbe: Int, roundTo: Int = 6): DataFrame = {
-    ensureRegistered(probes)
     val spark = probes.sparkSession
     import spark.implicits._
     val (cellIds, matrix) = quantizerLiterals(model)
@@ -1244,15 +1224,14 @@ object Similarity {
     val probeCells = probes
       .select(col(pId),
         explode(transform(
-          call_function("nearest_cells", col(pVec), matrix, lit(nProbe)),
+          nearestCells(col(pVec), matrix, nProbe),
           i => element_at(cellIds, i + 1))).as("cell"))
       .join(broadcast(table), Seq(pId))
     val postings = spark.table(indexTable)
     val w = Window.partitionBy(col(pId)).orderBy(col("adc"), col(tId))
     probeCells.join(postings, Seq("cell"))
       .select(col(pId), col(tId),
-        round(call_function("adc_score", col("codes"), col("dtab"),
-          lit(kCells)), roundTo).as("adc"))
+        round(adcScore(col("codes"), col("dtab"), kCells), roundTo).as("adc"))
       .withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
   }
 
@@ -1310,8 +1289,7 @@ object Similarity {
     val cellSizes = withNorm.groupBy(col("cell")).agg(count(lit(1)).as("csz"))
     val exhaustiveKey = array(struct(lit(-1).as("tbl"), lit(0L).as("bucket")))
     val guardKeys = transform(
-      call_function("lsh_buckets", col(vec),
-        lit(guardBits), lit(guardTables), lit(guardSeed)),
+      lshBuckets(col(vec), guardBits, guardTables, guardSeed),
       (bk, i) => struct(i.cast("int").as("tbl"), bk.as("bucket")))
     withNorm.join(broadcast(cellSizes), Seq("cell"))
       .withColumn("k2",
@@ -1360,7 +1338,6 @@ object Similarity {
     * recon_err sums subspace errors in subspace order — deterministic
     * for any m, matching the oracle's in-order list fold. */
   def pqEncode(vecs: DataFrame, id: String, vec: String, books: DataFrame): DataFrame = {
-    ensureRegistered(vecs)
     // per-subspace centroid matrices, cell-indexed (kMeans guarantees
     // contiguous cells 0..k-1; pqMats verifies so element_at(cell+1)
     // is sound) — shared with ivfPqIngest so streamed codes are
@@ -1373,7 +1350,7 @@ object Similarity {
     def subv(s: Int) = slice(col(vec), s * sub + 1, sub)
     val withCodes = vecs.select(col(id) +: col(vec) +:
       (0 until m).map(s =>
-        call_function("nearest_cell", subv(s), typedlit(mats(s))).as(s"_c$s")): _*)
+        nearestCell(subv(s), mats(s).map(_.toArray).toArray).as(s"_c$s")): _*)
     val errs = (0 until m).map(s =>
       fastSquaredL2(subv(s), element_at(typedlit(mats(s)), col(s"_c$s") + 1)))
     withCodes.select(col(id),
@@ -1386,7 +1363,6 @@ object Similarity {
     * for both encoding and search. */
   def pqCodebooks(vecs: DataFrame, id: String, vec: String,
       m: Int, k: Int, iters: Int): DataFrame = {
-    ensureRegistered(vecs)
     val spark = vecs.sparkSession
     import spark.implicits._
     // ONE materialization of the training input: callers pass the
@@ -1452,7 +1428,6 @@ object Similarity {
       probes: DataFrame, pId: String, pVec: String,
       coded: DataFrame, tId: String,
       books: DataFrame, k: Int, roundTo: Int = 6): DataFrame = {
-    ensureRegistered(probes)
     val bk = books.collect().map(r =>
       (r.getInt(0), r.getInt(1), r.getSeq[Double](2)))
     require(bk.nonEmpty, "pqTopK: empty codebook")
@@ -1478,7 +1453,7 @@ object Similarity {
     val w = Window.partitionBy(col(pId)).orderBy(col("adc"), col(tId))
     coded.crossJoin(broadcast(table))
       .select(col(pId), col(tId),
-        round(call_function("adc_score", col("codes"), col("dtab"), lit(kCells)),
+        round(adcScore(col("codes"), col("dtab"), kCells),
           roundTo).as("adc"))
       .withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
   }

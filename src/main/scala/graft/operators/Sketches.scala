@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.functions.TextFunctions.{bloomHits, bloomPositions, cmsSketch, kmvMergeStats, md5U52}
+
 /** Engine-portable sketches. Spark's built-in sketches (HLL++,
   * approx percentiles — q24/q36) are correct and fast but their
   * internals are engine-specific, so the driver can only rows-check
@@ -54,8 +56,7 @@ object Sketches {
     * split equals the one-shot build. */
   def hllRegisters(df: DataFrame, group: String, value: String): DataFrame = {
     val m = 256
-    graft.plans.TextExpressions.register(df.sparkSession)
-    val h = call_function("md5_u52", col(value).cast("string"))
+    val h = md5U52(col(value).cast("string"))
     val base = df.select(col(group), h.as("h"))
       .withColumn("idx", (col("h") % m).cast("int"))
       .withColumn("w", shiftright(col("h"), 8))
@@ -166,9 +167,7 @@ object Sketches {
     * posexplode → groupBy build (integer sums commute). */
   def countMinCounters(df: DataFrame, value: String,
       w: Int, d: Int): DataFrame = {
-    graft.plans.TextExpressions.register(df.sparkSession)
-    df.agg(call_function("cms_sketch",
-        col(value).cast("string"), lit(w), lit(d)).as("sk"))
+    df.agg(cmsSketch(col(value).cast("string"), w, d).as("sk"))
       .select(posexplode(col("sk")).as(Seq("i", "c")))
       .filter(col("c") > 0)
       .select((col("i") / lit(w)).cast("int").as("row"),
@@ -230,16 +229,13 @@ object Sketches {
       id: String, text: String, n: Int, mBits: Int, kHashes: Int,
       audit: Boolean = true): DataFrame = {
     require(mBits > 0 && kHashes > 0, "mBits and kHashes must be positive")
-    graft.plans.TextExpressions.register(corpus.sparkSession)
     val setPositions = benchmark
-      .select(explode(call_function("bloom_positions",
-        col(text), lit(n), lit(mBits), lit(kHashes))).as("p"))
+      .select(explode(bloomPositions(col(text), n, mBits, kHashes)).as("p"))
       .distinct().collect().map(_.getLong(0).toInt)
     val bits = new Array[Boolean](mBits)
     setPositions.foreach(bits(_) = true)
     val probed = corpus.select(col(id),
-        call_function("bloom_hits", col(text), lit(n), lit(kHashes),
-          typedlit(bits.toSeq)).as("bh"))
+        bloomHits(col(text), n, kHashes, bits.toSeq).as("bh"))
       .select(col(id), col("bh.n_sh").as("n_sh"), col("bh.n_hits").as("n_bloom"))
     if (!audit) probed
     else {
@@ -565,8 +561,7 @@ object Sketches {
       k: Int): DataFrame = {
     require(k >= 2, "kmvHashes: k must be >= 2")
     import org.apache.spark.sql.expressions.Window
-    graft.plans.TextExpressions.register(df.sparkSession)
-    val h = call_function("md5_u52", col(value).cast("string"))
+    val h = md5U52(col(value).cast("string"))
     val w = Window.partitionBy(col(group)).orderBy(col("h"))
     // dense_rank BEFORE the dedup: the bottom-k distinct VALUES are the
     // rows with dense_rank <= k over the raw (duplicated) stream, and
@@ -677,14 +672,13 @@ object Sketches {
     // slice(array_sort(array_union(ha, hb)), 1, k), but without the
     // interpreted per-pair lambda sort that dominated the squared pair
     // grid at 100× (251 s → the union scan is O(k) per pair).
-    graft.plans.TextExpressions.register(bottom.sparkSession)
     val arrs = bottom.groupBy(col(group).as("g"))
       .agg(sort_array(collect_list(col("h"))).as("hs"))
     val unionEst = arrs.select(col("g").as("src_a"), col("hs").as("ha"))
       .crossJoin(arrs.select(col("g").as("src_b"), col("hs").as("hb")))
       .filter(col("src_a") < col("src_b"))
       .withColumn("ms",
-        call_function("kmv_merge_stats", col("ha"), col("hb"), lit(k)))
+        kmvMergeStats(col("ha"), col("hb"), k))
       // the pinned kmvEstimateFrom estimator, keyed by the pair
       .select(col("src_a"), col("src_b"),
         col("ms.n_kept").as("n_kept"), col("ms.hk").as("hk"))
@@ -759,8 +753,7 @@ object Sketches {
     require(k >= 2, "kmvOverlap: k must be >= 2")
     val TwoPow52 = 4503599627370496.0
     def hashes(df: DataFrame, c: String): DataFrame = {
-      graft.plans.TextExpressions.register(df.sparkSession)
-      df.select(call_function("md5_u52", col(c).cast("string")).as("h"))
+      df.select(md5U52(col(c).cast("string")).as("h"))
         .distinct()
     }
     val ha = hashes(a, aCol).localCheckpoint()

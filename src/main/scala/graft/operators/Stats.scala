@@ -5,6 +5,8 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
+import graft.functions.TextFunctions.md5U52
+
 /** Distribution-level statistical tests and robust conditioning — the
   * experiment-readout layer a data pipeline runs AFTER the drift
   * monitors flag a change ([[Quality.psiReport]] says "the input
@@ -616,14 +618,13 @@ object Stats {
     // the urn is the codegen'd md5_u52 (same 52-bit value as the
     // conv/substring/md5 chain), and the observed statistics join back
     // AFTER the per-rep aggregation instead of riding every row.
-    graft.plans.TextExpressions.register(spark)
     val expanded = base
       .repartition(spark.sessionState.conf.numShufflePartitions)
       .select(col("_v"),
         explode(sequence(lit(0), lit(reps - 1))).as("rep"),
         col("_id"))
       .select(col("rep"), col("_v"),
-        call_function("md5_u52", concat(col("_id"), lit(":"),
+        md5U52(concat(col("_id"), lit(":"),
           col("rep").cast("string"), lit(":"), lit(seed.toString)))
           .as("_u"))
       .crossJoin(broadcast(obs.select(col("n"), col("n_a"))))
@@ -684,14 +685,13 @@ object Stats {
     // join each row's group rate (two longs) from a broadcast, and
     // bring the wide observed statistics back only at per-(g, rep)
     // granularity — the stream never carries a decimal it doesn't sum
-    graft.plans.TextExpressions.register(spark)
     val expanded = base
       .repartition(spark.sessionState.conf.numShufflePartitions)
       .select(col("g"), col("_v"),
         explode(sequence(lit(0), lit(reps - 1))).as("rep"),
         col("_id"))
       .select(col("g"), col("rep"), col("_v"),
-        call_function("md5_u52", concat(col("_id"), lit(":"),
+        md5U52(concat(col("_id"), lit(":"),
           col("rep").cast("string"), lit(":"), lit(seed.toString)))
           .as("_u"))
       .join(broadcast(obs.select(col("g"), col("n"), col("n_a"))), "g")

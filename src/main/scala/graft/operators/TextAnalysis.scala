@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import graft.functions.TextFunctions.tokens
+import graft.functions.TextFunctions.{chunkWords, md5U52, shingleHashes, shingleStrings, tokens}
 
 /** Corpus-level text-analysis operators for a training-data pipeline,
   * complementing the per-document projections in
@@ -97,21 +97,6 @@ object TextAnalysis {
   def blocklistPattern(words: Seq[String]): String =
     words.map(java.util.regex.Pattern.quote).mkString("\\b(", "|", ")\\b")
 
-  /** Single-pass multi-pattern blocklist scrub
-    * ([[graft.plans.BlocklistScan]]): ONE trie-guided walk of the text
-    * yields both the non-overlapping leftmost-longest match count and
-    * the redacted text — scan cost independent of the blocklist size,
-    * where the [[blocklistPattern]] alternation re-tries every pattern
-    * at every position (the 100 TB PII-scrub shape is thousands of
-    * patterns). Returns struct<n_hits:int, redacted:string>; equals
-    * regex `\b(...)\b` with alternatives ordered longest-first. */
-  def blocklistScan(df: DataFrame, text: Column, patterns: Seq[String],
-      replacement: String = "[REDACTED]"): Column = {
-    graft.plans.TextExpressions.register(df.sparkSession)
-    call_function("blocklist_scan", text,
-      lit(patterns.toArray), lit(replacement))
-  }
-
   /** Benchmark decontamination: per corpus document, how many of its
     * distinct n-gram shingles appear anywhere in the benchmark set.
     * Output: (id, n_sh, n_hits, overlap_frac) for EVERY corpus doc
@@ -127,13 +112,12 @@ object TextAnalysis {
   def decontaminate(corpus: DataFrame, benchmark: DataFrame,
       id: String, text: String, n: Int): DataFrame = {
     require(n > 0, "shingle width n must be positive")
-    graft.plans.TextExpressions.register(corpus.sparkSession)
     val hashed = corpus.select(col(id).as("doc"),
-      call_function("shingle_hashes", col(text), lit(n)).as("shs"))
+      shingleHashes(col(text), n).as("shs"))
     val sizes = hashed.select(col("doc"), size(col("shs")).as("n_sh"))
     val cs = hashed.select(col("doc"), explode(col("shs")).as("sh"))
     val bs = benchmark
-      .select(explode(call_function("shingle_hashes", col(text), lit(n))).as("sh"))
+      .select(explode(shingleHashes(col(text), n)).as("sh"))
       .distinct()
     val hits = cs.join(bs, "sh").groupBy(col("doc"))
       .agg(count(lit(1)).as("n_hits"))
@@ -356,9 +340,8 @@ object TextAnalysis {
     * Output: (id, n_sh, n_dup, dup_frac) for EVERY doc. */
   def dupShingleCoverage(docs: DataFrame, id: String, text: String, n: Int): DataFrame = {
     require(n > 0, "shingle width n must be positive")
-    graft.plans.TextExpressions.register(docs.sparkSession)
     val hashed = docs.select(col(id).as("doc"),
-      call_function("shingle_hashes", col(text), lit(n)).as("shs"))
+      shingleHashes(col(text), n).as("shs"))
       .localCheckpoint()
     val sh = hashed.select(col("doc"), explode(col("shs")).as("sh"))
     // per-doc-distinct shingles => count(*) counts distinct docs
@@ -523,9 +506,8 @@ object TextAnalysis {
     * Output: (id, chunk_idx, chunk, n_chunk_words). */
   def chunkDocs(docs: DataFrame, id: String, text: String,
       chunkSize: Int, stride: Int): DataFrame = {
-    graft.plans.TextExpressions.register(docs.sparkSession)
     docs.select(col(id),
-      posexplode(call_function("chunk_words", col(text), lit(chunkSize), lit(stride)))
+      posexplode(chunkWords(col(text), chunkSize, stride))
         .as(Seq("chunk_idx", "chunk")))
       .withColumn("n_chunk_words", size(tokens(col("chunk"))))
   }
@@ -596,10 +578,8 @@ object TextAnalysis {
   def mergePairStats(docs: DataFrame, text: String, k: Int): DataFrame = {
     require(k > 0, "k must be positive")
     import org.apache.spark.sql.expressions.Window
-    graft.plans.TextExpressions.register(docs.sparkSession)
     val counts = docs
-      .select(explode(call_function("shingle_strings",
-        col(text), lit(2), lit(false))).as("pair"))
+      .select(explode(shingleStrings(col(text), 2, distinct = false)).as("pair"))
       .groupBy(col("pair")).agg(count(lit(1)).as("cnt"))
       .orderBy(col("cnt").desc, col("pair")).limit(k)
     // the rank window runs over the k survivors only (already on the
@@ -997,7 +977,6 @@ object TextAnalysis {
       merges: Int, joiner: String,
       driverMaxBytes: Long = BpeDriverMaxBytes): (Seq[(Int, String, String, Long)], DataFrame) = {
     require(merges >= 0, "merges must be non-negative")
-    graft.plans.TextExpressions.register(docs.sparkSession)
     val spark = docs.sparkSession
     // octet_length, not length: the guard is heap-headroom BYTES, and
     // a multi-byte corpus would route up to ~4x the intended size into
@@ -1029,8 +1008,7 @@ object TextAnalysis {
     val learned = scala.collection.mutable.ArrayBuffer.empty[(Int, String, String, Long)]
     var exhausted = false
     for (i <- 1 to merges if !exhausted) {
-      val top = cur.select(explode(call_function("shingle_strings",
-          col("t"), lit(2), lit(false))).as("pair"))
+      val top = cur.select(explode(shingleStrings(col("t"), 2, distinct = false)).as("pair"))
         .groupBy(col("pair")).agg(count(lit(1)).as("cnt"))
         .orderBy(col("cnt").desc, col("pair")).limit(1)
         .collect()
@@ -1234,8 +1212,7 @@ object TextAnalysis {
     * (by, id, w, key) with key = −ln(u)/w from the row's own md5 urn. */
   private def sampleKeyed(docs: DataFrame, id: String, weight: Column,
       by: String, salt: String): DataFrame = {
-    graft.plans.TextExpressions.register(docs.sparkSession)
-    val u = (call_function("md5_u52", concat(lit(s"$salt:"), col(id)))
+    val u = (md5U52(concat(lit(s"$salt:"), col(id)))
       .cast("double") + lit(1.0)) / lit(4503599627370496.0)
     docs.select(col(by), col(id), weight.cast("double").as("w"),
       round(-log(u) / weight.cast("double"), 12).as("key"))
@@ -1346,7 +1323,7 @@ object TextAnalysis {
   /** The hashed-bucket token pair (doc stream projection): b = 52-bit
     * md5 prefix of the token, mod m. */
   private def dsirBucket(m: Int): Column =
-    call_function("md5_u52", col("term")) % m
+    md5U52(col("term")) % m
 
   /** The bucket-count relation alone — (b, ct, cr), ≤ m rows. MERGES by
     * sum (integer counts commute across any batch split), so the LM
@@ -1355,7 +1332,6 @@ object TextAnalysis {
   def dsirCounts(docs: DataFrame, text: String, targetPred: Column,
       m: Int): DataFrame = {
     require(m > 0, "dsirCounts: m must be positive")
-    graft.plans.TextExpressions.register(docs.sparkSession)
     docs.select(targetPred.as("is_t"), explode(tokens(col(text))).as("term"))
       .withColumn("b", dsirBucket(m))
       .groupBy(col("b")).agg(
@@ -1369,7 +1345,6 @@ object TextAnalysis {
   def dsirScore(docs: DataFrame, id: String, text: String,
       counts: DataFrame, m: Int, roundTo: Int = 6): DataFrame = {
     import org.apache.spark.sql.types.DecimalType
-    graft.plans.TextExpressions.register(docs.sparkSession)
     val totals = counts.agg(sum(col("ct")).as("tt"), sum(col("cr")).as("tr"))
     val lam = counts.crossJoin(broadcast(totals)).select(col("b"),
       (log((col("ct").cast("double") + 1) / (col("tt").cast("double") + m)) -

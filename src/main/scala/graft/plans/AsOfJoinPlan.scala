@@ -69,9 +69,8 @@ case class AsOfJoin(
     copy(left = newLeft, right = newRight)
 }
 
-/** Planner rule: AsOfJoin → [[AsOfJoinExec]]. Register via
-  * `spark.experimental.extraStrategies` (done by
-  * `EventOps.asOfJoinNative`) or `GraftExtensions`. */
+/** Planner rule: AsOfJoin → [[AsOfJoinExec]]. Registered via
+  * `spark.experimental.extraStrategies` by `EventOps.asOfJoinNative`. */
 object AsOfJoinStrategy extends SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
     case AsOfJoin(l, r, lk, rk, lt, rt, dir) =>

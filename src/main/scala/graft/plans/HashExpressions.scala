@@ -27,9 +27,9 @@ import org.apache.spark.unsafe.types.UTF8String
 case class Md5U52(child: Expression, hexDigits: Int = 13,
     startDigit: Int = 1) extends UnaryExpression {
   require(hexDigits >= 1 && hexDigits <= 15,
-    "md5_u52: hexDigits in 1..15 (long-exact)")
+    s"$prettyName: hexDigits in 1..15 (long-exact)")
   require(startDigit >= 1 && startDigit + hexDigits - 1 <= 32,
-    "md5_u52: digit window must lie in the 32 hex digits of md5")
+    s"$prettyName: digit window must lie in the 32 hex digits of md5")
   override def prettyName: String = "md5_u52"
   override def dataType: DataType = LongType
 
@@ -64,7 +64,7 @@ case class Md5U52(child: Expression, hexDigits: Int = 13,
 case class KmvMergeStats(left: Expression, right: Expression, k: Int)
     extends org.apache.spark.sql.catalyst.expressions.BinaryExpression
     with org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback {
-  require(k >= 1, "kmv_merge_stats: k >= 1")
+  require(k >= 1, s"$prettyName: k >= 1")
   override def prettyName: String = "kmv_merge_stats"
   override def dataType: DataType =
     org.apache.spark.sql.types.StructType(Seq(
@@ -94,7 +94,7 @@ case class KmvMergeStats(left: Expression, right: Expression, k: Int)
       // silently wrong
       if (kept > 0 && nxt <= last)
         throw new IllegalArgumentException(
-          "kmv_merge_stats: inputs must be sorted ascending and distinct")
+          s"$prettyName: inputs must be sorted ascending and distinct")
       last = nxt
       kept += 1
     }

@@ -81,7 +81,7 @@ case class StubFacesXx(child: Expression, dim: Int)
     extends UnaryExpression with CodegenFallback {
   // sequence(0, dim - 1) runs DESCENDING below dim = 1, which the
   // Column form would turn into phantom encoding elements
-  require(dim >= 1, s"stub_faces_xx: dim must be >= 1, got $dim")
+  require(dim >= 1, s"$prettyName: dim must be >= 1, got $dim")
 
   override def prettyName: String = "stub_faces_xx"
   // the Column form's type and nullability, flags included: `transform`

@@ -25,10 +25,9 @@ import org.apache.spark.sql.types.DoubleType
   * external engine at an exact boundary should square the threshold on
   * that side too.
   *
-  * Wired two ways: injected by [[graft.GraftExtensions]] at session
-  * build, and attached at runtime to `experimental.extraOptimizations`
-  * by [[VectorExpressions.register]] so the DataFrame operators get it
-  * on any session.
+  * For SQL users only: injected by [[graft.GraftExtensions]] at
+  * session build. DataFrame code writes the squared comparison itself
+  * (`fastSquaredL2(a, b) <= tol * tol`), so it needs no rule.
   */
 object SimplifySqrtThreshold extends Rule[LogicalPlan] {
   private def sq(tol: Double): Literal = Literal(tol * tol, DoubleType)

@@ -380,7 +380,7 @@ private[plans] object ShingleIter {
 case class BloomPositions(child: Expression, n: Int, mBits: Int, kHashes: Int)
     extends UnaryExpression with CodegenFallback {
   require(n > 0 && mBits > 0 && kHashes > 0,
-    "bloom_positions: n, mBits, kHashes must be positive")
+    s"$prettyName: n, mBits, kHashes must be positive")
   override def prettyName: String = "bloom_positions"
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
 
@@ -426,18 +426,18 @@ case class BloomShingleHits(left: Expression, right: Expression,
     n: Int, kHashes: Int)
     extends org.apache.spark.sql.catalyst.expressions.BinaryExpression
     with CodegenFallback {
-  require(n > 0 && kHashes > 0, "bloom_hits: n, kHashes must be positive")
+  require(n > 0 && kHashes > 0, s"$prettyName: n, kHashes must be positive")
   override def prettyName: String = "bloom_hits"
   override def dataType: DataType = StructType(Seq(
     StructField("n_sh", IntegerType, nullable = false),
     StructField("n_hits", IntegerType, nullable = false)))
 
   @transient private lazy val bits: Array[Boolean] = {
-    require(right.foldable, "bloom_hits: the bit array must be foldable")
+    require(right.foldable, s"$prettyName: the bit array must be foldable")
     val arr = right.eval()
       .asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]
       .toBooleanArray()
-    require(arr.nonEmpty, "bloom_hits: bits must be non-empty")
+    require(arr.nonEmpty, s"$prettyName: bits must be non-empty")
     arr
   }
   @transient private lazy val mBits = bits.length
@@ -480,7 +480,7 @@ case class BloomShingleHits(left: Expression, right: Expression,
 case class ChunkWords(child: Expression, size: Int, stride: Int)
     extends UnaryExpression with CodegenFallback {
   require(size > 0 && stride > 0 && stride <= size,
-    "chunk_words: need 0 < stride <= size")
+    s"$prettyName: need 0 < stride <= size")
   override def prettyName: String = "chunk_words"
   override def dataType: DataType = ArrayType(StringType, containsNull = false)
 
@@ -530,7 +530,7 @@ case class ChunkWords(child: Expression, size: Int, stride: Int)
 case class BlocklistScan(child: Expression, patterns: Seq[String],
     repl: String) extends UnaryExpression with CodegenFallback {
   require(patterns.nonEmpty && patterns.forall(_.nonEmpty),
-    "blocklist_scan: patterns must be non-empty")
+    s"$prettyName: patterns must be non-empty")
   override def prettyName: String = "blocklist_scan"
   override def dataType: DataType = StructType(Seq(
     StructField("n_hits", IntegerType, nullable = false),
@@ -635,99 +635,4 @@ case class DeletionVariants(child: Expression)
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
-}
-
-object TextExpressions {
-  def register(spark: org.apache.spark.sql.SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "deletion_variants",
-      exprs => DeletionVariants(exprs(0)),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "shingle_hashes",
-      exprs => ShingleHashes(exprs(0),
-        exprs(1).eval().asInstanceOf[Number].intValue()),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "shingle_strings",
-      exprs => ShingleStrings(exprs(0),
-        exprs(1).eval().asInstanceOf[Number].intValue(),
-        if (exprs.length > 2) exprs(2).eval().asInstanceOf[Boolean] else true),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "bloom_positions",
-      exprs => BloomPositions(exprs(0),
-        exprs(1).eval().asInstanceOf[Number].intValue(),
-        exprs(2).eval().asInstanceOf[Number].intValue(),
-        exprs(3).eval().asInstanceOf[Number].intValue()),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "bloom_hits",
-      // the bit array stays an UNEVALUATED foldable child — see
-      // BloomShingleHits scaladoc for why it must not be a constructor
-      // array
-      exprs => BloomShingleHits(exprs(0), exprs(3),
-        exprs(1).eval().asInstanceOf[Number].intValue(),
-        exprs(2).eval().asInstanceOf[Number].intValue()),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "simhash_md5", exprs => SimhashMd5(exprs(0)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "kmv_merge_stats",
-      exprs => KmvMergeStats(exprs(0), exprs(1),
-        exprs(2).eval().asInstanceOf[Number].intValue()),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "md5_u52",
-      exprs => Md5U52(exprs(0),
-        if (exprs.length > 1)
-          exprs(1).eval().asInstanceOf[Number].intValue()
-        else 13,
-        if (exprs.length > 2)
-          exprs(2).eval().asInstanceOf[Number].intValue()
-        else 1),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "cms_sketch",
-      exprs => CmsSketchAgg(exprs(0),
-        exprs(1).eval().asInstanceOf[Number].intValue(),
-        exprs(2).eval().asInstanceOf[Number].intValue()),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "chunk_words",
-      exprs => ChunkWords(exprs(0),
-        exprs(1).eval().asInstanceOf[Number].intValue(),
-        exprs(2).eval().asInstanceOf[Number].intValue()),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "window_md5s",
-      exprs => WindowMd5s(exprs(0),
-        exprs(1).eval().asInstanceOf[Number].intValue()),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "blocklist_scan",
-      exprs => BlocklistScan(exprs(0),
-        exprs(1).eval().asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]
-          .toObjectArray(StringType).map(_.toString).toSeq,
-        exprs(2).eval().asInstanceOf[UTF8String].toString),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "minhash_md5",
-      exprs => MinhashMd5(exprs(0),
-        exprs(1).eval().asInstanceOf[Number].intValue(),
-        exprs(2).eval().asInstanceOf[Number].intValue()),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "jaro_winkler",
-      exprs => JaroWinkler(exprs(0), exprs(1), winkler = true),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "jaro_sim",
-      exprs => JaroWinkler(exprs(0), exprs(1), winkler = false),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "nfc_normalize",
-      exprs => NfcNormalize(exprs(0)),
-      "built-in")
-  }
 }

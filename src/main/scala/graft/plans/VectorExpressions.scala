@@ -246,7 +246,7 @@ case class LshBuckets(child: Expression, nBits: Int, nTables: Int, seed: Long)
 case class RpProject(child: Expression, dOut: Int, seed: Long)
     extends org.apache.spark.sql.catalyst.expressions.UnaryExpression
     with org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback {
-  require(dOut > 0, "rp_project: dOut must be positive")
+  require(dOut > 0, s"$prettyName: dOut must be positive")
   override def prettyName: String = "rp_project"
   override def dataType: DataType =
     org.apache.spark.sql.types.ArrayType(DoubleType, containsNull = false)
@@ -298,7 +298,7 @@ case class RpProject(child: Expression, dOut: Int, seed: Long)
 case class NearestCell(child: Expression, centroids: Array[Array[Double]])
     extends org.apache.spark.sql.catalyst.expressions.UnaryExpression
     with org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback {
-  require(centroids.nonEmpty, "nearest_cell: empty centroid matrix")
+  require(centroids.nonEmpty, s"$prettyName: empty centroid matrix")
   override def prettyName: String = "nearest_cell"
   override def dataType: DataType = org.apache.spark.sql.types.IntegerType
 
@@ -343,8 +343,8 @@ case class NearestCell(child: Expression, centroids: Array[Array[Double]])
 case class NearestCells(child: Expression, centroids: Array[Array[Double]], nProbe: Int)
     extends org.apache.spark.sql.catalyst.expressions.UnaryExpression
     with org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback {
-  require(centroids.nonEmpty, "nearest_cells: empty centroid matrix")
-  require(nProbe > 0, "nearest_cells: nProbe must be positive")
+  require(centroids.nonEmpty, s"$prettyName: empty centroid matrix")
+  require(nProbe > 0, s"$prettyName: nProbe must be positive")
   override def prettyName: String = "nearest_cells"
   override def dataType: DataType = ArrayType(org.apache.spark.sql.types.IntegerType, containsNull = false)
   override def nullable: Boolean = true
@@ -406,7 +406,7 @@ case class NearestCells(child: Expression, centroids: Array[Array[Double]], nPro
   * finds no distance row. */
 case class AdcScore(left: Expression, right: Expression, k: Int)
     extends BinaryExpression {
-  require(k > 0, "adc_score: k must be positive")
+  require(k > 0, s"$prettyName: k must be positive")
   override def prettyName: String = "adc_score"
   override def dataType: DataType = DoubleType
   override def nullable: Boolean = true
@@ -471,7 +471,7 @@ case class AdcScore(left: Expression, right: Expression, k: Int)
 case class MotifCorr(child: Expression, zq: Array[Double])
     extends org.apache.spark.sql.catalyst.expressions.UnaryExpression
     with org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback {
-  require(zq.nonEmpty, "motif_corr: empty pattern")
+  require(zq.nonEmpty, s"$prettyName: empty pattern")
   override def prettyName: String = "motif_corr"
   override def dataType: DataType =
     org.apache.spark.sql.types.StructType(Seq(
@@ -507,44 +507,4 @@ case class MotifCorr(child: Expression, zq: Array[Double])
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
-}
-
-/** Registration of the native vector expressions as SQL functions, so
-  * call sites can use the public `call_function` API (no dependence on
-  * Column↔Expression internals). Idempotent; call per SparkSession. */
-object VectorExpressions {
-  def register(spark: org.apache.spark.sql.SparkSession): Unit = {
-    val registry = spark.sessionState.functionRegistry
-    registry.createOrReplaceTempFunction("vec_dot", exprs => DotProduct(exprs(0), exprs(1)), "built-in")
-    registry.createOrReplaceTempFunction("vec_sq_l2", exprs => SquaredL2(exprs(0), exprs(1)), "built-in")
-    registry.createOrReplaceTempFunction("vec_dot_i8", exprs => DotProductI8(exprs(0), exprs(1)), "built-in")
-    registry.createOrReplaceTempFunction("lsh_buckets", exprs => LshBuckets(exprs(0),
-      exprs(1).eval().asInstanceOf[Number].intValue(),
-      exprs(2).eval().asInstanceOf[Number].intValue(),
-      exprs(3).eval().asInstanceOf[Number].longValue()), "built-in")
-    registry.createOrReplaceTempFunction("rp_project", exprs => RpProject(exprs(0),
-      exprs(1).eval().asInstanceOf[Number].intValue(),
-      exprs(2).eval().asInstanceOf[Number].longValue()), "built-in")
-    // second arg must be a foldable array<array<double>> literal (the
-    // driver-held centroid model); it is evaluated once at resolution
-    registry.createOrReplaceTempFunction("adc_score", exprs => AdcScore(exprs(0), exprs(1),
-      exprs(2).eval().asInstanceOf[Number].intValue()), "built-in")
-    registry.createOrReplaceTempFunction("nearest_cell", exprs => {
-      val arr = exprs(1).eval().asInstanceOf[ArrayData]
-      val m = Array.tabulate(arr.numElements())(i => arr.getArray(i).toDoubleArray)
-      NearestCell(exprs(0), m)
-    }, "built-in")
-    registry.createOrReplaceTempFunction("nearest_cells", exprs => {
-      val arr = exprs(1).eval().asInstanceOf[ArrayData]
-      val m = Array.tabulate(arr.numElements())(i => arr.getArray(i).toDoubleArray)
-      NearestCells(exprs(0), m, exprs(2).eval().asInstanceOf[Number].intValue())
-    }, "built-in")
-    // second arg must be a foldable array<double> literal (the
-    // z-normalized query pattern)
-    registry.createOrReplaceTempFunction("motif_corr", exprs => MotifCorr(
-      exprs(0), exprs(1).eval().asInstanceOf[ArrayData].toDoubleArray), "built-in")
-    if (!spark.experimental.extraOptimizations.contains(SimplifySqrtThreshold))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ SimplifySqrtThreshold
-  }
 }

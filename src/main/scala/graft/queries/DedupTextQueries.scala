@@ -304,7 +304,7 @@ object DedupTextQueries {
     "q52_blocklist_scan" -> Q(
       (s, d) => {
         val docs = Tables.documents(s, d)
-        val sc = TextAnalysis.blocklistScan(docs, col("text"),
+        val sc = blocklistScan(col("text"),
           Seq("customer", "vector", "spark"), "[X]")
         docs.select(col("doc_id"),
           sc.getField("n_hits").as("n_hits"),
@@ -328,7 +328,7 @@ object DedupTextQueries {
         val docs = Tables.documents(s, d)
         // 20 patterns including multi-word phrases that NEST their
         // word prefixes — leftmost-longest must pick the phrase
-        val sc = TextAnalysis.blocklistScan(docs, col("text"),
+        val sc = blocklistScan(col("text"),
           DedupTextQueries.BigBlocklist, "[X]")
         docs.select(col("doc_id"),
           sc.getField("n_hits").as("n_hits"),
@@ -538,10 +538,8 @@ object DedupTextQueries {
         // convenience form which emitted one degenerate all-words
         // shingle — the fixture has no sub-3-word docs, but the oracle
         // pins the contract if one ever appears
-        graft.plans.TextExpressions.register(s)
         val sh = Tables.documents(s, d).select(col("source"),
-          explode(call_function("shingle_strings",
-            col("text"), lit(3), lit(true))).as("sh"))
+          explode(shingleStrings(col("text"), 3, distinct = true)).as("sh"))
         graft.operators.Sketches.kmvPairJaccard(sh, "source", "sh", k = 256)
           .orderBy(col("src_a"), col("src_b"))
       },
@@ -1230,7 +1228,6 @@ object DedupTextQueries {
     // ---- q249: Unicode NFC normalization -----------------------------------
     "q249_nfc_normalize" -> Q(
       (s, d) => {
-        graft.plans.TextExpressions.register(s)
         // plant decomposed sequences (e + COMBINING ACUTE, A + COMBINING
         // GRAVE) after a corpus prefix: the corpus is ASCII, so the
         // planted tail is what normalization must compose — and both
@@ -1241,7 +1238,7 @@ object DedupTextQueries {
               .as("raw"))
           .select(col("doc_id"),
             length(col("raw")).cast("long").as("raw_chars"),
-            call_function("nfc_normalize", col("raw")).as("norm"))
+            nfcNormalize(col("raw")).as("norm"))
           .select(col("doc_id"), col("raw_chars"),
             length(col("norm")).cast("long").as("norm_chars"),
             md5(col("norm")).as("norm_md5"))
@@ -1352,7 +1349,6 @@ object DedupTextQueries {
     "q262_textrank" -> Q(
       (s, d) => {
         import org.apache.spark.sql.expressions.Window
-        graft.plans.TextExpressions.register(s)
         val toks = Tables.documents(s, d)
           .select(explode(split(col("text"), " ")).as("w"))
         val nodes = toks.select(col("w")).distinct()
@@ -1362,8 +1358,7 @@ object DedupTextQueries {
         // replaced by the native single-pass shingle expression; words
         // are space-split so the space split below recovers the pair
         val bi = Tables.documents(s, d)
-          .select(explode(call_function("shingle_strings",
-            col("text"), lit(2), lit(false))).as("pair"))
+          .select(explode(shingleStrings(col("text"), 2, distinct = false)).as("pair"))
           .select(split(col("pair"), " ").as("p"))
           .select(element_at(col("p"), 1).as("w"),
             element_at(col("p"), 2).as("w2"))

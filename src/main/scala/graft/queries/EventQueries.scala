@@ -7,6 +7,7 @@ import org.apache.spark.sql.types.DecimalType
 
 import graft.{Q, Tables}
 import graft.Tables.{moneySum, sqlMoneySum, sqlMoneyAvg}
+import graft.functions.TextFunctions.md5U52
 
 /** Event-time analytics over the `events` table — the batch twins of the
   * reference's streaming semantics (SURVEY.md §2.8, §2.11): tumbling
@@ -1108,10 +1109,8 @@ object EventQueries {
     "q124_aqp_avg" -> Q(
       (s, d) => {
         import org.apache.spark.sql.types.DecimalType
-        graft.plans.TextExpressions.register(s)
         val e = Tables.events(s, d)
-        val bucket = call_function("md5_u52",
-          col("event_id").cast("string"), lit(4)).cast("int") % 100
+        val bucket = md5U52(col("event_id").cast("string"), 4).cast("int") % 100
         // deterministic 10% sample (content-derived — any engine and
         // any partitioning draws the same rows)
         val samp = e.filter(bucket < 10)
@@ -1882,15 +1881,14 @@ object EventQueries {
     // ---- q161: two-proportion A/B z-test -----------------------------------
     "q161_ab_ztest" -> Q(
       (s, d) => {
-        graft.plans.TextExpressions.register(s)
         val assigned = Tables.events(s, d)
           .groupBy(col("user_id"))
           .agg(max(when(col("event_type") === "purchase" &&
               col("value") > 100, 1).otherwise(0))
             .as("converted"))
           .withColumn("variant",
-            when((call_function("md5_u52", col("user_id").cast("string"),
-              lit(4)).cast("int") % 2) === 0, "A").otherwise("B"))
+            when((md5U52(col("user_id").cast("string"), 4).cast("int") % 2) === 0,
+              "A").otherwise("B"))
         val counts = assigned.groupBy(col("variant"))
           .agg(count(lit(1)).as("n"), sum(col("converted")).as("conv"))
         val a = counts.filter(col("variant") === "A")
@@ -1959,7 +1957,6 @@ object EventQueries {
     // ---- q198: CUPED variance-reduced A/B effect ---------------------------
     "q198_cuped" -> Q(
       (s, d) => {
-        graft.plans.TextExpressions.register(s)
         import org.apache.spark.sql.types.DecimalType
         // per-user pre-period covariate x (purchase cents through Jan
         // 15) and experiment-period metric y (after), both on the
@@ -1972,8 +1969,8 @@ object EventQueries {
           .agg(sum(when(col("pre"), col("cents")).otherwise(0L)).as("x"),
                sum(when(!col("pre"), col("cents")).otherwise(0L)).as("y"))
           .withColumn("variant",
-            when((call_function("md5_u52", col("user_id").cast("string"),
-              lit(4)).cast("int") % 2) === 0, "A").otherwise("B"))
+            when((md5U52(col("user_id").cast("string"), 4).cast("int") % 2) === 0,
+              "A").otherwise("B"))
         def dec(c: org.apache.spark.sql.Column) = c.cast(DecimalType(38, 0))
         val m = perUser.groupBy(col("variant"))
           .agg(count(lit(1)).as("n"),

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import graft.{Q, Tables}
 import graft.operators.EntityResolution
 import graft.operators.EntityResolution.LinkField
+import graft.functions.TextFunctions.jaroWinkler
 
 /** Probabilistic record linkage tier ([[EntityResolution]] §Fellegi–
   * Sunter): blocked candidate generation, per-field agreement scoring,
@@ -319,7 +320,6 @@ object LinkageQueries {
     // ---- q238: fuzzy string matching via native Jaro-Winkler ---------------
     "q240_jw_linkage" -> Q(
       (s, d) => {
-        graft.plans.TextExpressions.register(s)
         val p = Tables.part(s, d)
         val a = p.select(col("p_partkey").as("a_key"),
           col("p_name").as("a_name"), col("p_type"), col("p_size"))
@@ -328,7 +328,7 @@ object LinkageQueries {
         a.join(b, Seq("p_type", "p_size"))
           .filter(col("a_key") < col("b_key"))
           .withColumn("jw",
-            call_function("jaro_winkler", col("a_name"), col("b_name")))
+            jaroWinkler(col("a_name"), col("b_name")))
           .filter(col("jw") >= 0.90 && col("jw") < 1.0)
           .select(col("a_key"), col("b_key"), col("a_name"), col("b_name"),
             col("jw"))
@@ -344,7 +344,7 @@ object LinkageQueries {
         WHERE jaro_winkler_similarity(a.p_name, b.p_name) >= CAST('0.90' AS DOUBLE)
           AND jaro_winkler_similarity(a.p_name, b.p_name) < CAST('1.0' AS DOUBLE)
         ORDER BY a_key, b_key"""),
-      "Fuzzy name matching through the native codegen'd jaro_winkler " +
+      "Fuzzy name matching through the native codegen'd " +
         "expression (graft.plans.JaroWinkler — byte-level, integer-" +
         "halved transpositions, 0.7 boost gate: bit-identical to " +
         "DuckDB's jaro_winkler_similarity, fuzz-proved on 40k pairs). " +

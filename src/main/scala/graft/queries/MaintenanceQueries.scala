@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.{Q, Tables}
+import graft.functions.TextFunctions.md5U52
 
 /** Corpus-maintenance / pipeline-ops tier: boilerplate removal (the
   * CCNet template-chrome strip), key-skew pre-flight auditing, and the
@@ -638,9 +639,8 @@ object MaintenanceQueries {
     val pts = ringPoints(shards)
     val ring = pts.toDF("shard", "pos").withColumn("rk", lit(0))
     val minShard = pts.minBy(_._2)._1
-    graft.plans.TextExpressions.register(s)
     val keys = Tables.documents(s, d).select(col("doc_id"),
-        call_function("md5_u52", col("doc_id").cast("string")).as("p"))
+        md5U52(col("doc_id").cast("string")).as("p"))
       .withColumn("rk", lit(0))
     graft.operators.EventOps.asOfJoinBroadcast(keys, ring, "rk", "p", "pos",
         Seq("shard"), direction = "forward")

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.{Q, Tables}
-import graft.functions.TextFunctions.tokens
+import graft.functions.TextFunctions.{md5U52, tokens}
 import graft.functions.VectorFunctions.asDoubleVec
 import graft.operators.{Retrieval, Similarity}
 
@@ -34,7 +34,7 @@ object RetrievalQueries {
   /** Content-derived stub doc embedding (the q93/q60 pattern): dim j =
     * 52-bit md5 prefix of "md5(text):j" / 2^52. */
   private def docEmbed(h: Column): Column = array((0 until 8).map(j =>
-    call_function("md5_u52", concat(h, lit(s":$j")))
+    md5U52(concat(h, lit(s":$j")))
       .cast("double") / lit(4503599627370496.0)): _*)
 
   /** Shared BM25 CTE chain (through the ranked lexical list). */
@@ -103,7 +103,6 @@ object RetrievalQueries {
     // ---- q98: hybrid retrieval, reciprocal-rank fusion ----------------
     "q98_hybrid_rrf" -> Q(
       (s, d) => {
-        graft.plans.TextExpressions.register(s)
         val docs = Tables.documents(s, d)
         val lex = Retrieval.bm25TopK(docs, "doc_id", "text",
           queryTerms(docs), "q_id", "term", k = 10, logIdf = false)
@@ -224,7 +223,6 @@ object RetrievalQueries {
     // ---- q113: MMR diversity re-rank -----------------------------------
     "q113_mmr_rerank" -> Q(
       (s, d) => {
-        graft.plans.TextExpressions.register(s)
         val docs = Tables.documents(s, d)
         val embedded = docs.select(col("doc_id"), docEmbed(md5(col("text"))).as("e"))
         val probes = embedded.filter(col("doc_id") < 8)

@@ -7,7 +7,7 @@ import org.apache.spark.sql.types.DecimalType
 
 import graft.{Q, Tables}
 import graft.operators.Similarity
-import graft.functions.VectorFunctions.asDoubleVec
+import graft.functions.VectorFunctions.{asDoubleVec, fastSquaredL2}
 
 /** Similarity-search queries over `embeddings.parquet` (64-d unit
   * vectors, labels 0-9). q30 is the reference's flagship semantic:
@@ -603,7 +603,7 @@ object SimilarityQueries {
       },
       Some(OracleGen.q61Sql(k = 8, iters = 4, dim = 64)),
       "Lloyd's k-means: projection-only assignment (model ships inside " +
-        "the nearest_cell expression — zero full-data shuffles per " +
+        "the NearestCell expression — zero full-data shuffles per " +
         "iteration), 1e-9-grid integer means make the full training " +
         "run hash-checkable against an unrolled SQL oracle."),
 
@@ -676,7 +676,6 @@ object SimilarityQueries {
     // ---- q210: PQ/ADC recall audit ----------------------------------------
     "q210_pq_recall" -> Q(
       (s, d) => {
-        graft.plans.VectorExpressions.register(s)
         val e = emb(s, d).select(col("vec_id"), col("emb"))
         val books = Similarity.pqCodebooks(
           e.filter(col("vec_id") < 200), "vec_id", "emb", m = 2, k = 8,
@@ -695,7 +694,7 @@ object SimilarityQueries {
         val exact = AuditCache.memo(s, s"l2_top3@$d") {
           probes.crossJoin(tg)
             .select(col("p_id"), col("t_id"),
-              round(call_function("vec_sq_l2", col("p_vec"), col("t_vec")), 6)
+              round(fastSquaredL2(col("p_vec"), col("t_vec")), 6)
                 .as("d2"))
             .withColumn("rank", row_number().over(w))
             .filter(col("rank") <= 3)
@@ -770,7 +769,6 @@ object SimilarityQueries {
     // ---- q211: recall-tuned PQ (audited) ----------------------------------
     "q211_pq_tuned" -> Q(
       (s, d) => {
-        graft.plans.VectorExpressions.register(s)
         val e = emb(s, d).select(col("vec_id"), col("emb"))
         // 4 subspaces x 16 cells: 65536 distinct codes where the 2x8
         // config had 64 — code capacity must exceed the corpus for the
@@ -793,7 +791,7 @@ object SimilarityQueries {
           .select(col("p_id"), col("t_id"))
           .join(probes, "p_id").join(tg, "t_id")
           .select(col("p_id"), col("t_id"),
-            round(call_function("vec_sq_l2", col("p_vec"), col("t_vec")), 6)
+            round(fastSquaredL2(col("p_vec"), col("t_vec")), 6)
               .as("d2"))
           .withColumn("rank", row_number().over(w))
           .filter(col("rank") <= 3)
@@ -801,7 +799,7 @@ object SimilarityQueries {
         val exact = AuditCache.memo(s, s"l2_top3@$d") {
           probes.crossJoin(tg)
             .select(col("p_id"), col("t_id"),
-              round(call_function("vec_sq_l2", col("p_vec"), col("t_vec")), 6)
+              round(fastSquaredL2(col("p_vec"), col("t_vec")), 6)
                 .as("d2"))
             .withColumn("rank", row_number().over(w))
             .filter(col("rank") <= 3)
@@ -1231,10 +1229,11 @@ object SimilarityQueries {
     // ---- q127: the SQL surface, end to end --------------------------------
     "q127_sql_topk" -> Q(
       (s, d) => {
-        // pure spark.sql through the injected native expressions — the
-        // surface a SQL-only user of the library sees (GraftExtensions /
-        // register()); same plan and hash as the DataFrame q31 path
-        graft.plans.VectorExpressions.register(s)
+        // pure spark.sql through the native expressions by name — the
+        // surface a SQL-only user of the library sees (GraftExtensions,
+        // here installed into the running session); same plan and hash
+        // as the DataFrame q31 path
+        graft.GraftExtensions.install(s)
         emb(s, d).createOrReplaceTempView("emb_v")
         s.sql("""
           WITH p AS (SELECT vec_id, emb FROM emb_v WHERE vec_id < 100),
@@ -1358,7 +1357,6 @@ object SimilarityQueries {
     // ---- q245: simplified silhouette over the q61 clustering ---------------
     "q245_silhouette" -> Q(
       (s, d) => {
-        graft.plans.VectorExpressions.register(s)
         val e = emb(s, d).select(col("vec_id"), col("emb"))
         val model = Similarity.kMeans(e, "vec_id", "emb", k = 8, iters = 4)
           .select(col("cell"), col("centroid_vec"))
@@ -1366,7 +1364,7 @@ object SimilarityQueries {
         // shuffle — the model is k rows
         val pairs = e.crossJoin(broadcast(model))
           .withColumn("d2",
-            call_function("vec_sq_l2", col("emb"), col("centroid_vec")))
+            fastSquaredL2(col("emb"), col("centroid_vec")))
           .withColumn("dst", sqrt(col("d2")))
         val w = Window.partitionBy(col("vec_id"))
           .orderBy(col("d2"), col("cell"))

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 
 import graft.{Q, Tables}
 import graft.operators.Stats
+import graft.functions.TextFunctions.md5U52
 
 /** Statistical-test and robust-conditioning tier ([[graft.operators.Stats]]):
   * chi-square independence, Mann-Whitney rank-sum, Welch's t, discrete
@@ -394,11 +395,10 @@ object StatQueries {
     // ---- q225: difference-in-differences ------------------------------------
     "q225_diff_in_diff" -> Q(
       (s, d) => {
-        graft.plans.TextExpressions.register(s)
         val e = Tables.events(s, d)
           .filter(col("event_type") === "purchase" && col("value").isNotNull)
           .withColumn("treat",
-            (call_function("md5_u52", col("user_id").cast("string"), lit(4))
+            (md5U52(col("user_id").cast("string"), 4)
               .cast("int") % 2) === 0)
           .withColumn("post", to_date(col("ts")) > lit("2024-01-15"))
         Stats.diffInDiff(e, col("treat"), col("post"), col("value"))
@@ -848,10 +848,8 @@ object StatQueries {
     // ---- q238: isotonic calibration (PAV minimax) ----------------------------
     "q238_isotonic" -> Q(
       (s, d) => {
-        graft.plans.TextExpressions.register(s)
         val docs = Tables.documents(s, d)
-        val u = call_function("md5_u52",
-          concat(col("doc_id").cast("string"), lit(":iso")))
+        val u = md5U52(concat(col("doc_id").cast("string"), lit(":iso")))
         // 20% deterministic label flips off the md5 urn (5u < 2^52 is
         // an exact integer compare) so the monotone base relation
         // carries real noise for PAV to pool

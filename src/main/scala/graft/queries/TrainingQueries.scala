@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 
 import graft.{Q, Tables}
 import graft.operators.{Features, TextAnalysis}
+import graft.functions.TextFunctions.{md5U52, windowMd5s}
 
 /** Training-data curation queries over `documents.parquet`: benchmark
   * decontamination, deterministic epoch mixing, repetition signals,
@@ -979,12 +980,10 @@ object TrainingQueries {
         val Oversample = 64.0
         // codegen'd md5 urn (same u32 value as the conv/substring chain
         // — the chain's string parse was 80% of the candidate filter)
-        graft.plans.TextExpressions.register(s)
         val cand = users.crossJoin(probs.repartition(
             s.sessionState.conf.numShufflePartitions, col("item")))
           .withColumn("u01",
-            call_function("md5_u52",
-              concat_ws("_", col("user"), col("item")), lit(8))
+            md5U52(concat_ws("_", col("user"), col("item")), 8)
               .cast("double") / lit(4294967296.0))
           .filter(col("u01") < lit(Oversample) * col("p"))
         // ownership matters only for sampled users (user ≡ 0 mod 97 by
@@ -1178,9 +1177,8 @@ object TrainingQueries {
         // saturates (31 types, zero hapaxes — coverage reads a vacuous
         // 1.0), while bigram types keep a live unseen tail — the
         // regime the estimator exists for
-        graft.plans.TextExpressions.register(s)
         val counts = Tables.documents(s, dir)
-          .select(explode(call_function("window_md5s", col("text"), lit(2)))
+          .select(explode(windowMd5s(col("text"), 2))
             .as("term"))
           .groupBy(col("term")).agg(count(lit(1)).as("c"))
         counts.agg(
@@ -1227,7 +1225,7 @@ object TrainingQueries {
         "more crawling buys new content) and the Chao1 richness " +
         "estimate V + n1^2/(2 n2) of the total type count including " +
         "unseen ones — the stop-crawling signal beside q110's Heaps " +
-        "fit. Windows ride the single-pass native window_md5s " +
+        "fit. Windows ride the single-pass native WindowMd5s " +
         "expression (identity by md5); one explode onto the bigram " +
         "spine, one 4-number reduction, exact-integer IEEE chains; " +
         "null Chao1 when no doubletons exist."),
@@ -1784,11 +1782,10 @@ object TrainingQueries {
         // (Weinberger et al.) that needs NO vocabulary, NO fit pass,
         // and survives any vocab drift; emitted as csv so the hash
         // compare sees a scalar
-        graft.plans.TextExpressions.register(s)
         val toks = Tables.documents(s, dir)
           .select(col("doc_id"),
             explode(split(col("text"), " ")).as("w"))
-          .withColumn("h", call_function("md5_u52", col("w"), lit(2))
+          .withColumn("h", md5U52(col("w"), 2)
             .cast("int"))
           .withColumn("idx", col("h") % 16)
           .withColumn("sgn", when((col("h") / 16).cast("int") % 2 === 0,

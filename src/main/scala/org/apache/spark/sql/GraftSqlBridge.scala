@@ -7,8 +7,9 @@ import org.apache.spark.sql.execution.{LogicalRDD, SQLExecution}
 /** Bridge into the `private[sql]` DataFrame and Column constructors, so
   * the library's custom logical operators (graft.plans.AsOfJoin) can be
   * surfaced as DataFrames, a ready-made Catalyst expression (the
-  * pipeline's target-set literal, its native model and matcher
-  * expressions) as a Column, and a Column as the expression it wraps —
+  * pipeline's target-set literal, the native expressions behind the
+  * typed builders in graft.functions) as a Column, and a Column as the
+  * expression it wraps —
   * the standard extension-library pattern for plugging a custom
   * LogicalPlan or Expression into a session without the function
   * registry. [[localCheckpointCounted]] is the one other private use. */

@@ -63,7 +63,6 @@ class CrashWindowSpec extends SparkSuite {
 
   test("ivfIngest crash-window replay leaves search results intact") {
     import graft.functions.VectorFunctions.asDoubleVec
-    graft.plans.VectorExpressions.register(spark)
     val (indexT, stateT) = ("graft_cw_ivf_index", "graft_cw_ivf_state")
     try {
       Seq(indexT, stateT).foreach(Catalog.dropTable(spark, _))
@@ -322,7 +321,6 @@ class CrashWindowSpec extends SparkSuite {
 
   test("semDedupIngest crash-window replay recomputes the identical keep-set") {
     import graft.functions.VectorFunctions.asDoubleVec
-    graft.plans.VectorExpressions.register(spark)
     val ts = Seq("graft_cw_sd_corpus", "graft_cw_sd_index", "graft_cw_sd_state")
     try {
       ts.foreach(Catalog.dropTable(spark, _))

@@ -53,9 +53,8 @@ class DedupSpec extends SparkSuite {
   }
 
   test("ShingleHashes matches the declarative shingle form (distinct count)") {
-    graft.plans.TextExpressions.register(spark)
     val cmp = docs.select(
-      size(call_function("shingle_hashes", col("text"), lit(3))).as("native"),
+      size(shingleHashes(col("text"), 3)).as("native"),
       size(shingles(col("text"), 3)).as("declarative"))
     assert(cmp.filter(col("native") =!= col("declarative")).count() == 0)
   }

@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 
 import graft.operators.{EntityResolution, Graph, Sketches}
+import graft.functions.TextFunctions.{deletionVariants, jaroWinkler}
 
 /** Unit pins for the round-7 additions: FastSS edit-distance blocking,
   * Misra-Gries two-pass heavy hitters, degree-ordered triangles. */
@@ -34,12 +35,11 @@ class EntityGraphSpec extends SparkSuite {
 
   test("deletion_variants equals the declarative deletion neighborhood") {
     import spark.implicits._
-    graft.plans.TextExpressions.register(spark)
     // ascii, unicode multi-byte, single char, empty, null
     val df = Seq("carol", "héllo", "日本語", "a", "", null)
       .toDF("s")
     val got = df.select(
-      call_function("deletion_variants", $"s").cast("string").as("v"))
+      deletionVariants($"s").cast("string").as("v"))
       .collect().map(_.getString(0))
     val want = df.select(
       EntityResolution.deletionNeighborhoodPos($"s").cast("string").as("v"))
@@ -541,7 +541,6 @@ class EntityGraphSpec extends SparkSuite {
 
   test("jaro_winkler matches DuckDB-pinned values bit-for-bit") {
     import spark.implicits._
-    graft.plans.TextExpressions.register(spark)
     // every expected value below is DuckDB 1.0 jaro_winkler_similarity
     // output, captured verbatim (the fuzz harness proved 40k pairs)
     val cases = Seq(
@@ -560,7 +559,7 @@ class EntityGraphSpec extends SparkSuite {
       ("prefixmatch", "prefixmxtch", 0.9636363636363636)) // prefix 7
       // capped at 4
     val got = cases.map { case (a, b, _) => (a, b) }.toDF("a", "b")
-      .select(call_function("jaro_winkler", col("a"), col("b")))
+      .select(jaroWinkler(col("a"), col("b")))
       .as[Double].collect()
     cases.zip(got).foreach { case ((a, b, want), d) =>
       assert(d == want, s"jw($a, $b): got $d want $want")
@@ -573,7 +572,7 @@ class EntityGraphSpec extends SparkSuite {
     }
     // null propagation
     val n = Seq((Some("x"), None: Option[String])).toDF("a", "b")
-      .select(call_function("jaro_winkler", col("a"), col("b")))
+      .select(jaroWinkler(col("a"), col("b")))
       .collect().head
     assert(n.isNullAt(0))
   }

@@ -73,8 +73,7 @@ class MultimodalSpec extends SparkSuite {
   }
 
   test("native functions are callable from plain SQL") {
-    graft.plans.VectorExpressions.register(spark)
-    graft.plans.TextExpressions.register(spark)
+    GraftExtensions.install(spark)
     val r = spark.sql(
       "SELECT vec_dot(array(1.0d, 2.0d), array(3.0d, 4.0d)) AS d, " +
       "vec_sq_l2(array(0.0d, 0.0d), array(3.0d, 4.0d)) AS l, " +
@@ -82,6 +81,80 @@ class MultimodalSpec extends SparkSuite {
     assert(r.getDouble(0) == 11.0)
     assert(r.getDouble(1) == 25.0)
     assert(r.getInt(2) == 2)
+    // every SQL name resolves, and where a typed builder exists it
+    // returns what the SQL form returns, row for row
+    import org.apache.spark.sql.Column
+    import graft.functions.TextFunctions._
+    import graft.functions.VectorFunctions._
+    import graft.streaming.SauronPipeline.{stubDetect, stubDetectPortable}
+    import spark.implicits._
+    Seq("a b a b c", "x y z x y z").toDF("text").createOrReplaceTempView("graft_fn_in")
+    val (v, w) = ("array(1.0d, -2.0d, 0.5d)", "array(0.5d, 1.0d, -1.0d)")
+    val cells = "array(array(0.0d, 0.0d, 0.0d), array(1.0d, -2.0d, 0.0d))"
+    val bits = Seq(true, false, true, true, false)
+    val frame = expr("encode(text, 'UTF-8')")
+    val text = col("text")
+    val cases: Seq[(String, String, Option[Column])] = Seq(
+      ("vec_dot", s"vec_dot($v, $w)", Some(fastDot(expr(v), expr(w)))),
+      ("vec_sq_l2", s"vec_sq_l2($v, $w)", Some(fastSquaredL2(expr(v), expr(w)))),
+      ("vec_dot_i8", "vec_dot_i8(array(1Y, -2Y, 3Y), array(4Y, 5Y, -6Y))",
+        Some(dotI8(expr("array(1Y, -2Y, 3Y)"), expr("array(4Y, 5Y, -6Y)")))),
+      ("lsh_buckets", s"lsh_buckets($v, 4, 3, 7)", Some(lshBuckets(expr(v), 4, 3, 7L))),
+      ("rp_project", s"rp_project($v, 2, 5)", Some(rpProject(expr(v), 2, 5L))),
+      ("nearest_cell", s"nearest_cell($v, $cells)",
+        Some(nearestCell(expr(v), Array(Array(0.0, 0.0, 0.0), Array(1.0, -2.0, 0.0))))),
+      ("nearest_cells", s"nearest_cells($v, $cells, 2)",
+        Some(nearestCells(expr(v), Array(Array(0.0, 0.0, 0.0), Array(1.0, -2.0, 0.0)), 2))),
+      ("adc_score", "adc_score(array(0, 1), array(0.5d, 1.5d, 2.5d, 3.5d), 2)",
+        Some(adcScore(expr("array(0, 1)"), expr("array(0.5d, 1.5d, 2.5d, 3.5d)"), 2))),
+      ("motif_corr", "motif_corr(array(1.0d, 3.0d, 2.0d), array(-1.0d, 1.0d, 0.0d))",
+        Some(motifCorr(expr("array(1.0d, 3.0d, 2.0d)"), Array(-1.0, 1.0, 0.0)))),
+      ("md5_u52", "md5_u52(text)", Some(md5U52(text))),
+      ("md5_u52", "md5_u52(text, 8)", Some(md5U52(text, 8))),
+      ("md5_u52", "md5_u52(text, 8, 25)", Some(md5U52(text, 8, 25))),
+      ("shingle_hashes", "shingle_hashes(text, 2)", Some(shingleHashes(text, 2))),
+      ("shingle_strings", "shingle_strings(text, 2)", Some(shingleStrings(text, 2))),
+      ("shingle_strings", "shingle_strings(text, 2, false)",
+        Some(shingleStrings(text, 2, distinct = false))),
+      ("window_md5s", "window_md5s(text, 2)", Some(windowMd5s(text, 2))),
+      ("chunk_words", "chunk_words(text, 3, 2)", Some(chunkWords(text, 3, 2))),
+      ("simhash_md5", "simhash_md5(text)", Some(simhashMd5(text))),
+      ("minhash_md5", "minhash_md5(text, 2, 4)", Some(minhashMd5(text, 2, 4))),
+      ("bloom_positions", "bloom_positions(text, 2, 64, 3)", Some(bloomPositions(text, 2, 64, 3))),
+      ("bloom_hits", s"bloom_hits(text, 2, 3, array(${bits.mkString(", ")}))",
+        Some(bloomHits(text, 2, 3, bits))),
+      ("cms_sketch", "cms_sketch(text, 8, 2)", Some(cmsSketch(text, 8, 2))),
+      ("blocklist_scan", "blocklist_scan(text, array('a b', 'z'), '[R]')",
+        Some(blocklistScan(text, Seq("a b", "z"), "[R]"))),
+      ("deletion_variants", "deletion_variants(text)", Some(deletionVariants(text))),
+      ("kmv_merge_stats", "kmv_merge_stats(array(1L, 3L, 5L), array(2L, 3L, 9L), 3)",
+        Some(kmvMergeStats(expr("array(1L, 3L, 5L)"), expr("array(2L, 3L, 9L)"), 3))),
+      ("jaro_winkler", "jaro_winkler(text, 'a b x')", Some(jaroWinkler(text, lit("a b x")))),
+      ("jaro_sim", "jaro_sim(text, 'a b x')", None),
+      ("nfc_normalize", "nfc_normalize(text)", Some(nfcNormalize(text))),
+      ("stub_faces_md5", "stub_faces_md5(encode(text, 'UTF-8'), 4)",
+        Some(stubDetectPortable(frame, 4))),
+      ("stub_faces_xx", "stub_faces_xx(encode(text, 'UTF-8'), 4)", Some(stubDetect(frame, 4))))
+    assert(cases.map(_._1).toSet == GraftExtensions.functions.map(_._1).toSet)
+    for ((name, call, builder) <- cases) {
+      val viaSql = spark.sql(s"SELECT $call AS v FROM graft_fn_in").collect().toSeq
+      assert(viaSql.nonEmpty && viaSql.forall(!_.isNullAt(0)), s"$call")
+      builder.foreach { b =>
+        assert(spark.table("graft_fn_in").select(b.as("v")).collect().toSeq == viaSql,
+          s"$name: builder differs from $call")
+      }
+    }
+    // install registers only what is missing: a second call is a no-op
+    // (same listing, and every name keeps the entry it had)
+    val registry = spark.sessionState.functionRegistry
+    def listing = registry.listFunction().map(_.unquotedString).sorted
+    def entries = GraftExtensions.functions.map { case (name, _, _) =>
+      registry.lookupFunction(org.apache.spark.sql.catalyst.FunctionIdentifier(name)).get }
+    val (installed, installedEntries) = (listing, entries)
+    GraftExtensions.install(spark)
+    assert(listing == installed)
+    assert(entries.zip(installedEntries).forall { case (a, b) => a eq b },
+      "a second install replaced a registered function")
     // extensions class wires the same expressions (applied at session
     // construction in a fresh JVM; here we just exercise the injection)
     new GraftExtensions().apply(new org.apache.spark.sql.SparkSessionExtensions)

@@ -2,6 +2,8 @@ package graft
 
 import org.apache.spark.sql.functions._
 
+import graft.functions.TextFunctions.{bloomHits, jaroWinkler, shingleStrings}
+
 /** Plan-shape regression tests: the scale properties the engine relies
   * on (pushdown, pruning, broadcast selection, partial aggregation,
   * bucketed co-location) asserted against the physical plans, so a
@@ -272,11 +274,9 @@ class PlanSpec extends SparkSuite {
   }
 
   test("bloom probe arm is a pure projection: zero exchanges over the corpus") {
-    graft.plans.TextExpressions.register(spark)
     val bits = Array.fill(64)(false); bits(3) = true
     val probe = Tables.documents(spark, sf("0.001"))
-      .select(col("doc_id"), call_function("bloom_hits",
-        col("text"), lit(3), lit(3), typedlit(bits.toSeq)).as("bh"))
+      .select(col("doc_id"), bloomHits(col("text"), 3, 3, bits.toSeq).as("bh"))
     val p = probe.queryExecution.executedPlan.toString
     assert(!p.contains("Exchange"),
       s"the decontamination scan must not shuffle the corpus:\n${p.take(1500)}")
@@ -473,9 +473,8 @@ class PlanSpec extends SparkSuite {
     //     grid must cross ≤k-long sketch ARRAYS (collect_list
     //     aggregates), never corpus rows — the array min-wise merge
     //     replaced the per-pair row window.
-    graft.plans.TextExpressions.register(spark)
     val docs = graft.Tables.documents(spark, sf("0.001")).select(col("source"),
-      explode(call_function("shingle_strings", col("text"), lit(3), lit(true)))
+      explode(shingleStrings(col("text"), 3, distinct = true))
         .as("sh"))
     val build = graft.operators.Sketches.kmvHashes(docs, "source", "sh", 256)
       .queryExecution.executedPlan.toString
@@ -499,14 +498,13 @@ class PlanSpec extends SparkSuite {
   }
 
   test("jaro_winkler scoring stays inside whole-stage codegen") {
-    graft.plans.TextExpressions.register(spark)
     // a range-derived source: literal Seqs constant-fold the whole
     // projection into a LocalTableScan (proving interpreted eval, not
     // the codegen path)
     val df = spark.range(4)
       .select(concat(lit("abc"), col("id").cast("string")).as("a"),
         lit("abc0x").as("b"))
-      .select(call_function("jaro_winkler", col("a"), col("b")).as("jw"))
+      .select(jaroWinkler(col("a"), col("b")).as("jw"))
       .filter(col("jw") > 0.9)
     val p = df.queryExecution.executedPlan.toString
     assert(p.contains("*("), s"jw filter must codegen:\n${p.take(800)}")

@@ -33,9 +33,32 @@ class QueriesSpec extends SparkSuite {
   }
 
   test("all registered queries evaluate at sf0.001") {
-    val failures = SparkEntry.queries.toSeq.sortBy(_._1).flatMap { case (name, fn) =>
-      try { fn(spark, sf("0.001")).count(); None }
-      catch { case e: Throwable => Some(s"$name: ${e.getMessage.take(120)}") }
+    import org.apache.spark.sql.SparkSession
+    // A fresh session holds only the built-in functions, and no query
+    // may add to them: each builds its native expressions as Columns.
+    // q127, the SQL-surface query, installs the SQL names; it runs last
+    // so that no other query can resolve a name through it.
+    val sqlSurface = "q127_sql_topk"
+    val s = spark.newSession()
+    def listing = s.sessionState.functionRegistry.listFunction().map(_.unquotedString).sorted
+    val previous = SparkSession.getActiveSession
+    SparkSession.setActiveSession(s)
+    val failures = try {
+      SparkEntry.queries.toSeq.sortBy { case (name, _) => (name == sqlSurface, name) }
+        .flatMap { case (name, fn) =>
+          val before = listing
+          val failure =
+            try { fn(s, sf("0.001")).count(); None }
+            catch { case e: Throwable => Some(s"$name: ${e.getMessage.take(120)}") }
+          val after = listing
+          failure.orElse(
+            if (name == sqlSurface || after == before) None
+            else Some(s"$name changed the function registry: " +
+              s"+${after.diff(before).mkString(",")} -${before.diff(after).mkString(",")}"))
+        }
+    } finally previous match {
+      case Some(p) => SparkSession.setActiveSession(p)
+      case None => SparkSession.clearActiveSession()
     }
     assert(failures.isEmpty, failures.mkString("\n"))
   }

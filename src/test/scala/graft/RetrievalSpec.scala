@@ -101,7 +101,6 @@ class RetrievalSpec extends SparkSuite {
   }
 
   test("hardNegatives never returns the anchor's own label and caps the batch") {
-    graft.plans.VectorExpressions.register(spark)
     val e = Tables.embeddings(spark, sf("0.001"))
       .select(col("vec_id"),
         graft.functions.VectorFunctions.asDoubleVec(col("embedding")).as("emb"),

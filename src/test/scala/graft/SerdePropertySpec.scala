@@ -82,14 +82,14 @@ class SerdePropertySpec extends SparkSuite {
   }
 
   test("property: chunk_words covers every word exactly per the stride") {
-    import org.apache.spark.sql.functions.{col, call_function, lit}
-    graft.plans.TextExpressions.register(spark)
+    import org.apache.spark.sql.functions.col
+    import graft.functions.TextFunctions.chunkWords
     for (seed <- 1L to 5L) {
       val docs = sampleDocs(seed, 16).zipWithIndex
         .map { case (t, i) => (i.toLong, t) }
       val chunks = docs.toDF("doc_id", "text")
         .select(col("doc_id"),
-          call_function("chunk_words", col("text"), lit(7), lit(4)).as("cs"))
+          chunkWords(col("text"), 7, 4).as("cs"))
         .collect().map(r => r.getLong(0) -> r.getSeq[String](1)).toMap
       for ((id, text) <- docs) {
         val words = text.split(" ", -1)

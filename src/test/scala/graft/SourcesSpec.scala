@@ -150,7 +150,6 @@ class SourcesSpec extends SparkSuite {
     import scala.jdk.CollectionConverters._
     import graft.operators.Similarity
     import graft.functions.VectorFunctions.asDoubleVec
-    graft.plans.VectorExpressions.register(spark)
     val dir = Files.createTempDirectory("graft_sdck_src")
     val ck = Files.createTempDirectory("graft_sdck_ck")
     val (corpusT, indexT, stateT) =
@@ -161,10 +160,9 @@ class SourcesSpec extends SparkSuite {
         .select(col("vec_id"), asDoubleVec(col("embedding")).as("emb"))
       val model = Similarity.kMeans(e, "vec_id", "emb", k = 4, iters = 2)
         .select(col("cell"), col("centroid_vec"))
-      val matrix = typedlit(
-        model.orderBy(col("cell")).collect().map(_.getSeq[Double](1)).toSeq)
+      val matrix = model.orderBy(col("cell")).collect().map(_.getSeq[Double](1).toArray)
       val assigned = e.select(col("vec_id"), col("emb"),
-        call_function("nearest_cell", col("emb"), matrix).as("cell"))
+        graft.functions.VectorFunctions.nearestCell(col("emb"), matrix).as("cell"))
       val dropped = Similarity.semDedupDropped(assigned, "vec_id", "emb",
           threshold = 0.4, guardCellSize = 1L << 30,
           guardBits = 6, guardTables = 8, guardSeed = 4000)

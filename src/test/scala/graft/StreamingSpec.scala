@@ -6,6 +6,7 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
+import graft.functions.VectorFunctions
 import graft.streaming.{FrameEvent, FrameMessages, ReorderBuffer, SauronPipeline}
 
 /** File-backed chunked-arrival plumbing shared by the kill-and-resume
@@ -1181,7 +1182,6 @@ class StreamingSpec extends SparkSuite {
     import graft.operators.Similarity
     import graft.functions.VectorFunctions.asDoubleVec
     implicit val sqlCtx = spark.sqlContext
-    graft.plans.VectorExpressions.register(spark)
     val (corpusT, indexT, stateT) =
       ("graft_semdedup_corpus", "graft_semdedup_index", "graft_semdedup_state")
     try {
@@ -1191,10 +1191,9 @@ class StreamingSpec extends SparkSuite {
       val model = Similarity.kMeans(e, "vec_id", "emb", k = 4, iters = 2)
         .select(col("cell"), col("centroid_vec"))
       // batch ground truth under the SAME fixed quantizer
-      val matrix = typedlit(
-        model.orderBy(col("cell")).collect().map(_.getSeq[Double](1)).toSeq)
+      val matrix = model.orderBy(col("cell")).collect().map(_.getSeq[Double](1).toArray)
       val assigned = e.select(col("vec_id"), col("emb"),
-        call_function("nearest_cell", col("emb"), matrix).as("cell"))
+        VectorFunctions.nearestCell(col("emb"), matrix).as("cell"))
       val dropped = Similarity.semDedupDropped(assigned, "vec_id", "emb",
           threshold = 0.4, guardCellSize = 1L << 30,
           guardBits = 6, guardTables = 8, guardSeed = 4000)
@@ -1245,7 +1244,6 @@ class StreamingSpec extends SparkSuite {
     import graft.operators.Similarity
     import graft.functions.VectorFunctions.asDoubleVec
     implicit val sqlCtx = spark.sqlContext
-    graft.plans.VectorExpressions.register(spark)
     val (indexT, stateT) = ("graft_ivf_index", "graft_ivf_state")
     try {
       Seq(indexT, stateT).foreach(Catalog.dropTable(spark, _))
@@ -1302,7 +1300,6 @@ class StreamingSpec extends SparkSuite {
     // corrupt ranks — the batch-id guard makes redelivery exactly-once
     import graft.operators.Similarity
     import graft.functions.VectorFunctions.asDoubleVec
-    graft.plans.VectorExpressions.register(spark)
     val (indexT, stateT) = ("graft_ivfreplay_index", "graft_ivfreplay_state")
     try {
       Seq(indexT, stateT).foreach(Catalog.dropTable(spark, _))
@@ -1334,7 +1331,6 @@ class StreamingSpec extends SparkSuite {
     import graft.operators.Similarity
     import graft.functions.VectorFunctions.asDoubleVec
     implicit val sqlCtx = spark.sqlContext
-    graft.plans.VectorExpressions.register(spark)
     val (indexT, stateT) = ("graft_ivfpq_index", "graft_ivfpq_state")
     try {
       Seq(indexT, stateT).foreach(Catalog.dropTable(spark, _))
@@ -1762,7 +1758,6 @@ class StreamingSpec extends SparkSuite {
     // operator)
     import graft.operators.Similarity
     import graft.functions.VectorFunctions.asDoubleVec
-    graft.plans.VectorExpressions.register(spark)
     val (corpusT, indexT, stateT) =
       ("graft_sdreplay_corpus", "graft_sdreplay_index", "graft_sdreplay_state")
     try {
@@ -1818,13 +1813,12 @@ class StreamingSpec extends SparkSuite {
     // a crawl stream LSH-bucket-joins a static index of the existing
     // corpus — stream-static equi-join on (table, bucket), exact rescore
     implicit val sqlCtx = spark.sqlContext
-    graft.plans.VectorExpressions.register(spark)
     import graft.functions.VectorFunctions.{cosineWithNorms, fastNorm}
     val vA = Seq.fill(8)(0.5)
     val vB = Seq.fill(4)(1.0) ++ Seq.fill(4)(-1.0)
     def indexOf(df: org.apache.spark.sql.DataFrame) = df
       .withColumn("nrm", fastNorm(col("emb")))
-      .withColumn("bks", call_function("lsh_buckets", col("emb"), lit(6), lit(4), lit(1000)))
+      .withColumn("bks", VectorFunctions.lshBuckets(col("emb"), 6, 4, 1000))
       .select(col("id"), col("emb"), col("nrm"), posexplode(col("bks")).as(Seq("tbl", "bucket")))
     val index = indexOf(Seq((1L, vA), (2L, vB)).toDF("id", "emb"))
     val input = MemoryStream[(Long, Seq[Double])]

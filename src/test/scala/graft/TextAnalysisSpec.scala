@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 
 import graft.operators.TextAnalysis
+import graft.functions.TextFunctions.{blocklistScan, nfcNormalize}
 
 class TextAnalysisSpec extends SparkSuite {
 
@@ -46,7 +47,7 @@ class TextAnalysisSpec extends SparkSuite {
   test("blocklistScan: one-pass trie scrub, leftmost-longest, boundary-exact") {
     def scan(text: String, pats: Seq[String]) = {
       val df = Seq((1L, text)).toDF("id", "text")
-      val sc = TextAnalysis.blocklistScan(df, col("text"), pats, "[X]")
+      val sc = blocklistScan(col("text"), pats, "[X]")
       val r = df.select(sc.getField("n_hits"), sc.getField("redacted")).head
       (r.getInt(0), r.getString(1))
     }
@@ -480,7 +481,6 @@ class TextAnalysisSpec extends SparkSuite {
 
   test("nfc_normalize composes decomposed sequences; ASCII is identity") {
     import spark.implicits._
-    graft.plans.TextExpressions.register(spark)
     val cases = Seq(
       "é" -> "é", // e + COMBINING ACUTE -> é
       "À" -> "À", // A + COMBINING GRAVE -> À
@@ -488,7 +488,7 @@ class TextAnalysisSpec extends SparkSuite {
       "plain ascii" -> "plain ascii",
       "" -> "")
     val got = cases.map(_._1).toDF("s")
-      .select(call_function("nfc_normalize", col("s"))).as[String].collect()
+      .select(nfcNormalize(col("s"))).as[String].collect()
     cases.zip(got).foreach { case ((in, want), out) =>
       assert(out == want,
         s"nfc(${in.map(c => f"\\u${c.toInt}%04x").mkString}) mismatch")
@@ -502,7 +502,7 @@ class TextAnalysisSpec extends SparkSuite {
     }
     // null propagates
     val n = Seq(Option.empty[String]).toDF("s")
-      .select(call_function("nfc_normalize", col("s"))).collect().head
+      .select(nfcNormalize(col("s"))).collect().head
     assert(n.isNullAt(0))
   }
 

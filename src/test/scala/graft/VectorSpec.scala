@@ -4,7 +4,7 @@ import org.apache.spark.sql.functions._
 
 import graft.functions.VectorFunctions._
 import graft.operators.Similarity
-import graft.plans.VectorExpressions
+import graft.plans.SimplifySqrtThreshold
 
 /** Native codegen vector expressions vs the declarative HOF forms:
   * bit-identical (same fold order) — this is what guarantees DuckDB
@@ -12,7 +12,6 @@ import graft.plans.VectorExpressions
 class VectorSpec extends SparkSuite {
 
   private lazy val emb = {
-    VectorExpressions.register(spark)
     Tables.embeddings(spark, sf("0.001"))
       .select(col("vec_id"), asDoubleVec(col("embedding")).as("emb"))
   }
@@ -82,13 +81,14 @@ class VectorSpec extends SparkSuite {
 
   test("SimplifySqrtThreshold removes the sqrt from similarity predicates") {
     import org.apache.spark.sql.functions.{col => c, lit, sqrt => sqrtF}
-    graft.plans.VectorExpressions.register(spark)
     val e = Tables.embeddings(spark, sf("0.001"))
       .select(c("vec_id"), asDoubleVec(c("embedding")).as("emb"))
     val t = e.select(c("vec_id").as("t_id"), c("emb").as("t_emb")).limit(3)
     val joined = e.join(org.apache.spark.sql.functions.broadcast(t),
       sqrtF(fastSquaredL2(c("emb"), c("t_emb"))) <= lit(1.2))
-    val optimized = joined.queryExecution.optimizedPlan.toString
+    // the rule is injected only by GraftExtensions (SQL users); the
+    // plain test session does not run it, so apply it here
+    val optimized = SimplifySqrtThreshold(joined.queryExecution.optimizedPlan).toString
     assert(!optimized.toLowerCase.contains("sqrt"),
       s"sqrt should be strength-reduced away:\n$optimized")
     assert(optimized.contains("1.44"), "squared tolerance expected in the plan")
@@ -97,6 +97,24 @@ class VectorSpec extends SparkSuite {
     val direct = e.join(org.apache.spark.sql.functions.broadcast(t),
       fastSquaredL2(c("emb"), c("t_emb")) <= lit(1.2 * 1.2)).count()
     assert(viaRule == direct)
+  }
+
+  test("thresholdMatch compares squared distances and rejects a negative tolerance") {
+    import org.apache.spark.sql.functions.{col => c}
+    val sp = spark
+    import sp.implicits._
+    val probes = Seq((1L, Seq(0.0, 0.0)), (2L, Seq(10.0, 10.0))).toDF("p_id", "p_vec")
+    val targets = Seq((7L, Seq(3.0, 4.0), "seven")).toDF("t_id", "t_vec", "label")
+    def matched(tol: Double) = Similarity.thresholdMatch(probes, "p_id", "p_vec",
+        targets, "t_id", "t_vec", "label", tol)
+    // distance exactly 5: inside at tolerance 5, outside just below it
+    val at5 = matched(5.0)
+    assert(at5.orderBy(c("p_id")).collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2)))
+      .toSeq == Seq((1L, "seven", 1L), (2L, null, 0L)))
+    assert(!at5.queryExecution.optimizedPlan.toString.toLowerCase.contains("sqrt"))
+    assert(matched(4.999).filter(c("n_matches") > 0).count() == 0)
+    val e = intercept[IllegalArgumentException](matched(-1.0))
+    assert(e.getMessage.contains("tolerance"))
   }
 
   test("IVF top-k recall vs exact brute force") {
@@ -396,10 +414,8 @@ class VectorSpec extends SparkSuite {
     // the point of the guard: candidate pairs in the hot cell are
     // bounded by LSH bucket sizes, far below the exhaustive square
     def pairCount(guardCellSize: Long): Long = {
-      val matrix = typedlit(Seq(vec(0), vec(400))) // any 2-cell assignment
-      graft.plans.VectorExpressions.register(spark)
-      val assigned = e.select(col("vec_id"), col("v"),
-        call_function("nearest_cell", col("v"), matrix).as("cell"))
+      val matrix = Array(vec(0), vec(400)).map(_.toArray) // any 2-cell assignment
+      val assigned = e.select(col("vec_id"), col("v"), nearestCell(col("v"), matrix).as("cell"))
       val keyed = Similarity.semDedupKeyed(assigned, "vec_id", "v",
         guardCellSize, guardBits = 6, guardTables = 8, guardSeed = 4000)
       val a = keyed.select(col("cell"), col("tbl"), col("bucket"), col("vec_id").as("a_id"))
