@@ -1,29 +1,40 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import java.nio.file.{Files, Paths}
 
-/** Perf-iteration utility: print the formatted physical plan (and time
-  * the execution) of one registered query.
+import scala.util.control.NonFatal
+
+import org.apache.spark.sql.execution.FormattedMode
+
+/** Plan-evidence capture: writes the `explain("formatted")` physical
+  * plan of each registered query SPARK_GRAFT_ONLY names (every query
+  * when unset) at SPARK_GRAFT_SF_DIR into
+  * SPARK_GRAFT_PLAN_DIR/<query>_<SPARK_GRAFT_PLAN_SUFFIX>.txt — the
+  * layout of plans/rNN/<query>_{before,after}.txt, one JVM for the
+  * whole list. Timings and job counts come from `graft.Bench`.
   *
-  * Usage: runMain graft.Explain <queryName> [sfDir]
+  * Usage: SPARK_GRAFT_ONLY=q212_hits,q222_link_prediction \
+  *        SPARK_GRAFT_PLAN_DIR=plans/r10 SPARK_GRAFT_PLAN_SUFFIX=after \
+  *        runMain graft.Explain
   */
 object Explain {
   def main(args: Array[String]): Unit = {
-    val name = args(0)
-    val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val df = SparkEntry.queries(name)(spark, sfDir)
-    df.explain("formatted")
-    val t0 = System.nanoTime()
-    val n = df.count()
-    println(f"[explain] $name: $n rows in ${(System.nanoTime() - t0) / 1e9}%.2f s")
+    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val outDir = sys.env.getOrElse("SPARK_GRAFT_PLAN_DIR", "target/plans")
+    val suffix = sys.env.getOrElse("SPARK_GRAFT_PLAN_SUFFIX", "after")
+    val queries = Bench.bind(Bench.only(), sfDir)
+    val spark = Bench.session()
+    Files.createDirectories(Paths.get(outDir))
+    queries.foreach { case (name, fn) =>
+      try {
+        val plan = fn(spark).queryExecution.explainString(FormattedMode)
+        val file = Paths.get(outDir, s"${name}_$suffix.txt")
+        Files.write(file, plan.getBytes("UTF-8"))
+        println(s"[explain] wrote $file")
+      } catch {
+        case NonFatal(e) => System.err.println(s"[explain] $name failed: ${e.getMessage}")
+      }
+    }
     spark.stop()
   }
 }

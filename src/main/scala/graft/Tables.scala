@@ -55,6 +55,22 @@ object Tables {
   def documents(s: SparkSession, d: String): DataFrame = load(s, d, "documents")
   def embeddings(s: SparkSession, d: String): DataFrame = load(s, d, "embeddings")
 
+  /** The directory this JVM writes the files a query makes itself
+    * (q237's rollup summary, q78's binaryFile fixtures): created on
+    * first use, removed when the JVM exits. A path under
+    * `java.io.tmpdir` itself is shared by every JVM on the host, so
+    * two concurrent runs would overwrite or delete each other's files. */
+  lazy val scratchDir: java.nio.file.Path = {
+    import java.nio.file.Files
+    val dir = Files.createTempDirectory("graft-scratch")
+    sys.addShutdownHook {
+      try Files.walk(dir).sorted(java.util.Comparator.reverseOrder())
+        .forEach(p => Files.deleteIfExists(p))
+      catch { case scala.util.control.NonFatal(_) => () }
+    }
+    dir
+  }
+
   /** Order-independent, engine-exact sum of a money-scale double.
     * Scale 6 because every money input has exactly 2 decimals, so any
     * product of up to three of them has <= 6 — the cast therefore lands

@@ -1,27 +1,15 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    new java.io.File(outDir).mkdirs()
     // SPARK_GRAFT_ONLY=q61_kmeans,q72_... restricts the dump to named
     // queries — a local iteration aid; the driver runs the full set
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).toSet).getOrElse(Set.empty[String])
-    val selected =
-      if (only.isEmpty) SparkEntry.queries
-      else SparkEntry.queries.filter { case (n, _) => only(n) }
+    val selected = Bench.bind(Bench.only(), sfDir)
+    val spark = Bench.session()
+    new java.io.File(outDir).mkdirs()
     // dump queries from a small thread pool: Spark schedules concurrent
     // jobs from multiple submitter threads (FIFO across them), so the
     // many sub-second queries overlap instead of serializing their
@@ -30,10 +18,10 @@ object Verify {
     // single query is starved of cores.
     val pool = java.util.concurrent.Executors.newFixedThreadPool(
       sys.env.getOrElse("SPARK_GRAFT_VERIFY_THREADS", "4").toInt)
-    val tasks = selected.toSeq.map { case (name, fn) =>
+    val tasks = selected.map { case (name, fn) =>
       pool.submit(new Runnable {
         override def run(): Unit =
-          try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+          try fn(spark).coalesce(1).write.mode("overwrite")
             .parquet(s"$outDir/$name")
           catch { case e: Throwable =>
             System.err.println(s"[verify] $name failed: ${e.getMessage}")

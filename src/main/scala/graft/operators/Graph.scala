@@ -265,7 +265,8 @@ object Graph {
     * row per node) are the only per-pass shuffle.
     *
     * Output: (role 'hub'|'authority', id, score) — every source node
-    * has a hub score, every target node an authority score.
+    * has a hub score, every target node an authority score; the score
+    * is the exact 12-decimal value rounded to `roundTo` as a decimal.
     *
     * Execution routes on edge count, the [[Dedup.connectedComponents]]
     * union-find discipline: at or below `driverEdgeLimit` (default 2²³
@@ -319,10 +320,14 @@ object Graph {
         hubs = hRaw
           .select(col("s"), round(col("h_raw") / lit(hz), 12).as("h"))
       }
-      hubs.select(lit("hub").as("role"), col("s").as("id"),
-          round(col("h"), roundTo).as("score"))
+      // the output rounds the exact 12-decimal grid value, never the
+      // binary double: at a .5e-roundTo tie engines round a double
+      // differently, an exact decimal the same way
+      def score(c: Column) =
+        round(c.cast(DecimalType(38, 12)), roundTo).cast("double").as("score")
+      hubs.select(lit("hub").as("role"), col("s").as("id"), score(col("h")))
         .unionByName(auths.select(lit("authority").as("role"),
-          col("t").as("id"), round(col("a"), roundTo).as("score")))
+          col("t").as("id"), score(col("a"))))
     }
   }
 
@@ -387,9 +392,12 @@ object Graph {
       StructField("role", StringType, nullable = false),
       StructField("id", idType, nullable = true),
       StructField("score", DoubleType, nullable = true)))
+    // the distributed output's cast(DECIMAL(38,12)) then round(·, roundTo)
+    def score(x: Double): Double = JBD.valueOf(x).setScale(12, RoundingMode.HALF_UP)
+      .setScale(roundTo, RoundingMode.HALF_UP).doubleValue
     val rows: Seq[Row] =
-      hubs.iterator.map { case (k, v) => Row("hub", k, rnd(v, roundTo)) }.toSeq ++
-      auths.iterator.map { case (k, v) => Row("authority", k, rnd(v, roundTo)) }.toSeq
+      hubs.iterator.map { case (k, v) => Row("hub", k, score(v)) }.toSeq ++
+      auths.iterator.map { case (k, v) => Row("authority", k, score(v)) }.toSeq
     spark.createDataFrame(rows.asJava, schema)
   }
 

@@ -245,8 +245,8 @@ object MaintenanceQueries {
         import graft.operators.Rollups
         val li = Tables.lineitem(s, d)
         val tag = d.replaceAll("[^A-Za-z0-9]", "_")
-        val path = System.getProperty("java.io.tmpdir") +
-          s"/graft_rollup_lineitem_$tag"
+        val path =
+          Tables.scratchDir.resolve(s"graft_rollup_lineitem_$tag").toString
         Rollups.materialize(li, s"lineitem_shipgrain_$tag", path,
           Rollups.RollupDef(
             groupCols = Seq("l_returnflag", "l_linestatus", "l_shipdate"),

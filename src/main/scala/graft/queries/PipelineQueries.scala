@@ -27,14 +27,15 @@ object PipelineQueries {
 
   /** Materialize the first `n` documents as real files on local disk
     * (one "{source}_{doc_id}.bin" per doc, UTF-8 payload), so the
-    * binaryFile source reads genuine files. Deterministic per sfDir;
-    * rebuilt from scratch on every call (delete + rewrite) so stale
-    * fixtures can never leak between testdata generations. */
+    * binaryFile source reads genuine files, under this JVM's
+    * [[Tables.scratchDir]]. Deterministic per sfDir; rebuilt from
+    * scratch on every call (delete + rewrite) so stale fixtures can
+    * never leak between testdata generations. */
   private def binaryFixtureDir(s: SparkSession, d: String, n: Int): String = {
-    import java.nio.file.{Files, Paths}
+    import java.nio.file.Files
     val key = java.security.MessageDigest.getInstance("MD5")
       .digest(d.getBytes("UTF-8")).map("%02x".format(_)).mkString
-    val dir = Paths.get(System.getProperty("java.io.tmpdir"), s"graft_binfix_$key")
+    val dir = Tables.scratchDir.resolve(s"graft_binfix_$key")
     if (Files.exists(dir)) {
       Files.walk(dir).sorted(java.util.Comparator.reverseOrder())
         .forEach(p => Files.delete(p))

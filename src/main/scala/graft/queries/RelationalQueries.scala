@@ -960,9 +960,13 @@ object RelationalQueries {
         h0 AS MATERIALIZED (
           SELECT s, round(1.0 / (SELECT COUNT(DISTINCT s) FROM e), 12) AS h
           FROM (SELECT DISTINCT s FROM e))$its
-        SELECT 'hub' AS role, s AS id, round(h, 9) AS score FROM h3
+        SELECT 'hub' AS role, s AS id,
+               CAST(round(CAST(h AS DECIMAL(38,12)), 9) AS DOUBLE) AS score
+        FROM h3
         UNION ALL
-        SELECT 'authority' AS role, t AS id, round(a, 9) AS score FROM a3
+        SELECT 'authority' AS role, t AS id,
+               CAST(round(CAST(a AS DECIMAL(38,12)), 9) AS DOUBLE) AS score
+        FROM a3
         ORDER BY role, id"""
       },
       "HITS hubs & authorities over the directed buyer->supplier " +

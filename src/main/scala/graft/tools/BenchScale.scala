@@ -383,68 +383,37 @@ object BenchScale {
   def main(args: Array[String]): Unit = {
     val base = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val mult = sys.env.getOrElse("SPARK_GRAFT_SCALE_MULT", "10").toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    // SPARK_GRAFT_ONLY=q171_mutual_knn,q93_... re-measures a subset
+    // (merge into the capture file by hand) — rerunning the full list to
+    // chase one slope costs ~30 min at mult=100. A subset may name ANY
+    // registered query (the forced-distributed graph captures need
+    // guard-excluded queries at 100×); only the default full run sticks
+    // to the curated lists
+    val list = graft.Bench.only(if (mult >= 100) Headline100 else Headline)
     val out = s"target/scaled_x$mult"
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.driver.memory", "16g")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Bench.session()
     inflate(spark, base, out, mult)
     spark.range(1000).selectExpr("sum(id)").collect()
-    // noop-sink write, not count(): count() join-eliminates and
-    // column-prunes subtrees (see Bench's scaladoc), which at 100×
-    // silently measured nothing for the apply-shaped queries
-    // per-query warm-up + min-of-2 timed runs (the noise-floor
-    // methodology): single cold runs at mult=100 wobbled up to 2.5×
-    // between captures, and even warmed single runs swung with GC and
-    // page-cache state over the 1.6 GB inflated corpus — the MINIMUM of
-    // repeated trials is the standard estimator for the work actually
-    // required, which is what a scale SLOPE is supposed to measure
-    def time(name: String, dir: String): Double = {
-      def run(): Unit = graft.SparkEntry.queries(name)(spark, dir)
-        .write.mode("overwrite").format("noop").save()
-      try { run() } catch { case _: Throwable => () }
-      def trial(): Double = {
-        // timed trials must compute every relation from parquet — drop
-        // any driver-memoized audit baseline the warmup populated
-        graft.queries.AuditCache.clear()
-        val t0 = System.nanoTime(); run(); (System.nanoTime() - t0) / 1e9
-      }
-      try { math.min(trial(), trial()) }
-      catch { case e: Throwable =>
-        System.err.println(s"[benchscale] $name @ $dir failed: ${e.getMessage}"); -1.0 }
-    }
+    // per-query warm-up + min-of-2 timed noop-sink runs (the noise-floor
+    // methodology, swept like Bench): single cold runs at mult=100
+    // wobbled up to 2.5× between captures, and even warmed single runs
+    // swung with GC and page-cache state over the 1.6 GB inflated
+    // corpus — the MINIMUM of repeated trials is the standard estimator
+    // for the work actually required, which is what a scale SLOPE is
+    // supposed to measure
+    def time(dir: String): Seq[Double] =
+      graft.Bench.measure(spark, graft.Bench.bind(list, dir), trials = 2).map(_.seconds)
     // phase-separated timing: ALL base measurements first, then all
     // scaled. Interleaving let each scaled run (heap garbage + page
     // cache churn from the inflated corpus) pollute the NEXT query's
     // base time — measured up to 8× base inflation at mult=100, which
     // silently flatters every ratio.
-    // SPARK_GRAFT_SCALE_ONLY=q171_mutual_knn,q93_... re-measures a
-    // subset (merge into the capture file by hand) — rerunning the full
-    // list to chase one slope costs ~30 min at mult=100
-    val only = sys.env.get("SPARK_GRAFT_SCALE_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    val all = if (mult >= 100) Headline100 else Headline
-    // an explicit subset may name ANY registered query (the forced-
-    // distributed graph captures need guard-excluded queries at 100×);
-    // only the default full run sticks to the curated lists
-    val list = only
-      .map(o => graft.SparkEntry.queries.keys.toSeq.sorted.filter(o))
-      .getOrElse(all)
-    val bases = list.map(q => q -> time(q, base))
+    val bases = time(base)
     spark.range(1000).selectExpr("sum(id)").collect()
-    val scaleds = list.map(q => q -> time(q, out)).toMap
-    val rows = bases.map { case (q, b) =>
-      val s = scaleds(q)
+    val scaleds = time(out)
+    val qs = list.lazyZip(bases).lazyZip(scaleds).map { (q, b, s) =>
       val ratio = if (b > 0 && s > 0) s / b else -1.0
-      q -> (b, s, ratio)
-    }
-    val qs = rows.map { case (q, (b, s, r)) =>
-      f""""$q":{"base":$b%.3f,"scaled":$s%.3f,"ratio":$r%.2f}"""
+      f""""$q":{"base":$b%.3f,"scaled":$s%.3f,"ratio":$ratio%.2f}"""
     }.mkString("{", ",", "}")
     println(s"""{"metric":"scale_slope","mult":$mult,"base_sf":"$base","queries":$qs}""")
     spark.stop()

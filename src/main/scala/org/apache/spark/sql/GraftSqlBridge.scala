@@ -12,7 +12,8 @@ import org.apache.spark.sql.execution.{LogicalRDD, SQLExecution}
   * expression it wraps —
   * the standard extension-library pattern for plugging a custom
   * LogicalPlan or Expression into a session without the function
-  * registry. [[localCheckpointCounted]] is the one other private use. */
+  * registry. [[localCheckpointCounted]] and [[waitForListeners]] are
+  * the other private uses. */
 object GraftSqlBridge {
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
@@ -40,4 +41,10 @@ object GraftSqlBridge {
       (ofRows(ds.sparkSession, LogicalRDD.fromDataset(rdd, ds, isStreaming = false)), counts)
     }
   }
+
+  /** Block until every event posted so far has reached every listener
+    * (`LiveListenerBus.waitUntilEmpty`, `private[spark]`), so a count a
+    * listener keeps is complete when this returns. */
+  def waitForListeners(spark: SparkSession): Unit =
+    spark.sparkContext.listenerBus.waitUntilEmpty()
 }

@@ -189,4 +189,16 @@ class RollupSpec extends SparkSuite {
       Seq(deltaT, stateT).foreach(Catalog.dropTable(spark, _))
     }
   } }
+
+  test("q237 writes its summary under this JVM's own scratch directory") {
+    val dir = Tables.scratchDir
+    assert(Tables.scratchDir eq dir, "one directory per JVM")
+    assert(dir.getParent != null && java.nio.file.Files.isDirectory(dir))
+    assert(dir.toRealPath() !=
+      java.nio.file.Paths.get(System.getProperty("java.io.tmpdir")).toRealPath())
+    val q = SparkEntry.queries("q237_rollup_route")(spark, sf("0.001"))
+    assert(scans(q, dir.resolve("graft_rollup_lineitem_").toString),
+      "the routed summary lies inside the scratch directory")
+  }
 }
+
