@@ -80,7 +80,8 @@ object Skew {
     * `name` and its grand total `_tot_name`, both of `sum`'s result
     * type: a `_pid`-partitioned running window plus the partition's
     * offset from the collected per-partition totals (exact addition is
-    * associative). `_n` and `_tot_name` are literals. */
+    * associative). `_n` and `_tot_name` are literals. To rank one
+    * relation on several orders, [[rangedRanks]] does it in ONE pass. */
   def rangedRank(df: DataFrame, order: Seq[Column],
       prefixSums: Seq[(String, Column)] = Nil): DataFrame = {
     import org.apache.spark.sql.expressions.Window
@@ -127,6 +128,37 @@ object Skew {
           .withColumn(s"_tot_$nm", lit(cum.last).cast(dt))
           .drop(s"_l_$nm")
     }.drop("_pid")
+  }
+
+  /** Several global rankings of one relation from ONE [[rangedRank]]
+    * pass, in place of one pinned pass per order. Each row is copied
+    * once per order, tagged `_tag` = 0..k-1, and the copies are ranked
+    * together on `_tag` followed by every order's columns, each wrapped
+    * as `when(_tag === i, c)` (direction and null ordering kept): within
+    * tag i the other orders' columns are a constant null, so tag i sorts
+    * on order i alone, and since every tag holds exactly n rows, tag i
+    * holds the global ranks i·n+1 … (i+1)·n. A groupBy on `key` (which
+    * must be unique per row) folds the copies back into one row. Each
+    * `orders(i)` must be a UNIQUE total order, as for [[rangedRank]].
+    * Output: the input columns, `_rank_0` … `_rank_<k-1>` (1-based, each
+    * exactly row_number over its own unpartitioned window) and `_n`. */
+  def rangedRanks(df: DataFrame, key: String,
+      orders: Seq[Seq[Column]]): DataFrame = {
+    val k = orders.size
+    require(k > 0, "rangedRanks: no order")
+    val tag = col("_tag")
+    val order = tag +: orders.zipWithIndex.flatMap { case (o, i) =>
+      o.map(org.apache.spark.sql.GraftSqlBridge.mapSortKey(_, when(tag === i, _)))
+    }
+    val ranked = rangedRank(
+      df.withColumn("_tag", explode(sequence(lit(0), lit(k - 1)))), order)
+    // every tag holds the same n rows, so `_n` counts k·n exactly
+    val n = expr(s"_n div $k")
+    val ranks = (0 until k).map(i => s"_rank_$i")
+    val aggs = df.columns.filter(_ != key).map(c => first(col(c)).as(c)) ++
+      ranks.zipWithIndex.map { case (r, i) => max(when(tag === i, col("_rank") - n * i)).as(r) }
+    ranked.groupBy(col(key), n.as("_n")).agg(aggs.head, aggs.tail: _*)
+      .select((df.columns ++ ranks :+ "_n").map(col): _*)
   }
 
   /** `ntile(k)` reconstructed from a [[rangedRank]] global rank and

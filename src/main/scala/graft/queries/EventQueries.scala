@@ -2711,24 +2711,20 @@ object EventQueries {
             sum(round(col("value"), 2).cast(DecimalType(27, 6)))
               .cast("double").as("monetary"))
         // quintile scores; recency INVERTS (smaller = better = 5).
-        // Each ntile runs as a ranged rank (Skew.rangedRank) instead of
-        // an unpartitioned window — the user spine GROWS with the
-        // corpus, and the single-partition WindowExec was the tier's
-        // at-scale serialization point. Chained passes, each one pin of
-        // the previous output sorted on its own total order; ntile
-        // arithmetic is value-identical (unique tiebreak id).
+        // The three ntiles come from ranged ranks (Skew.rangedRanks)
+        // instead of unpartitioned windows — the user spine GROWS with
+        // the corpus, and the single-partition WindowExec was the tier's
+        // at-scale serialization point. One pin for all three orders:
+        // each user is ranked once per order in the same sorted pin;
+        // ntile arithmetic is value-identical (unique tiebreak id).
         val S = graft.operators.Skew
-        def quintile(df: org.apache.spark.sql.DataFrame, name: String,
-            order: Seq[Column]): org.apache.spark.sql.DataFrame =
-          S.rangedRank(df, order)
-            .withColumn(name, S.ntileFromRank(col("_rank"), col("_n"), 5)
-              .cast("int"))
-            .drop("_rank", "_n")
-        val scored3 = quintile(quintile(quintile(rfm,
-          "r", Seq(col("recency_days").desc, col("user_id"))),
-          "f", Seq(col("frequency"), col("user_id"))),
-          "m", Seq(col("monetary"), col("user_id")))
-        scored3
+        S.rangedRanks(rfm, "user_id", Seq(
+            Seq(col("recency_days").desc, col("user_id")),
+            Seq(col("frequency"), col("user_id")),
+            Seq(col("monetary"), col("user_id"))))
+          .withColumn("r", S.ntileFromRank(col("_rank_0"), col("_n"), 5))
+          .withColumn("f", S.ntileFromRank(col("_rank_1"), col("_n"), 5))
+          .withColumn("m", S.ntileFromRank(col("_rank_2"), col("_n"), 5))
           .withColumn("segment",
             when(col("r") >= 4 && col("f") >= 4, "champion")
               .when(col("r") >= 4, "recent")
@@ -2775,10 +2771,11 @@ object EventQueries {
         "purchase aggregates in one pass (reference date is a " +
         "broadcast scalar), three ntile windows over TOTAL orders " +
         "(metric, user_id — identical bucket boundaries on both " +
-        "engines), integer scores, deterministic CASE labels. Each " +
-        "ntile is a ranged rank: one range-partitioned, sorted pin of " +
-        "|users| rows whose per-partition counts turn into rank " +
-        "offsets — no single-partition window over the user spine."),
+        "engines), integer scores, deterministic CASE labels. One pin " +
+        "for all three orders: every user is copied once per order, " +
+        "and one range-partitioned, sorted pin of 3·|users| rows turns " +
+        "its per-partition counts into the three ranks' offsets — no " +
+        "single-partition window over the user spine."),
 
     // ---- q185: new-vs-returning daily split --------------------------------
     "q185_new_returning" -> Q(

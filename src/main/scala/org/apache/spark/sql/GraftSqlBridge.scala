@@ -8,8 +8,8 @@ import org.apache.spark.sql.execution.{LogicalRDD, SQLExecution}
   * the library's custom logical operators (graft.plans.AsOfJoin) can be
   * surfaced as DataFrames, a ready-made Catalyst expression (the
   * pipeline's target-set literal, the native expressions behind the
-  * typed builders in graft.functions) as a Column, and a Column as the
-  * expression it wraps —
+  * typed builders in graft.functions) as a Column, a Column as the
+  * expression it wraps, and a sort order's key ([[mapSortKey]]) —
   * the standard extension-library pattern for plugging a custom
   * LogicalPlan or Expression into a session without the function
   * registry. [[localCheckpointCounted]] and [[waitForListeners]] are
@@ -21,6 +21,14 @@ object GraftSqlBridge {
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)
 
   def expression(c: Column): Expression = classic.ExpressionUtils.expression(c)
+
+  /** `f` applied to what `c` sorts on: a sort order keeps its direction
+    * and null ordering around `f` of its child; any other column is
+    * `f(c)`. */
+  def mapSortKey(c: Column, f: Column => Column): Column = c.node match {
+    case so: internal.SortOrder => new Column(so.copy(child = f(new Column(so.child)).node))
+    case _ => f(c)
+  }
 
   /** `df.localCheckpoint()` (the same RDD checkpoint, storage level
     * and `LogicalRDD`) whose materializing job also counts each pinned

@@ -49,4 +49,11 @@ class BenchSpec extends SparkSuite {
     memoized(spark)
     assert(builds.get === before + 1, "the sweep dropped the memoized value")
   }
+
+  test("measure: q184 runs at most 12 jobs, and its build jobs are among them") {
+    val Seq(r) = Bench.measure(spark, Bench.bind(Seq("q184_rfm_segments"), sf("0.001")))
+    assert(r.seconds >= 0.0 && r.jobs <= 12, r.toString)
+    assert(r.buildJobs >= 1 && r.buildJobs <= r.jobs, r.toString)
+    assert(r.buildSeconds >= 0.0 && r.buildSeconds <= r.seconds, r.toString)
+  }
 }

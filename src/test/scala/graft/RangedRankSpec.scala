@@ -5,8 +5,9 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Pins Skew.rangedRank / ntileFromRank to the unpartitioned-window
-  * semantics they replace (q174/q184/q265 re-keys): global rank,
+/** Pins Skew.rangedRank / rangedRanks / ntileFromRank to the
+  * unpartitioned-window semantics they replace (q174/q184/q265
+  * re-keys): global rank (one order or several in one pass),
   * running decimal prefix sums, and NTile bucketing must be
   * value-identical to row_number()/sum()/ntile() over a single-
   * partition ORDER BY window, for asc and desc orders, with n both
@@ -94,6 +95,57 @@ class RangedRankSpec extends AnyFunSuite {
         val g = rows(got)
         assert(g.length === n, what)
         assert(g === rows(truth), what)
+      }
+    } finally saved.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
+  test("rangedRanks matches three unpartitioned windows under AQE on/off, " +
+      "1-16 shuffle partitions and 0-1501 rows") {
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.BroadcastExchangeLike
+    import org.apache.spark.sql.execution.window.WindowExec
+    val keys = Seq("spark.sql.adaptive.enabled", "spark.sql.shuffle.partitions")
+    val saved = keys.map(k => k -> spark.conf.getOption(k))
+    // asc, desc, and one on the nullable v (nulls last, not asc's default)
+    val orders = Seq(Seq(col("freq"), col("u")), Seq(col("freq").desc, col("u")),
+      Seq(col("v").asc_nulls_last, col("u")))
+    try {
+      for (aqe <- Seq(true, false); parts <- Seq(1, 3, 8, 16);
+           n <- Seq(0L, 2L, 7L, 1501L)) {
+        spark.conf.set(keys(0), aqe.toString)
+        spark.conf.set(keys(1), parts.toString)
+        val what = s"aqe=$aqe partitions=$parts n=$n"
+        val df = relation(n)
+        val ranked = graft.operators.Skew.rangedRanks(df, "u", orders)
+        assert(ranked.columns.toSeq ===
+          df.columns.toSeq ++ Seq("_rank_0", "_rank_1", "_rank_2", "_n"), what)
+        val truth = orders.zipWithIndex.foldLeft(df) { case (d, (o, i)) =>
+          val w = Window.orderBy(o: _*)
+          d.withColumn(s"_rank_$i", row_number().over(w).cast("long"))
+            .withColumn(s"nt$i", ntile(5).over(w))
+        }.withColumn("_n", count(lit(1)).over(Window.partitionBy()))
+        val got = (0 until 3).foldLeft(ranked) { (d, i) =>
+          d.withColumn(s"nt$i", graft.operators.Skew.ntileFromRank(
+            col(s"_rank_$i"), col("_n"), 5))
+        }
+        val cols = (df.columns ++ Seq("_rank_0", "_rank_1", "_rank_2", "_n",
+          "nt0", "nt1", "nt2")).toSeq.map(col)
+        def rows(d: org.apache.spark.sql.DataFrame) =
+          d.select(cols: _*).collect().map(_.toSeq).sortBy(_.head.asInstanceOf[Long])
+            .toSeq
+        val g = rows(got)
+        assert(g.length === n, what)
+        assert(g.map(_.head).distinct.length === n, s"$what: one row per input row")
+        assert(g === rows(truth), what)
+        val plan = ranked.queryExecution.executedPlan
+        val found = new AdaptiveSparkPlanHelper {}.find(plan) {
+          case _: BroadcastExchangeLike | _: WindowExec => true
+          case _ => false
+        }
+        assert(found.isEmpty, s"$what: broadcast or window in the plan:\n$plan")
       }
     } finally saved.foreach {
       case (k, Some(v)) => spark.conf.set(k, v)

@@ -14,7 +14,11 @@ and dividing it out isolates plan changes from machine changes.
 Prints per-query normalized ratios new/old (after dividing each side by
 its calib_sec), flags movers past flag_ratio (default 1.5x either way),
 and writes a JSON artifact next to the newer input
-(<new>.compare.json) with the full map.
+(<new>.compare.json) with the full map. When both inputs carry a
+"counts" map (graft.Bench's BENCH_SELF.json), it also prints the summed
+jobs (and build_jobs, where both sides have them) old -> new and, for
+every shared query whose counts differ, its counts old -> new next to
+its time ratio.
 
 Driver-side tooling only (not a dependency of the Scala library).
 """
@@ -46,6 +50,31 @@ def load(path):
         elif t.get("metric") == "total":
             total, calib = t.get("value"), t.get("calib_sec")
     return {"queries": queries, "value": total, "calib_sec": calib}
+
+
+def job_counts(old, new, shared, ratios):
+    """Per-query and summed jobs/build_jobs old -> new, or None when an
+    input has no "counts" map."""
+    co, cn = old.get("counts"), new.get("counts")
+    if not co or not cn:
+        return None
+    qs = [q for q in shared if q in co and q in cn]
+    keys = [k for k in ("jobs", "build_jobs")
+            if all(k in c[q] for c in (co, cn) for q in qs)]
+    out = {"total": {k: [sum(co[q][k] for q in qs), sum(cn[q][k] for q in qs)]
+                     for k in keys},
+           "queries": {q: {k: [co[q][k], cn[q][k]] for k in keys} for q in qs}}
+    print("\njobs (summed over shared queries): " + ", ".join(
+        f"{k} {a} -> {b}" for k, (a, b) in out["total"].items()))
+    moved = [q for q in qs if any(a != b for a, b in out["queries"][q].values())]
+    for q in moved:
+        r = ratios.get(q)
+        print(f"  {q}: " + ", ".join(f"{k} {a} -> {b}" for k, (a, b)
+                                    in out["queries"][q].items())
+              + (f"  time ratio {r:.2f}x" if r is not None else "  crashed on one side"))
+    if not moved:
+        print("  no query's counts changed")
+    return out
 
 
 def main():
@@ -95,6 +124,9 @@ def main():
                   if r != float("inf") else f"  {q}: crashed on one side")
     else:
         print(f"\nno movers past {flag}x")
+    counts = job_counts(old, new, shared, out["ratios"])
+    if counts is not None:
+        out["counts"] = counts
     art = new_path + ".compare.json"
     with open(art, "w") as f:
         json.dump(out, f, indent=1, sort_keys=True)
