@@ -208,13 +208,18 @@ object Bench {
     // recording a reference workload inside the artifact lets any
     // consumer normalize before comparing rounds.
     // (the % bounds the ANSI long sum: full-range hash values overflow)
+    // The median of five timed runs, after one untimed: a single run
+    // varies by up to a quarter on a shared host.
     val calib = {
       def job(): Unit = spark.range(200000000L)
         .selectExpr("sum(xxhash64(id) % 1000000)").collect()
       job()
-      val t0 = System.nanoTime()
-      job()
-      (System.nanoTime() - t0) / 1e9
+      val times = Seq.fill(5) {
+        val t0 = System.nanoTime()
+        job()
+        (System.nanoTime() - t0) / 1e9
+      }
+      times.sorted.apply(2)
     }
     val results = measure(spark, bind(names, sfDir), warmup)
     results.foreach { r =>

@@ -1,6 +1,12 @@
 package graft
 
+import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.parquet.schema.{LogicalTypeAnnotation, MessageType}
+import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, StructType}
 
@@ -24,11 +30,13 @@ object Tables {
     "orders", "lineitem", "events", "documents", "embeddings")
 
   /** Reads a table with the schema [[schema]] remembers for it, so no
-    * load after the first in a JVM starts Spark's footer-reading job. */
-  def load(spark: SparkSession, dir: String, name: String): DataFrame = {
-    val path = s"$dir/$name.parquet"
-    spark.read.schema(schema(spark, path)).parquet(path)
-  }
+    * load of it starts a Spark job. */
+  def load(spark: SparkSession, dir: String, name: String): DataFrame =
+    read(spark, s"$dir/$name.parquet")
+
+  private def read(spark: SparkSession, path: String,
+      onFooter: MessageType => Unit = _ => ()): DataFrame =
+    spark.read.schema(schema(spark, path, onFooter)).parquet(path)
 
   /** The session confs that change the schema Spark infers from a
     * parquet footer. */
@@ -44,30 +52,75 @@ object Tables {
   private val schemas = scala.collection.concurrent.TrieMap
     .empty[(String, Seq[String]), (Seq[(String, Long, Long)], StructType)]
 
-  /** The schema `spark.read.parquet(path)` infers, inferred once per
-    * path and reading confs and then remembered. The memo keys on the
-    * qualified path and the session's values of [[SchemaConfs]], and is
-    * valid while every file under the path keeps its name, size and
-    * modification time; a rewritten table is inferred again. It holds
-    * no session and no data — every load still scans its files — so,
-    * like a catalog entry and unlike `AuditCache`, `Bench.sweep` leaves
-    * it alone: a timed run recomputes every relation all the same. */
-  private def schema(spark: SparkSession, path: String): StructType = {
-    import org.apache.hadoop.fs.{FileStatus, Path}
+  /** Parquet footers [[footer]] has read on the driver. */
+  private[graft] val footerReads = new java.util.concurrent.atomic.AtomicLong()
+
+  /** The schema `spark.read.parquet(path)` infers, read once per path
+    * and reading confs from one footer on the driver and then
+    * remembered. The memo keys on the qualified path and the session's
+    * values of [[SchemaConfs]], and is valid while every file under the
+    * path keeps its name, size and modification time; a rewritten table
+    * is read again. It holds no session and no data — every load still
+    * scans its files — so, like a catalog entry and unlike `AuditCache`,
+    * `Bench.sweep` leaves it alone: a timed run recomputes every
+    * relation all the same. On a miss, `onFooter` sees the footer's
+    * parquet schema before it is converted, and may set a reading conf.
+    * Where one footer cannot give the answer (see [[footer]]), Spark
+    * infers the schema, which starts a job. */
+  private def schema(spark: SparkSession, path: String,
+      onFooter: MessageType => Unit): StructType = {
     val p = new Path(path)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def files(st: FileStatus): Seq[(String, Long, Long)] =
+    def files(st: FileStatus): Seq[FileStatus] =
       if (st.isDirectory) fs.listStatus(st.getPath).toSeq.sortBy(_.getPath.getName).flatMap(files)
-      else Seq((st.getPath.toString, st.getLen, st.getModificationTime))
+      else Seq(st)
     val root = fs.getFileStatus(p)
-    val key = (root.getPath.toString, SchemaConfs.map(k => spark.conf.getOption(k).getOrElse("")))
-    val fingerprint = files(root)
-    schemas.get(key) match {
-      case Some((fp, s)) if fp == fingerprint => s
-      case _ =>
-        val s = spark.read.parquet(path).schema
-        schemas.put(key, (fingerprint, s))
-        s
+    val listed = files(root)
+    val fingerprint = listed.map(st => (st.getPath.toString, st.getLen, st.getModificationTime))
+    def key = (root.getPath.toString, SchemaConfs.map(k => spark.conf.getOption(k).getOrElse("")))
+    def memo = schemas.get(key).collect { case (fp, s) if fp == fingerprint => s }
+    memo.getOrElse {
+      val s = footer(spark, root, listed) match {
+        case Some(f) =>
+          onFooter(f.getParquetMetadata.getFileMetaData.getSchema)
+          // `onFooter` may have changed the key
+          memo.getOrElse(ParquetFileFormat.readSchemaFromFooter(
+            f, new ParquetToSparkSchemaConverter(spark.sessionState.conf)))
+        case None => spark.read.parquet(path).schema
+      }
+      schemas.put(key, (fingerprint, s))
+      s
+    }
+  }
+
+  /** The footer of the one file Spark's non-merging inference
+    * (`ParquetUtils.inferSchema`) reads for `root`, read on the driver:
+    * of the files Spark lists (no hidden name such as `_SUCCESS` or a
+    * `.crc`), `_common_metadata`, else `_metadata`, else the first data
+    * file in path order. None where one footer cannot give the answer:
+    * under `spark.sql.parquet.mergeSchema`, with files in
+    * subdirectories (`k=v` partitions), or with no data file. */
+  private def footer(spark: SparkSession, root: FileStatus,
+      listed: Seq[FileStatus]): Option[Footer] = {
+    val summaries = Seq("_common_metadata", "_metadata")
+    // InMemoryFileIndex's filter of the names it lists
+    def hidden(n: String) = !summaries.exists(n.startsWith) &&
+      ((n.startsWith("_") && !n.contains("=")) || n.startsWith(".") || n.endsWith("._COPYING_"))
+    val visible = if (!root.isDirectory) Seq(Seq(root.getPath.getName) -> root) else
+      listed.map(st => st.getPath.toString.stripPrefix(s"${root.getPath}/").split('/').toSeq -> st)
+        .filterNot(_._1.exists(hidden))
+    val pick =
+      if (spark.sessionState.conf.isParquetSchemaMergingEnabled || visible.exists(_._1.size > 1)) None
+      else {
+        val top = visible.map(_._2).sortBy(_.getPath.toString)
+        summaries.flatMap(n => top.find(_.getPath.getName == n)).headOption
+          .orElse(top.find(st => !summaries.contains(st.getPath.getName)))
+      }
+    pick.map { st =>
+      footerReads.incrementAndGet()
+      val reader = ParquetFileReader.open(
+        HadoopInputFile.fromStatus(st, spark.sessionState.newHadoopConf()))
+      try new Footer(st.getPath, reader.getFooter) finally reader.close()
     }
   }
 
@@ -85,10 +138,13 @@ object Tables {
     * TIMESTAMP(MICROS) without the UTC flag (which Spark reads as
     * TIMESTAMP_NTZ — cast to the session-UTC timestamp, an identity on
     * the stored micros). Adapt on schema so both generations and both
-    * engines see identical event times. */
+    * engines see identical event times. The legacy conf is set on the
+    * session only when the footer shows a NANOS `ts`: the scan reads it
+    * when the query runs, so it stays set. */
   def events(s: SparkSession, d: String): DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val raw = load(s, d, "events")
+    val raw = read(s, s"$d/events.parquet", m =>
+      if (m.containsField("ts") && isNanos(m.getType(m.getFieldIndex("ts"))))
+        s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true"))
     raw.schema("ts").dataType match {
       case org.apache.spark.sql.types.LongType =>
         raw.withColumn("ts", timestamp_micros(expr("ts div 1000")))
@@ -97,6 +153,15 @@ object Tables {
       case _ => raw
     }
   }
+
+  private def isNanos(t: org.apache.parquet.schema.Type): Boolean =
+    t.isPrimitive && t.asPrimitiveType.getPrimitiveTypeName == PrimitiveTypeName.INT64 &&
+      (t.getLogicalTypeAnnotation match {
+        case ts: LogicalTypeAnnotation.TimestampLogicalTypeAnnotation =>
+          ts.getUnit == LogicalTypeAnnotation.TimeUnit.NANOS
+        case _ => false
+      })
+
   def documents(s: SparkSession, d: String): DataFrame = load(s, d, "documents")
   def embeddings(s: SparkSession, d: String): DataFrame = load(s, d, "embeddings")
 

@@ -138,7 +138,9 @@ object Skew {
     * tag i the other orders' columns are a constant null, so tag i sorts
     * on order i alone, and since every tag holds exactly n rows, tag i
     * holds the global ranks i·n+1 … (i+1)·n. A groupBy on `key` (which
-    * must be unique per row) folds the copies back into one row. Each
+    * must be unique per row) folds the copies back into one row, over a
+    * range partitioning of `key`, so that a later sort on `key` (as
+    * q184's) needs no exchange of its own. Each
     * `orders(i)` must be a UNIQUE total order, as for [[rangedRank]].
     * Output: the input columns, `_rank_0` … `_rank_<k-1>` (1-based, each
     * exactly row_number over its own unpartitioned window) and `_n`. */
@@ -157,7 +159,9 @@ object Skew {
     val ranks = (0 until k).map(i => s"_rank_$i")
     val aggs = df.columns.filter(_ != key).map(c => first(col(c)).as(c)) ++
       ranks.zipWithIndex.map { case (r, i) => max(when(tag === i, col("_rank") - n * i)).as(r) }
-    ranked.groupBy(col(key), n.as("_n")).agg(aggs.head, aggs.tail: _*)
+    val p = df.sparkSession.sessionState.conf.numShufflePartitions
+    ranked.repartitionByRange(p, col(key))
+      .groupBy(col(key), n.as("_n")).agg(aggs.head, aggs.tail: _*)
       .select((df.columns ++ ranks :+ "_n").map(col): _*)
   }
 
