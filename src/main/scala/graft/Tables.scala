@@ -61,9 +61,8 @@ object Tables {
     * values of [[SchemaConfs]], and is valid while every file under the
     * path keeps its name, size and modification time; a rewritten table
     * is read again. It holds no session and no data — every load still
-    * scans its files — so, like a catalog entry and unlike `AuditCache`,
-    * `Bench.sweep` leaves it alone: a timed run recomputes every
-    * relation all the same. On a miss, `onFooter` sees the footer's
+    * scans its files — so, like a catalog entry, `Bench.sweep` leaves
+    * it alone: a timed run recomputes every relation all the same. On a miss, `onFooter` sees the footer's
     * parquet schema before it is converted, and may set a reading conf.
     * Where one footer cannot give the answer (see [[footer]]), Spark
     * infers the schema, which starts a job. */

@@ -411,24 +411,21 @@ object Dedup {
     * localCheckpoint per pass truncates the growing lineage and lets the
     * ContextCleaner free superseded label relations.
     *
-    * Small-graph fast path: below `smallGraphEdges` (default 2^20
-    * edges ≈ 16 MB collected) the edge list is union-found on the
+    * Small-graph fast path (`Route.bySize`): at or below 2^20
+    * edges (≈ 16 MB collected) the edge list is union-found on the
     * driver in one pass — identical output, none of the per-pass
     * plan/shuffle overhead that dominates iterative Spark jobs on tiny
     * relations. Dedup graphs are tiny relative to the corpus (pairs of
     * NEAR-duplicates, post-banding), so this is the common case even at
     * 100 TB; anything larger takes the distributed loop. */
   def connectedComponents(edges: DataFrame, a: String, b: String,
-      maxIter: Int = 25,
-      // same env override as the Graph guards: SPARK_GRAFT_DRIVER_
-      // EDGE_LIMIT=0 forces the distributed min-label loop
-      smallGraphEdges: Long = Graph.driverLimit(1L << 20)): DataFrame = {
+      maxIter: Int = 25): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
     val e = edges.select(col(a).cast("long").as("src"), col(b).cast("long").as("dst"))
     val undBase = e.union(e.select(col("dst").as("src"), col("src").as("dst")))
       .distinct()
-    Route.bySize(undBase, smallGraphEdges) { und =>
+    Route.bySize(undBase, 1L << 20) { und =>
       val parent = scala.collection.mutable.HashMap.empty[Long, Long]
       def find(x: Long): Long = {
         var r = x

@@ -52,11 +52,17 @@ object EventOps {
 
     val ep = unix_timestamp(col(tsCol))
     // reached(i): (user, t1, ti) — earliest in-order completion times
-    // LAZY localCheckpoint per level (no job at build time): level i's
-    // plan nests levels 1..i-1, and the per-step union below references
-    // every level — without the checkpoint the union re-executes each
-    // prefix chain per branch, scanning events O(k^2) times instead of
-    // k. The materialized relation is one row per surviving user.
+    // LAZY localCheckpoint per level: level i's plan nests levels
+    // 1..i-1, and the per-step union below references every level —
+    // without the checkpoint the union re-executes each prefix chain
+    // per branch, scanning events O(k^2) times instead of k. The
+    // materialized relation is one row per surviving user. Lazy is not
+    // job-free: under AQE (Spark's default, on in every session the
+    // mains and tests build) localCheckpoint(false) plans its RDD
+    // through the adaptive plan, which runs the level's shuffle-map
+    // stages while the DataFrame is built; only the final stage waits
+    // for the consuming job. Measured on a groupBy over range,
+    // local[4]: 1 build-time job with AQE on, 0 with it off.
     val step1 = events.filter(col(typeCol) === steps.head)
       .groupBy(col(user)).agg(min(ep).as("t1"))
       .withColumn("ti", col("t1"))
@@ -253,7 +259,9 @@ object EventOps {
     require(steps.nonEmpty, "funnelUsers: at least one step")
     val ep = unix_timestamp(col(tsCol))
     // lazy per-level checkpoint — same O(k) vs O(k^2) rationale as
-    // [[funnel]]: the union below references every nested level
+    // [[funnel]]: the union below references every nested level. Under
+    // AQE each level's shuffle-map stage still runs at build time (see
+    // [[funnel]]), so building this DataFrame runs Spark jobs.
     val step1 = events.filter(col(typeCol) === steps.head)
       .groupBy(col(user)).agg(min(ep).as("t1"))
       .withColumn("ti", col("t1"))
@@ -803,21 +811,21 @@ object EventOps {
     * mixed), so both engines reproduce it bit-for-bit.
     *
     * Scale: one user-partitioned lead() pass collapses the corpus to
-    * the |types|² transition grid (localCheckpointed — iteration never
-    * re-reads the corpus); each step is a join + aggregate over that
-    * bounded grid with every addend π·p snapped to the 1e-12 grid and
-    * summed as exact DECIMALs (order-independent — the matvec sum is
-    * the one float accumulation in the loop). Requires every observed
-    * state to have at least one outgoing transition (true whenever the
-    * chain is observed mid-stream; states without outgoing rows would
-    * silently leak mass). Output: (state, pi) ascending by state. */
+    * the |types|² transition grid (pinned by `Route.bySize` —
+    * iteration never re-reads the corpus); each step is a join +
+    * aggregate over that bounded grid with every addend π·p snapped to
+    * the 1e-12 grid and summed as exact DECIMALs (order-independent —
+    * the matvec sum is the one float accumulation in the loop).
+    * Requires every observed state to have at least one outgoing
+    * transition (true whenever the chain is observed mid-stream; states
+    * without outgoing rows would silently leak mass). Output:
+    * (state, pi) ascending by state. */
   def markovStationary(events: DataFrame, user: String, typeCol: String,
-      tsCol: String, idCol: String, iters: Int = 16,
-      driverCellLimit: Long = 1L << 12): DataFrame = {
+      tsCol: String, idCol: String, iters: Int = 16): DataFrame = {
     require(iters >= 1 && iters <= 64, "markovStationary: 1 <= iters <= 64")
     import org.apache.spark.sql.types.DecimalType
     val w = Window.partitionBy(col(user)).orderBy(col(tsCol), col(idCol))
-    val grid = events
+    val gridBase = events
       .withColumn("dst", lead(col(typeCol), 1).over(w))
       .filter(col("dst").isNotNull)
       .groupBy(col(typeCol).as("src"), col("dst"))
@@ -825,7 +833,6 @@ object EventOps {
       .withColumn("p", col("n").cast("double") /
         sum(col("n")).over(Window.partitionBy(col("src"))).cast("double"))
       .select(col("src"), col("dst"), col("p"))
-      .localCheckpoint()
     // DRIVER-LOCAL fast path (the kMeans q61 precedent): the grid is
     // |types|²-bounded by contract, so below 2^12 cells the K
     // distributed rounds are pure stage-scheduling overhead (measured
@@ -834,7 +841,7 @@ object EventOps {
     // same IEEE π·p products, the same HALF_UP round to the 1e-12
     // grid (java BigDecimal.valueOf == Spark's Round on doubles —
     // RoundChk-verified), the same exact-decimal sums cast to double.
-    if (grid.count() <= driverCellLimit) {
+    Route.bySize(gridBase, 1L << 12) { grid =>
       val cells = grid.collect()
         .map(r => (r.getString(0), r.getString(1), r.getDouble(2)))
       import java.math.{BigDecimal => JBD, RoundingMode}
@@ -852,25 +859,26 @@ object EventOps {
         dist = acc.map { case (k, v) => k -> v.doubleValue }.toMap
       }
       val spark = events.sparkSession
-      return spark.createDataFrame(dist.toSeq.sortBy(_._1))
+      spark.createDataFrame(dist.toSeq.sortBy(_._1))
         .toDF("state", "pi")
         .select(col("state"), round(col("pi"), 6).as("pi"))
         .orderBy(col("state"))
+    } { grid =>
+      val nStates = grid.select(col("src")).distinct()
+        .agg(count(lit(1)).as("k"))
+      var dist = grid.select(col("src").as("state")).distinct()
+        .crossJoin(broadcast(nStates))
+        .select(col("state"), (lit(1.0) / col("k").cast("double")).as("pi"))
+      (1 to iters).foreach { _ =>
+        dist = dist.join(grid, col("state") === col("src"))
+          .groupBy(col("dst"))
+          .agg(sum(round(col("pi") * col("p"), 12).cast(DecimalType(28, 12)))
+            .cast("double").as("pi"))
+          .select(col("dst").as("state"), col("pi"))
+      }
+      dist.select(col("state"), round(col("pi"), 6).as("pi"))
+        .orderBy(col("state"))
     }
-    val nStates = grid.select(col("src")).distinct()
-      .agg(count(lit(1)).as("k"))
-    var dist = grid.select(col("src").as("state")).distinct()
-      .crossJoin(broadcast(nStates))
-      .select(col("state"), (lit(1.0) / col("k").cast("double")).as("pi"))
-    (1 to iters).foreach { _ =>
-      dist = dist.join(grid, col("state") === col("src"))
-        .groupBy(col("dst"))
-        .agg(sum(round(col("pi") * col("p"), 12).cast(DecimalType(28, 12)))
-          .cast("double").as("pi"))
-        .select(col("dst").as("state"), col("pi"))
-    }
-    dist.select(col("state"), round(col("pi"), 6).as("pi"))
-      .orderBy(col("state"))
   }
 
   /** Absorption probabilities of the event-type Markov chain — the
@@ -884,18 +892,18 @@ object EventOps {
     * the exact `iters`-step iterate (deterministic on both engines).
     *
     * Scale: the [[markovStationary]] discipline — one lead() pass to
-    * the |types|² grid (localCheckpointed), every round a join +
+    * the |types|² grid (pinned by `Route.bySize`), every round a join +
     * aggregate over the transient sub-grid with each p·a addend
     * snapped to the 1e-12 grid and summed as exact DECIMALs. Requires
     * every transient state to have outgoing transitions. Output:
     * (state, p_convert) over transient states, ascending. */
   def markovAbsorption(events: DataFrame, user: String, typeCol: String,
       tsCol: String, idCol: String, convert: String, abandon: String,
-      iters: Int = 24, driverCellLimit: Long = 1L << 12): DataFrame = {
+      iters: Int = 24): DataFrame = {
     require(iters >= 1 && iters <= 64, "markovAbsorption: 1 <= iters <= 64")
     import org.apache.spark.sql.types.DecimalType
     val w = Window.partitionBy(col(user)).orderBy(col(tsCol), col(idCol))
-    val grid = events
+    val gridBase = events
       .withColumn("dst", lead(col(typeCol), 1).over(w))
       .filter(col("dst").isNotNull)
       .filter(col(typeCol) =!= convert && col(typeCol) =!= abandon)
@@ -904,13 +912,12 @@ object EventOps {
       .withColumn("p", col("n").cast("double") /
         sum(col("n")).over(Window.partitionBy(col("src"))).cast("double"))
       .select(col("src"), col("dst"), col("p"))
-      .localCheckpoint()
     // DRIVER-LOCAL fast path (the q281 recipe — see markovStationary):
     // the grid's (src, dst) rows are DISTINCT, so each src has at most
     // one direct-to-convert cell (no float-sum ordering to replicate),
     // and the fixed-point rounds run in driver scala with the exact
     // same IEEE products, HALF_UP 1e-12 rounds, and decimal sums.
-    if (grid.count() <= driverCellLimit) {
+    Route.bySize(gridBase, 1L << 12) { grid =>
       val cells = grid.collect()
         .map(r => (r.getString(0), r.getString(1), r.getDouble(2)))
       import java.math.{BigDecimal => JBD, RoundingMode}
@@ -933,32 +940,33 @@ object EventOps {
         }.toMap
       }
       val spark = events.sparkSession
-      return spark.createDataFrame(a.toSeq.sortBy(_._1))
+      spark.createDataFrame(a.toSeq.sortBy(_._1))
         .toDF("state", "a")
         .select(col("state"), round(col("a"), 6).as("p_convert"))
         .orderBy(col("state"))
+    } { grid =>
+      val tb = grid.groupBy(col("src"))
+        .agg(coalesce(sum(when(col("dst") === convert, col("p"))), lit(0.0))
+          .as("direct"))
+        .localCheckpoint()
+      val tr = grid
+        .filter(col("dst") =!= convert && col("dst") =!= abandon)
+        .localCheckpoint()
+      var a = tb.select(col("src").as("state"), lit(0.0).as("a"))
+      (1 to iters).foreach { _ =>
+        val contrib = tr.join(a, col("dst") === col("state"))
+          .groupBy(col("src"))
+          .agg(sum(round(col("p") * col("a"), 12).cast(DecimalType(28, 12)))
+            .cast("double").as("acc"))
+        // the iterate feeds the next round ONCE, so the plan grows
+        // linearly in iters (no checkpoint needed — the q281 precedent)
+        a = tb.join(contrib, Seq("src"), "left")
+          .select(col("src").as("state"),
+            (col("direct") + coalesce(col("acc"), lit(0.0))).as("a"))
+      }
+      a.select(col("state"), round(col("a"), 6).as("p_convert"))
+        .orderBy(col("state"))
     }
-    val tb = grid.groupBy(col("src"))
-      .agg(coalesce(sum(when(col("dst") === convert, col("p"))), lit(0.0))
-        .as("direct"))
-      .localCheckpoint()
-    val tr = grid
-      .filter(col("dst") =!= convert && col("dst") =!= abandon)
-      .localCheckpoint()
-    var a = tb.select(col("src").as("state"), lit(0.0).as("a"))
-    (1 to iters).foreach { _ =>
-      val contrib = tr.join(a, col("dst") === col("state"))
-        .groupBy(col("src"))
-        .agg(sum(round(col("p") * col("a"), 12).cast(DecimalType(28, 12)))
-          .cast("double").as("acc"))
-      // the iterate feeds the next round ONCE, so the plan grows
-      // linearly in iters (no checkpoint needed — the q281 precedent)
-      a = tb.join(contrib, Seq("src"), "left")
-        .select(col("src").as("state"),
-          (col("direct") + coalesce(col("acc"), lit(0.0))).as("a"))
-    }
-    a.select(col("state"), round(col("a"), 6).as("p_convert"))
-      .orderBy(col("state"))
   }
 
   /** Expected steps to absorption of the journey chain —
@@ -971,12 +979,12 @@ object EventOps {
     * `iters`-step iterate. Output: (state, exp_steps) ascending. */
   def markovTimeToAbsorb(events: DataFrame, user: String, typeCol: String,
       tsCol: String, idCol: String, absorbing: Seq[String],
-      iters: Int = 24, driverCellLimit: Long = 1L << 12): DataFrame = {
+      iters: Int = 24): DataFrame = {
     require(iters >= 1 && iters <= 64, "markovTimeToAbsorb: 1 <= iters <= 64")
     require(absorbing.nonEmpty, "markovTimeToAbsorb: absorbing states required")
     import org.apache.spark.sql.types.DecimalType
     val w = Window.partitionBy(col(user)).orderBy(col(tsCol), col(idCol))
-    val grid = events
+    val gridBase = events
       .withColumn("dst", lead(col(typeCol), 1).over(w))
       .filter(col("dst").isNotNull)
       .filter(!col(typeCol).isin(absorbing: _*))
@@ -985,10 +993,9 @@ object EventOps {
       .withColumn("p", col("n").cast("double") /
         sum(col("n")).over(Window.partitionBy(col("src"))).cast("double"))
       .select(col("src"), col("dst"), col("p"))
-      .localCheckpoint()
     // DRIVER-LOCAL fast path — see markovAbsorption; direct term is
     // the constant 1.0 (one step is always taken)
-    if (grid.count() <= driverCellLimit) {
+    Route.bySize(gridBase, 1L << 12) { grid =>
       val cells = grid.collect()
         .map(r => (r.getString(0), r.getString(1), r.getDouble(2)))
       import java.math.{BigDecimal => JBD, RoundingMode}
@@ -1008,25 +1015,26 @@ object EventOps {
         }.toMap
       }
       val spark = events.sparkSession
-      return spark.createDataFrame(a.toSeq.sortBy(_._1))
+      spark.createDataFrame(a.toSeq.sortBy(_._1))
         .toDF("state", "a")
         .select(col("state"), round(col("a"), 6).as("exp_steps"))
         .orderBy(col("state"))
+    } { grid =>
+      val tb = grid.select(col("src")).distinct().localCheckpoint()
+      val tr = grid.filter(!col("dst").isin(absorbing: _*)).localCheckpoint()
+      var a = tb.select(col("src").as("state"), lit(0.0).as("a"))
+      (1 to iters).foreach { _ =>
+        val contrib = tr.join(a, col("dst") === col("state"))
+          .groupBy(col("src"))
+          .agg(sum(round(col("p") * col("a"), 12).cast(DecimalType(28, 12)))
+            .cast("double").as("acc"))
+        a = tb.join(contrib, Seq("src"), "left")
+          .select(col("src").as("state"),
+            (lit(1.0) + coalesce(col("acc"), lit(0.0))).as("a"))
+      }
+      a.select(col("state"), round(col("a"), 6).as("exp_steps"))
+        .orderBy(col("state"))
     }
-    val tb = grid.select(col("src")).distinct().localCheckpoint()
-    val tr = grid.filter(!col("dst").isin(absorbing: _*)).localCheckpoint()
-    var a = tb.select(col("src").as("state"), lit(0.0).as("a"))
-    (1 to iters).foreach { _ =>
-      val contrib = tr.join(a, col("dst") === col("state"))
-        .groupBy(col("src"))
-        .agg(sum(round(col("p") * col("a"), 12).cast(DecimalType(28, 12)))
-          .cast("double").as("acc"))
-      a = tb.join(contrib, Seq("src"), "left")
-        .select(col("src").as("state"),
-          (lit(1.0) + coalesce(col("acc"), lit(0.0))).as("a"))
-    }
-    a.select(col("state"), round(col("a"), 6).as("exp_steps"))
-      .orderBy(col("state"))
   }
 
   /** Next-event prediction eval of the first-order Markov model —

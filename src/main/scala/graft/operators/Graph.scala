@@ -11,19 +11,13 @@ import graft.functions.TextFunctions.md5U52
   * docs are copies of each other", PageRank answers "which nodes sit at
   * the center of the copy/link structure" (canonical selection, source
   * authority, crawl prioritization).
+  *
+  * Each operator with a driver fast path routes its pinned edge
+  * relation through [[Route.bySize]], with its edge limit as a
+  * constant at the call site; `Route.LimitConf` overrides every limit
+  * at once (0 forces the distributed plans).
   */
 object Graph {
-
-  /** Driver fast-path guard, env-overridable for at-scale measurement:
-    * `SPARK_GRAFT_DRIVER_EDGE_LIMIT=0` forces every graph operator onto
-    * its DISTRIBUTED plan (BenchScale uses this to slope-measure the
-    * plans that would run at 100 TB, where the guards never fire);
-    * unset, each operator keeps its documented default. Pure routing —
-    * driver and distributed paths are parity-pinned
-    * (ParityBoundarySpec), so results are identical either way. */
-  private[operators] def driverLimit(default: Long): Long =
-    sys.env.get("SPARK_GRAFT_DRIVER_EDGE_LIMIT")
-      .map(_.trim.toLong).getOrElse(default)
 
   /** Broadcast hint for node-sized relations inside iterative loops —
     * the hits discipline generalized: below ~2M rows the score/frontier
@@ -56,21 +50,20 @@ object Graph {
     * Output: (`id`, pr) — rank rounded to `roundTo`, summing to ~1. */
   def pageRank(nodes: DataFrame, id: String, edges: DataFrame,
       src: String, dst: String, iters: Int, damping: Double = 0.85,
-      roundTo: Int = 9, driverEdgeLimit: Long = driverLimit(1L << 23)): DataFrame = {
+      roundTo: Int = 9): DataFrame = {
     require(iters >= 1, "pageRank: at least one iteration")
     val n = nodes.count()
     require(n > 0, "pageRank: empty node set")
     val nD = n.toDouble
-    // outdeg is NOT checkpointed: it folds into the ed materialization
-    // (one job instead of two), and each path re-derives what it needs
-    // from the checkpointed ed — the driver path from the collected
-    // array, the distributed path as a one-column distinct below
+    // outdeg is NOT pinned: it folds into the ed pin (one job instead
+    // of two), and each branch re-derives what it needs from the pinned
+    // ed — the driver branch from the collected array, the distributed
+    // one as a one-column distinct below
     val outdeg = edges.groupBy(col(src).as("v")).agg(count(lit(1)).as("outd"))
     // the loop-invariant join: (src, dst, outd), reused every pass
-    val ed = edges.select(col(src).as("es"), col(dst).as("ed"))
+    val edBase = edges.select(col(src).as("es"), col(dst).as("ed"))
       .join(outdeg, col("es") === col("v"))
       .select(col("es"), col("ed"), col("outd"))
-      .localCheckpoint()
     // driver fast path (the hits/union-find discipline): below the
     // edge guard the power iteration runs in memory on the collected
     // (es, ed, outd) relation, walking the SAME decimal grid — Spark's
@@ -78,41 +71,43 @@ object Graph {
     // sums are order-free — so ranks are bit-identical
     // (ParityBoundarySpec pins it). Above the guard, or with a node
     // set larger than half the guard, the distributed loop runs.
-    if (ed.count() <= driverEdgeLimit && n <= (driverEdgeLimit >> 1))
-      return pageRankDriver(nodes, id, ed, n, iters, damping, roundTo)
-    // loop-invariant, read every pass by the dangling anti-join; the
-    // distinct es-set of ed IS outdeg's key set (the inner join keeps
-    // every source). Materialized only on the distributed path.
-    val hasOut = ed.select(col("es").as("v")).distinct().localCheckpoint()
-    // node-sized relations (ranks, contrib, hasOut) broadcast below the
-    // hits BroadcastNodeLimit so each iteration is a shuffle-free
-    // broadcast join over the CHECKPOINTED edges + a map-side-combined
-    // aggregate — without the hint the SMJ re-shuffles the full edge
-    // relation every pass. Strategy only: values are bit-identical;
-    // billion-node graphs fall back to the plain shuffle join.
-    val hint = broadcastBelow(n) _
-    var ranks = nodes.select(col(id).as("v"),
-      round(lit(1.0 / nD), 12).as("r"))
-    for (_ <- 1 to iters) {
-      val contrib = ed
-        .join(hint(ranks), col("es") === col("v"))
-        .groupBy(col("ed").as("cv"))
-        .agg(sum(round(col("r") / col("outd"), 14).cast(DecimalType(28, 14)))
-          .cast("double").as("c"))
-      val dangling = ranks.join(hint(hasOut), Seq("v"), "left_anti")
-        .agg(coalesce(
-          sum(round(col("r"), 14).cast(DecimalType(28, 14))).cast("double"),
-          lit(0.0)).as("dang"))
-      ranks = ranks.select(col("v"))
-        .join(hint(contrib), col("v") === col("cv"), "left")
-        .crossJoin(dangling)
-        .select(col("v"),
-          round(lit((1.0 - damping) / nD) +
-            lit(damping) * (coalesce(col("c"), lit(0.0)) + col("dang") / nD),
-            12).as("r"))
-        .localCheckpoint() // cut the per-iteration lineage diamond
+    val edgeLimit = Route.limit(nodes.sparkSession, 1L << 23)
+    Route.bySize(edBase, if (n <= (edgeLimit >> 1)) edgeLimit else 0L)(
+      pageRankDriver(nodes, id, _, n, iters, damping, roundTo)) { ed =>
+      // loop-invariant, read every pass by the dangling anti-join; the
+      // distinct es-set of ed IS outdeg's key set (the inner join keeps
+      // every source). Materialized only on the distributed path.
+      val hasOut = ed.select(col("es").as("v")).distinct().localCheckpoint()
+      // node-sized relations (ranks, contrib, hasOut) broadcast below the
+      // hits BroadcastNodeLimit so each iteration is a shuffle-free
+      // broadcast join over the PINNED edges + a map-side-combined
+      // aggregate — without the hint the SMJ re-shuffles the full edge
+      // relation every pass. Strategy only: values are bit-identical;
+      // billion-node graphs fall back to the plain shuffle join.
+      val hint = broadcastBelow(n) _
+      var ranks = nodes.select(col(id).as("v"),
+        round(lit(1.0 / nD), 12).as("r"))
+      for (_ <- 1 to iters) {
+        val contrib = ed
+          .join(hint(ranks), col("es") === col("v"))
+          .groupBy(col("ed").as("cv"))
+          .agg(sum(round(col("r") / col("outd"), 14).cast(DecimalType(28, 14)))
+            .cast("double").as("c"))
+        val dangling = ranks.join(hint(hasOut), Seq("v"), "left_anti")
+          .agg(coalesce(
+            sum(round(col("r"), 14).cast(DecimalType(28, 14))).cast("double"),
+            lit(0.0)).as("dang"))
+        ranks = ranks.select(col("v"))
+          .join(hint(contrib), col("v") === col("cv"), "left")
+          .crossJoin(dangling)
+          .select(col("v"),
+            round(lit((1.0 - damping) / nD) +
+              lit(damping) * (coalesce(col("c"), lit(0.0)) + col("dang") / nD),
+              12).as("r"))
+          .localCheckpoint() // cut the per-iteration lineage diamond
+      }
+      ranks.select(col("v").as(id), round(col("r"), roundTo).as("pr"))
     }
-    ranks.select(col("v").as(id), round(col("r"), roundTo).as("pr"))
   }
 
   /** Driver fast path for [[pageRank]] — same decimal grid, in memory.
@@ -199,7 +194,7 @@ object Graph {
     * Output: one row (n_nodes, n_edges, n_wedges, n_triangles,
     * global_cc = 3·triangles/wedges rounded to `roundTo`). */
   def triangleStats(edges: DataFrame, src: String, dst: String,
-      roundTo: Int = 6, driverEdgeLimit: Long = driverLimit(1L << 22)): DataFrame = {
+      roundTo: Int = 6): DataFrame = {
     val eBase = edges
       .select(least(col(src), col(dst)).as("a"),
               greatest(col(src), col(dst)).as("b"))
@@ -211,7 +206,7 @@ object Graph {
     // adjacency join cascade (ParityBoundarySpec pins equality; the
     // one rounded output, global_cc, replicates Spark round semantics
     // with BigDecimal HALF_UP).
-    Route.bySize(eBase, driverEdgeLimit)(triangleStatsDriver(_, roundTo)) { e =>
+    Route.bySize(eBase, 1L << 22)(triangleStatsDriver(_, roundTo)) { e =>
       val deg = e.select(col("a").as("v"))
         .union(e.select(col("b").as("v")))
         .groupBy(col("v")).agg(count(lit(1)).as("d"))
@@ -269,8 +264,8 @@ object Graph {
     * is the exact 12-decimal value rounded to `roundTo` as a decimal.
     *
     * Execution routes on edge count, the [[Dedup.connectedComponents]]
-    * union-find discipline: at or below `driverEdgeLimit` (default 2²³
-    * ≈ 8.4M edges, a few hundred MB of driver heap) the whole power
+    * union-find discipline (`Route.bySize`): at or below 2²³ edges
+    * (≈ 8.4M, a few hundred MB of driver heap) the whole power
     * iteration runs as a single driver loop over ONE collected edge
     * array — the per-pass cost of a distributed half-step (join +
     * shuffle agg + checkpoint + normalizer read ≈ 4 job turnarounds) is
@@ -280,9 +275,9 @@ object Graph {
     * SAME decimal grid (14-decimal DECIMAL terms summed exactly,
     * 12-decimal re-round per normalize — the driver path replicates
     * Spark's Round/Cast semantics with java.math.BigDecimal HALF_UP),
-    * pinned bit-identical by HitsParitySpec. */
+    * pinned bit-identical by ParityBoundarySpec. */
   def hits(edges: DataFrame, src: String, dst: String, iters: Int,
-      roundTo: Int = 9, driverEdgeLimit: Long = driverLimit(1L << 23)): DataFrame = {
+      roundTo: Int = 9): DataFrame = {
     require(iters >= 1 && iters <= 16, "hits: 1 <= iters <= 16")
     import org.apache.spark.sql.types.DecimalType
     def decSum(c: Column) =
@@ -291,7 +286,7 @@ object Graph {
       .distinct()
     // the driver path needs one id type for its score map
     val sameIdType = eBase.schema("s").dataType == eBase.schema("t").dataType
-    Route.bySize(eBase, if (sameIdType) driverEdgeLimit else -1L)(
+    Route.bySize(eBase, if (sameIdType) 1L << 23 else 0L)(
         hitsDriver(_, iters, roundTo)) { e =>
       val srcN = e.select(col("s")).distinct().count()
       val dstN = e.select(col("t")).distinct().count()
@@ -590,7 +585,7 @@ object Graph {
     * Output: (v, core_deg) for surviving nodes — empty when the graph
     * peels away entirely. */
   def kCore(edges: DataFrame, src: String, dst: String, k: Int,
-      rounds: Int, driverEdgeLimit: Long = driverLimit(1L << 22)): DataFrame = {
+      rounds: Int): DataFrame = {
     require(k >= 1, "kCore: k >= 1")
     require(rounds >= 1 && rounds <= 64, "kCore: 1 <= rounds <= 64")
     val eBase = edges
@@ -603,7 +598,7 @@ object Graph {
     // in-memory peel replaces per-round degree shuffles + checkpoints
     // (ParityBoundarySpec pins equality). Above it, the distributed
     // shell-removal loop runs.
-    Route.bySize(eBase, driverEdgeLimit)(kCoreDriver(_, k, rounds)) { pinned =>
+    Route.bySize(eBase, 1L << 22)(kCoreDriver(_, k, rounds)) { pinned =>
       var e = pinned
       // early exit at the fixpoint is RESULT-identical to running all
       // `rounds` (post-fixpoint peels are no-ops — the oracle runs them
@@ -993,8 +988,7 @@ object Graph {
     *
     * Output: (v, hops: int) — one row per reached node, sources at 0. */
   def bfsHops(edges: DataFrame, src: String, dst: String,
-      sources: DataFrame, sourceCol: String, maxHops: Int,
-      driverEdgeLimit: Long = driverLimit(1L << 22)): DataFrame = {
+      sources: DataFrame, sourceCol: String, maxHops: Int): DataFrame = {
     require(maxHops >= 1 && maxHops <= 32, "bfsHops: 1 <= maxHops <= 32")
     val eBase = edges
       .select(col(src).as("s"), col(dst).as("t"))
@@ -1004,7 +998,7 @@ object Graph {
     // order — no arithmetic grid to replicate at all), so below the
     // guard one collect + an in-memory BFS replaces maxHops rounds of
     // join/anti-join/checkpoint. ParityBoundarySpec pins equality.
-    Route.bySize(eBase, driverEdgeLimit)(bfsDriver(_,
+    Route.bySize(eBase, 1L << 22)(bfsDriver(_,
         sources.select(col(sourceCol).as("v")).distinct(), maxHops,
         perRoot = false)) { e =>
       var dist = sources.select(col(sourceCol).as("v")).distinct()
@@ -1054,8 +1048,7 @@ object Graph {
     *
     * Output: (root, v, hops: int) — one row per (root, reached node). */
   def bfsHopsPerRoot(edges: DataFrame, src: String, dst: String,
-      roots: DataFrame, rootCol: String, maxHops: Int,
-      driverEdgeLimit: Long = driverLimit(1L << 22)): DataFrame = {
+      roots: DataFrame, rootCol: String, maxHops: Int): DataFrame = {
     require(maxHops >= 1 && maxHops <= 32, "bfsHopsPerRoot: 1 <= maxHops <= 32")
     val eBase = edges
       .select(col(src).as("s"), col(dst).as("t"))
@@ -1063,7 +1056,7 @@ object Graph {
       .filter(col("s") =!= col("t")).distinct()
     // driver fast path — see [[bfsHops]]; one BFS per root over the
     // same collected adjacency.
-    Route.bySize(eBase, driverEdgeLimit)(bfsDriver(_,
+    Route.bySize(eBase, 1L << 22)(bfsDriver(_,
         roots.select(col(rootCol).as("v")).distinct(), maxHops,
         perRoot = true)) { e =>
       var dist = roots.select(col(rootCol).as("root")).distinct()

@@ -1,8 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.types.{DataType, DoubleType, IntegerType, LongType, StringType, StructField, StructType}
 
 import graft.functions.TextFunctions.tokens
 import graft.functions.VectorFunctions.{cosineWithNorms, fastNorm}
@@ -298,6 +299,17 @@ object Retrieval {
       .select(col("q").as(qId), col("doc").as(id), col("score"), col("rank"))
   }
 
+  /** Natural ordering for the primitive id types the [[mmrRerank]]
+    * driver path supports (None = unsupported, take the distributed
+    * loop). */
+  private def idOrdFor(dt: DataType): Option[Ordering[Any]] = dt match {
+    case LongType => Some(Ordering.by((x: Any) => x.asInstanceOf[Long]))
+    case IntegerType => Some(Ordering.by((x: Any) => x.asInstanceOf[Int]))
+    case StringType =>
+      Some(Ordering.by((x: Any) => x.asInstanceOf[String]))
+    case _ => None
+  }
+
   /** Maximal-marginal-relevance re-rank (Carbonell–Goldstein): greedily
     * pick `k` results per query maximizing
     * λ·rel(d) − (1−λ)·max_{s∈selected} cos(d, s) — relevance traded
@@ -316,108 +328,17 @@ object Retrieval {
     * @param cands (qId, id, rel) first-stage candidates, rel rounded
     * @param vecs (vId, vec) embeddings for the candidate ids
     * @return (qId, id, mmr, rank) — rank is selection order 1..k */
-  /** Natural ordering for the primitive id types the [[mmrRerank]]
-    * driver path supports (None = unsupported, take the distributed
-    * loop). */
-  private def idOrdFor(dt: org.apache.spark.sql.types.DataType)
-      : Option[Ordering[Any]] = dt match {
-    case org.apache.spark.sql.types.LongType =>
-      Some(Ordering.by((x: Any) => x.asInstanceOf[Long]))
-    case org.apache.spark.sql.types.IntegerType =>
-      Some(Ordering.by((x: Any) => x.asInstanceOf[Int]))
-    case org.apache.spark.sql.types.StringType =>
-      Some(Ordering.by((x: Any) => x.asInstanceOf[String]))
-    case _ => None
-  }
-
   def mmrRerank(
       cands: DataFrame, qId: String, id: String, rel: String,
       vecs: DataFrame, vId: String, vec: String,
       k: Int, lambda: Double = 0.7, roundTo: Int = 6): DataFrame = {
     require(k >= 1, "mmrRerank: k must be >= 1")
-    val c = cands
+    val cBase = cands
       .select(col(qId).as("q"), col(id).as("d"), col(rel).as("rel"))
       .join(vecs.select(col(vId).as("d"), col(vec).as("v")), "d")
       .withColumn("nrm", fastNorm(col("v")))
-      .localCheckpoint() // k steps re-read the candidate relation
-    // DRIVER fast path (the hits/kMeans discipline): the candidate
-    // relation is query-bounded by construction (|queries| × first-
-    // stage k), so below the row guard the greedy walk runs in driver
-    // scala over ONE collect — each distributed step otherwise costs
-    // an anti-join + join + aggregate + argmax window + an eager
-    // checkpoint (~3 job turnarounds × k steps of pure fixed overhead
-    // at any benched SF). Arithmetic replicates the step exactly:
-    // left-assoc vec_dot folds, dot/(nrm·snrm) cosine, BigDecimal
-    // HALF_UP rounds, (score desc, id asc) argmax — so the selection
-    // walk and every hash downstream are unchanged (oracle-pinned).
-    locally {
-      val idType = c.schema("d").dataType
-      val cmpOpt = idOrdFor(idType)
-      val qOrdOpt = idOrdFor(cands.schema(qId).dataType)
-      if (cmpOpt.isDefined && qOrdOpt.isDefined && c.count() <= (1L << 16)) {
-        val rows = c.collect()
-        // field positions by NAME: the USING join reordered columns
-        // (d leads), so positional access would silently swap q and d
-        val (iQ, iD, iRel, iV, iNrm) = (c.schema.fieldIndex("q"),
-          c.schema.fieldIndex("d"), c.schema.fieldIndex("rel"),
-          c.schema.fieldIndex("v"), c.schema.fieldIndex("nrm"))
-        if (rows.forall(r => !r.isNullAt(iD) && !r.isNullAt(iRel) &&
-            !r.isNullAt(iV) && !r.isNullAt(iNrm))) {
-          implicit val idOrd: Ordering[Any] = cmpOpt.get
-          def rnd(x: Double): Double =
-            java.math.BigDecimal.valueOf(x)
-              .setScale(roundTo, java.math.RoundingMode.HALF_UP).doubleValue
-          def dot(a: Array[Double], b: Array[Double]): Double = {
-            var s = 0.0; var i = 0
-            while (i < a.length) { s += a(i) * b(i); i += 1 }
-            s
-          }
-          final case class Cand(d: Any, rel: Double, v: Array[Double],
-            nrm: Double)
-          val byQ = rows.groupBy(_.get(iQ)).toSeq
-          val out = byQ.flatMap { case (q, rs) =>
-            var remaining = rs.map(r => Cand(r.get(iD), r.getDouble(iRel),
-              r.getSeq[Double](iV).toArray, r.getDouble(iNrm))).toVector
-            var selected = Vector.empty[(Cand, Double, Int)]
-            var rank = 1
-            while (rank <= k && remaining.nonEmpty) {
-              val scoredStep = remaining.map { cd =>
-                val score =
-                  if (rank == 1) rnd(lambda * cd.rel)
-                  else {
-                    val maxSim = selected.iterator.map { case (s, _, _) =>
-                      rnd(dot(cd.v, s.v) / (cd.nrm * s.nrm))
-                    }.max
-                    rnd(lambda * cd.rel - (1 - lambda) * maxSim)
-                  }
-                (cd, score)
-              }
-              val (win, ws) = scoredStep.minBy { case (cd, sc) =>
-                (-sc, cd.d)
-              }(Ordering.Tuple2(Ordering.Double.TotalOrdering, idOrd))
-              selected :+= ((win, ws, rank))
-              remaining = remaining.filterNot(_.d == win.d)
-              rank += 1
-            }
-            selected.map { case (cd, sc, rk) => (q, cd.d, sc, rk) }
-          }.sortBy { case (q, _, _, rk) => (q, rk) }(
-            Ordering.Tuple2(qOrdOpt.get, Ordering.Int))
-          val spark = cands.sparkSession
-          val schema = org.apache.spark.sql.types.StructType(Seq(
-            org.apache.spark.sql.types.StructField(qId,
-              cands.schema(qId).dataType),
-            org.apache.spark.sql.types.StructField(id, idType),
-            org.apache.spark.sql.types.StructField("mmr",
-              org.apache.spark.sql.types.DoubleType),
-            org.apache.spark.sql.types.StructField("rank",
-              org.apache.spark.sql.types.IntegerType)))
-          import scala.jdk.CollectionConverters._
-          return spark.createDataFrame(
-            out.map(t => org.apache.spark.sql.Row(t._1, t._2, t._3, t._4))
-              .asJava, schema)
-        }
-      }
-    }
+    val idType = cBase.schema("d").dataType
+    val qType = cands.schema(qId).dataType
     def argmax(df: DataFrame, score: Column, rank: Int): DataFrame = {
       val w = Window.partitionBy(col("q")).orderBy(score.desc, col("d"))
       df.withColumn("mmr", score)
@@ -425,30 +346,108 @@ object Retrieval {
         .select(col("q"), col("d"), col("v"), col("nrm"), col("mmr"),
           lit(rank).as("rank"))
     }
-    // each step references `selected` THREE times (anti-join, max-sim
-    // join, union) — left as lineage that's ~3^k plan copies by step k
-    // (the sf0.001 bench measured 9 s of pure planning at k=5).
-    // `selected` is ≤ |queries| rows per step: checkpoint it each
-    // iteration so every step optimizes a constant-size plan.
-    var selected = argmax(c, round(lit(lambda) * col("rel"), roundTo), 1)
-      .localCheckpoint()
-    for (i <- 2 to k) {
-      val remaining = c.join(selected.select(col("q"), col("d")),
-        Seq("q", "d"), "left_anti")
-      val maxSim = remaining.join(
-          selected.select(col("q"), col("v").as("sv"), col("nrm").as("snrm")),
-          "q")
-        .select(col("q"), col("d"), col("rel"), col("v"), col("nrm"),
-          round(cosineWithNorms(col("v"), col("sv"), col("nrm"), col("snrm")),
-            roundTo).as("sim"))
-        .groupBy(col("q"), col("d"), col("rel"), col("v"), col("nrm"))
-        .agg(max(col("sim")).as("max_sim"))
-      selected = selected.unionByName(argmax(maxSim,
-        round(lit(lambda) * col("rel") - lit(1 - lambda) * col("max_sim"),
-          roundTo), i)).localCheckpoint()
+    // the distributed walk over the pinned candidate relation `c` (k
+    // steps re-read it). Every step is checkpointed eagerly, so the
+    // result no longer reads `c` once this returns.
+    def walk(c: DataFrame): DataFrame = {
+      // each step references `selected` THREE times (anti-join, max-sim
+      // join, union) — left as lineage that's ~3^k plan copies by step k
+      // (the sf0.001 bench measured 9 s of pure planning at k=5).
+      // `selected` is ≤ |queries| rows per step: checkpoint it each
+      // iteration so every step optimizes a constant-size plan.
+      var selected = argmax(c, round(lit(lambda) * col("rel"), roundTo), 1)
+        .localCheckpoint()
+      for (i <- 2 to k) {
+        val remaining = c.join(selected.select(col("q"), col("d")),
+          Seq("q", "d"), "left_anti")
+        val maxSim = remaining.join(
+            selected.select(col("q"), col("v").as("sv"), col("nrm").as("snrm")),
+            "q")
+          .select(col("q"), col("d"), col("rel"), col("v"), col("nrm"),
+            round(cosineWithNorms(col("v"), col("sv"), col("nrm"), col("snrm")),
+              roundTo).as("sim"))
+          .groupBy(col("q"), col("d"), col("rel"), col("v"), col("nrm"))
+          .agg(max(col("sim")).as("max_sim"))
+        selected = selected.unionByName(argmax(maxSim,
+          round(lit(lambda) * col("rel") - lit(1 - lambda) * col("max_sim"),
+            roundTo), i)).localCheckpoint()
+      }
+      selected.select(col("q").as(qId), col("d").as(id), col("mmr"), col("rank"))
+        .orderBy(col(qId), col("rank"))
     }
-    selected.select(col("q").as(qId), col("d").as(id), col("mmr"), col("rank"))
-      .orderBy(col(qId), col("rank"))
+    // DRIVER fast path (the hits/kMeans discipline): the candidate
+    // relation is query-bounded by construction (|queries| × first-
+    // stage k), so at or below 2^16 rows the greedy walk runs in driver
+    // scala over ONE collect — each distributed step otherwise costs
+    // an anti-join + join + aggregate + argmax window + an eager
+    // checkpoint (~3 job turnarounds × k steps of pure fixed overhead
+    // at any benched SF). Arithmetic replicates the step exactly:
+    // left-assoc vec_dot folds, dot/(nrm·snrm) cosine, BigDecimal
+    // HALF_UP rounds, (score desc, id asc) argmax — so the selection
+    // walk and every hash downstream are unchanged (oracle-pinned).
+    // Only id types with a natural ordering take it.
+    val ords = for (idOrd <- idOrdFor(idType); qOrd <- idOrdFor(qType))
+      yield (idOrd, qOrd)
+    Route.bySize(cBase, if (ords.isDefined) 1L << 16 else 0L) { c =>
+      val rows = c.collect()
+      // field positions by NAME: the USING join reordered columns
+      // (d leads), so positional access would silently swap q and d
+      val (iQ, iD, iRel, iV, iNrm) = (c.schema.fieldIndex("q"),
+        c.schema.fieldIndex("d"), c.schema.fieldIndex("rel"),
+        c.schema.fieldIndex("v"), c.schema.fieldIndex("nrm"))
+      // the driver loop has no null semantics: a null id, rel, vector
+      // or norm sends the walk distributed, still over the pin (which
+      // Route releases only after this branch returns)
+      if (!rows.forall(r => !r.isNullAt(iD) && !r.isNullAt(iRel) &&
+          !r.isNullAt(iV) && !r.isNullAt(iNrm))) walk(c)
+      else {
+        implicit val idOrd: Ordering[Any] = ords.get._1
+        def rnd(x: Double): Double =
+          java.math.BigDecimal.valueOf(x)
+            .setScale(roundTo, java.math.RoundingMode.HALF_UP).doubleValue
+        def dot(a: Array[Double], b: Array[Double]): Double = {
+          var s = 0.0; var i = 0
+          while (i < a.length) { s += a(i) * b(i); i += 1 }
+          s
+        }
+        final case class Cand(d: Any, rel: Double, v: Array[Double],
+          nrm: Double)
+        val byQ = rows.groupBy(_.get(iQ)).toSeq
+        val out = byQ.flatMap { case (q, rs) =>
+          var remaining = rs.map(r => Cand(r.get(iD), r.getDouble(iRel),
+            r.getSeq[Double](iV).toArray, r.getDouble(iNrm))).toVector
+          var selected = Vector.empty[(Cand, Double, Int)]
+          var rank = 1
+          while (rank <= k && remaining.nonEmpty) {
+            val scoredStep = remaining.map { cd =>
+              val score =
+                if (rank == 1) rnd(lambda * cd.rel)
+                else {
+                  val maxSim = selected.iterator.map { case (s, _, _) =>
+                    rnd(dot(cd.v, s.v) / (cd.nrm * s.nrm))
+                  }.max
+                  rnd(lambda * cd.rel - (1 - lambda) * maxSim)
+                }
+              (cd, score)
+            }
+            val (win, ws) = scoredStep.minBy { case (cd, sc) =>
+              (-sc, cd.d)
+            }(Ordering.Tuple2(Ordering.Double.TotalOrdering, idOrd))
+            selected :+= ((win, ws, rank))
+            remaining = remaining.filterNot(_.d == win.d)
+            rank += 1
+          }
+          selected.map { case (cd, sc, rk) => (q, cd.d, sc, rk) }
+        }.sortBy { case (q, _, _, rk) => (q, rk) }(
+          Ordering.Tuple2(ords.get._2, Ordering.Int))
+        val schema = StructType(Seq(StructField(qId, qType),
+          StructField(id, idType), StructField("mmr", DoubleType),
+          StructField("rank", IntegerType)))
+        import scala.jdk.CollectionConverters._
+        cands.sparkSession.createDataFrame(
+          out.map(t => Row(t._1, t._2, t._3, t._4)).asJava, schema)
+      }
+    }(walk)
   }
 
   /** Hard-negative mining for contrastive training: for each anchor,

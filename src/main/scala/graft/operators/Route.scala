@@ -1,22 +1,53 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame, GraftSqlBridge, SparkSession}
 import org.apache.spark.storage.StorageLevel
 
 /** Size routing for the operators with a driver fast path: the input
-  * is evaluated ONCE, whichever side runs. */
+  * is evaluated ONCE, whichever side runs. Every driver fast path in
+  * `graft.operators` goes through [[bySize]]; both of each guard's
+  * branches are pinned equal by ParityBoundarySpec, so routing never
+  * changes a result. */
 object Route {
 
-  /** Pins `df` serialized on disk and counts the pin. At or below
-    * `limit` rows the pin goes to `driver`, which must collect it
-    * eagerly; it is released once that branch returns. Above, it goes
-    * to `distributed`, which keeps reading it. DISK_ONLY, not a
-    * deserialized localCheckpoint: a 100×-scale edge set held on the
-    * heap starved the distributed loops' aggregates (OOM). */
-  def bySize[T](df: DataFrame, limit: Long)(driver: DataFrame => T)(
-      distributed: DataFrame => T): T = {
-    val pin = df.persist(StorageLevel.DISK_ONLY)
-    if (pin.count() <= limit) try driver(pin) finally pin.unpersist()
+  /** Session conf that replaces the limit of every guard. 0 (or less)
+    * forces every guard onto its distributed branch, which is how the
+    * parity tests and the at-scale captures (`BenchScale`) reach the
+    * plans the guards skip at fixture scale. Unset, each guard keeps
+    * the limit its call site gives. `Bench.session` sets it from
+    * SPARK_GRAFT_DRIVER_EDGE_LIMIT. */
+  val LimitConf = "spark.graft.route.driverLimit"
+
+  /** The limit a guard whose own limit is `default` applies in
+    * `spark`'s session: the [[LimitConf]] override if set. A `default`
+    * of 0 or less means the call site has no driver branch for this
+    * input (an id type its driver loop cannot order, say), and the
+    * override never turns that into one. */
+  def limit(spark: SparkSession, default: Long): Long =
+    if (default <= 0) default
+    else spark.conf.getOption(LimitConf).map(_.trim.toLong).getOrElse(default)
+
+  /** Pins `df` serialized on disk in ONE job that also measures it: its
+    * row count, or the sum of `weight` over its rows when given. At or
+    * below the [[limit]] the pin goes to `driver`, which must collect it
+    * eagerly; its blocks are dropped once that branch returns. Above,
+    * or when the limit is 0 or less, it goes to `distributed`, which
+    * keeps reading it and may [[release]] it. DISK_ONLY, not a
+    * deserialized pin: a 100×-scale edge set held on the heap starved
+    * the distributed loops' aggregates (OOM). */
+  def bySize[T](df: DataFrame, limit: Long, weight: Option[Column] = None)(
+      driver: DataFrame => T)(distributed: DataFrame => T): T = {
+    val lim = this.limit(df.sparkSession, limit)
+    val (pin, sizes) =
+      GraftSqlBridge.localCheckpointCounted(df, StorageLevel.DISK_ONLY, weight)
+    if (lim > 0 && sizes.sum <= lim) try driver(pin) finally release(pin)
     else distributed(pin)
+  }
+
+  /** Drops the blocks of a relation a branch no longer reads: a
+    * [[bySize]] pin, or a relation the branch persisted itself. */
+  def release(df: DataFrame): Unit = {
+    GraftSqlBridge.releasePin(df)
+    df.unpersist(false)
   }
 }

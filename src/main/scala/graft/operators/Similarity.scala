@@ -635,34 +635,6 @@ object Similarity {
           .as("norm_ratio"))
   }
 
-  /** Lloyd's k-means over an embedding column — the unsupervised trainer
-    * that completes the IVF path ([[ivfTopK]] needs a coarse quantizer;
-    * [[centroidsAsQuantizer]] builds one from labels, this one from the
-    * vectors themselves, the way a real ANN index is trained).
-    *
-    * Scale topology (same as the classic distributed Lloyd's): the model
-    * state is k×d doubles — tiny — so it lives on the driver and ships
-    * inside the [[graft.plans.NearestCell]] expression each iteration;
-    * the DATA never moves. Assignment is therefore a PURE PROJECTION —
-    * no join, no vid-keyed shuffle of vectors — and one iteration costs
-    * exactly one partially-aggregated (cell, pos) mean pass: at 100 TB ×
-    * 10 iterations, zero full-data shuffles instead of ten. The input is
-    * persisted across iterations and unpersisted before returning.
-    *
-    * Deterministic on any cluster/partitioning AND portable across
-    * engines: init = the k lowest-id vectors (ties to the lower cell),
-    * and each mean snaps addends to a 1e-9 grid — `round(x·1e9)` summed
-    * exactly as integers (DECIMAL(38,0), overflow-proof at any corpus
-    * size), divided once in double. Integer sums are order-independent,
-    * so reaggregation splits can't flip a later assignment, and — unlike
-    * a DECIMAL(38,18) sum of raw doubles — the double→grid rounding is
-    * bit-identical in Spark and DuckDB (tie points X.5 are exactly
-    * representable, so shortest-string and binary rounding agree),
-    * making the whole training run SQL-oracle-checkable. The grid costs
-    * ≤5e-10 per coordinate — noise against float32 inputs' 2^-24 ulp.
-    * An emptied cell keeps its previous centroid.
-    *
-    * @return (cell, n_members, centroid_vec) for the final model. */
   /** Lloyd's loop over a collected training sample — the shared body
     * of the [[kMeans]] driver fast path and the [[pqCodebooks]]
     * one-collect subspace trainer. Arithmetic is bit-identical to the
@@ -730,57 +702,79 @@ object Similarity {
     cents.toSeq.zipWithIndex.map { case (cv, c) => (c, members(c), cv.toSeq) }
   }
 
-  def kMeans(vecs: DataFrame, id: String, vec: String, k: Int, iters: Int,
-      driverRowLimit: Long = 1L << 16): DataFrame = {
+  /** Lloyd's k-means over an embedding column — the unsupervised trainer
+    * that completes the IVF path ([[ivfTopK]] needs a coarse quantizer;
+    * [[centroidsAsQuantizer]] builds one from labels, this one from the
+    * vectors themselves, the way a real ANN index is trained).
+    *
+    * Scale topology (same as the classic distributed Lloyd's): the model
+    * state is k×d doubles — tiny — so it lives on the driver and ships
+    * inside the [[graft.plans.NearestCell]] expression each iteration;
+    * the DATA never moves. Assignment is therefore a PURE PROJECTION —
+    * no join, no vid-keyed shuffle of vectors — and one iteration costs
+    * exactly one partially-aggregated (cell, pos) mean pass: at 100 TB ×
+    * 10 iterations, zero full-data shuffles instead of ten. The input is
+    * pinned across iterations and released before returning.
+    *
+    * Deterministic on any cluster/partitioning AND portable across
+    * engines: init = the k lowest-id vectors (ties to the lower cell),
+    * and each mean snaps addends to a 1e-9 grid — `round(x·1e9)` summed
+    * exactly as integers (DECIMAL(38,0), overflow-proof at any corpus
+    * size), divided once in double. Integer sums are order-independent,
+    * so reaggregation splits can't flip a later assignment, and — unlike
+    * a DECIMAL(38,18) sum of raw doubles — the double→grid rounding is
+    * bit-identical in Spark and DuckDB (tie points X.5 are exactly
+    * representable, so shortest-string and binary rounding agree),
+    * making the whole training run SQL-oracle-checkable. The grid costs
+    * ≤5e-10 per coordinate — noise against float32 inputs' 2^-24 ulp.
+    * An emptied cell keeps its previous centroid.
+    *
+    * @return (cell, n_members, centroid_vec) for the final model. */
+  def kMeans(vecs: DataFrame, id: String, vec: String, k: Int,
+      iters: Int): DataFrame = {
     require(k > 0 && iters >= 0, "k must be positive, iters non-negative")
-    import org.apache.spark.sql.types.DecimalType
     val spark = vecs.sparkSession
     import spark.implicits._
-    // re-spread the training input before persisting IF it arrives
-    // under-partitioned: the canonical caller feeds a sort().limit()
-    // sample (topKAuto/pqCodebooks), and a global limit collapses to
-    // ONE partition — every assignment pass (k×d×n FMAs, the training
-    // hot loop) then runs single-threaded (measured: 14.7 s of a 20 s
-    // q93 at 100× before this). Guarded on the ACTUAL partition count
-    // because an unconditional repartition taxes every small
-    // well-partitioned trainer with shuffle + 32-task scheduling per
-    // pass (+0.6-1.6 s each on q61/q72/q73/q76/q87 at sf0.1, measured).
-    // k-means math is grid-snapped decimal — partitioning cannot
-    // change the trained model either way.
     // null vectors are excluded up front, BEFORE the >= k requirement
-    // and the initial-centroid pick, so both paths (driver-local fast
-    // path and distributed loop) see the same null-free training set —
-    // previously a null among the first k rows seeded the two paths
-    // differently across the 2^16 boundary
-    val src = vecs.select(col(id).as("vid"), col(vec).as("v"))
+    // and the initial-centroid pick, so both branches (driver-local
+    // fast path and distributed loop) see the same null-free training
+    // set — previously a null among the first k rows seeded the two
+    // branches differently across the 2^16 boundary
+    val trainable = vecs.select(col(id).as("vid"), col(vec).as("v"))
       .filter(col("v").isNotNull)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val n = src.count()
     // DRIVER-LOCAL fast path for contract-bounded training samples: the
     // canonical callers (pqCodebooks m subspaces, topKAuto trainSample)
     // feed a few hundred rows, where ALL the distributed loop's cost is
     // fixed per-job overhead — each of the iters+2 passes schedules a
     // 32-task shuffle over <1 KB of data (measured: 1.9 s of q73's
-    // 2.9 s at sf0.1 was two such 200-row trainings). Below the cutoff
-    // the sorted sample is collected ONCE and Lloyd's loop runs in
+    // 2.9 s at sf0.1 was two such 200-row trainings). At or below 2^16
+    // rows the sorted sample is collected ONCE and Lloyd's loop runs in
     // driver Scala with arithmetic bit-identical to the distributed
     // path (same strict-< argmin over left-assoc squared-L2 folds as
     // NearestCell, same round(x·1e9) exact-integer grid means), so the
     // trained model — and every oracle hash downstream — is unchanged.
     // 2^16 rows × 64-d ≈ 33 MB collected, driver-safe; anything larger
-    // is real distributed work and takes the cluster path below.
-    if (n <= driverRowLimit) {
+    // is real distributed work and takes the cluster path.
+    Route.bySize(trainable, 1L << 16) { src =>
       val rows = src.orderBy(col("vid")).collect()
-      src.unpersist(false)
       // src is null-filtered, so this counts TRAINABLE vectors — the
       // same population the distributed path's limit(k) seeds from
       require(rows.length >= k,
         s"kMeans: need at least k=$k non-null vectors, got ${rows.length}")
       val data: Array[Array[Double]] =
         rows.map(_.getSeq[Double](1).toArray)
-      return lloydDriver(data, k, iters)
-        .toDF("cell", "n_members", "centroid_vec")
-    }
+      lloydDriver(data, k, iters).toDF("cell", "n_members", "centroid_vec")
+    }(kMeansDistributed(_, k, iters))
+  }
+
+  /** The distributed Lloyd's loop of [[kMeans]] over its pinned,
+    * null-free (vid, v) training input, which it releases once the
+    * model is materialized. */
+  private def kMeansDistributed(src: DataFrame, k: Int,
+      iters: Int): DataFrame = {
+    import org.apache.spark.sql.types.DecimalType
+    val spark = src.sparkSession
+    import spark.implicits._
     var centroids: Seq[(Int, Seq[Double])] =
       src.orderBy(col("vid")).limit(k).collect()
         .zipWithIndex.map { case (r, i) => (i, r.getSeq[Double](1)) }.toSeq
@@ -796,18 +790,19 @@ object Similarity {
     // at 100×. But the repartition shuffle + per-pass multi-task
     // scheduling costs ~0.5 s, which TAXES the small well-warmed
     // trainers (q61/q72/q73 at sf0.1, measured +0.6 s each), so it is
-    // gated on the estimated assignment work. Grid-snapped decimal
-    // math means partitioning cannot change the trained model.
+    // gated on the estimated assignment work, whose row count is taken
+    // (one scan of the pin) only for an under-partitioned input.
+    // Grid-snapped decimal math means partitioning cannot change the
+    // trained model.
     val parts = spark.sessionState.conf.numShufflePartitions
     val d0 = centroids.head._2.length
-    val heavy = n.toDouble * k * d0 > 5e8
     val inParts = src.queryExecution.toRdd.getNumPartitions
     val data =
-      if (heavy && inParts * 4 < parts) {
+      if (inParts * 4 < parts && src.count().toDouble * k * d0 > 5e8) {
         val re = src.repartition(parts)
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        re.count() // materialize before dropping the source cache
-        src.unpersist(false)
+        re.count() // materialize before dropping the source pin
+        Route.release(src)
         re
       } else src
     // cells stay 0..k-1 throughout, so the matrix row index IS the cell
@@ -842,7 +837,7 @@ object Similarity {
       .select(col("cell"), coalesce(col("n_members"), lit(0L)).as("n_members"),
         col("centroid_vec"))
       .localCheckpoint()
-    data.unpersist(false)
+    Route.release(data)
     result
   }
 
@@ -1365,44 +1360,46 @@ object Similarity {
       m: Int, k: Int, iters: Int): DataFrame = {
     val spark = vecs.sparkSession
     import spark.implicits._
-    // ONE materialization of the training input: callers pass the
-    // (bounded) training sample, and without this each of the m
-    // subspace trainings would re-run the sample's upstream lineage —
-    // m extra corpus passes when the sample is an order/limit cut
-    val train = vecs.select(col(id), col(vec)).localCheckpoint()
-    val dim = train.select(size(col(vec))).head.getInt(0)
-    require(dim % m == 0, s"m=$m must divide dim=$dim")
-    val sub = dim / m
+    // ONE pin of the training input: callers pass the (bounded)
+    // training sample, and without it each of the m subspace trainings
+    // would re-run the sample's upstream lineage — m extra corpus
+    // passes when the sample is an order/limit cut. Null vectors are
+    // dropped here, as kMeans drops them (a slice is null iff the
+    // vector is).
+    val train = vecs.select(col(id), col(vec)).filter(col(vec).isNotNull)
+    def subDim(dim: Int): Int = {
+      require(dim % m == 0, s"m=$m must divide dim=$dim")
+      dim / m
+    }
     // one-collect driver path: the training sample is contract-bounded
-    // (the kMeans driver cutoff), so ONE sorted collect feeds all m
-    // subspace Lloyd loops — the per-subspace kMeans calls each paid
-    // their own persist + count + sort-collect jobs (3×m driver
-    // actions) over the same ≤2^16-row relation. Slicing the collected
-    // vectors driver-side is the same doubles slice(col, s·sub+1, sub)
-    // produced, the null filter matches kMeans' (a slice is null iff
-    // the vector is), and lloydDriver IS the kMeans driver body — so
-    // the trained books, and every oracle hash downstream, are
-    // unchanged (PqSpec/parity pin it).
-    val nonNull = train.filter(col(vec).isNotNull)
-    if (nonNull.count() <= (1L << 16)) {
-      val rows = nonNull.orderBy(col(id)).collect()
+    // (the kMeans driver cutoff, 2^16 rows), so ONE sorted collect
+    // feeds all m subspace Lloyd loops — the per-subspace kMeans calls
+    // would each pay their own pin + count + sort-collect jobs over the
+    // same relation. Slicing the collected vectors driver-side is the
+    // same doubles slice(col, s·sub+1, sub) produced, and lloydDriver
+    // IS the kMeans driver body — so the trained books, and every
+    // oracle hash downstream, are unchanged (ParityBoundarySpec pins
+    // it).
+    Route.bySize(train, 1L << 16) { pin =>
+      val rows = pin.orderBy(col(id)).collect()
       require(rows.length >= k,
         s"pqCodebooks: need at least k=$k non-null vectors, got ${rows.length}")
       val data: Array[Array[Double]] = rows.map(_.getSeq[Double](1).toArray)
-      val books = (0 until m).flatMap { s =>
+      val sub = subDim(data(0).length)
+      (0 until m).flatMap { s =>
         val sliced = data.map(v =>
           java.util.Arrays.copyOfRange(v, s * sub, s * sub + sub))
         lloydDriver(sliced, k, iters)
           .map { case (c, _, cv) => (s, c, cv) }
-      }
-      return books.toDF("sub", "cell", "c_vec")
+      }.toDF("sub", "cell", "c_vec")
+    } { pin =>
+      val sub = subDim(pin.select(size(col(vec))).head.getInt(0))
+      (0 until m).flatMap { s =>
+        val sliced = pin.select(col(id), slice(col(vec), s * sub + 1, sub).as("subv"))
+        kMeans(sliced, id, "subv", k, iters).collect()
+          .map(r => (s, r.getInt(0), r.getSeq[Double](2)))
+      }.toDF("sub", "cell", "c_vec")
     }
-    val books = (0 until m).flatMap { s =>
-      val sliced = train.select(col(id), slice(col(vec), s * sub + 1, sub).as("subv"))
-      kMeans(sliced, id, "subv", k, iters).collect()
-        .map(r => (s, r.getInt(0), r.getSeq[Double](2)))
-    }
-    books.toDF("sub", "cell", "c_vec")
   }
 
   /** Asymmetric-distance (ADC) top-k over PQ codes: each probe

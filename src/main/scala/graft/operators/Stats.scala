@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
+import org.apache.spark.sql.types.{DecimalType, StringType}
 
 import graft.functions.TextFunctions.md5U52
 
@@ -1006,14 +1006,13 @@ object Stats {
     val pairs = fwd.unionByName(rev)
       .groupBy(col("i"), col("j"))
       .agg(sum(col("w")).as("w_ij"))
-    val m = pairs.select(col("i"), col("j"), col("w_ij"))
+    val mBase = pairs.select(col("i"), col("j"), col("w_ij"))
       .join(pairs.select(col("i").as("j2"), col("j").as("i2"),
         col("w_ij").as("w_ji")),
         col("i") === col("i2") && col("j") === col("j2"))
       .select(col("i"), col("j"), col("w_ij"),
         (col("w_ij") + col("w_ji")).as("m_ij"))
       .filter(col("m_ij") > 0)
-      .localCheckpoint()
     // DRIVER-LOCAL fast path (the q281/q287 recipe): the duel grid is
     // |items|²-bounded by contract — below 2^12 cells the 8 MM rounds
     // (each a join + aggregate + normalize + checkpoint) are pure
@@ -1022,8 +1021,11 @@ object Stats {
     // w/den divisions, the same HALF_UP 1e-12 rounds
     // (BigDecimal.valueOf == Spark's Round on doubles), the same
     // exact-decimal sums. The corpus-scale work (deriving `wins`)
-    // already happened upstream.
-    if (m.count() <= (1 << 12)) {
+    // already happened upstream. The driver loop keys items by their
+    // string form, so only string items take it: any other item type
+    // would come back as a string.
+    val stringItems = mBase.schema("i").dataType == StringType
+    Route.bySize(mBase, if (stringItems) 1L << 12 else 0L) { m =>
       val mCells = m.collect()
         .map(r => (r.getAs[Any]("i").toString, r.getAs[Any]("j").toString,
           r.getAs[Long]("w_ij"), r.getAs[Long]("m_ij")))
@@ -1051,44 +1053,45 @@ object Stats {
       }
       val spark = wins.sparkSession
       val wRankL = Window.orderBy(col("p").desc, col("item"))
-      return spark.createDataFrame(pMap.toSeq.sortBy(_._1))
+      spark.createDataFrame(pMap.toSeq.sortBy(_._1))
         .toDF("item", "p")
         .withColumn("rank", row_number().over(wRankL))
         .select(col("item"), round(col("p"), 6).as("strength"), col("rank"))
         .orderBy(col("rank"))
+    } { m =>
+      val itemW = m.groupBy(col("i")).agg(sum(col("w_ij")).as("w_tot"))
+      val k = itemW.agg(count(lit(1)).as("k"))
+      var p = itemW.crossJoin(broadcast(k))
+        .select(col("i").as("item"), col("w_tot"),
+          (lit(1.0) / d(col("k"))).as("p"))
+      (1 to iters).foreach { _ =>
+        val pj = p.select(col("item").as("j"), col("p").as("p_j"))
+        val upd = m
+          .join(p, col("i") === col("item"))
+          .join(pj, Seq("j"))
+          .groupBy(col("i"))
+          .agg(sum(grid12(d(col("m_ij")) / (col("p") + col("p_j"))))
+            .cast("double").as("den"))
+        val raw = p.drop("p").join(upd, col("item") === col("i")).drop("i")
+          .withColumn("p_raw",
+            when(col("w_tot") > 0, d(col("w_tot")) / col("den"))
+              .otherwise(lit(0.0)))
+        val tot = raw.agg(sum(grid12(col("p_raw"))).cast("double").as("t"))
+        // localCheckpoint each round: the iterate feeds the NEXT round
+        // twice (p_i and p_j sides), so without it the logical plan
+        // doubles per round (2^iters analysis blow-up). The checkpoint
+        // materializes |items| rows — trivial at any corpus size, since
+        // the grid is bounded by the item domain, never the corpus.
+        p = raw.crossJoin(broadcast(tot))
+          .select(col("item"), col("w_tot"),
+            (col("p_raw") / col("t")).as("p"))
+          .localCheckpoint()
+      }
+      val wRank = Window.orderBy(col("p").desc, col("item"))
+      p.withColumn("rank", row_number().over(wRank))
+        .select(col("item"), round(col("p"), 6).as("strength"), col("rank"))
+        .orderBy(col("rank"))
     }
-    val itemW = m.groupBy(col("i")).agg(sum(col("w_ij")).as("w_tot"))
-    val k = itemW.agg(count(lit(1)).as("k"))
-    var p = itemW.crossJoin(broadcast(k))
-      .select(col("i").as("item"), col("w_tot"),
-        (lit(1.0) / d(col("k"))).as("p"))
-    (1 to iters).foreach { _ =>
-      val pj = p.select(col("item").as("j"), col("p").as("p_j"))
-      val upd = m
-        .join(p, col("i") === col("item"))
-        .join(pj, Seq("j"))
-        .groupBy(col("i"))
-        .agg(sum(grid12(d(col("m_ij")) / (col("p") + col("p_j"))))
-          .cast("double").as("den"))
-      val raw = p.drop("p").join(upd, col("item") === col("i")).drop("i")
-        .withColumn("p_raw",
-          when(col("w_tot") > 0, d(col("w_tot")) / col("den"))
-            .otherwise(lit(0.0)))
-      val tot = raw.agg(sum(grid12(col("p_raw"))).cast("double").as("t"))
-      // localCheckpoint each round: the iterate feeds the NEXT round
-      // twice (p_i and p_j sides), so without it the logical plan
-      // doubles per round (2^iters analysis blow-up). The checkpoint
-      // materializes |items| rows — trivial at any corpus size, since
-      // the grid is bounded by the item domain, never the corpus.
-      p = raw.crossJoin(broadcast(tot))
-        .select(col("item"), col("w_tot"),
-          (col("p_raw") / col("t")).as("p"))
-        .localCheckpoint()
-    }
-    val wRank = Window.orderBy(col("p").desc, col("item"))
-    p.withColumn("rank", row_number().over(wRank))
-      .select(col("item"), round(col("p"), 6).as("strength"), col("rank"))
-      .orderBy(col("rank"))
   }
 
   /** Sharp regression-discontinuity estimate at a cutoff — the causal

@@ -862,35 +862,6 @@ object TextAnalysis {
         lit(s" $a  $b "), lit(s" $merged ")),
       lit("  "), lit(" ")))
 
-  /** The shared BPE training loop: `merges` rounds of (count adjacent
-    * pairs → take the most frequent → rewrite the corpus). Returns the
-    * learned merge list and the rewritten corpus (doc, t), which the
-    * caller must unpersist.
-    *
-    * Scale topology (the [[graft.operators.Similarity.kMeans]] stance):
-    * the model is the merge list — tiny — so it lives on the driver and
-    * ships back inside literal replace() arguments; the corpus never
-    * moves. One round costs one map-side-combined pair count (native
-    * non-distinct 2-shingles, a projection) + TakeOrdered(1) — no
-    * global sort, a ONE-ROW collect — and one projection to apply the
-    * merge. At 100 TB × N merges: N linear passes, zero data shuffles.
-    * Each rewritten corpus is persisted and the previous unpersisted,
-    * so round i never replays rounds 1..i-1's rewrites.
-    *
-    * Deterministic and engine-portable: ties on pair count break
-    * lexicographically; counts are exact; replace/trim are literal. */
-  /** Driver guard for the BPE loop: at or below this many corpus text
-    * bytes the loop runs in driver memory (collect once, loop over
-    * arrays); above it the distributed per-round plan runs unchanged.
-    * The same data-size routing as the graph tier's fast paths: 8
-    * rounds of (count job + rewrite job + cache turnover) on a
-    * megabyte-scale corpus is pure fixed overhead. 16 MiB keeps the
-    * guard where that overhead still dominates the single-threaded
-    * loop — the 10×-inflated corpus (50 MB) deliberately routes to
-    * the 32-core distributed path. Pinned driver==distributed by the
-    * ParityBoundarySpec BPE test. */
-  private[graft] val BpeDriverMaxBytes: Long = 1L << 24
-
   /** In-memory twin of the distributed BPE loop — IDENTICAL arithmetic:
     * non-distinct adjacent pairs of space-split tokens (shingle n=2),
     * exact integer counts, argmax ties to the binary-smallest pair
@@ -973,20 +944,43 @@ object TextAnalysis {
     (learned.toSeq, outTexts)
   }
 
+  /** The shared BPE training loop: `merges` rounds of (count adjacent
+    * pairs → take the most frequent → rewrite the corpus). Returns the
+    * learned merge list and the rewritten corpus (doc, t), which the
+    * caller must release (`Route.release`).
+    *
+    * Scale topology (the [[graft.operators.Similarity.kMeans]] stance):
+    * the model is the merge list — tiny — so it lives on the driver and
+    * ships back inside literal replace() arguments; the corpus never
+    * moves. One round costs one map-side-combined pair count (native
+    * non-distinct 2-shingles, a projection) + TakeOrdered(1) — no
+    * global sort, a ONE-ROW collect — and one projection to apply the
+    * merge. At 100 TB × N merges: N linear passes, zero data shuffles.
+    * Each rewritten corpus is persisted and the previous unpersisted,
+    * so round i never replays rounds 1..i-1's rewrites.
+    *
+    * Deterministic and engine-portable: ties on pair count break
+    * lexicographically; counts are exact; replace/trim are literal. */
   private def bpeLoop(docs: DataFrame, id: String, text: String,
-      merges: Int, joiner: String,
-      driverMaxBytes: Long = BpeDriverMaxBytes): (Seq[(Int, String, String, Long)], DataFrame) = {
+      merges: Int, joiner: String): (Seq[(Int, String, String, Long)], DataFrame) = {
     require(merges >= 0, "merges must be non-negative")
     val spark = docs.sparkSession
-    // octet_length, not length: the guard is heap-headroom BYTES, and
-    // a multi-byte corpus would route up to ~4x the intended size into
-    // the single-threaded driver loop if sized in characters
-    val sized = docs.agg(coalesce(
-      sum(octet_length(col(text)).cast("long")), lit(0L))).head()
-    if (sized.getLong(0) <= driverMaxBytes) {
+    // at or below 16 MiB of text the loop runs in driver memory
+    // (collect once, loop over arrays); above it the distributed
+    // per-round plan runs unchanged. 8 rounds of (count job + rewrite
+    // job + cache turnover) on a megabyte-scale corpus is pure fixed
+    // overhead; 16 MiB keeps the guard where that overhead still
+    // dominates the single-threaded loop — the 10×-inflated corpus
+    // (50 MB) deliberately routes to the distributed path. Pinned
+    // driver==distributed by the ParityBoundarySpec BPE test. Sized in
+    // octet_length, not length: the guard is heap-headroom BYTES, and a
+    // multi-byte corpus would route up to ~4x the intended size into
+    // the single-threaded driver loop if sized in characters.
+    Route.bySize(docs.select(col(id).as("doc"), col(text).as("t")),
+        1L << 24, Some(octet_length(col("t")))) { pin =>
       import org.apache.spark.sql.types.{StructField, StructType, StringType}
       import scala.jdk.CollectionConverters._
-      val rows = docs.select(col(id).as("doc"), col(text).as("t")).collect()
+      val rows = pin.collect()
       val (learned, outTexts) = bpeLoopDriver(rows, merges, joiner)
       val schema = StructType(Seq(
         StructField("doc", docs.schema(id).dataType, nullable = true),
@@ -994,45 +988,45 @@ object TextAnalysis {
       val outRows: Seq[org.apache.spark.sql.Row] =
         rows.iterator.zip(outTexts.iterator)
           .map { case (r, t) => org.apache.spark.sql.Row(r.get(0), t) }.toSeq
-      return (learned, spark.createDataFrame(outRows.asJava, schema))
-    }
-    var cur = docs.select(col(id).as("doc"), col(text).as("t"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // the previous round's relation stays cached until THIS round's
-    // pair count has materialized `cur` from it — deferring the
-    // unpersist this way folds the rewrite work into the count job
-    // (the old shape ran an extra count() action per round just to
-    // materialize the cache: merges extra job turnarounds)
-    var prev: DataFrame = null
-    def dropPrev(): Unit = if (prev != null) { prev.unpersist(false); prev = null }
-    val learned = scala.collection.mutable.ArrayBuffer.empty[(Int, String, String, Long)]
-    var exhausted = false
-    for (i <- 1 to merges if !exhausted) {
-      val top = cur.select(explode(shingleStrings(col("t"), 2, distinct = false)).as("pair"))
-        .groupBy(col("pair")).agg(count(lit(1)).as("cnt"))
-        .orderBy(col("cnt").desc, col("pair")).limit(1)
-        .collect()
-      dropPrev()
-      if (top.isEmpty) exhausted = true // every doc is a single token
-      else {
-        val pair = top(0).getString(0)
-        val sp = pair.indexOf(' ')
-        val a = pair.substring(0, sp)
-        val b = pair.substring(sp + 1)
-        learned += ((i, a, b, top(0).getLong(1)))
-        val next = cur.select(col("doc"),
-            applyMerge(col("t"), a, b, a + joiner + b).as("t"))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        prev = cur
-        cur = next
+      (learned, spark.createDataFrame(outRows.asJava, schema))
+    } { pin =>
+      var cur = pin
+      // the previous round's relation stays cached until THIS round's
+      // pair count has materialized `cur` from it — deferring the
+      // unpersist this way folds the rewrite work into the count job
+      // (the old shape ran an extra count() action per round just to
+      // materialize the cache: merges extra job turnarounds)
+      var prev: DataFrame = null
+      def dropPrev(): Unit = if (prev != null) { Route.release(prev); prev = null }
+      val learned = scala.collection.mutable.ArrayBuffer.empty[(Int, String, String, Long)]
+      var exhausted = false
+      for (i <- 1 to merges if !exhausted) {
+        val top = cur.select(explode(shingleStrings(col("t"), 2, distinct = false)).as("pair"))
+          .groupBy(col("pair")).agg(count(lit(1)).as("cnt"))
+          .orderBy(col("cnt").desc, col("pair")).limit(1)
+          .collect()
+        dropPrev()
+        if (top.isEmpty) exhausted = true // every doc is a single token
+        else {
+          val pair = top(0).getString(0)
+          val sp = pair.indexOf(' ')
+          val a = pair.substring(0, sp)
+          val b = pair.substring(sp + 1)
+          learned += ((i, a, b, top(0).getLong(1)))
+          val next = cur.select(col("doc"),
+              applyMerge(col("t"), a, b, a + joiner + b).as("t"))
+            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+          prev = cur
+          cur = next
+        }
       }
+      // the final rewrite may not be materialized yet: callers act on
+      // `cur` (bpeEncode) or discard it (bpeMerges) — either way its
+      // lineage only reaches back to `prev`'s cache, which must outlive
+      // the first action, so hand ownership of BOTH to the caller
+      (learned.toSeq, if (prev != null) { val p = prev; prev = null
+        cur.count(); Route.release(p); cur } else cur)
     }
-    // the final rewrite may not be materialized yet: callers act on
-    // `cur` (bpeEncode) or discard it (bpeMerges) — either way its
-    // lineage only reaches back to `prev`'s cache, which must outlive
-    // the first action, so hand ownership of BOTH to the caller
-    (learned.toSeq, if (prev != null) { val p = prev; prev = null
-      cur.count(); p.unpersist(false); cur } else cur)
   }
 
   /** Train a word-granular BPE merge table over the corpus: the
@@ -1045,12 +1039,11 @@ object TextAnalysis {
     *
     * Output: (it, lhs, rhs, cnt), it = 1..merges. */
   def bpeMerges(docs: DataFrame, id: String, text: String, merges: Int,
-      joiner: String = "@@",
-      driverMaxBytes: Long = BpeDriverMaxBytes): DataFrame = {
+      joiner: String = "@@"): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
-    val (learned, cur) = bpeLoop(docs, id, text, merges, joiner, driverMaxBytes)
-    cur.unpersist(false)
+    val (learned, cur) = bpeLoop(docs, id, text, merges, joiner)
+    Route.release(cur)
     learned.toDF("it", "lhs", "rhs", "cnt")
   }
 
@@ -1125,14 +1118,13 @@ object TextAnalysis {
     * the md5 of the encoded text — the digest proves the REWRITE
     * matched, not just the counts. */
   def bpeEncode(docs: DataFrame, id: String, text: String, merges: Int,
-      joiner: String = "@@",
-      driverMaxBytes: Long = BpeDriverMaxBytes): DataFrame = {
-    val (_, cur) = bpeLoop(docs, id, text, merges, joiner, driverMaxBytes)
+      joiner: String = "@@"): DataFrame = {
+    val (_, cur) = bpeLoop(docs, id, text, merges, joiner)
     val result = cur.select(col("doc"),
         size(split(col("t"), " ")).cast("long").as("n_tokens"),
         md5(col("t")).as("bpe_md5"))
       .localCheckpoint() // materialize while cur is still cached
-    cur.unpersist(false)
+    Route.release(cur)
     result
   }
 

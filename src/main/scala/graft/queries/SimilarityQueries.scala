@@ -289,11 +289,9 @@ object SimilarityQueries {
             tg, "t_id", "t_vec", quantizer, "cell", "centroid_vec",
             k = 3, nProbe = 4)
           .select(col("p_id"), col("t_id")).localCheckpoint()
-        val exact = AuditCache.memo(s, s"cos_top3@$d") {
-          Similarity.topK(probes, "p_id", "p_vec",
-              tg, "t_id", "t_vec", k = 3)
-            .select(col("p_id"), col("t_id"), col("sim"))
-        }
+        val exact = Similarity.topK(probes, "p_id", "p_vec",
+            tg, "t_id", "t_vec", k = 3)
+          .select(col("p_id"), col("t_id"), col("sim"))
         val missed = exact.join(ivf, Seq("p_id", "t_id"), "left_anti")
         val ne = exact.agg(count(lit(1)).as("n_exact"),
           countDistinct(col("p_id")).as("n_probes"))
@@ -386,11 +384,9 @@ object SimilarityQueries {
             tg, "t_id", "t_vec", quantizer, "cell", "centroid_vec",
             k = 3, nProbe = 8)
           .select(col("p_id"), col("t_id")).localCheckpoint()
-        val exact = AuditCache.memo(s, s"cos_top3@$d") {
-          Similarity.topK(probes, "p_id", "p_vec",
-              tg, "t_id", "t_vec", k = 3)
-            .select(col("p_id"), col("t_id"), col("sim"))
-        }
+        val exact = Similarity.topK(probes, "p_id", "p_vec",
+            tg, "t_id", "t_vec", k = 3)
+          .select(col("p_id"), col("t_id"), col("sim"))
         val missed = exact.join(ivf, Seq("p_id", "t_id"), "left_anti")
         val ne = exact.agg(count(lit(1)).as("n_exact"),
           countDistinct(col("p_id")).as("n_probes"))
@@ -482,10 +478,8 @@ object SimilarityQueries {
     "q192_lsh_recall" -> Q(
       (s, d) => {
         val e = emb(s, d)
-        val exact = AuditCache.memo(s, s"neardup@0.4@$d") {
-          Similarity.nearDupPairs(e, "vec_id", "emb", threshold = 0.4)
-            .select(col("a_id"), col("b_id"), col("sim"))
-        }
+        val exact = Similarity.nearDupPairs(e, "vec_id", "emb", threshold = 0.4)
+          .select(col("a_id"), col("b_id"), col("sim"))
         val lsh = Similarity.lshNearDup(e, "vec_id", "emb",
             threshold = 0.4, nBits = 6, nTables = 6)
           .select(col("a_id"), col("b_id")).localCheckpoint()
@@ -519,10 +513,8 @@ object SimilarityQueries {
         // closed-form config: 4-bit bands, tables solved for a 90%
         // recall floor AT the 0.4 threshold (14 tables)
         val tables = Similarity.lshTablesFor(0.4, 0.9, nBits = 4)
-        val exact = AuditCache.memo(s, s"neardup@0.4@$d") {
-          Similarity.nearDupPairs(e, "vec_id", "emb", threshold = 0.4)
-            .select(col("a_id"), col("b_id"), col("sim"))
-        }
+        val exact = Similarity.nearDupPairs(e, "vec_id", "emb", threshold = 0.4)
+          .select(col("a_id"), col("b_id"), col("sim"))
         val lsh = Similarity.lshNearDup(e, "vec_id", "emb",
             threshold = 0.4, nBits = 4, nTables = tables)
           .select(col("a_id"), col("b_id")).localCheckpoint()
@@ -691,15 +683,13 @@ object SimilarityQueries {
         val tg = e.select(col("vec_id").as("t_id"), col("emb").as("t_vec"))
         val w = org.apache.spark.sql.expressions.Window
           .partitionBy(col("p_id")).orderBy(col("d2"), col("t_id"))
-        val exact = AuditCache.memo(s, s"l2_top3@$d") {
-          probes.crossJoin(tg)
-            .select(col("p_id"), col("t_id"),
-              round(fastSquaredL2(col("p_vec"), col("t_vec")), 6)
-                .as("d2"))
-            .withColumn("rank", row_number().over(w))
-            .filter(col("rank") <= 3)
-            .select(col("p_id"), col("t_id"), col("d2"))
-        }
+        val exact = probes.crossJoin(tg)
+          .select(col("p_id"), col("t_id"),
+            round(fastSquaredL2(col("p_vec"), col("t_vec")), 6)
+              .as("d2"))
+          .withColumn("rank", row_number().over(w))
+          .filter(col("rank") <= 3)
+          .select(col("p_id"), col("t_id"), col("d2"))
         val missed = exact.join(pq, Seq("p_id", "t_id"), "left_anti")
         val ne = exact.agg(count(lit(1)).as("n_exact"),
           countDistinct(col("p_id")).as("n_probes"))
@@ -796,15 +786,13 @@ object SimilarityQueries {
           .withColumn("rank", row_number().over(w))
           .filter(col("rank") <= 3)
           .select(col("p_id"), col("t_id")).localCheckpoint()
-        val exact = AuditCache.memo(s, s"l2_top3@$d") {
-          probes.crossJoin(tg)
-            .select(col("p_id"), col("t_id"),
-              round(fastSquaredL2(col("p_vec"), col("t_vec")), 6)
-                .as("d2"))
-            .withColumn("rank", row_number().over(w))
-            .filter(col("rank") <= 3)
-            .select(col("p_id"), col("t_id"), col("d2"))
-        }
+        val exact = probes.crossJoin(tg)
+          .select(col("p_id"), col("t_id"),
+            round(fastSquaredL2(col("p_vec"), col("t_vec")), 6)
+              .as("d2"))
+          .withColumn("rank", row_number().over(w))
+          .filter(col("rank") <= 3)
+          .select(col("p_id"), col("t_id"), col("d2"))
         val missed = exact.join(refined, Seq("p_id", "t_id"), "left_anti")
         val ne = exact.agg(count(lit(1)).as("n_exact"),
           countDistinct(col("p_id")).as("n_probes"))

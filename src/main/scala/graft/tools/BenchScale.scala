@@ -165,7 +165,12 @@ object BenchScale {
     // iterative centrality (the q111 pageRank class: score relations
     // shuffle per pass, edges materialize once). q111 itself joined the
     // list in r11 for the forced-distributed captures
-    // (SPARK_GRAFT_DRIVER_EDGE_LIMIT=0 → SCALE_SLOPE_DISTGRAPH_*.json)
+    // (SPARK_GRAFT_DRIVER_EDGE_LIMIT=0 → SCALE_SLOPE_DISTGRAPH_*.json).
+    // That variable now sets Route.LimitConf, so it forces EVERY
+    // driver fast-path guard distributed (Markov, Bradley-Terry, MMR,
+    // k-means/PQ and BPE too), not only the graph guards: a new
+    // SCALE_SLOPE_DISTGRAPH capture is not comparable with the
+    // committed SCALE_SLOPE_DISTGRAPH_10x.json.
     "q111_pagerank", "q212_hits", "q213_unseen_mass",
     // round-9 tier. q219-q221 re-block as of r10: a nation block past
     // the 512-record budget splits into md5-parity sub-blocks on the

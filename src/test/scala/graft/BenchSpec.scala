@@ -4,8 +4,6 @@ import java.util.concurrent.atomic.AtomicInteger
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-import graft.queries.AuditCache
-
 /** The measurement harness the mains share, run on the test session
   * (never through `main`, whose stop would end the shared session). */
 class BenchSpec extends SparkSuite {
@@ -22,16 +20,10 @@ class BenchSpec extends SparkSuite {
   }
 
   test("measure: a crash reads -1 and the run goes on; counts recorded; the sweep leaves no pin or memo") {
-    val builds = new AtomicInteger(0)
-    def memoized(s: SparkSession): DataFrame = AuditCache.memo(s, "benchspec_memo") {
-      builds.incrementAndGet()
-      s.range(3).toDF("id")
-    }
     val pinsSeen = new AtomicInteger(0)
     val queries = Bench.bind(Seq("q199_kcore"), sf("0.001")) ++ Seq[(String, SparkSession => DataFrame)](
       "injected_throw" -> (_ => throw new IllegalStateException("injected")),
       "injected_pin" -> { s =>
-        memoized(s)
         val pinned = s.range(1000).toDF("id").localCheckpoint()
         pinsSeen.set(s.sparkContext.getPersistentRDDs.size)
         pinned
@@ -45,9 +37,6 @@ class BenchSpec extends SparkSuite {
     assert(q199.seconds >= 0.0 && q199.jobs >= 1 && q199.tasks >= 1, q199.toString)
     assert(pinsSeen.get >= 1, "the injected query pinned a block")
     assert(spark.sparkContext.getPersistentRDDs.isEmpty, "the sweep released every pin")
-    val before = builds.get
-    memoized(spark)
-    assert(builds.get === before + 1, "the sweep dropped the memoized value")
   }
 
   test("measure: q184 runs at most 12 jobs, and its build jobs are among them") {

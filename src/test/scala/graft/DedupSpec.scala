@@ -116,9 +116,9 @@ class DedupSpec extends SparkSuite {
     val got = Dedup.connectedComponents(edges, "x", "y")
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(got == expected)
-    // smallGraphEdges = 0 forces the distributed label-propagation loop
-    // (the default would take the driver union-find fast path here)
-    val distributed = Dedup.connectedComponents(edges, "x", "y", smallGraphEdges = 0)
+    // a forced route takes the distributed label-propagation loop (the
+    // default would take the driver union-find fast path here)
+    val distributed = forcedDistributed(Dedup.connectedComponents(edges, "x", "y"))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(distributed == expected, "distributed loop must match union-find")
   }

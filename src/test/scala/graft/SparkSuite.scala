@@ -8,6 +8,15 @@ import org.scalatest.BeforeAndAfterAll
 trait SparkSuite extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSuite.session
   def sf(s: String): String = s"/root/testdata/sf$s"
+
+  /** Evaluates `build` with every size guard forced onto its
+    * distributed branch (`Route.LimitConf` = 0). Guards route while a
+    * DataFrame is built, so the returned DataFrame keeps its route when
+    * it runs later. */
+  def forcedDistributed[T](build: => T): T = {
+    spark.conf.set(graft.operators.Route.LimitConf, "0")
+    try build finally spark.conf.unset(graft.operators.Route.LimitConf)
+  }
 }
 
 object SparkSuite {
