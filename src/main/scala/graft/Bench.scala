@@ -70,10 +70,10 @@ object Bench {
   final case class Record(name: String, seconds: Double, jobs: Long,
       stages: Long, tasks: Long, buildSeconds: Double, buildJobs: Long)
 
-  /** The one session builder of the mains. SPARK_GRAFT_DRIVER_EDGE_LIMIT,
-    * when set, becomes the session's [[graft.operators.Route.LimitConf]]:
-    * the limit of every driver fast-path guard (0 forces each one onto
-    * its distributed branch). */
+  /** The one session builder of the mains. SPARK_GRAFT_DRIVER_EDGE_LIMIT=0
+    * sets the session's [[graft.operators.Route.ForceDistributedConf]]:
+    * every driver fast-path guard takes its distributed branch. 0 is
+    * the only value it takes; any other fails the call. */
   def session(): SparkSession = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val builder = SparkSession.builder()
@@ -81,9 +81,11 @@ object Bench {
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
-    val spark = sys.env.get("SPARK_GRAFT_DRIVER_EDGE_LIMIT")
-      .fold(builder)(v => builder.config(graft.operators.Route.LimitConf, v.trim))
-      .getOrCreate()
+    val spark = sys.env.get("SPARK_GRAFT_DRIVER_EDGE_LIMIT").fold(builder) { v =>
+      require(v.trim == "0", s"SPARK_GRAFT_DRIVER_EDGE_LIMIT=$v: only 0 " +
+        "(force every guard onto its distributed branch) is supported")
+      builder.config(graft.operators.Route.ForceDistributedConf, "true")
+    }.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark
   }

@@ -14,8 +14,8 @@ import graft.functions.TextFunctions.md5U52
   *
   * Each operator with a driver fast path routes its pinned edge
   * relation through [[Route.bySize]], with its edge limit as a
-  * constant at the call site; `Route.LimitConf` overrides every limit
-  * at once (0 forces the distributed plans).
+  * constant at the call site; `Route.ForceDistributedConf` forces
+  * every distributed plan at once.
   */
 object Graph {
 
@@ -71,8 +71,7 @@ object Graph {
     // sums are order-free — so ranks are bit-identical
     // (ParityBoundarySpec pins it). Above the guard, or with a node
     // set larger than half the guard, the distributed loop runs.
-    val edgeLimit = Route.limit(nodes.sparkSession, 1L << 23)
-    Route.bySize(edBase, if (n <= (edgeLimit >> 1)) edgeLimit else 0L)(
+    Route.bySize(edBase, if (n <= (1L << 22)) 1L << 23 else 0L)(
       pageRankDriver(nodes, id, _, n, iters, damping, roundTo)) { ed =>
       // loop-invariant, read every pass by the dangling anti-join; the
       // distinct es-set of ed IS outdeg's key set (the inner join keeps

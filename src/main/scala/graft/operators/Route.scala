@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, GraftSqlBridge, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, GraftSqlBridge}
 import org.apache.spark.storage.StorageLevel
 
 /** Size routing for the operators with a driver fast path: the input
@@ -10,37 +10,29 @@ import org.apache.spark.storage.StorageLevel
   * changes a result. */
 object Route {
 
-  /** Session conf that replaces the limit of every guard. 0 (or less)
-    * forces every guard onto its distributed branch, which is how the
-    * parity tests and the at-scale captures (`BenchScale`) reach the
-    * plans the guards skip at fixture scale. Unset, each guard keeps
-    * the limit its call site gives. `Bench.session` sets it from
-    * SPARK_GRAFT_DRIVER_EDGE_LIMIT. */
-  val LimitConf = "spark.graft.route.driverLimit"
-
-  /** The limit a guard whose own limit is `default` applies in
-    * `spark`'s session: the [[LimitConf]] override if set. A `default`
-    * of 0 or less means the call site has no driver branch for this
-    * input (an id type its driver loop cannot order, say), and the
-    * override never turns that into one. */
-  def limit(spark: SparkSession, default: Long): Long =
-    if (default <= 0) default
-    else spark.conf.getOption(LimitConf).map(_.trim.toLong).getOrElse(default)
+  /** Session conf: "true" forces every guard onto its distributed
+    * branch, which is how the parity tests and the at-scale captures
+    * (`BenchScale`) reach the plans the guards skip at fixture scale.
+    * `Bench.session` sets it from SPARK_GRAFT_DRIVER_EDGE_LIMIT=0. */
+  val ForceDistributedConf = "spark.graft.route.forceDistributed"
 
   /** Pins `df` serialized on disk in ONE job that also measures it: its
     * row count, or the sum of `weight` over its rows when given. At or
-    * below the [[limit]] the pin goes to `driver`, which must collect it
-    * eagerly; its blocks are dropped once that branch returns. Above,
-    * or when the limit is 0 or less, it goes to `distributed`, which
-    * keeps reading it and may [[release]] it. DISK_ONLY, not a
-    * deserialized pin: a 100×-scale edge set held on the heap starved
-    * the distributed loops' aggregates (OOM). */
+    * below a positive `limit` the pin goes to `driver`, which must
+    * collect it eagerly; its blocks are dropped once that branch
+    * returns. Above it, with a `limit` of 0 (the call site has no driver
+    * branch for this input), or when [[ForceDistributedConf]] is set, it
+    * goes to `distributed`, which keeps reading it and may [[release]]
+    * it. DISK_ONLY, not a deserialized pin: a 100×-scale edge set held
+    * on the heap starved the distributed loops' aggregates (OOM). */
   def bySize[T](df: DataFrame, limit: Long, weight: Option[Column] = None)(
       driver: DataFrame => T)(distributed: DataFrame => T): T = {
-    val lim = this.limit(df.sparkSession, limit)
+    val forced = df.sparkSession.conf.getOption(ForceDistributedConf)
+      .exists(_.trim.toBoolean)
     val (pin, sizes) =
       GraftSqlBridge.localCheckpointCounted(df, StorageLevel.DISK_ONLY, weight)
-    if (lim > 0 && sizes.sum <= lim) try driver(pin) finally release(pin)
+    if (!forced && limit > 0 && sizes.sum <= limit)
+      try driver(pin) finally release(pin)
     else distributed(pin)
   }
 

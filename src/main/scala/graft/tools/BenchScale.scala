@@ -166,8 +166,8 @@ object BenchScale {
     // shuffle per pass, edges materialize once). q111 itself joined the
     // list in r11 for the forced-distributed captures
     // (SPARK_GRAFT_DRIVER_EDGE_LIMIT=0 → SCALE_SLOPE_DISTGRAPH_*.json).
-    // That variable now sets Route.LimitConf, so it forces EVERY
-    // driver fast-path guard distributed (Markov, Bradley-Terry, MMR,
+    // That variable now sets Route.ForceDistributedConf, so it forces
+    // EVERY driver fast-path guard distributed (Markov, Bradley-Terry, MMR,
     // k-means/PQ and BPE too), not only the graph guards: a new
     // SCALE_SLOPE_DISTGRAPH capture is not comparable with the
     // committed SCALE_SLOPE_DISTGRAPH_10x.json.

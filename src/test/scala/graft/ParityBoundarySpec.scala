@@ -7,9 +7,9 @@ import org.apache.spark.storage.StorageLevel
 import graft.operators.{Dedup, EventOps, Graph, Retrieval, Similarity, Stats}
 
 /** Pins every driver-local fast path to its distributed twin: the SAME
-  * input runs through BOTH paths (forced via `Route.LimitConf`) and
-  * the results must be EXACTLY equal — bit-identical doubles, not
-  * approximately close. These are the guards the scale design leans on
+  * input runs through BOTH paths (forced via
+  * `Route.ForceDistributedConf`) and the results must be EXACTLY
+  * equal — bit-identical doubles, not approximately close. These are the guards the scale design leans on
   * (collect-below-cutoff / distribute-above): if either path's
   * arithmetic drifts, the oracle hashes stay green at the scale the
   * driver tests but silently diverge past the boundary. */

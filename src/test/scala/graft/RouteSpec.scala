@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 import graft.operators.{Dedup, EventOps, Graph, Retrieval, Similarity, Stats, TextAnalysis}
 
@@ -23,6 +24,32 @@ class RouteSpec extends SparkSuite {
     val seen = udf { (x: Long) => acc.add(1); x }.asNondeterministic()
     op(spark.range(rows).select(seen(col("id")).as("id")))
     acc.value
+  }
+
+  /** Runs `body` and checks that it leaves the persisted RDDs as it
+    * found them: it adds none, and a relation this test persisted
+    * before it (a cached DataFrame and a persisted RDD, both still
+    * referenced) is still persisted afterwards, so a branch that
+    * releases more than its own pin fails. Earlier tests' unreferenced
+    * pins may be cleaned meanwhile, so only the held ones are checked
+    * for removal. */
+  private def keepsPins[T](body: => T): T = {
+    val sc = spark.sparkContext
+    val outside = sc.getPersistentRDDs.keySet
+    val heldDf = spark.range(4).toDF("held").persist(StorageLevel.DISK_ONLY)
+    heldDf.count()
+    val heldRdd = sc.parallelize(1 to 4).persist(StorageLevel.DISK_ONLY)
+    heldRdd.count()
+    val before = sc.getPersistentRDDs.keySet
+    val held = before -- outside
+    assert(held.size === 2 && held.contains(heldRdd.id))
+    try {
+      val r = body
+      val after = sc.getPersistentRDDs.keySet
+      assert((after -- before).isEmpty, "the branch left an RDD persisted")
+      assert(held.subsetOf(after), "the branch released an RDD it does not own")
+      r
+    } finally { heldDf.unpersist(); heldRdd.unpersist() }
   }
 
   private def edges(in: DataFrame): DataFrame =
@@ -85,23 +112,18 @@ class RouteSpec extends SparkSuite {
   for (forced <- Seq(false, true)) {
     val side = if (forced) "distributed" else "driver"
     def route(n: => Long): Long = if (forced) forcedDistributed(n) else n
+    // the driver branch releases its own pin once it has collected,
+    // and nothing else
+    def checked(n: => Long): Long = if (forced) route(n) else keepsPins(n)
     test(s"kCore and hits evaluate their edge relation once ($side branch)") {
-      val pinsBefore = spark.sparkContext.getPersistentRDDs.keySet
-      assert(route(evaluations(e =>
+      assert(checked(evaluations(e =>
         Graph.kCore(edges(e), "a", "b", k = 2, rounds = 8).collect())) === rows, "kCore")
-      assert(route(evaluations(e =>
+      assert(checked(evaluations(e =>
         Graph.hits(edges(e), "a", "b", iters = 3).collect())) === rows, "hits")
-      // the driver branch releases its pin once it has collected (the
-      // cleaner may drop earlier tests' pins meanwhile, hence --)
-      if (!forced)
-        assert((spark.sparkContext.getPersistentRDDs.keySet -- pinsBefore).isEmpty)
     }
     for ((name, scans, op) <- guards)
       test(s"$name evaluates its routed input once ($side branch)") {
-        val pinsBefore = spark.sparkContext.getPersistentRDDs.keySet
-        assert(route(evaluations(op)) === scans * rows, name)
-        if (!forced)
-          assert((spark.sparkContext.getPersistentRDDs.keySet -- pinsBefore).isEmpty, name)
+        assert(checked(evaluations(op)) === scans * rows, name)
       }
   }
 }

@@ -10,12 +10,12 @@ trait SparkSuite extends AnyFunSuite with BeforeAndAfterAll {
   def sf(s: String): String = s"/root/testdata/sf$s"
 
   /** Evaluates `build` with every size guard forced onto its
-    * distributed branch (`Route.LimitConf` = 0). Guards route while a
+    * distributed branch (`Route.ForceDistributedConf`). Guards route while a
     * DataFrame is built, so the returned DataFrame keeps its route when
     * it runs later. */
   def forcedDistributed[T](build: => T): T = {
-    spark.conf.set(graft.operators.Route.LimitConf, "0")
-    try build finally spark.conf.unset(graft.operators.Route.LimitConf)
+    spark.conf.set(graft.operators.Route.ForceDistributedConf, "true")
+    try build finally spark.conf.unset(graft.operators.Route.ForceDistributedConf)
   }
 }
 
