@@ -997,7 +997,7 @@ object Quality {
   }
 
   /** Mean reciprocal rank over a RANKED retrieval relation — the
-    * first-relevant-hit eval that complements [[Retrieval.ndcg]]'s
+    * first-relevant-hit eval that complements [[Retrieval.ndcgDiscounts]]'s
     * graded gains and the recall@k audits (q208/q210): "how far down
     * the list is the first right answer?". Input is any (probe, rank,
     * is_relevant) relation — BM25, cosine, IVF, fused — so one

@@ -426,7 +426,8 @@ object Similarity {
     * ranked. Accuracy-sensitive callers in that window must pass an
     * explicit `pairBudget` (e.g. `1L << 31`) to buy the exact pass
     * back; throughput callers keep the default and accept IVF recall
-    * (tune with [[ivfRecallAudit]]).
+    * (tune with the q208/q209 IVF recall audits in
+    * `graft.queries.SimilarityQueries`).
     *
     * Returns (xId, yId, sim, rank_f, rank_b) for every pair in EITHER
     * direction's top-k; a rank is null (routed path) or > k (exact

@@ -104,7 +104,7 @@ object TextAnalysis {
     * threshold.
     *
     * Scale design: both sides hash shingles to 64-bit via the native
-    * single-pass [[graft.plans.TextExpressions]] expression, so the
+    * single-pass [[graft.plans.ShingleHashes]] expression, so the
     * equi-join shuffles 8-byte keys, never n-gram strings; the
     * benchmark side collapses to its distinct shingle set first
     * (typically thousands of eval docs vs billions of corpus docs) and
@@ -329,7 +329,7 @@ object TextAnalysis {
     * pair enumeration, so it scales past the point where even LSH pair
     * generation is too big).
     *
-    * Scale design: shingles are 64-bit hashes ([[graft.plans.TextExpressions]],
+    * Scale design: shingles are 64-bit hashes ([[graft.plans.ShingleHashes]],
     * distinct within a doc), so the duplicated-shingle set comes from a
     * count >= 2 hash aggregation over 8-byte keys (map-side partials)
     * and rejoins by equi-join — never a doc×doc join. The hashed

@@ -1,5 +1,6 @@
 package graft.queries
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
@@ -49,6 +50,90 @@ object DedupTextQueries {
                     MAX(pos) + 8 AS span_end, COUNT(*) AS n_wins
                   FROM sp GROUP BY doc_id, sid)"""
 
+  /** q41's shingle pair space over `input` (doc_id, `blk`, text): each
+    * doc's distinct 3-shingles as `sh`, their counts as `sizes`, and the
+    * shingles each same-`blk` doc pair shares as `inter`. */
+  private def sqlShingleInter(input: String, blk: String): String = s"""sh AS (
+          SELECT doc_id AS doc, $blk AS blk, unnest($Shingles3) AS shingle
+          FROM $input
+        ), sizes AS (
+          SELECT doc, COUNT(*) AS n_sh FROM sh GROUP BY doc
+        ), inter AS (
+          SELECT a.doc AS a_id, b.doc AS b_id, COUNT(*) AS inter
+          FROM sh a JOIN sh b
+            ON a.blk = b.blk AND a.shingle = b.shingle AND a.doc < b.doc
+          GROUP BY a.doc, b.doc)"""
+
+  /** q41's result over [[sqlShingleInter]]: the pairs whose Jaccard
+    * reaches `threshold`. */
+  private def sqlJaccardPairs(threshold: Double): String = s"""
+        SELECT a_id, b_id, inter,
+               sa.n_sh + sb.n_sh - inter AS uni,
+               CAST(inter AS DOUBLE) / CAST(sa.n_sh + sb.n_sh - inter AS DOUBLE) AS jaccard
+        FROM inter
+        JOIN sizes sa ON sa.doc = a_id
+        JOIN sizes sb ON sb.doc = b_id
+        WHERE CAST(inter AS DOUBLE) / CAST(sa.n_sh + sb.n_sh - inter AS DOUBLE) >= $threshold
+        ORDER BY a_id, b_id"""
+
+  /** The q53 pair graph: q41's source-blocked pairs at Jaccard >= 0.02. */
+  private def dupPairs(docs: DataFrame): DataFrame =
+    Dedup.jaccardPairs(docs, "doc_id", "text",
+      block = "source", n = 3, threshold = 0.02)
+
+  /** The oracle of [[dupPairs]] as `pairs` (a_id, b_id). */
+  private val SqlDupPairs = s"""${sqlShingleInter("documents", "source")}, pairs AS (
+          SELECT a_id, b_id FROM inter
+          JOIN sizes sa ON sa.doc = a_id
+          JOIN sizes sb ON sb.doc = b_id
+          WHERE CAST(inter AS DOUBLE) / CAST(sa.n_sh + sb.n_sh - inter AS DOUBLE) >= 0.02)"""
+
+  /** q53's clusters over [[SqlDupPairs]]: `comp` (v, comp) maps every
+    * paired doc to the least doc id it reaches. Needs WITH RECURSIVE. */
+  private val SqlDupComp = s"""$SqlDupPairs, edges AS (
+          SELECT a_id AS src, b_id AS dst FROM pairs
+          UNION SELECT b_id, a_id FROM pairs
+        ), walk(v, comp) AS (
+          SELECT src, src FROM edges
+          UNION
+          SELECT e.dst, w.comp FROM walk w JOIN edges e ON e.src = w.v
+        ), comp AS (
+          SELECT v, MIN(comp) AS comp FROM walk GROUP BY v
+        )"""
+
+  /** The oracle of `Graph.pageRank(iters = 3)` over `edges` (src, dst)
+    * and the nodes `id` of `nodes`: three damped power iterations,
+    * decimal-locked like the operator (contribution terms and dangling
+    * mass round to 14dp and sum as DECIMAL, order-independent; ranks
+    * re-round to 12dp per pass). Emits `deg`, `nn` and `r0`..`r3`
+    * (v, r), with a trailing comma. */
+  private def sqlPageRank(nodes: String, id: String): String = {
+    def step(i: Int): String = {
+      val p = s"r${i - 1}"
+      s"""
+        c$i AS (
+          SELECT e.dst AS v,
+                 CAST(SUM(CAST(round($p.r / deg.outd, 14) AS DECIMAL(28,14))) AS DOUBLE) AS c
+          FROM edges e JOIN $p ON $p.v = e.src JOIN deg ON deg.v = e.src
+          GROUP BY 1
+        ), d$i AS (
+          SELECT COALESCE(CAST(SUM(CAST(round(x.r, 14) AS DECIMAL(28,14))) AS DOUBLE), 0.0) AS dang
+          FROM $p x ANTI JOIN deg ON deg.v = x.v
+        ), r$i AS (
+          SELECT $p.v,
+                 round((1.0 - 0.85) / nn.nd +
+                       0.85 * (COALESCE(c$i.c, 0.0) + d$i.dang / nn.nd), 12) AS r
+          FROM $p LEFT JOIN c$i ON c$i.v = $p.v, d$i, nn
+        ),"""
+    }
+    s"""deg AS (
+          SELECT src AS v, COUNT(*) AS outd FROM edges GROUP BY 1
+        ), nn AS (SELECT CAST(COUNT(*) AS DOUBLE) AS nd FROM $nodes
+        ), r0 AS (
+          SELECT $id AS v, round(1.0 / nn.nd, 12) AS r FROM $nodes, nn
+        ),${step(1)}${step(2)}${step(3)}"""
+  }
+
   def all: Seq[(String, Q)] = Seq(
 
     // ---- q40: exact dedup groups ----------------------------------------
@@ -70,24 +155,7 @@ object DedupTextQueries {
           block = "source", n = 3, threshold = 0.02)
         .orderBy(col("a_id"), col("b_id")),
       Some(s"""
-        WITH sh AS (
-          SELECT doc_id AS doc, source AS blk, unnest($Shingles3) AS shingle
-          FROM documents
-        ), sizes AS (
-          SELECT doc, COUNT(*) AS n_sh FROM sh GROUP BY doc
-        ), inter AS (
-          SELECT a.doc AS a_id, b.doc AS b_id, COUNT(*) AS inter
-          FROM sh a JOIN sh b
-            ON a.blk = b.blk AND a.shingle = b.shingle AND a.doc < b.doc
-          GROUP BY a.doc, b.doc)
-        SELECT a_id, b_id, inter,
-               sa.n_sh + sb.n_sh - inter AS uni,
-               CAST(inter AS DOUBLE) / CAST(sa.n_sh + sb.n_sh - inter AS DOUBLE) AS jaccard
-        FROM inter
-        JOIN sizes sa ON sa.doc = a_id
-        JOIN sizes sb ON sb.doc = b_id
-        WHERE CAST(inter AS DOUBLE) / CAST(sa.n_sh + sb.n_sh - inter AS DOUBLE) >= 0.02
-        ORDER BY a_id, b_id"""),
+        WITH ${sqlShingleInter("documents", "source")}${sqlJaccardPairs(0.02)}"""),
       "Exact 3-shingle Jaccard, blocked by source to bound the pair space."),
 
     // ---- q139: exact all-pairs Jaccard via prefix filtering ---------------
@@ -117,24 +185,7 @@ object DedupTextQueries {
           SELECT doc_id + 10000000,
                  array_to_string(w[1:greatest(CAST(floor(0.6 * len(w)) AS INT), 1)], ' ')
           FROM w0
-        ), sh AS (
-          SELECT doc_id AS doc, unnest($Shingles3) AS shingle
-          FROM corpus
-        ), sizes AS (
-          SELECT doc, COUNT(*) AS n_sh FROM sh GROUP BY doc
-        ), inter AS (
-          SELECT a.doc AS a_id, b.doc AS b_id, COUNT(*) AS inter
-          FROM sh a JOIN sh b
-            ON a.shingle = b.shingle AND a.doc < b.doc
-          GROUP BY a.doc, b.doc)
-        SELECT a_id, b_id, inter,
-               sa.n_sh + sb.n_sh - inter AS uni,
-               CAST(inter AS DOUBLE) / CAST(sa.n_sh + sb.n_sh - inter AS DOUBLE) AS jaccard
-        FROM inter
-        JOIN sizes sa ON sa.doc = a_id
-        JOIN sizes sb ON sb.doc = b_id
-        WHERE CAST(inter AS DOUBLE) / CAST(sa.n_sh + sb.n_sh - inter AS DOUBLE) >= 0.4
-        ORDER BY a_id, b_id"""),
+        ), ${sqlShingleInter("corpus", "0")}${sqlJaccardPairs(0.4)}"""),
       "EXACT all-pairs near-dup Jaccard (t=0.4) with NO blocking key: " +
         "All-Pairs/PPJoin prefix filtering — rare-first global shingle " +
         "order, per-doc prefix cut, candidates only from shared RARE " +
@@ -356,36 +407,11 @@ object DedupTextQueries {
     "q53_dup_clusters" -> Q(
       (s, d) => {
         val docs = Tables.documents(s, d)
-        val pairs = Dedup.jaccardPairs(docs, "doc_id", "text",
-          block = "source", n = 3, threshold = 0.02)
+        val pairs = dupPairs(docs)
         Dedup.dupClusters(docs, "doc_id", pairs).orderBy(col("doc_id"))
       },
       Some(s"""
-        WITH RECURSIVE sh AS (
-          SELECT doc_id AS doc, source AS blk, unnest($Shingles3) AS shingle
-          FROM documents
-        ), sizes AS (
-          SELECT doc, COUNT(*) AS n_sh FROM sh GROUP BY doc
-        ), inter AS (
-          SELECT a.doc AS a_id, b.doc AS b_id, COUNT(*) AS inter
-          FROM sh a JOIN sh b
-            ON a.blk = b.blk AND a.shingle = b.shingle AND a.doc < b.doc
-          GROUP BY a.doc, b.doc
-        ), pairs AS (
-          SELECT a_id, b_id FROM inter
-          JOIN sizes sa ON sa.doc = a_id
-          JOIN sizes sb ON sb.doc = b_id
-          WHERE CAST(inter AS DOUBLE) / CAST(sa.n_sh + sb.n_sh - inter AS DOUBLE) >= 0.02
-        ), edges AS (
-          SELECT a_id AS src, b_id AS dst FROM pairs
-          UNION SELECT b_id, a_id FROM pairs
-        ), walk(v, comp) AS (
-          SELECT src, src FROM edges
-          UNION
-          SELECT e.dst, w.comp FROM walk w JOIN edges e ON e.src = w.v
-        ), comp AS (
-          SELECT v, MIN(comp) AS comp FROM walk GROUP BY v
-        )
+        WITH RECURSIVE $SqlDupComp
         SELECT d.doc_id, COALESCE(c.comp, d.doc_id) AS component,
                COALESCE(c.comp, d.doc_id) = d.doc_id AS is_canonical
         FROM documents d LEFT JOIN comp c ON c.v = d.doc_id
@@ -397,8 +423,7 @@ object DedupTextQueries {
     "q205_lpa_communities" -> Q(
       (s, d) => {
         val docs = Tables.documents(s, d)
-        val pairs = Dedup.jaccardPairs(docs, "doc_id", "text",
-          block = "source", n = 3, threshold = 0.02)
+        val pairs = dupPairs(docs)
         graft.operators.Graph.labelPropagation(pairs, "a_id", "b_id",
             rounds = 4)
           .select(col("v").as("doc_id"), col("community"))
@@ -722,65 +747,20 @@ object DedupTextQueries {
     "q111_pagerank" -> Q(
       (s, d) => {
         val docs = Tables.documents(s, d)
-        val pairs = Dedup.jaccardPairs(docs, "doc_id", "text",
-          block = "source", n = 3, threshold = 0.02)
+        val pairs = dupPairs(docs)
         val edges = pairs.select(col("a_id").as("src"), col("b_id").as("dst"))
           .unionAll(pairs.select(col("b_id").as("src"), col("a_id").as("dst")))
         graft.operators.Graph.pageRank(docs.select(col("doc_id")), "doc_id",
             edges, "src", "dst", iters = 3)
           .orderBy(col("doc_id"))
       },
-      Some {
-        // one damped power iteration, decimal-locked like the operator:
-        // contribution terms and dangling mass round to 14dp and sum as
-        // DECIMAL (order-independent); ranks re-round to 12dp per pass
-        def step(i: Int): String = {
-          val p = s"r${i - 1}"
-          s"""
-        c$i AS (
-          SELECT e.dst AS v,
-                 CAST(SUM(CAST(round($p.r / deg.outd, 14) AS DECIMAL(28,14))) AS DOUBLE) AS c
-          FROM edges e JOIN $p ON $p.v = e.src JOIN deg ON deg.v = e.src
-          GROUP BY 1
-        ), d$i AS (
-          SELECT COALESCE(CAST(SUM(CAST(round(x.r, 14) AS DECIMAL(28,14))) AS DOUBLE), 0.0) AS dang
-          FROM $p x ANTI JOIN deg ON deg.v = x.v
-        ), r$i AS (
-          SELECT $p.v,
-                 round((1.0 - 0.85) / nn.nd +
-                       0.85 * (COALESCE(c$i.c, 0.0) + d$i.dang / nn.nd), 12) AS r
-          FROM $p LEFT JOIN c$i ON c$i.v = $p.v, d$i, nn
-        ),"""
-        }
-        s"""
-        WITH sh AS (
-          SELECT doc_id AS doc, source AS blk, unnest($Shingles3) AS shingle
-          FROM documents
-        ), sizes AS (
-          SELECT doc, COUNT(*) AS n_sh FROM sh GROUP BY doc
-        ), inter AS (
-          SELECT a.doc AS a_id, b.doc AS b_id, COUNT(*) AS inter
-          FROM sh a JOIN sh b
-            ON a.blk = b.blk AND a.shingle = b.shingle AND a.doc < b.doc
-          GROUP BY a.doc, b.doc
-        ), pairs AS (
-          SELECT a_id, b_id FROM inter
-          JOIN sizes sa ON sa.doc = a_id
-          JOIN sizes sb ON sb.doc = b_id
-          WHERE CAST(inter AS DOUBLE) / CAST(sa.n_sh + sb.n_sh - inter AS DOUBLE) >= 0.02
-        ), edges AS (
+      Some(s"""
+        WITH $SqlDupPairs, edges AS (
           SELECT a_id AS src, b_id AS dst FROM pairs
           UNION ALL SELECT b_id, a_id FROM pairs
-        ), deg AS (
-          SELECT src AS v, COUNT(*) AS outd FROM edges GROUP BY 1
-        ), nn AS (
-          SELECT CAST(COUNT(*) AS DOUBLE) AS nd FROM documents
-        ), r0 AS (
-          SELECT doc_id AS v, round(1.0 / nn.nd, 12) AS r FROM documents, nn
-        ),${step(1)}${step(2)}${step(3)}
+        ), ${sqlPageRank("documents", "doc_id")}
         fin AS (SELECT v, r FROM r3)
-        SELECT v AS doc_id, round(r, 9) AS pr FROM fin ORDER BY v"""
-      },
+        SELECT v AS doc_id, round(r, 9) AS pr FROM fin ORDER BY v"""),
       "PageRank over the near-dup pair graph (3 damped power iterations " +
         "with dangling-mass redistribution): duplication-structure " +
         "centrality for canonical selection. Each pass shuffles one row " +
@@ -942,16 +922,7 @@ object DedupTextQueries {
           SELECT doc_id + 10000000, source,
                  array_to_string(w[1:greatest(CAST(floor(0.6 * len(w)) AS INT), 1)], ' ')
           FROM w0
-        ), sh AS (
-          SELECT doc_id AS doc, source AS blk, unnest($Shingles3) AS shingle
-          FROM corpus
-        ), sizes AS (
-          SELECT doc, COUNT(*) AS n_sh FROM sh GROUP BY doc
-        ), inter AS (
-          SELECT a.doc AS a_id, b.doc AS b_id, COUNT(*) AS inter
-          FROM sh a JOIN sh b
-            ON a.blk = b.blk AND a.shingle = b.shingle AND a.doc < b.doc
-          GROUP BY a.doc, b.doc)
+        ), ${sqlShingleInter("corpus", "source")}
         SELECT a_id, b_id, inter, sa.n_sh AS n_a, sb.n_sh AS n_b,
                CAST(inter AS DOUBLE) / CAST(least(sa.n_sh, sb.n_sh) AS DOUBLE)
                  AS containment,
@@ -1052,17 +1023,7 @@ object DedupTextQueries {
           .orderBy(col("t_permille"))
       },
       Some(s"""
-        WITH sh AS (
-          SELECT doc_id AS doc, source AS blk, unnest($Shingles3) AS shingle
-          FROM documents
-        ), sizes AS (
-          SELECT doc, COUNT(*) AS n_sh FROM sh GROUP BY doc
-        ), inter AS (
-          SELECT a.doc AS a_id, b.doc AS b_id, COUNT(*) AS inter
-          FROM sh a JOIN sh b
-            ON a.blk = b.blk AND a.shingle = b.shingle AND a.doc < b.doc
-          GROUP BY a.doc, b.doc
-        ), pairs AS (
+        WITH ${sqlShingleInter("documents", "source")}, pairs AS (
           SELECT a_id, b_id, inter,
                  sa.n_sh + sb.n_sh - inter AS uni
           FROM inter
@@ -1100,8 +1061,7 @@ object DedupTextQueries {
     "q175_cluster_canonical" -> Q(
       (s, d) => {
         val docs = Tables.documents(s, d)
-        val pairs = Dedup.jaccardPairs(docs, "doc_id", "text",
-          block = "source", n = 3, threshold = 0.02)
+        val pairs = dupPairs(docs)
         val clustered = Dedup.dupClusters(docs, "doc_id", pairs)
           .select(col("doc_id"), col("component"))
         val quality = docs.select(col("doc_id"),
@@ -1115,31 +1075,7 @@ object DedupTextQueries {
           .orderBy(col("doc_id"))
       },
       Some(s"""
-        WITH RECURSIVE sh AS (
-          SELECT doc_id AS doc, source AS blk, unnest($Shingles3) AS shingle
-          FROM documents
-        ), sizes AS (
-          SELECT doc, COUNT(*) AS n_sh FROM sh GROUP BY doc
-        ), inter AS (
-          SELECT a.doc AS a_id, b.doc AS b_id, COUNT(*) AS inter
-          FROM sh a JOIN sh b
-            ON a.blk = b.blk AND a.shingle = b.shingle AND a.doc < b.doc
-          GROUP BY a.doc, b.doc
-        ), pairs AS (
-          SELECT a_id, b_id FROM inter
-          JOIN sizes sa ON sa.doc = a_id
-          JOIN sizes sb ON sb.doc = b_id
-          WHERE CAST(inter AS DOUBLE) / CAST(sa.n_sh + sb.n_sh - inter AS DOUBLE) >= 0.02
-        ), edges AS (
-          SELECT a_id AS src, b_id AS dst FROM pairs
-          UNION SELECT b_id, a_id FROM pairs
-        ), walk(v, comp) AS (
-          SELECT src, src FROM edges
-          UNION
-          SELECT e.dst, w.comp FROM walk w JOIN edges e ON e.src = w.v
-        ), comp AS (
-          SELECT v, MIN(comp) AS comp FROM walk GROUP BY v
-        ), assigned AS (
+        WITH RECURSIVE $SqlDupComp, assigned AS (
           SELECT d.doc_id, COALESCE(c.comp, d.doc_id) AS component,
                  CAST(len(list_distinct($W)) AS INT) AS n_uniq
           FROM documents d LEFT JOIN comp c ON c.v = d.doc_id
@@ -1163,8 +1099,7 @@ object DedupTextQueries {
     "q176_cluster_cosplit" -> Q(
       (s, d) => {
         val docs = Tables.documents(s, d)
-        val pairs = Dedup.jaccardPairs(docs, "doc_id", "text",
-          block = "source", n = 3, threshold = 0.02)
+        val pairs = dupPairs(docs)
         val clustered = Dedup.dupClusters(docs, "doc_id", pairs)
           .select(col("doc_id"), col("component"))
         // split from the CLUSTER LABEL's hash, not the member text:
@@ -1177,31 +1112,7 @@ object DedupTextQueries {
           .orderBy(col("doc_id"))
       },
       Some(s"""
-        WITH RECURSIVE sh AS (
-          SELECT doc_id AS doc, source AS blk, unnest($Shingles3) AS shingle
-          FROM documents
-        ), sizes AS (
-          SELECT doc, COUNT(*) AS n_sh FROM sh GROUP BY doc
-        ), inter AS (
-          SELECT a.doc AS a_id, b.doc AS b_id, COUNT(*) AS inter
-          FROM sh a JOIN sh b
-            ON a.blk = b.blk AND a.shingle = b.shingle AND a.doc < b.doc
-          GROUP BY a.doc, b.doc
-        ), pairs AS (
-          SELECT a_id, b_id FROM inter
-          JOIN sizes sa ON sa.doc = a_id
-          JOIN sizes sb ON sb.doc = b_id
-          WHERE CAST(inter AS DOUBLE) / CAST(sa.n_sh + sb.n_sh - inter AS DOUBLE) >= 0.02
-        ), edges AS (
-          SELECT a_id AS src, b_id AS dst FROM pairs
-          UNION SELECT b_id, a_id FROM pairs
-        ), walk(v, comp) AS (
-          SELECT src, src FROM edges
-          UNION
-          SELECT e.dst, w.comp FROM walk w JOIN edges e ON e.src = w.v
-        ), comp AS (
-          SELECT v, MIN(comp) AS comp FROM walk GROUP BY v
-        ), assigned AS (
+        WITH RECURSIVE $SqlDupComp, assigned AS (
           SELECT d.doc_id, COALESCE(c.comp, d.doc_id) AS component
           FROM documents d LEFT JOIN comp c ON c.v = d.doc_id
         )
@@ -1377,26 +1288,7 @@ object DedupTextQueries {
           .select(col("rank"), col("w"), col("pr"))
           .orderBy(col("rank"))
       },
-      Some {
-        def step(i: Int): String = {
-          val p = s"r${i - 1}"
-          s"""
-        c$i AS (
-          SELECT e.dst AS v,
-                 CAST(SUM(CAST(round($p.r / deg.outd, 14) AS DECIMAL(28,14))) AS DOUBLE) AS c
-          FROM edges e JOIN $p ON $p.v = e.src JOIN deg ON deg.v = e.src
-          GROUP BY 1
-        ), d$i AS (
-          SELECT COALESCE(CAST(SUM(CAST(round(x.r, 14) AS DECIMAL(28,14))) AS DOUBLE), 0.0) AS dang
-          FROM $p x ANTI JOIN deg ON deg.v = x.v
-        ), r$i AS (
-          SELECT $p.v,
-                 round((1.0 - 0.85) / nn.nd +
-                       0.85 * (COALESCE(c$i.c, 0.0) + d$i.dang / nn.nd), 12) AS r
-          FROM $p LEFT JOIN c$i ON c$i.v = $p.v, d$i, nn
-        ),"""
-        }
-        s"""
+      Some(s"""
         WITH t AS (
           SELECT doc_id, unnest(string_split(text, ' ')) AS w,
                  generate_subscripts(string_split(text, ' '), 1) AS pos
@@ -1413,12 +1305,7 @@ object DedupTextQueries {
         ), edges AS (
           SELECT w AS src, w2 AS dst FROM bi
           UNION ALL SELECT w2, w FROM bi
-        ), deg AS (
-          SELECT src AS v, COUNT(*) AS outd FROM edges GROUP BY 1
-        ), nn AS (SELECT CAST(COUNT(*) AS DOUBLE) AS nd FROM nodes
-        ), r0 AS (
-          SELECT w AS v, round(1.0 / nn.nd, 12) AS r FROM nodes, nn
-        ),${step(1)}${step(2)}${step(3)}
+        ), ${sqlPageRank("nodes", "w")}
         fin AS (
           SELECT v AS w, round(r, 9) AS pr,
                  CAST(ROW_NUMBER() OVER (ORDER BY round(r, 9) DESC, v) AS INT)
@@ -1426,8 +1313,7 @@ object DedupTextQueries {
           FROM r3)
         SELECT rank, w, pr FROM fin
         WHERE rank <= 20
-        ORDER BY rank"""
-      },
+        ORDER BY rank"""),
       "TextRank keyword extraction — centrality in the word " +
         "co-occurrence graph (Mihalcea & Tarau): support-filtered " +
         "adjacency pairs become symmetric edges, three damped " +

@@ -173,16 +173,11 @@ object OracleGen {
         ORDER BY a_id, b_id"""
   }
 
-  /** q34 oracle: random-hyperplane LSH near-dup, mirroring
-    * [[graft.plans.LshBuckets]] — hyperplane sign = parity of the first
-    * hex digit of md5("seed:t:i:j"), bucket = nBits projection sign
-    * bits, candidates share any (table, bucket), rescored with exact
-    * cosine. Filter on the raw similarity, round for output (same as
-    * the Spark side). */
-  def q34Sql(dim: Int, threshold: Double, nBits: Int, nTables: Int, seed: Long): String = {
-    val cos = "list_inner_product(ea.emb, eb.emb) / " +
-      "(sqrt(list_inner_product(ea.emb, ea.emb)) * sqrt(list_inner_product(eb.emb, eb.emb)))"
-    s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb FROM embeddings),
+  /** The random-hyperplane LSH candidates of q34: `e` (vec_id, emb),
+    * the md5 hyperplane signs, each vector's bucket per table, and the
+    * pairs that share any (table, bucket) as `cand` (a_id, b_id). */
+  private def lshCandCtes(dim: Int, nBits: Int, nTables: Int, seed: Long): String =
+    s"""e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb FROM embeddings),
         grid AS (
           SELECT tt.range AS t, ii.range AS i, jj.range AS j
           FROM range(0, $nTables) tt, range(0, $nBits) ii, range(0, $dim) jj),
@@ -203,7 +198,18 @@ object OracleGen {
         cand AS (
           SELECT DISTINCT a.vec_id AS a_id, b.vec_id AS b_id
           FROM buckets a JOIN buckets b
-            ON a.t = b.t AND a.bucket = b.bucket AND a.vec_id < b.vec_id)
+            ON a.t = b.t AND a.bucket = b.bucket AND a.vec_id < b.vec_id)"""
+
+  /** q34 oracle: random-hyperplane LSH near-dup, mirroring
+    * [[graft.plans.LshBuckets]] — hyperplane sign = parity of the first
+    * hex digit of md5("seed:t:i:j"), bucket = nBits projection sign
+    * bits, candidates share any (table, bucket), rescored with exact
+    * cosine. Filter on the raw similarity, round for output (same as
+    * the Spark side). */
+  def q34Sql(dim: Int, threshold: Double, nBits: Int, nTables: Int, seed: Long): String = {
+    val cos = "list_inner_product(ea.emb, eb.emb) / " +
+      "(sqrt(list_inner_product(ea.emb, ea.emb)) * sqrt(list_inner_product(eb.emb, eb.emb)))"
+    s"""WITH ${lshCandCtes(dim, nBits, nTables, seed)}
         SELECT c.a_id, c.b_id, round($cos, 6) AS sim
         FROM cand c
         JOIN e ea ON ea.vec_id = c.a_id
@@ -220,28 +226,7 @@ object OracleGen {
       "(sqrt(list_inner_product(ea.emb, ea.emb)) * sqrt(list_inner_product(eb.emb, eb.emb)))"
     val cosXY = "list_inner_product(a.emb, b.emb) / " +
       "(sqrt(list_inner_product(a.emb, a.emb)) * sqrt(list_inner_product(b.emb, b.emb)))"
-    s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb FROM embeddings),
-        grid AS (
-          SELECT tt.range AS t, ii.range AS i, jj.range AS j
-          FROM range(0, $nTables) tt, range(0, $nBits) ii, range(0, $dim) jj),
-        signs AS (
-          SELECT t, i,
-                 list(CASE WHEN CAST(concat('0x', substr(md5(
-                     '$seed:' || CAST(t AS VARCHAR) || ':' || CAST(i AS VARCHAR) || ':' || CAST(j AS VARCHAR)
-                   ), 1, 1)) AS INT) % 2 = 0 THEN 1.0 ELSE -1.0 END ORDER BY j) AS s
-          FROM grid GROUP BY t, i),
-        proj AS (
-          SELECT e.vec_id, s.t, s.i,
-                 list_aggregate(list_transform(range(1, ${dim + 1}), j -> e.emb[j] * s.s[j]), 'sum') AS p
-          FROM e CROSS JOIN signs s),
-        buckets AS (
-          SELECT vec_id, t,
-                 SUM(CASE WHEN p >= 0 THEN (CAST(1 AS BIGINT) << i) ELSE 0 END) AS bucket
-          FROM proj GROUP BY vec_id, t),
-        cand AS (
-          SELECT DISTINCT a.vec_id AS a_id, b.vec_id AS b_id
-          FROM buckets a JOIN buckets b
-            ON a.t = b.t AND a.bucket = b.bucket AND a.vec_id < b.vec_id),
+    s"""WITH ${lshCandCtes(dim, nBits, nTables, seed)},
         lsh AS (
           SELECT c.a_id, c.b_id
           FROM cand c
@@ -421,6 +406,24 @@ object OracleGen {
     """
     }
     sb.toString
+  }
+
+  /** The CTEs `feats`, `q*` and `sc` (doc, y, score, pred) of q104's
+    * scored documents, y = the SQL predicate `label`; the Spark twin is
+    * `TrainingQueries.qualityScored`. No trailing comma. */
+  def qualityScoredCtes(label: String = "length(text) > 300"): String = {
+    val w = "string_split(text, ' ')"
+    val x = Seq("x1", "x2", "x3")
+    s"""feats AS MATERIALIZED (
+          SELECT doc_id AS doc,
+                 CAST(len($w) AS DOUBLE) / 64.0 AS x1,
+                 CAST(len(list_distinct($w)) AS DOUBLE) / CAST(len($w) AS DOUBLE) AS x2,
+                 CAST(length(text) AS DOUBLE) / CAST(len($w) AS DOUBLE) AS x3,
+                 CASE WHEN $label THEN CAST(1 AS DOUBLE)
+                      ELSE CAST(0 AS DOUBLE) END AS y
+          FROM documents),
+        ${logitCtes("q", "feats", x, 4, "0.125")}
+        sc AS (${logitScoreSql("q", "feats", x, 4)})"""
   }
 
   /** Final scoring select for [[logitCtes]]: per-doc fast-sigmoid score

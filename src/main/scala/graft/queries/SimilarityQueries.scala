@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.types.DecimalType
@@ -86,6 +86,218 @@ object SimilarityQueries {
              ROW_NUMBER() OVER (PARTITION BY label ORDER BY vec_id) AS rn
       FROM e WHERE label <= 4) WHERE rn = 1"""
 
+  /** Top 3 of `sims` (p_id, t_id, sim) per probe, by sim then t_id. */
+  private val SqlTop3 = """ranked AS (
+          SELECT p_id, t_id, sim,
+                 ROW_NUMBER() OVER (PARTITION BY p_id ORDER BY sim DESC, t_id) AS rank
+          FROM sims)
+        SELECT p_id, t_id, sim, CAST(rank AS INT) AS rank
+        FROM ranked WHERE rank <= 3
+        ORDER BY p_id, rank"""
+
+  /** q31's oracle, which q127 shares: the exact cosine top 3 of the
+    * probes vec_id < 100 over the targets label >= 5. */
+  private val SqlCosineTop3 = s"""
+        WITH e AS ($SqlEmb),
+        sims AS (
+          SELECT p.vec_id AS p_id, t.vec_id AS t_id,
+            round(list_inner_product(p.emb, t.emb) /
+              (sqrt(list_inner_product(p.emb, p.emb)) * sqrt(list_inner_product(t.emb, t.emb))),
+              6) AS sim
+          FROM e p, e t
+          WHERE p.vec_id < 100 AND t.label >= 5),
+        $SqlTop3"""
+
+  /** q35's coarse quantizer: the label centroids of `e` as `cent` (cell, cv). */
+  private val SqlLabelCent = """cent AS (
+          SELECT cell, list(c ORDER BY dim) AS cv FROM (
+            SELECT label AS cell, dim, round(AVG(v), 9) AS c
+            FROM (SELECT label, unnest(emb) AS v,
+                         generate_subscripts(emb, 1) AS dim FROM e)
+            GROUP BY label, dim)
+          GROUP BY cell)"""
+
+  /** IVF routing over `e` and `cent` (cell, cv): each vector's nearest
+    * cell (`asg`), the `nProbe` nearest cells of each probe vec_id < 100
+    * (`pc`), and the in-cell cosines (`sims`). */
+  private def sqlIvfSims(nProbe: Int): String = s"""asg AS (
+          SELECT vec_id AS t_id, emb AS t_vec, cell FROM (
+            SELECT e.vec_id, e.emb, c.cell,
+                   ROW_NUMBER() OVER (PARTITION BY e.vec_id
+                     ORDER BY ${OracleGen.sqDist("e.emb", "c.cv", 64)}, c.cell) AS rn
+            FROM e CROSS JOIN cent c) WHERE rn = 1),
+        pc AS (
+          SELECT p_id, p_vec, cell FROM (
+            SELECT e.vec_id AS p_id, e.emb AS p_vec, c.cell,
+                   ROW_NUMBER() OVER (PARTITION BY e.vec_id
+                     ORDER BY ${OracleGen.sqDist("e.emb", "c.cv", 64)}, c.cell) AS rn
+            FROM e CROSS JOIN cent c WHERE e.vec_id < 100) WHERE rn <= $nProbe),
+        sims AS (
+          SELECT pc.p_id, a.t_id,
+                 round(list_inner_product(pc.p_vec, a.t_vec) /
+                   (sqrt(list_inner_product(pc.p_vec, pc.p_vec)) *
+                    sqrt(list_inner_product(a.t_vec, a.t_vec))), 6) AS sim
+          FROM pc JOIN asg a USING (cell))"""
+
+  private val Recall = ((col("n_exact") - col("n_missed")).cast("double") /
+    col("n_exact").cast("double")).as("recall")
+
+  /** The summary row of an ANN recall audit: `approx` (p_id, t_id) is
+    * the path under audit, `exact` (p_id, t_id, metric) the exact
+    * top-k; `worst` aggregates the metric of the pairs `approx` missed
+    * into the last column, and `reported` (name -> value) names the
+    * audited settings after n_probes. */
+  private def recallRow(exact: DataFrame, approx: DataFrame,
+      worstName: String, worst: Column, reported: (String, Int)*): DataFrame = {
+    val missed = exact.join(approx, Seq("p_id", "t_id"), "left_anti")
+    val ne = exact.agg(count(lit(1)).as("n_exact"),
+      countDistinct(col("p_id")).as("n_probes"))
+    val nm = missed.agg(count(lit(1)).as("n_missed"), worst.as(worstName))
+    ne.crossJoin(nm).select(col("n_probes") +: reported.map { case (n, v) => lit(v).as(n) } :+
+      col("n_exact") :+ col("n_missed") :+ Recall :+ col(worstName): _*)
+  }
+
+  /** The oracle of [[recallRow]]: `ex` is the exact top-k CTE and
+    * `approx` the audited one; `worst` is the SQL aggregate. */
+  private def sqlRecall(approx: String, worstName: String, worst: String,
+      reported: (String, Int)*): String =
+    s"""missed AS (
+          SELECT ex.* FROM ex
+          ANTI JOIN $approx ON $approx.p_id = ex.p_id AND $approx.t_id = ex.t_id),
+        ne AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_exact,
+                      CAST(COUNT(DISTINCT p_id) AS BIGINT) AS n_probes
+               FROM ex),
+        nm AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_missed,
+                      $worst AS $worstName FROM missed)
+        SELECT n_probes, ${reported.map { case (n, v) => s"$v AS $n, " }.mkString}n_exact, n_missed,
+               CAST(n_exact - n_missed AS DOUBLE) /
+                 CAST(n_exact AS DOUBLE) AS recall,
+               $worstName
+        FROM ne CROSS JOIN nm"""
+
+  /** q208/q209: q35's IVF top 3 at `nProbe`, audited against the exact
+    * cosine top 3 of the same probes and targets. */
+  private def ivfRecall(nProbe: Int, reported: (String, Int), doc: String): Q = Q(
+    (s, d) => {
+      val e = emb(s, d)
+      val probes = e.filter(col("vec_id") < 100)
+        .select(col("vec_id").as("p_id"), col("emb").as("p_vec"))
+      val tg = e.select(col("vec_id").as("t_id"), col("emb").as("t_vec"))
+      val quantizer = Similarity.centroidsAsQuantizer(e, "label", "emb")
+      val ivf = Similarity.ivfTopK(probes, "p_id", "p_vec",
+          tg, "t_id", "t_vec", quantizer, "cell", "centroid_vec",
+          k = 3, nProbe = nProbe)
+        .select(col("p_id"), col("t_id")).localCheckpoint()
+      val exact = Similarity.topK(probes, "p_id", "p_vec",
+          tg, "t_id", "t_vec", k = 3)
+        .select(col("p_id"), col("t_id"), col("sim"))
+      recallRow(exact, ivf, "max_missed_sim", max(col("sim")), reported)
+    },
+    Some(s"""
+        WITH e AS ($SqlEmb),
+        $SqlLabelCent,
+        ${sqlIvfSims(nProbe)},
+        ivf AS (
+          SELECT p_id, t_id FROM (
+            SELECT p_id, t_id,
+                   ROW_NUMBER() OVER (PARTITION BY p_id
+                     ORDER BY sim DESC, t_id) AS rank
+            FROM sims) WHERE rank <= 3),
+        ex AS (
+          SELECT p_id, t_id, sim FROM (
+            SELECT p.vec_id AS p_id, t.vec_id AS t_id,
+                   round(list_inner_product(p.emb, t.emb) /
+                     (sqrt(list_inner_product(p.emb, p.emb)) *
+                      sqrt(list_inner_product(t.emb, t.emb))), 6) AS sim,
+                   ROW_NUMBER() OVER (PARTITION BY p.vec_id
+                     ORDER BY round(list_inner_product(p.emb, t.emb) /
+                       (sqrt(list_inner_product(p.emb, p.emb)) *
+                        sqrt(list_inner_product(t.emb, t.emb))), 6) DESC,
+                       t.vec_id) AS rank
+            FROM e p, e t WHERE p.vec_id < 100) WHERE rank <= 3),
+        ${sqlRecall("ivf", "max_missed_sim", "MAX(sim)", reported)}"""),
+    doc)
+
+  /** q192/q193: the q34 LSH pairs at (`nBits`, `nTables`), audited
+    * against the q33 exact pair space; `reported` columns lead. */
+  private def lshRecall(e: DataFrame, nBits: Int, nTables: Int,
+      reported: (String, Int)*): DataFrame = {
+    val exact = Similarity.nearDupPairs(e, "vec_id", "emb", threshold = 0.4)
+      .select(col("a_id"), col("b_id"), col("sim"))
+    val lsh = Similarity.lshNearDup(e, "vec_id", "emb",
+        threshold = 0.4, nBits = nBits, nTables = nTables)
+      .select(col("a_id"), col("b_id")).localCheckpoint()
+    val missed = exact.join(lsh, Seq("a_id", "b_id"), "left_anti")
+    val ne = exact.agg(count(lit(1)).as("n_exact"))
+    val nl = lsh.agg(count(lit(1)).as("n_lsh"))
+    val nm = missed.agg(count(lit(1)).as("n_missed"),
+      max(col("sim")).as("max_missed_sim"))
+    ne.crossJoin(nl).crossJoin(nm)
+      .select(reported.map { case (n, v) => lit(v).as(n) } ++ Seq(
+        col("n_exact"), col("n_lsh"), col("n_missed"), Recall,
+        col("max_missed_sim")): _*)
+  }
+
+  /** PQ over `e`: `m` × `k`-cell codebooks trained on vec_id < 200, the
+    * codes of every vector (t_id, codes), and the probes vec_id < 50
+    * (p_id, p_vec) — the q73 set-up. */
+  private def pqIndex(e: DataFrame, m: Int, k: Int): (DataFrame, DataFrame, DataFrame) = {
+    val books = Similarity.pqCodebooks(
+      e.filter(col("vec_id") < 200), "vec_id", "emb", m = m, k = k, iters = 2)
+    val coded = Similarity.pqEncode(e, "vec_id", "emb", books)
+      .select(col("vec_id").as("t_id"), col("codes"))
+    val probes = e.filter(col("vec_id") < 50)
+      .select(col("vec_id").as("p_id"), col("emb").as("p_vec"))
+    (books, coded, probes)
+  }
+
+  /** The oracle of [[pqIndex]] followed by each probe's ADC distance to
+    * every coded target (`scored` p_id, t_id, adc). */
+  private def sqlPqScored(m: Int, k: Int): String = {
+    val sd = 64 / m
+    s"""
+        WITH e AS ($SqlEmbBare),
+        samp AS (SELECT vec_id, emb FROM e WHERE vec_id < 200),
+        ${OracleGen.pqBooksCtes("", "samp", m = m, subDim = sd, k = k, iters = 2)}
+        ${OracleGen.pqEncodeCte("enc", "", "e", m = m, subDim = sd)}
+        probes AS (SELECT vec_id AS p_id, emb FROM e WHERE vec_id < 50),
+        dtab AS (
+          SELECT p.p_id, b.sub, b.cell,
+                 ${OracleGen.sqDist(s"p.emb[(b.sub*$sd+1):(b.sub*$sd+$sd)]", "b.c_vec", sd)} AS d
+          FROM probes p CROSS JOIN books b),
+        tc AS (SELECT vec_id AS t_id, unnest(codes) AS cell,
+                      generate_subscripts(codes, 1) - 1 AS sub FROM enc),
+        scored AS (
+          SELECT dt.p_id, tc.t_id, round(SUM(dt.d), 6) AS adc
+          FROM tc JOIN dtab dt ON dt.sub = tc.sub AND dt.cell = tc.cell
+          GROUP BY dt.p_id, tc.t_id)"""
+  }
+
+  /** The exact squared-L2 top 3 of each probe over `tg`
+    * (p_id, t_id, d2) — the baseline of the PQ audits. */
+  private def exactL2Top3(probes: DataFrame, tg: DataFrame): DataFrame =
+    rankL2(probes.crossJoin(tg)).select(col("p_id"), col("t_id"), col("d2"))
+
+  /** Rank (p_id, p_vec, t_id, t_vec) rows by rounded squared L2 per
+    * probe and keep the top 3. */
+  private def rankL2(pairs: DataFrame): DataFrame = {
+    val w = Window.partitionBy(col("p_id")).orderBy(col("d2"), col("t_id"))
+    pairs.select(col("p_id"), col("t_id"),
+        round(fastSquaredL2(col("p_vec"), col("t_vec")), 6).as("d2"))
+      .withColumn("rank", row_number().over(w))
+      .filter(col("rank") <= 3)
+  }
+
+  /** The oracle of [[exactL2Top3]] as `ex`. */
+  private val SqlExactL2Top3 = s"""ex AS (
+          SELECT p_id, t_id, d2 FROM (
+            SELECT p.p_id, t.vec_id AS t_id,
+                   round(${OracleGen.sqDist("p.emb", "t.emb", 64)}, 6) AS d2,
+                   ROW_NUMBER() OVER (PARTITION BY p.p_id
+                     ORDER BY round(${OracleGen.sqDist("p.emb", "t.emb", 64)}, 6),
+                       t.vec_id) AS rank
+            FROM probes p CROSS JOIN e t) WHERE rank <= 3)"""
+
   def all: Seq[(String, Q)] = Seq(
 
     // ---- q30: broadcast threshold match, first-match-wins ----------------
@@ -127,22 +339,7 @@ object SimilarityQueries {
         Similarity.topK(probes, "p_id", "p_vec", tg, "t_id", "t_vec", k = 3)
           .orderBy(col("p_id"), col("rank"))
       },
-      Some(s"""
-        WITH e AS ($SqlEmb),
-        sims AS (
-          SELECT p.vec_id AS p_id, t.vec_id AS t_id,
-            round(list_inner_product(p.emb, t.emb) /
-              (sqrt(list_inner_product(p.emb, p.emb)) * sqrt(list_inner_product(t.emb, t.emb))),
-              6) AS sim
-          FROM e p, e t
-          WHERE p.vec_id < 100 AND t.label >= 5),
-        ranked AS (
-          SELECT p_id, t_id, sim,
-            ROW_NUMBER() OVER (PARTITION BY p_id ORDER BY sim DESC, t_id) AS rank
-          FROM sims)
-        SELECT p_id, t_id, sim, CAST(rank AS INT) AS rank
-        FROM ranked WHERE rank <= 3
-        ORDER BY p_id, rank"""),
+      Some(SqlCosineTop3),
       "ANN baseline: exact cosine top-3 per probe via broadcast + window."),
 
     // ---- q201: embedding centroid drift ----------------------------------
@@ -241,127 +438,15 @@ object SimilarityQueries {
       },
       Some(s"""
         WITH e AS ($SqlEmb),
-        cent AS (
-          SELECT cell, list(c ORDER BY dim) AS cv FROM (
-            SELECT label AS cell, dim, round(AVG(v), 9) AS c
-            FROM (SELECT label, unnest(emb) AS v,
-                         generate_subscripts(emb, 1) AS dim FROM e)
-            GROUP BY label, dim)
-          GROUP BY cell),
-        asg AS (
-          SELECT vec_id AS t_id, emb AS t_vec, cell FROM (
-            SELECT e.vec_id, e.emb, c.cell,
-                   ROW_NUMBER() OVER (PARTITION BY e.vec_id
-                     ORDER BY ${OracleGen.sqDist("e.emb", "c.cv", 64)}, c.cell) AS rn
-            FROM e CROSS JOIN cent c) WHERE rn = 1),
-        pc AS (
-          SELECT p_id, p_vec, cell FROM (
-            SELECT e.vec_id AS p_id, e.emb AS p_vec, c.cell,
-                   ROW_NUMBER() OVER (PARTITION BY e.vec_id
-                     ORDER BY ${OracleGen.sqDist("e.emb", "c.cv", 64)}, c.cell) AS rn
-            FROM e CROSS JOIN cent c WHERE e.vec_id < 100) WHERE rn <= 4),
-        sims AS (
-          SELECT pc.p_id, a.t_id,
-                 round(list_inner_product(pc.p_vec, a.t_vec) /
-                   (sqrt(list_inner_product(pc.p_vec, pc.p_vec)) *
-                    sqrt(list_inner_product(a.t_vec, a.t_vec))), 6) AS sim
-          FROM pc JOIN asg a USING (cell)),
-        ranked AS (
-          SELECT p_id, t_id, sim,
-                 ROW_NUMBER() OVER (PARTITION BY p_id ORDER BY sim DESC, t_id) AS rank
-          FROM sims)
-        SELECT p_id, t_id, sim, CAST(rank AS INT) AS rank
-        FROM ranked WHERE rank <= 3
-        ORDER BY p_id, rank"""),
+        $SqlLabelCent,
+        ${sqlIvfSims(4)},
+        $SqlTop3"""),
       "IVF scale path: coarse-quantized cells, nProbe-bounded search — " +
         "the whole cell routing is recomputed by the oracle; recall vs " +
         "exact q31 in tests."),
 
     // ---- q208: IVF recall audit (the ANN path measures itself) -----------
-    "q208_ivf_recall" -> Q(
-      (s, d) => {
-        val e = emb(s, d)
-        val probes = e.filter(col("vec_id") < 100)
-          .select(col("vec_id").as("p_id"), col("emb").as("p_vec"))
-        val tg = e.select(col("vec_id").as("t_id"), col("emb").as("t_vec"))
-        val quantizer = Similarity.centroidsAsQuantizer(e, "label", "emb")
-        val ivf = Similarity.ivfTopK(probes, "p_id", "p_vec",
-            tg, "t_id", "t_vec", quantizer, "cell", "centroid_vec",
-            k = 3, nProbe = 4)
-          .select(col("p_id"), col("t_id")).localCheckpoint()
-        val exact = Similarity.topK(probes, "p_id", "p_vec",
-            tg, "t_id", "t_vec", k = 3)
-          .select(col("p_id"), col("t_id"), col("sim"))
-        val missed = exact.join(ivf, Seq("p_id", "t_id"), "left_anti")
-        val ne = exact.agg(count(lit(1)).as("n_exact"),
-          countDistinct(col("p_id")).as("n_probes"))
-        val nm = missed.agg(count(lit(1)).as("n_missed"),
-          max(col("sim")).as("max_missed_sim"))
-        ne.crossJoin(nm)
-          .select(col("n_probes"), lit(3).as("k"), col("n_exact"),
-            col("n_missed"),
-            ((col("n_exact") - col("n_missed")).cast("double") /
-              col("n_exact").cast("double")).as("recall"),
-            col("max_missed_sim"))
-      },
-      Some(s"""
-        WITH e AS ($SqlEmb),
-        cent AS (
-          SELECT cell, list(c ORDER BY dim) AS cv FROM (
-            SELECT label AS cell, dim, round(AVG(v), 9) AS c
-            FROM (SELECT label, unnest(emb) AS v,
-                         generate_subscripts(emb, 1) AS dim FROM e)
-            GROUP BY label, dim)
-          GROUP BY cell),
-        asg AS (
-          SELECT vec_id AS t_id, emb AS t_vec, cell FROM (
-            SELECT e.vec_id, e.emb, c.cell,
-                   ROW_NUMBER() OVER (PARTITION BY e.vec_id
-                     ORDER BY ${OracleGen.sqDist("e.emb", "c.cv", 64)}, c.cell) AS rn
-            FROM e CROSS JOIN cent c) WHERE rn = 1),
-        pc AS (
-          SELECT p_id, p_vec, cell FROM (
-            SELECT e.vec_id AS p_id, e.emb AS p_vec, c.cell,
-                   ROW_NUMBER() OVER (PARTITION BY e.vec_id
-                     ORDER BY ${OracleGen.sqDist("e.emb", "c.cv", 64)}, c.cell) AS rn
-            FROM e CROSS JOIN cent c WHERE e.vec_id < 100) WHERE rn <= 4),
-        sims AS (
-          SELECT pc.p_id, a.t_id,
-                 round(list_inner_product(pc.p_vec, a.t_vec) /
-                   (sqrt(list_inner_product(pc.p_vec, pc.p_vec)) *
-                    sqrt(list_inner_product(a.t_vec, a.t_vec))), 6) AS sim
-          FROM pc JOIN asg a USING (cell)),
-        ivf AS (
-          SELECT p_id, t_id FROM (
-            SELECT p_id, t_id,
-                   ROW_NUMBER() OVER (PARTITION BY p_id
-                     ORDER BY sim DESC, t_id) AS rank
-            FROM sims) WHERE rank <= 3),
-        ex AS (
-          SELECT p_id, t_id, sim FROM (
-            SELECT p.vec_id AS p_id, t.vec_id AS t_id,
-                   round(list_inner_product(p.emb, t.emb) /
-                     (sqrt(list_inner_product(p.emb, p.emb)) *
-                      sqrt(list_inner_product(t.emb, t.emb))), 6) AS sim,
-                   ROW_NUMBER() OVER (PARTITION BY p.vec_id
-                     ORDER BY round(list_inner_product(p.emb, t.emb) /
-                       (sqrt(list_inner_product(p.emb, p.emb)) *
-                        sqrt(list_inner_product(t.emb, t.emb))), 6) DESC,
-                       t.vec_id) AS rank
-            FROM e p, e t WHERE p.vec_id < 100) WHERE rank <= 3),
-        missed AS (
-          SELECT ex.p_id, ex.t_id, ex.sim FROM ex
-          ANTI JOIN ivf ON ivf.p_id = ex.p_id AND ivf.t_id = ex.t_id),
-        ne AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_exact,
-                      CAST(COUNT(DISTINCT p_id) AS BIGINT) AS n_probes
-               FROM ex),
-        nm AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_missed,
-                      MAX(sim) AS max_missed_sim FROM missed)
-        SELECT n_probes, 3 AS k, n_exact, n_missed,
-               CAST(n_exact - n_missed AS DOUBLE) /
-                 CAST(n_exact AS DOUBLE) AS recall,
-               max_missed_sim
-        FROM ne CROSS JOIN nm"""),
+    "q208_ivf_recall" -> ivfRecall(nProbe = 4, "k" -> 3,
       "Recall audit of the q35 IVF path against the exact cosine top-k " +
         "over the SAME probe/target sets — the ANN operator measuring " +
         "its own quality like q192 does for LSH (run per corpus before " +
@@ -373,90 +458,7 @@ object SimilarityQueries {
         "sample slice; the IVF arm is the production path."),
 
     // ---- q209: recall-tuned IVF (audited) ---------------------------------
-    "q209_ivf_tuned" -> Q(
-      (s, d) => {
-        val e = emb(s, d)
-        val probes = e.filter(col("vec_id") < 100)
-          .select(col("vec_id").as("p_id"), col("emb").as("p_vec"))
-        val tg = e.select(col("vec_id").as("t_id"), col("emb").as("t_vec"))
-        val quantizer = Similarity.centroidsAsQuantizer(e, "label", "emb")
-        val ivf = Similarity.ivfTopK(probes, "p_id", "p_vec",
-            tg, "t_id", "t_vec", quantizer, "cell", "centroid_vec",
-            k = 3, nProbe = 8)
-          .select(col("p_id"), col("t_id")).localCheckpoint()
-        val exact = Similarity.topK(probes, "p_id", "p_vec",
-            tg, "t_id", "t_vec", k = 3)
-          .select(col("p_id"), col("t_id"), col("sim"))
-        val missed = exact.join(ivf, Seq("p_id", "t_id"), "left_anti")
-        val ne = exact.agg(count(lit(1)).as("n_exact"),
-          countDistinct(col("p_id")).as("n_probes"))
-        val nm = missed.agg(count(lit(1)).as("n_missed"),
-          max(col("sim")).as("max_missed_sim"))
-        ne.crossJoin(nm)
-          .select(col("n_probes"), lit(8).as("n_probe"), col("n_exact"),
-            col("n_missed"),
-            ((col("n_exact") - col("n_missed")).cast("double") /
-              col("n_exact").cast("double")).as("recall"),
-            col("max_missed_sim"))
-      },
-      Some(s"""
-        WITH e AS ($SqlEmb),
-        cent AS (
-          SELECT cell, list(c ORDER BY dim) AS cv FROM (
-            SELECT label AS cell, dim, round(AVG(v), 9) AS c
-            FROM (SELECT label, unnest(emb) AS v,
-                         generate_subscripts(emb, 1) AS dim FROM e)
-            GROUP BY label, dim)
-          GROUP BY cell),
-        asg AS (
-          SELECT vec_id AS t_id, emb AS t_vec, cell FROM (
-            SELECT e.vec_id, e.emb, c.cell,
-                   ROW_NUMBER() OVER (PARTITION BY e.vec_id
-                     ORDER BY ${OracleGen.sqDist("e.emb", "c.cv", 64)}, c.cell) AS rn
-            FROM e CROSS JOIN cent c) WHERE rn = 1),
-        pc AS (
-          SELECT p_id, p_vec, cell FROM (
-            SELECT e.vec_id AS p_id, e.emb AS p_vec, c.cell,
-                   ROW_NUMBER() OVER (PARTITION BY e.vec_id
-                     ORDER BY ${OracleGen.sqDist("e.emb", "c.cv", 64)}, c.cell) AS rn
-            FROM e CROSS JOIN cent c WHERE e.vec_id < 100) WHERE rn <= 8),
-        sims AS (
-          SELECT pc.p_id, a.t_id,
-                 round(list_inner_product(pc.p_vec, a.t_vec) /
-                   (sqrt(list_inner_product(pc.p_vec, pc.p_vec)) *
-                    sqrt(list_inner_product(a.t_vec, a.t_vec))), 6) AS sim
-          FROM pc JOIN asg a USING (cell)),
-        ivf AS (
-          SELECT p_id, t_id FROM (
-            SELECT p_id, t_id,
-                   ROW_NUMBER() OVER (PARTITION BY p_id
-                     ORDER BY sim DESC, t_id) AS rank
-            FROM sims) WHERE rank <= 3),
-        ex AS (
-          SELECT p_id, t_id, sim FROM (
-            SELECT p.vec_id AS p_id, t.vec_id AS t_id,
-                   round(list_inner_product(p.emb, t.emb) /
-                     (sqrt(list_inner_product(p.emb, p.emb)) *
-                      sqrt(list_inner_product(t.emb, t.emb))), 6) AS sim,
-                   ROW_NUMBER() OVER (PARTITION BY p.vec_id
-                     ORDER BY round(list_inner_product(p.emb, t.emb) /
-                       (sqrt(list_inner_product(p.emb, p.emb)) *
-                        sqrt(list_inner_product(t.emb, t.emb))), 6) DESC,
-                       t.vec_id) AS rank
-            FROM e p, e t WHERE p.vec_id < 100) WHERE rank <= 3),
-        missed AS (
-          SELECT ex.p_id, ex.t_id, ex.sim FROM ex
-          ANTI JOIN ivf ON ivf.p_id = ex.p_id AND ivf.t_id = ex.t_id),
-        ne AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_exact,
-                      CAST(COUNT(DISTINCT p_id) AS BIGINT) AS n_probes
-               FROM ex),
-        nm AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_missed,
-                      MAX(sim) AS max_missed_sim FROM missed)
-        SELECT n_probes, 8 AS n_probe, n_exact, n_missed,
-               CAST(n_exact - n_missed AS DOUBLE) /
-                 CAST(n_exact AS DOUBLE) AS recall,
-               max_missed_sim
-        FROM ne CROSS JOIN nm"""),
+    "q209_ivf_tuned" -> ivfRecall(nProbe = 8, "n_probe" -> 8,
       "The q208 audit closed into a fix: widening nProbe 4 -> 8 (of 10 " +
         "cells) re-audits recall on the same exact baseline — the " +
         "audit-then-tune loop q192/q193 established for LSH, applied " +
@@ -476,24 +478,7 @@ object SimilarityQueries {
 
     // ---- q192: LSH recall audit (the operator measures itself) ----------
     "q192_lsh_recall" -> Q(
-      (s, d) => {
-        val e = emb(s, d)
-        val exact = Similarity.nearDupPairs(e, "vec_id", "emb", threshold = 0.4)
-          .select(col("a_id"), col("b_id"), col("sim"))
-        val lsh = Similarity.lshNearDup(e, "vec_id", "emb",
-            threshold = 0.4, nBits = 6, nTables = 6)
-          .select(col("a_id"), col("b_id")).localCheckpoint()
-        val missed = exact.join(lsh, Seq("a_id", "b_id"), "left_anti")
-        val ne = exact.agg(count(lit(1)).as("n_exact"))
-        val nl = lsh.agg(count(lit(1)).as("n_lsh"))
-        val nm = missed.agg(count(lit(1)).as("n_missed"),
-          max(col("sim")).as("max_missed_sim"))
-        ne.crossJoin(nl).crossJoin(nm)
-          .select(col("n_exact"), col("n_lsh"), col("n_missed"),
-            ((col("n_exact") - col("n_missed")).cast("double") /
-              col("n_exact").cast("double")).as("recall"),
-            col("max_missed_sim"))
-      },
+      (s, d) => lshRecall(emb(s, d), nBits = 6, nTables = 6),
       Some(OracleGen.q192Sql(dim = 64, threshold = 0.4, nBits = 6,
         nTables = 6, seed = 1000)),
       "Recall audit of the q34 LSH path against the q33 exact pair " +
@@ -513,22 +498,7 @@ object SimilarityQueries {
         // closed-form config: 4-bit bands, tables solved for a 90%
         // recall floor AT the 0.4 threshold (14 tables)
         val tables = Similarity.lshTablesFor(0.4, 0.9, nBits = 4)
-        val exact = Similarity.nearDupPairs(e, "vec_id", "emb", threshold = 0.4)
-          .select(col("a_id"), col("b_id"), col("sim"))
-        val lsh = Similarity.lshNearDup(e, "vec_id", "emb",
-            threshold = 0.4, nBits = 4, nTables = tables)
-          .select(col("a_id"), col("b_id")).localCheckpoint()
-        val missed = exact.join(lsh, Seq("a_id", "b_id"), "left_anti")
-        val ne = exact.agg(count(lit(1)).as("n_exact"))
-        val nl = lsh.agg(count(lit(1)).as("n_lsh"))
-        val nm = missed.agg(count(lit(1)).as("n_missed"),
-          max(col("sim")).as("max_missed_sim"))
-        ne.crossJoin(nl).crossJoin(nm)
-          .select(lit(tables).as("n_tables"),
-            col("n_exact"), col("n_lsh"), col("n_missed"),
-            ((col("n_exact") - col("n_missed")).cast("double") /
-              col("n_exact").cast("double")).as("recall"),
-            col("max_missed_sim"))
+        lshRecall(e, nBits = 4, nTables = tables, "n_tables" -> tables)
       },
       Some {
         val tables = Similarity.lshTablesFor(0.4, 0.9, nBits = 4)
@@ -627,32 +597,12 @@ object SimilarityQueries {
     // ---- q73: ADC search over PQ codes (oracle: chained through q72) ------
     "q73_pq_adc_topk" -> Q(
       (s, d) => {
-        val e = emb(s, d).select(col("vec_id"), col("emb"))
-        val books = Similarity.pqCodebooks(
-          e.filter(col("vec_id") < 200), "vec_id", "emb", m = 2, k = 8, iters = 2)
-        val coded = Similarity.pqEncode(e, "vec_id", "emb", books)
-          .select(col("vec_id").as("t_id"), col("codes"))
-        val probes = e.filter(col("vec_id") < 50)
-          .select(col("vec_id").as("p_id"), col("emb").as("p_vec"))
+        val (books, coded, probes) =
+          pqIndex(emb(s, d).select(col("vec_id"), col("emb")), m = 2, k = 8)
         Similarity.pqTopK(probes, "p_id", "p_vec", coded, "t_id", books, k = 3)
           .orderBy(col("p_id"), col("rank"))
       },
-      Some(s"""
-        WITH e AS ($SqlEmbBare),
-        samp AS (SELECT vec_id, emb FROM e WHERE vec_id < 200),
-        ${OracleGen.pqBooksCtes("", "samp", m = 2, subDim = 32, k = 8, iters = 2)}
-        ${OracleGen.pqEncodeCte("enc", "", "e", m = 2, subDim = 32)}
-        probes AS (SELECT vec_id AS p_id, emb FROM e WHERE vec_id < 50),
-        dtab AS (
-          SELECT p.p_id, b.sub, b.cell,
-                 ${OracleGen.sqDist("p.emb[(b.sub*32+1):(b.sub*32+32)]", "b.c_vec", 32)} AS d
-          FROM probes p CROSS JOIN books b),
-        tc AS (SELECT vec_id AS t_id, unnest(codes) AS cell,
-                      generate_subscripts(codes, 1) - 1 AS sub FROM enc),
-        scored AS (
-          SELECT dt.p_id, tc.t_id, round(SUM(dt.d), 6) AS adc
-          FROM tc JOIN dtab dt ON dt.sub = tc.sub AND dt.cell = tc.cell
-          GROUP BY dt.p_id, tc.t_id),
+      Some(s"""${sqlPqScored(m = 2, k = 8)},
         ranked AS (
           SELECT p_id, t_id, adc,
                  ROW_NUMBER() OVER (PARTITION BY p_id ORDER BY adc, t_id) AS rank
@@ -669,82 +619,24 @@ object SimilarityQueries {
     "q210_pq_recall" -> Q(
       (s, d) => {
         val e = emb(s, d).select(col("vec_id"), col("emb"))
-        val books = Similarity.pqCodebooks(
-          e.filter(col("vec_id") < 200), "vec_id", "emb", m = 2, k = 8,
-          iters = 2)
-        val coded = Similarity.pqEncode(e, "vec_id", "emb", books)
-          .select(col("vec_id").as("t_id"), col("codes"))
-        val probes = e.filter(col("vec_id") < 50)
-          .select(col("vec_id").as("p_id"), col("emb").as("p_vec"))
+        val (books, coded, probes) = pqIndex(e, m = 2, k = 8)
         val pq = Similarity.pqTopK(probes, "p_id", "p_vec", coded, "t_id",
             books, k = 3)
           .select(col("p_id"), col("t_id")).localCheckpoint()
         // the exact arm ranks by the metric ADC approximates: squared L2
         val tg = e.select(col("vec_id").as("t_id"), col("emb").as("t_vec"))
-        val w = org.apache.spark.sql.expressions.Window
-          .partitionBy(col("p_id")).orderBy(col("d2"), col("t_id"))
-        val exact = probes.crossJoin(tg)
-          .select(col("p_id"), col("t_id"),
-            round(fastSquaredL2(col("p_vec"), col("t_vec")), 6)
-              .as("d2"))
-          .withColumn("rank", row_number().over(w))
-          .filter(col("rank") <= 3)
-          .select(col("p_id"), col("t_id"), col("d2"))
-        val missed = exact.join(pq, Seq("p_id", "t_id"), "left_anti")
-        val ne = exact.agg(count(lit(1)).as("n_exact"),
-          countDistinct(col("p_id")).as("n_probes"))
-        val nm = missed.agg(count(lit(1)).as("n_missed"),
-          min(col("d2")).as("min_missed_d2"))
-        ne.crossJoin(nm)
-          .select(col("n_probes"), lit(3).as("k"), col("n_exact"),
-            col("n_missed"),
-            ((col("n_exact") - col("n_missed")).cast("double") /
-              col("n_exact").cast("double")).as("recall"),
-            col("min_missed_d2"))
+        recallRow(exactL2Top3(probes, tg), pq, "min_missed_d2", min(col("d2")),
+          "k" -> 3)
       },
-      Some(s"""
-        WITH e AS ($SqlEmbBare),
-        samp AS (SELECT vec_id, emb FROM e WHERE vec_id < 200),
-        ${OracleGen.pqBooksCtes("", "samp", m = 2, subDim = 32, k = 8, iters = 2)}
-        ${OracleGen.pqEncodeCte("enc", "", "e", m = 2, subDim = 32)}
-        probes AS (SELECT vec_id AS p_id, emb FROM e WHERE vec_id < 50),
-        dtab AS (
-          SELECT p.p_id, b.sub, b.cell,
-                 ${OracleGen.sqDist("p.emb[(b.sub*32+1):(b.sub*32+32)]", "b.c_vec", 32)} AS d
-          FROM probes p CROSS JOIN books b),
-        tc AS (SELECT vec_id AS t_id, unnest(codes) AS cell,
-                      generate_subscripts(codes, 1) - 1 AS sub FROM enc),
-        scored AS (
-          SELECT dt.p_id, tc.t_id, round(SUM(dt.d), 6) AS adc
-          FROM tc JOIN dtab dt ON dt.sub = tc.sub AND dt.cell = tc.cell
-          GROUP BY dt.p_id, tc.t_id),
+      Some(s"""${sqlPqScored(m = 2, k = 8)},
         pqtop AS (
           SELECT p_id, t_id FROM (
             SELECT p_id, t_id,
                    ROW_NUMBER() OVER (PARTITION BY p_id
                      ORDER BY adc, t_id) AS rank
             FROM scored) WHERE rank <= 3),
-        ex AS (
-          SELECT p_id, t_id, d2 FROM (
-            SELECT p.p_id, t.vec_id AS t_id,
-                   round(${OracleGen.sqDist("p.emb", "t.emb", 64)}, 6) AS d2,
-                   ROW_NUMBER() OVER (PARTITION BY p.p_id
-                     ORDER BY round(${OracleGen.sqDist("p.emb", "t.emb", 64)}, 6),
-                       t.vec_id) AS rank
-            FROM probes p CROSS JOIN e t) WHERE rank <= 3),
-        missed AS (
-          SELECT ex.p_id, ex.t_id, ex.d2 FROM ex
-          ANTI JOIN pqtop ON pqtop.p_id = ex.p_id AND pqtop.t_id = ex.t_id),
-        ne AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_exact,
-                      CAST(COUNT(DISTINCT p_id) AS BIGINT) AS n_probes
-               FROM ex),
-        nm AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_missed,
-                      MIN(d2) AS min_missed_d2 FROM missed)
-        SELECT n_probes, 3 AS k, n_exact, n_missed,
-               CAST(n_exact - n_missed AS DOUBLE) /
-                 CAST(n_exact AS DOUBLE) AS recall,
-               min_missed_d2
-        FROM ne CROSS JOIN nm"""),
+        $SqlExactL2Top3,
+        ${sqlRecall("pqtop", "min_missed_d2", "MIN(d2)", "k" -> 3)}"""),
       "Recall audit of the q73 PQ/ADC path against the exact squared-L2 " +
         "top-k — the m-byte-code path carries BOTH coarse and " +
         "quantization error, so it audits like q208 does for IVF and " +
@@ -763,64 +655,20 @@ object SimilarityQueries {
         // 4 subspaces x 16 cells: 65536 distinct codes where the 2x8
         // config had 64 — code capacity must exceed the corpus for the
         // ADC ordering to separate near neighbors
-        val books = Similarity.pqCodebooks(
-          e.filter(col("vec_id") < 200), "vec_id", "emb", m = 4, k = 16,
-          iters = 2)
-        val coded = Similarity.pqEncode(e, "vec_id", "emb", books)
-          .select(col("vec_id").as("t_id"), col("codes"))
-        val probes = e.filter(col("vec_id") < 50)
-          .select(col("vec_id").as("p_id"), col("emb").as("p_vec"))
+        val (books, coded, probes) = pqIndex(e, m = 4, k = 16)
         val tg = e.select(col("vec_id").as("t_id"), col("emb").as("t_vec"))
         // stage 1: ADC shortlist (30 candidates/probe on m-byte codes);
         // stage 2: exact squared-L2 re-rank of ONLY the shortlist — raw
         // vectors are touched 30 rows/probe, never |corpus| rows
-        val w = org.apache.spark.sql.expressions.Window
-          .partitionBy(col("p_id")).orderBy(col("d2"), col("t_id"))
-        val refined = Similarity.pqTopK(probes, "p_id", "p_vec", coded,
+        val refined = rankL2(Similarity.pqTopK(probes, "p_id", "p_vec", coded,
             "t_id", books, k = 30)
           .select(col("p_id"), col("t_id"))
-          .join(probes, "p_id").join(tg, "t_id")
-          .select(col("p_id"), col("t_id"),
-            round(fastSquaredL2(col("p_vec"), col("t_vec")), 6)
-              .as("d2"))
-          .withColumn("rank", row_number().over(w))
-          .filter(col("rank") <= 3)
+          .join(probes, "p_id").join(tg, "t_id"))
           .select(col("p_id"), col("t_id")).localCheckpoint()
-        val exact = probes.crossJoin(tg)
-          .select(col("p_id"), col("t_id"),
-            round(fastSquaredL2(col("p_vec"), col("t_vec")), 6)
-              .as("d2"))
-          .withColumn("rank", row_number().over(w))
-          .filter(col("rank") <= 3)
-          .select(col("p_id"), col("t_id"), col("d2"))
-        val missed = exact.join(refined, Seq("p_id", "t_id"), "left_anti")
-        val ne = exact.agg(count(lit(1)).as("n_exact"),
-          countDistinct(col("p_id")).as("n_probes"))
-        val nm = missed.agg(count(lit(1)).as("n_missed"),
-          min(col("d2")).as("min_missed_d2"))
-        ne.crossJoin(nm)
-          .select(col("n_probes"), lit(4).as("m"), lit(16).as("k_cells"),
-            col("n_exact"), col("n_missed"),
-            ((col("n_exact") - col("n_missed")).cast("double") /
-              col("n_exact").cast("double")).as("recall"),
-            col("min_missed_d2"))
+        recallRow(exactL2Top3(probes, tg), refined, "min_missed_d2",
+          min(col("d2")), "m" -> 4, "k_cells" -> 16)
       },
-      Some(s"""
-        WITH e AS ($SqlEmbBare),
-        samp AS (SELECT vec_id, emb FROM e WHERE vec_id < 200),
-        ${OracleGen.pqBooksCtes("", "samp", m = 4, subDim = 16, k = 16, iters = 2)}
-        ${OracleGen.pqEncodeCte("enc", "", "e", m = 4, subDim = 16)}
-        probes AS (SELECT vec_id AS p_id, emb FROM e WHERE vec_id < 50),
-        dtab AS (
-          SELECT p.p_id, b.sub, b.cell,
-                 ${OracleGen.sqDist("p.emb[(b.sub*16+1):(b.sub*16+16)]", "b.c_vec", 16)} AS d
-          FROM probes p CROSS JOIN books b),
-        tc AS (SELECT vec_id AS t_id, unnest(codes) AS cell,
-                      generate_subscripts(codes, 1) - 1 AS sub FROM enc),
-        scored AS (
-          SELECT dt.p_id, tc.t_id, round(SUM(dt.d), 6) AS adc
-          FROM tc JOIN dtab dt ON dt.sub = tc.sub AND dt.cell = tc.cell
-          GROUP BY dt.p_id, tc.t_id),
+      Some(s"""${sqlPqScored(m = 4, k = 16)},
         shortlist AS (
           SELECT p_id, t_id FROM (
             SELECT p_id, t_id,
@@ -836,28 +684,8 @@ object SimilarityQueries {
             FROM shortlist s
             JOIN probes p ON p.p_id = s.p_id
             JOIN e t ON t.vec_id = s.t_id) WHERE rank <= 3),
-        ex AS (
-          SELECT p_id, t_id, d2 FROM (
-            SELECT p.p_id, t.vec_id AS t_id,
-                   round(${OracleGen.sqDist("p.emb", "t.emb", 64)}, 6) AS d2,
-                   ROW_NUMBER() OVER (PARTITION BY p.p_id
-                     ORDER BY round(${OracleGen.sqDist("p.emb", "t.emb", 64)}, 6),
-                       t.vec_id) AS rank
-            FROM probes p CROSS JOIN e t) WHERE rank <= 3),
-        missed AS (
-          SELECT ex.p_id, ex.t_id, ex.d2 FROM ex
-          ANTI JOIN refined ON refined.p_id = ex.p_id
-                           AND refined.t_id = ex.t_id),
-        ne AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_exact,
-                      CAST(COUNT(DISTINCT p_id) AS BIGINT) AS n_probes
-               FROM ex),
-        nm AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_missed,
-                      MIN(d2) AS min_missed_d2 FROM missed)
-        SELECT n_probes, 4 AS m, 16 AS k_cells, n_exact, n_missed,
-               CAST(n_exact - n_missed AS DOUBLE) /
-                 CAST(n_exact AS DOUBLE) AS recall,
-               min_missed_d2
-        FROM ne CROSS JOIN nm"""),
+        $SqlExactL2Top3,
+        ${sqlRecall("refined", "min_missed_d2", "MIN(d2)", "m" -> 4, "k_cells" -> 16)}"""),
       "The q210 audit closed into a fix — the production ADC shape: " +
         "bigger code capacity (4x16 = 65536 codes vs the audited 64) " +
         "PLUS exact re-rank of a 30-candidate ADC shortlist, so raw " +
@@ -883,31 +711,8 @@ object SimilarityQueries {
         samp AS (SELECT vec_id, emb FROM e WHERE vec_id < 200),
         ${OracleGen.kmeansCtes("km", "samp", k = 8, iters = 2, dim = 64)}
         cent AS (SELECT cell, c_vec AS cv FROM kmc2),
-        asg AS (
-          SELECT vec_id AS t_id, emb AS t_vec, cell FROM (
-            SELECT e.vec_id, e.emb, c.cell,
-                   ROW_NUMBER() OVER (PARTITION BY e.vec_id
-                     ORDER BY ${OracleGen.sqDist("e.emb", "c.cv", 64)}, c.cell) AS rn
-            FROM e CROSS JOIN cent c) WHERE rn = 1),
-        pc AS (
-          SELECT p_id, p_vec, cell FROM (
-            SELECT e.vec_id AS p_id, e.emb AS p_vec, c.cell,
-                   ROW_NUMBER() OVER (PARTITION BY e.vec_id
-                     ORDER BY ${OracleGen.sqDist("e.emb", "c.cv", 64)}, c.cell) AS rn
-            FROM e CROSS JOIN cent c WHERE e.vec_id < 100) WHERE rn <= 4),
-        sims AS (
-          SELECT pc.p_id, a.t_id,
-                 round(list_inner_product(pc.p_vec, a.t_vec) /
-                   (sqrt(list_inner_product(pc.p_vec, pc.p_vec)) *
-                    sqrt(list_inner_product(a.t_vec, a.t_vec))), 6) AS sim
-          FROM pc JOIN asg a USING (cell)),
-        ranked AS (
-          SELECT p_id, t_id, sim,
-                 ROW_NUMBER() OVER (PARTITION BY p_id ORDER BY sim DESC, t_id) AS rank
-          FROM sims)
-        SELECT p_id, t_id, sim, CAST(rank AS INT) AS rank
-        FROM ranked WHERE rank <= 3
-        ORDER BY p_id, rank"""),
+        ${sqlIvfSims(4)},
+        $SqlTop3"""),
       "Size-routed ANN entry point: exact below the cap, kMeans-" +
         "quantized IVF above it (forced here) — one call site, never " +
         "quadratic-unbounded; training AND routing hash-proved."),
@@ -1241,22 +1046,7 @@ object SimilarityQueries {
           SELECT p_id, t_id, sim, rank FROM ranked WHERE rank <= 3
           ORDER BY p_id, rank""")
       },
-      Some(s"""
-        WITH e AS ($SqlEmb),
-        sims AS (
-          SELECT p.vec_id AS p_id, t.vec_id AS t_id,
-            round(list_inner_product(p.emb, t.emb) /
-              (sqrt(list_inner_product(p.emb, p.emb)) * sqrt(list_inner_product(t.emb, t.emb))),
-              6) AS sim
-          FROM e p, e t
-          WHERE p.vec_id < 100 AND t.label >= 5),
-        ranked AS (
-          SELECT p_id, t_id, sim,
-            ROW_NUMBER() OVER (PARTITION BY p_id ORDER BY sim DESC, t_id) AS rank
-          FROM sims)
-        SELECT p_id, t_id, sim, CAST(rank AS INT) AS rank
-        FROM ranked WHERE rank <= 3
-        ORDER BY p_id, rank"""),
+      Some(SqlCosineTop3),
       "The SQL-user surface end to end: a pure spark.sql program " +
         "through the injected codegen'd vec_dot expression, hash-equal " +
         "to the DataFrame path (q31). Proves SURVEY §2.12's SQL " +

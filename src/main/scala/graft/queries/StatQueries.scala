@@ -335,31 +335,12 @@ object StatQueries {
     // ---- q224: split-conformal coverage audit -------------------------------
     "q224_conformal" -> Q(
       (s, d) => {
-        import graft.functions.TextFunctions.tokens
-        import graft.operators.TextAnalysis
-        val nTok = size(tokens(col("text")))
-        val scored = TextAnalysis.qualityClassifier(Tables.documents(s, d),
-          "doc_id",
-          features = Seq(
-            "x1" -> (nTok / lit(64.0)),
-            "x2" -> (size(array_distinct(tokens(col("text")))) / nTok),
-            "x3" -> (length(col("text")) / nTok)),
-          label = (length(col("text")) > 300).cast("double"),
-          iters = 4, lr = 0.125)
+        val scored = TrainingQueries.qualityScored(Tables.documents(s, d))
         Stats.conformalReport(scored, col("score"), col("y"),
           isCalib = col("doc") % 2 === 0, alpha = 0.1)
       },
       Some(s"""
-        WITH feats AS MATERIALIZED (
-          SELECT doc_id AS doc,
-                 CAST(len($W) AS DOUBLE) / 64.0 AS x1,
-                 CAST(len(list_distinct($W)) AS DOUBLE) / CAST(len($W) AS DOUBLE) AS x2,
-                 CAST(length(text) AS DOUBLE) / CAST(len($W) AS DOUBLE) AS x3,
-                 CASE WHEN length(text) > 300 THEN CAST(1 AS DOUBLE)
-                      ELSE CAST(0 AS DOUBLE) END AS y
-          FROM documents),
-        ${OracleGen.logitCtes("q", "feats", Seq("x1", "x2", "x3"), 4, "0.125")}
-        sc AS (${OracleGen.logitScoreSql("q", "feats", Seq("x1", "x2", "x3"), 4)}),
+        WITH ${OracleGen.qualityScoredCtes()},
         base AS (
           SELECT abs(CAST(y AS DOUBLE) - score) AS nc, (doc % 2 = 0) AS cal
           FROM sc WHERE score IS NOT NULL AND y IS NOT NULL),
@@ -456,33 +437,15 @@ object StatQueries {
     // ---- q226: inverse-propensity-weighted ATE ------------------------------
     "q226_ipw_ate" -> Q(
       (s, d) => {
-        import graft.functions.TextFunctions.tokens
-        import graft.operators.TextAnalysis
         val docs = Tables.documents(s, d)
-        val nTok = size(tokens(col("text")))
-        val scored = TextAnalysis.qualityClassifier(docs, "doc_id",
-          features = Seq(
-            "x1" -> (nTok / lit(64.0)),
-            "x2" -> (size(array_distinct(tokens(col("text")))) / nTok),
-            "x3" -> (length(col("text")) / nTok)),
-          label = (col("lang") === "en").cast("double"),
-          iters = 4, lr = 0.125)
+        val scored = TrainingQueries.qualityScored(docs, col("lang") === "en")
         val joined = scored.join(
           docs.select(col("doc_id").as("doc"),
             length(col("text")).cast("double").as("outcome")), Seq("doc"))
         Stats.ipwAte(joined, col("y") === 1, col("outcome"), col("score"))
       },
       Some(s"""
-        WITH feats AS MATERIALIZED (
-          SELECT doc_id AS doc,
-                 CAST(len($W) AS DOUBLE) / 64.0 AS x1,
-                 CAST(len(list_distinct($W)) AS DOUBLE) / CAST(len($W) AS DOUBLE) AS x2,
-                 CAST(length(text) AS DOUBLE) / CAST(len($W) AS DOUBLE) AS x3,
-                 CASE WHEN lang = 'en' THEN CAST(1 AS DOUBLE)
-                      ELSE CAST(0 AS DOUBLE) END AS y
-          FROM documents),
-        ${OracleGen.logitCtes("q", "feats", Seq("x1", "x2", "x3"), 4, "0.125")}
-        sc AS (${OracleGen.logitScoreSql("q", "feats", Seq("x1", "x2", "x3"), 4)}),
+        WITH ${OracleGen.qualityScoredCtes("lang = 'en'")},
         j AS (
           SELECT sc.y = 1 AS treat,
                  CAST(length(d.text) AS DOUBLE) AS outcome,

@@ -1,10 +1,11 @@
 package graft.queries
 
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.{Q, Tables}
 import graft.operators.{Features, TextAnalysis}
-import graft.functions.TextFunctions.{md5U52, windowMd5s}
+import graft.functions.TextFunctions.{md5U52, tokens, windowMd5s}
 
 /** Training-data curation queries over `documents.parquet`: benchmark
   * decontamination, deterministic epoch mixing, repetition signals,
@@ -22,15 +23,63 @@ object TrainingQueries {
   private val Shingles3 =
     s"list_distinct(list_transform(range(1, len($W) - 1), i -> $W[i] || ' ' || $W[i+1] || ' ' || $W[i+2]))"
 
+  /** q104's trained quality filter: `docs` scored by
+    * [[TextAnalysis.qualityClassifier]] over three length features,
+    * 4 steps at lr 0.125, y = `label` (doc, y, score, pred). The oracle
+    * twin is [[OracleGen.qualityScoredCtes]]. */
+  private[queries] def qualityScored(docs: DataFrame,
+      label: Column = length(col("text")) > 300): DataFrame = {
+    val nTok = size(tokens(col("text")))
+    TextAnalysis.qualityClassifier(docs, "doc_id",
+      features = Seq(
+        "x1" -> (nTok / lit(64.0)),
+        "x2" -> (size(array_distinct(tokens(col("text")))) / nTok),
+        "x3" -> (length(col("text")) / nTok)),
+      label = label.cast("double"),
+      iters = 4, lr = 0.125)
+  }
+
+  /** The decontamination split of q54: (corpus, benchmark) = the
+    * documents whose md5 bucket is below 97, and the rest. */
+  private def benchSplit(s: SparkSession, d: String): (DataFrame, DataFrame) = {
+    val docs = Tables.documents(s, d)
+      .withColumn("bucket", TextAnalysis.hashBucket(col("text")))
+    (docs.filter(col("bucket") < 97), docs.filter(col("bucket") >= 97))
+  }
+
+  /** The Bloom probe of q85 and q94: benchmark shingles into a
+    * 16384-bit, 3-hash filter (`bpos`), each corpus doc's shingles that
+    * hit all 3 bits (`bloomhit`) and their count (`nb`). */
+  private val SqlBloomHits = s"""d AS (
+          SELECT doc_id, text, $Bucket AS bucket FROM documents
+        ), bsh AS (
+          SELECT DISTINCT unnest($Shingles3) AS sh FROM d WHERE bucket >= 97
+        ), bpos AS (
+          SELECT DISTINCT (h1 + j.range * h2) % 16384 AS p
+          FROM (SELECT CAST(concat('0x', substr(md5(sh), 1, 8)) AS BIGINT) AS h1,
+                       CAST(concat('0x', substr(md5(sh), 9, 8)) AS BIGINT) AS h2
+                FROM bsh), range(0, 3) j
+        ), tr AS (
+          SELECT doc_id, unnest($Shingles3) AS sh FROM d WHERE bucket < 97
+        ), trpos AS (
+          SELECT doc_id, sh, (h1 + j.range * h2) % 16384 AS p
+          FROM (SELECT doc_id, sh,
+                       CAST(concat('0x', substr(md5(sh), 1, 8)) AS BIGINT) AS h1,
+                       CAST(concat('0x', substr(md5(sh), 9, 8)) AS BIGINT) AS h2
+                FROM tr), range(0, 3) j
+        ), bloomhit AS (
+          SELECT doc_id, sh FROM trpos JOIN bpos USING (p)
+          GROUP BY doc_id, sh HAVING COUNT(*) = 3
+        ), nb AS (
+          SELECT doc_id, COUNT(*) AS n_bloom FROM bloomhit GROUP BY doc_id
+        )"""
+
   def all: Seq[(String, Q)] = Seq(
 
     // ---- q54: benchmark decontamination -----------------------------------
     "q54_decontaminate" -> Q(
       (s, d) => {
-        val docs = Tables.documents(s, d)
-          .withColumn("bucket", TextAnalysis.hashBucket(col("text")))
-        val corpus = docs.filter(col("bucket") < 97)
-        val bench = docs.filter(col("bucket") >= 97)
+        val (corpus, bench) = benchSplit(s, d)
         TextAnalysis.decontaminate(corpus, bench, "doc_id", "text", n = 3)
           .orderBy(col("doc_id"))
       },
@@ -401,38 +450,13 @@ object TrainingQueries {
     // ---- q85: Bloom-filter decontamination (sketch + exact audit) ---------
     "q85_bloom_decontaminate" -> Q(
       (s, d) => {
-        val docs = Tables.documents(s, d)
-          .withColumn("bucket", TextAnalysis.hashBucket(col("text")))
-        val corpus = docs.filter(col("bucket") < 97)
-        val bench = docs.filter(col("bucket") >= 97)
+        val (corpus, bench) = benchSplit(s, d)
         graft.operators.Sketches.bloomDecontaminate(corpus, bench,
             "doc_id", "text", n = 3, mBits = 16384, kHashes = 3)
           .orderBy(col("doc_id"))
       },
       Some(s"""
-        WITH d AS (
-          SELECT doc_id, text, $Bucket AS bucket FROM documents
-        ), bsh AS (
-          SELECT DISTINCT unnest($Shingles3) AS sh FROM d WHERE bucket >= 97
-        ), bpos AS (
-          SELECT DISTINCT (h1 + j.range * h2) % 16384 AS p
-          FROM (SELECT CAST(concat('0x', substr(md5(sh), 1, 8)) AS BIGINT) AS h1,
-                       CAST(concat('0x', substr(md5(sh), 9, 8)) AS BIGINT) AS h2
-                FROM bsh), range(0, 3) j
-        ), tr AS (
-          SELECT doc_id, unnest($Shingles3) AS sh FROM d WHERE bucket < 97
-        ), trpos AS (
-          SELECT doc_id, sh, (h1 + j.range * h2) % 16384 AS p
-          FROM (SELECT doc_id, sh,
-                       CAST(concat('0x', substr(md5(sh), 1, 8)) AS BIGINT) AS h1,
-                       CAST(concat('0x', substr(md5(sh), 9, 8)) AS BIGINT) AS h2
-                FROM tr), range(0, 3) j
-        ), bloomhit AS (
-          SELECT doc_id, sh FROM trpos JOIN bpos USING (p)
-          GROUP BY doc_id, sh HAVING COUNT(*) = 3
-        ), nb AS (
-          SELECT doc_id, COUNT(*) AS n_bloom FROM bloomhit GROUP BY doc_id
-        ), ne AS (
+        WITH $SqlBloomHits, ne AS (
           SELECT tr.doc_id, COUNT(*) AS n_exact FROM tr JOIN bsh USING (sh)
           GROUP BY tr.doc_id
         ), sizes AS (
@@ -455,10 +479,7 @@ object TrainingQueries {
     // ---- q94: Bloom decontamination, production form (no audit arm) -------
     "q94_bloom_scan" -> Q(
       (s, d) => {
-        val docs = Tables.documents(s, d)
-          .withColumn("bucket", TextAnalysis.hashBucket(col("text")))
-        val corpus = docs.filter(col("bucket") < 97)
-        val bench = docs.filter(col("bucket") >= 97)
+        val (corpus, bench) = benchSplit(s, d)
         // audit = false: the corpus side is a pure projection — zero
         // corpus shuffles (the q85 twin keeps the exact audit arm; this
         // registers the shape a 100 TB run actually executes, and the
@@ -468,29 +489,7 @@ object TrainingQueries {
           .orderBy(col("doc_id"))
       },
       Some(s"""
-        WITH d AS (
-          SELECT doc_id, text, $Bucket AS bucket FROM documents
-        ), bsh AS (
-          SELECT DISTINCT unnest($Shingles3) AS sh FROM d WHERE bucket >= 97
-        ), bpos AS (
-          SELECT DISTINCT (h1 + j.range * h2) % 16384 AS p
-          FROM (SELECT CAST(concat('0x', substr(md5(sh), 1, 8)) AS BIGINT) AS h1,
-                       CAST(concat('0x', substr(md5(sh), 9, 8)) AS BIGINT) AS h2
-                FROM bsh), range(0, 3) j
-        ), tr AS (
-          SELECT doc_id, unnest($Shingles3) AS sh FROM d WHERE bucket < 97
-        ), trpos AS (
-          SELECT doc_id, sh, (h1 + j.range * h2) % 16384 AS p
-          FROM (SELECT doc_id, sh,
-                       CAST(concat('0x', substr(md5(sh), 1, 8)) AS BIGINT) AS h1,
-                       CAST(concat('0x', substr(md5(sh), 9, 8)) AS BIGINT) AS h2
-                FROM tr), range(0, 3) j
-        ), bloomhit AS (
-          SELECT doc_id, sh FROM trpos JOIN bpos USING (p)
-          GROUP BY doc_id, sh HAVING COUNT(*) = 3
-        ), nb AS (
-          SELECT doc_id, COUNT(*) AS n_bloom FROM bloomhit GROUP BY doc_id
-        ), sizes AS (
+        WITH $SqlBloomHits, sizes AS (
           SELECT doc_id, len($Shingles3) AS n_sh FROM d WHERE bucket < 97
         )
         SELECT s.doc_id, CAST(s.n_sh AS INT) AS n_sh,
@@ -820,29 +819,11 @@ object TrainingQueries {
     // ---- q104: trained quality classifier (logistic GD) -------------------
     "q104_quality_classifier" -> Q(
       (s, dir) => {
-        import graft.functions.TextFunctions.tokens
-        val nTok = size(tokens(col("text")))
-        TextAnalysis.qualityClassifier(Tables.documents(s, dir), "doc_id",
-            features = Seq(
-              "x1" -> (nTok / lit(64.0)),
-              "x2" -> (size(array_distinct(tokens(col("text")))) / nTok),
-              "x3" -> (length(col("text")) / nTok)),
-            label = (length(col("text")) > 300).cast("double"),
-            iters = 4, lr = 0.125)
-          .orderBy(col("doc"))
+        qualityScored(Tables.documents(s, dir)).orderBy(col("doc"))
       },
       Some(s"""
-        WITH feats AS MATERIALIZED (
-          SELECT doc_id AS doc,
-                 CAST(len($W) AS DOUBLE) / 64.0 AS x1,
-                 CAST(len(list_distinct($W)) AS DOUBLE) / CAST(len($W) AS DOUBLE) AS x2,
-                 CAST(length(text) AS DOUBLE) / CAST(len($W) AS DOUBLE) AS x3,
-                 CASE WHEN length(text) > 300 THEN CAST(1 AS DOUBLE)
-                      ELSE CAST(0 AS DOUBLE) END AS y
-          FROM documents),
-        ${OracleGen.logitCtes("q", "feats", Seq("x1", "x2", "x3"), 4, "0.125")}
-        fin AS (${OracleGen.logitScoreSql("q", "feats", Seq("x1", "x2", "x3"), 4)})
-        SELECT * FROM fin ORDER BY doc"""),
+        WITH ${OracleGen.qualityScoredCtes()}
+        SELECT * FROM sc ORDER BY doc"""),
       "A TRAINED quality filter: distributed full-batch logistic " +
         "regression (rational fast-sigmoid link, 1e-9-grid integer " +
         "gradient sums) hash-proved against DuckDB across all 4 " +
@@ -1045,30 +1026,12 @@ object TrainingQueries {
     // ---- q186: classifier calibration report ------------------------------
     "q186_calibration" -> Q(
       (s, dir) => {
-        import graft.functions.TextFunctions.tokens
-        val nTok = size(tokens(col("text")))
-        val scored = TextAnalysis.qualityClassifier(Tables.documents(s, dir),
-          "doc_id",
-          features = Seq(
-            "x1" -> (nTok / lit(64.0)),
-            "x2" -> (size(array_distinct(tokens(col("text")))) / nTok),
-            "x3" -> (length(col("text")) / nTok)),
-          label = (length(col("text")) > 300).cast("double"),
-          iters = 4, lr = 0.125)
+        val scored = qualityScored(Tables.documents(s, dir))
         graft.operators.Quality.calibrationReport(scored, "score", "y",
           bins = 10)
       },
       Some(s"""
-        WITH feats AS MATERIALIZED (
-          SELECT doc_id AS doc,
-                 CAST(len($W) AS DOUBLE) / 64.0 AS x1,
-                 CAST(len(list_distinct($W)) AS DOUBLE) / CAST(len($W) AS DOUBLE) AS x2,
-                 CAST(length(text) AS DOUBLE) / CAST(len($W) AS DOUBLE) AS x3,
-                 CASE WHEN length(text) > 300 THEN CAST(1 AS DOUBLE)
-                      ELSE CAST(0 AS DOUBLE) END AS y
-          FROM documents),
-        ${OracleGen.logitCtes("q", "feats", Seq("x1", "x2", "x3"), 4, "0.125")}
-        sc AS (${OracleGen.logitScoreSql("q", "feats", Seq("x1", "x2", "x3"), 4)}),
+        WITH ${OracleGen.qualityScoredCtes()},
         b AS (
           SELECT greatest(0, least(CAST(floor(score * 10) AS INT), 9))
                    AS bin, score, y
@@ -1404,29 +1367,11 @@ object TrainingQueries {
     // ---- q188: classifier ranking quality (AUC-ROC) -----------------------
     "q188_auc" -> Q(
       (s, dir) => {
-        import graft.functions.TextFunctions.tokens
-        val nTok = size(tokens(col("text")))
-        val scored = TextAnalysis.qualityClassifier(Tables.documents(s, dir),
-          "doc_id",
-          features = Seq(
-            "x1" -> (nTok / lit(64.0)),
-            "x2" -> (size(array_distinct(tokens(col("text")))) / nTok),
-            "x3" -> (length(col("text")) / nTok)),
-          label = (length(col("text")) > 300).cast("double"),
-          iters = 4, lr = 0.125)
+        val scored = qualityScored(Tables.documents(s, dir))
         graft.operators.Quality.aucReport(scored, "score", "y")
       },
       Some(s"""
-        WITH feats AS MATERIALIZED (
-          SELECT doc_id AS doc,
-                 CAST(len($W) AS DOUBLE) / 64.0 AS x1,
-                 CAST(len(list_distinct($W)) AS DOUBLE) / CAST(len($W) AS DOUBLE) AS x2,
-                 CAST(length(text) AS DOUBLE) / CAST(len($W) AS DOUBLE) AS x3,
-                 CASE WHEN length(text) > 300 THEN CAST(1 AS DOUBLE)
-                      ELSE CAST(0 AS DOUBLE) END AS y
-          FROM documents),
-        ${OracleGen.logitCtes("q", "feats", Seq("x1", "x2", "x3"), 4, "0.125")}
-        sc AS (${OracleGen.logitScoreSql("q", "feats", Seq("x1", "x2", "x3"), 4)}),
+        WITH ${OracleGen.qualityScoredCtes()},
         g AS (
           SELECT score AS s, COUNT(*) AS n,
                  CAST(SUM(CASE WHEN y = 1 THEN 1 ELSE 0 END) AS BIGINT) AS np
@@ -1460,30 +1405,12 @@ object TrainingQueries {
     // ---- q190: Cohen's kappa (classifier vs gold agreement) ---------------
     "q190_kappa" -> Q(
       (s, dir) => {
-        import graft.functions.TextFunctions.tokens
-        val nTok = size(tokens(col("text")))
-        val scored = TextAnalysis.qualityClassifier(Tables.documents(s, dir),
-          "doc_id",
-          features = Seq(
-            "x1" -> (nTok / lit(64.0)),
-            "x2" -> (size(array_distinct(tokens(col("text")))) / nTok),
-            "x3" -> (length(col("text")) / nTok)),
-          label = (length(col("text")) > 300).cast("double"),
-          iters = 4, lr = 0.125)
+        val scored = qualityScored(Tables.documents(s, dir))
         graft.operators.Quality.kappaReport(scored,
           labelA = col("score") >= 0.5, labelB = col("y") === 1.0)
       },
       Some(s"""
-        WITH feats AS MATERIALIZED (
-          SELECT doc_id AS doc,
-                 CAST(len($W) AS DOUBLE) / 64.0 AS x1,
-                 CAST(len(list_distinct($W)) AS DOUBLE) / CAST(len($W) AS DOUBLE) AS x2,
-                 CAST(length(text) AS DOUBLE) / CAST(len($W) AS DOUBLE) AS x3,
-                 CASE WHEN length(text) > 300 THEN CAST(1 AS DOUBLE)
-                      ELSE CAST(0 AS DOUBLE) END AS y
-          FROM documents),
-        ${OracleGen.logitCtes("q", "feats", Seq("x1", "x2", "x3"), 4, "0.125")}
-        sc AS (${OracleGen.logitScoreSql("q", "feats", Seq("x1", "x2", "x3"), 4)}),
+        WITH ${OracleGen.qualityScoredCtes()},
         ct AS (
           SELECT CAST(COUNT(*) AS BIGINT) AS n,
                  CAST(SUM(CASE WHEN score >= 0.5 AND y = 1 THEN 1 ELSE 0 END) AS BIGINT) AS n11,
@@ -1512,29 +1439,11 @@ object TrainingQueries {
     // ---- q191: classifier scorecard (acc/P/R/F1/Brier/ECE) ----------------
     "q191_eval_summary" -> Q(
       (s, dir) => {
-        import graft.functions.TextFunctions.tokens
-        val nTok = size(tokens(col("text")))
-        val scored = TextAnalysis.qualityClassifier(Tables.documents(s, dir),
-          "doc_id",
-          features = Seq(
-            "x1" -> (nTok / lit(64.0)),
-            "x2" -> (size(array_distinct(tokens(col("text")))) / nTok),
-            "x3" -> (length(col("text")) / nTok)),
-          label = (length(col("text")) > 300).cast("double"),
-          iters = 4, lr = 0.125)
+        val scored = qualityScored(Tables.documents(s, dir))
         graft.operators.Quality.evalSummary(scored, "score", "y", bins = 10)
       },
       Some(s"""
-        WITH feats AS MATERIALIZED (
-          SELECT doc_id AS doc,
-                 CAST(len($W) AS DOUBLE) / 64.0 AS x1,
-                 CAST(len(list_distinct($W)) AS DOUBLE) / CAST(len($W) AS DOUBLE) AS x2,
-                 CAST(length(text) AS DOUBLE) / CAST(len($W) AS DOUBLE) AS x3,
-                 CASE WHEN length(text) > 300 THEN CAST(1 AS DOUBLE)
-                      ELSE CAST(0 AS DOUBLE) END AS y
-          FROM documents),
-        ${OracleGen.logitCtes("q", "feats", Seq("x1", "x2", "x3"), 4, "0.125")}
-        sc AS (${OracleGen.logitScoreSql("q", "feats", Seq("x1", "x2", "x3"), 4)}),
+        WITH ${OracleGen.qualityScoredCtes()},
         base AS (
           SELECT CAST(COUNT(*) AS BIGINT) AS n,
                  CAST(SUM(CASE WHEN score >= 0.5 AND y = 1 THEN 1 ELSE 0 END) AS BIGINT) AS tp,
@@ -1586,32 +1495,14 @@ object TrainingQueries {
     // ---- q194: bootstrap CI for the classifier's accuracy -----------------
     "q194_bootstrap_ci" -> Q(
       (s, dir) => {
-        import graft.functions.TextFunctions.tokens
-        val nTok = size(tokens(col("text")))
-        val scored = TextAnalysis.qualityClassifier(Tables.documents(s, dir),
-          "doc_id",
-          features = Seq(
-            "x1" -> (nTok / lit(64.0)),
-            "x2" -> (size(array_distinct(tokens(col("text")))) / nTok),
-            "x3" -> (length(col("text")) / nTok)),
-          label = (length(col("text")) > 300).cast("double"),
-          iters = 4, lr = 0.125)
+        val scored = qualityScored(Tables.documents(s, dir))
         graft.operators.Quality.bootstrapRatioCi(scored,
           id = col("doc"),
           success = (col("score") >= 0.5) === (col("y") === 1.0),
           reps = 32, coverage = 0.95)
       },
       Some(s"""
-        WITH feats AS MATERIALIZED (
-          SELECT doc_id AS doc,
-                 CAST(len($W) AS DOUBLE) / 64.0 AS x1,
-                 CAST(len(list_distinct($W)) AS DOUBLE) / CAST(len($W) AS DOUBLE) AS x2,
-                 CAST(length(text) AS DOUBLE) / CAST(len($W) AS DOUBLE) AS x3,
-                 CASE WHEN length(text) > 300 THEN CAST(1 AS DOUBLE)
-                      ELSE CAST(0 AS DOUBLE) END AS y
-          FROM documents),
-        ${OracleGen.logitCtes("q", "feats", Seq("x1", "x2", "x3"), 4, "0.125")}
-        sc AS (${OracleGen.logitScoreSql("q", "feats", Seq("x1", "x2", "x3"), 4)}),
+        WITH ${OracleGen.qualityScoredCtes()},
         reps AS (SELECT CAST(r.range AS INT) AS rep FROM range(32) r),
         ex AS (
           SELECT sc.doc AS id_, sc.rep_s AS s01, reps.rep
@@ -1659,32 +1550,15 @@ object TrainingQueries {
     // ---- q195: per-segment AUC (slice eval) --------------------------------
     "q195_auc_by_lang" -> Q(
       (s, dir) => {
-        import graft.functions.TextFunctions.tokens
-        val nTok = size(tokens(col("text")))
         val docs = Tables.documents(s, dir)
-        val scored = TextAnalysis.qualityClassifier(docs, "doc_id",
-          features = Seq(
-            "x1" -> (nTok / lit(64.0)),
-            "x2" -> (size(array_distinct(tokens(col("text")))) / nTok),
-            "x3" -> (length(col("text")) / nTok)),
-          label = (length(col("text")) > 300).cast("double"),
-          iters = 4, lr = 0.125)
+        val scored = qualityScored(docs)
         graft.operators.Quality.aucReportBy(
           scored.join(docs.select(col("doc_id").as("doc"), col("lang")),
             Seq("doc")),
           segment = "lang", score = "score", label = "y")
       },
       Some(s"""
-        WITH feats AS MATERIALIZED (
-          SELECT doc_id AS doc,
-                 CAST(len($W) AS DOUBLE) / 64.0 AS x1,
-                 CAST(len(list_distinct($W)) AS DOUBLE) / CAST(len($W) AS DOUBLE) AS x2,
-                 CAST(length(text) AS DOUBLE) / CAST(len($W) AS DOUBLE) AS x3,
-                 CASE WHEN length(text) > 300 THEN CAST(1 AS DOUBLE)
-                      ELSE CAST(0 AS DOUBLE) END AS y
-          FROM documents),
-        ${OracleGen.logitCtes("q", "feats", Seq("x1", "x2", "x3"), 4, "0.125")}
-        sc AS (${OracleGen.logitScoreSql("q", "feats", Seq("x1", "x2", "x3"), 4)}),
+        WITH ${OracleGen.qualityScoredCtes()},
         seg AS (
           SELECT sc.score, sc.y, d.lang
           FROM sc JOIN documents d ON sc.doc = d.doc_id),

@@ -111,8 +111,7 @@ object ReorderBuffer {
         // arriving after the drain — older than frames already emitted
         // but still inside the watermark — is dropped instead of being
         // re-buffered and emitted out of order. The retained state is
-        // one long per camera: bounded by the (small, fixed) key space,
-        // matching ReorderProcessor's persistent highWater ValueState.
+        // one long per camera: bounded by the (small, fixed) key space.
         val next = if (buffered.nonEmpty) buffered.last.frameNum else prev.nextFrame
         state.update(ReorderStateTs(Nil, next))
         buffered.iterator
@@ -135,74 +134,5 @@ object ReorderBuffer {
       .as[FrameEventTs]
       .groupByKey(_.camera)
       .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.EventTimeTimeout)(update _)
-  }
-
-  /** Spark-4-native form of [[reorderByWatermark]] built on
-    * `transformWithState` (StatefulProcessor + ListState + event-time
-    * timers). Requires the RocksDB state store provider
-    * (`spark.sql.streaming.stateStore.providerClass` =
-    * `...state.RocksDBStateStoreProvider`). Semantics: buffer per
-    * camera; when a timer set at newest-buffered-event-time + lateness
-    * fires (watermark-driven), drain in frame order and advance the
-    * per-key high-water mark so later stragglers are dropped. */
-  def reorderWithState(events: DataFrame, latenessMs: Long): Dataset[FrameEventTs] = {
-    implicit val evEnc = Encoders.product[FrameEventTs]
-    implicit val intEnc = Encoders.scalaInt
-    events
-      .withWatermark("ets", s"$latenessMs milliseconds")
-      .as[FrameEventTs]
-      .groupByKey(_.camera)
-      .transformWithState(new ReorderProcessor(latenessMs),
-        org.apache.spark.sql.streaming.TimeMode.EventTime(),
-        OutputMode.Append())
-  }
-}
-
-/** StatefulProcessor backing [[ReorderBuffer.reorderWithState]]. */
-class ReorderProcessor(latenessMs: Long)
-    extends org.apache.spark.sql.streaming.StatefulProcessor[Int, FrameEventTs, FrameEventTs] {
-  import org.apache.spark.sql.streaming.{ExpiredTimerInfo, ListState, TimerValues, TTLConfig, ValueState}
-
-  @transient private var buffer: ListState[FrameEventTs] = _
-  @transient private var highWater: ValueState[Long] = _
-  @transient private var pendingTimer: ValueState[Long] = _
-
-  override def init(outputMode: OutputMode,
-      timeMode: org.apache.spark.sql.streaming.TimeMode): Unit = {
-    buffer = getHandle.getListState[FrameEventTs]("buffer",
-      Encoders.product[FrameEventTs], TTLConfig.NONE)
-    highWater = getHandle.getValueState[Long]("high_water",
-      Encoders.scalaLong, TTLConfig.NONE)
-    pendingTimer = getHandle.getValueState[Long]("pending_timer",
-      Encoders.scalaLong, TTLConfig.NONE)
-  }
-
-  override def handleInputRows(camera: Int, rows: Iterator[FrameEventTs],
-      timerValues: TimerValues): Iterator[FrameEventTs] = {
-    val hw = if (highWater.exists()) highWater.get() else Long.MinValue
-    val fresh = rows.filter(_.frameNum > hw).toArray
-    if (fresh.nonEmpty) {
-      buffer.appendList(fresh)
-      val newest = buffer.get().map(_.ets.getTime).max
-      val target =
-        math.max(newest + latenessMs, timerValues.getCurrentWatermarkInMs() + 1)
-      // timers accumulate per registerTimer call: drop the previous one
-      // or a stale early timer drains frames whose lateness window is
-      // still open
-      if (pendingTimer.exists() && pendingTimer.get() != target)
-        getHandle.deleteTimer(pendingTimer.get())
-      getHandle.registerTimer(target)
-      pendingTimer.update(target)
-    }
-    Iterator.empty
-  }
-
-  override def handleExpiredTimer(camera: Int, timerValues: TimerValues,
-      expiredTimerInfo: ExpiredTimerInfo): Iterator[FrameEventTs] = {
-    val drained = buffer.get().toArray.sortBy(_.frameNum)
-    buffer.clear()
-    pendingTimer.clear()
-    if (drained.nonEmpty) highWater.update(drained.last.frameNum)
-    drained.iterator
   }
 }

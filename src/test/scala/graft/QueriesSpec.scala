@@ -10,6 +10,12 @@ class QueriesSpec extends SparkSuite {
     assert(missing.isEmpty, s"oracle without query: $missing")
   }
 
+  test("the registry holds 301 queries, 299 oracles, and only q24 and q36 rows-only") {
+    assert(SparkEntry.queries.size === 301)
+    assert(SparkEntry.oracleSql.size === 299)
+    assert(SparkEntry.rowsOnly === Set("q24_approx_distinct", "q36_sketches"))
+  }
+
   test("entry (flagship) returns rows") {
     assert(SparkEntry.entry(spark).count() > 0)
   }

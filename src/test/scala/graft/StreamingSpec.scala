@@ -476,40 +476,6 @@ class StreamingSpec extends SparkSuite {
       s"post-drain straggler must be dropped, not re-emitted: got $c0")
   }
 
-  test("transformWithState reorder drains in order under RocksDB state store") {
-    implicit val sqlCtx = spark.sqlContext
-    import graft.streaming.FrameEventTs
-    val prevProvider = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val input = MemoryStream[FrameEventTs]
-      val out = ReorderBuffer.reorderWithState(input.toDF(), latenessMs = 2000)
-      val q = out.writeStream.format("memory").queryName("tws_reorder_out")
-        .outputMode("append").start()
-      val base = 1700000000000L
-      def ev(cam: Int, fn: Long, offMs: Long) =
-        FrameEventTs(cam, fn, new Timestamp(base + offMs), s"c${cam}f$fn")
-      input.addData(ev(0, 2, 2000), ev(0, 0, 0), ev(0, 1, 1000))
-      q.processAllAvailable()
-      input.addData(ev(0, 3, 60000))
-      q.processAllAvailable()
-      input.addData(ev(1, 0, 120000))
-      q.processAllAvailable()
-      input.addData(ev(1, 1, 200000))
-      q.processAllAvailable()
-      q.stop()
-      val c0 = spark.table("tws_reorder_out").as[FrameEventTs].collect()
-        .filter(_.camera == 0).map(_.frameNum).toSeq
-      assert(c0 == Seq(0L, 1L, 2L, 3L), s"camera 0 must drain in order, got $c0")
-    } finally {
-      prevProvider match {
-        case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
-    }
-  }
-
   test("full topology: pipeline predictions feed the ordered display path") {
     implicit val sqlCtx = spark.sqlContext
     import graft.streaming.FrameEventTs
